@@ -177,7 +177,8 @@ object SparkEntry {
   }
 
   /** Parquet footer SCHEMA memo for the fixture tables, keyed by
-    * (qualified path, mtime, length, nanosAsLong). Metadata only — the
+    * (qualified path, newest part-file mtime, total part-file length,
+    * nanosAsLong). Metadata only — the
     * catalog analog (a deployed table's schema comes from the catalog,
     * not per-query footer inference): every action still plans and
     * scans the parquet data fresh; no rows, results, or intermediates
@@ -186,18 +187,22 @@ object SparkEntry {
     * ~100–250 ms per call even warm, and the bench suite makes ~200
     * `t()` calls per pass — tens of seconds of pure re-inference of
     * schemas that cannot have changed (the mtime/length key invalidates
-    * the entry if the fixture ever does change). */
+    * the entry if the fixture ever does change). The key reads the PART
+    * FILES, not the directory: rewriting a part file in place leaves a
+    * directory's own mtime and length as they were. */
   private val tSchemaCache = new java.util.concurrent.ConcurrentHashMap[
     (String, Long, Long, String), org.apache.spark.sql.types.StructType]()
 
-  private def t(s: SparkSession, dir: String, name: String): TidierFrame = {
+  private[graft] def t(s: SparkSession, dir: String, name: String): TidierFrame = {
     val pathStr = s"$dir/$name.parquet"
     val p = new org.apache.hadoop.fs.Path(pathStr)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val st = fs.getFileStatus(p)
+    // one listing: the part files of a directory table, or the file itself
+    val files = fs.listStatus(p).filter(_.isFile)
     val nanosConf = s.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
-    val key = (fs.makeQualified(p).toString, st.getModificationTime, st.getLen,
-      nanosConf)
+    val key = (fs.makeQualified(p).toString,
+      files.map(_.getModificationTime).maxOption.getOrElse(0L),
+      files.map(_.getLen).sum, nanosConf)
     val sch = tSchemaCache.computeIfAbsent(key,
       _ => s.read.parquet(pathStr).schema)
     Tidier.from(s.read.schema(sch).parquet(pathStr))

@@ -2,6 +2,8 @@ package graft.sources
 
 import org.apache.spark.sql.types._
 
+import LakeSupport.jstr
+
 /** COLUMN DEFAULT VALUES — the shared encoding between the two
   * formats' spellings of the same idea:
   *
@@ -82,12 +84,4 @@ object ColumnDefaults {
       Some(s"TIMESTAMP '${node.asText().replace("T", " ")}'")
     case _ => scala.None
   }
-
-  private def jstr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
 }

@@ -4,9 +4,13 @@ import java.nio.charset.StandardCharsets
 
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
+
+import LakeSupport.{jstr, mapper, parMap, MaxCommitRetries}
 
 /** Minimal dependency-free Delta Lake WRITER — the sink half of the
   * built-in lakehouse support (reader: [[DeltaScan]]). Writes the
@@ -80,15 +84,13 @@ object DeltaWrite {
     * `partitionBy` from the declared partitions when the caller passed
     * none (the hidden-partitioning UX: callers never name derived
     * columns). */
-  private def deriveGenerated(
-      md: Option[com.fasterxml.jackson.databind.JsonNode],
+  private def deriveGenerated(md: Option[Meta],
       df: DataFrame, partitionBy: Seq[String]): (DataFrame, Seq[String]) = {
     import org.apache.spark.sql.functions.{col, expr}
     md match {
       case scala.None => (df, partitionBy)
       case Some(m) =>
-        val declared = DataType.fromJson(m.get("schemaString").asText())
-          .asInstanceOf[StructType]
+        val declared = m.schema
         val gens = DeltaTransforms.generatedFields(declared)
         if (gens.isEmpty) (df, partitionBy)
         else {
@@ -103,9 +105,7 @@ object DeltaWrite {
             (declared.fieldNames.filter(withGen.columns.contains) ++
               withGen.columns.filterNot(declared.fieldNames.contains))
               .map(col).toSeq: _*)
-          val declaredParts = Option(m.get("partitionColumns"))
-            .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Seq.empty)
-          (ordered, if (partitionBy.isEmpty) declaredParts else partitionBy)
+          (ordered, if (partitionBy.isEmpty) m.partCols else partitionBy)
         }
     }
   }
@@ -151,10 +151,10 @@ object DeltaWrite {
     * partition columns are re-derived, never trusted. */
   def append(spark: SparkSession, df: DataFrame, tablePath: String,
       partitionBy: Seq[String] = Nil): Unit = {
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val md = latestMetaNodeAny(spark, fs, tablePath)
-    val declared = md.map(m => DataType.fromJson(m.get("schemaString").asText())
-      .asInstanceOf[StructType])
+    val view = new LogView(spark, tablePath)
+    val fs = view.fs
+    val md = view.meta
+    val declared = md.map(_.schema)
     val dfd = fillColumnDefaults(declared, df)
     declared.flatMap(identityField) match {
       case Some((f, start, step, hwm, allow)) if !dfd.columns.contains(f.name) =>
@@ -170,9 +170,7 @@ object DeltaWrite {
             g.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder()
               .withMetadata(g.metadata).putLong(IdHwmKey, newHwm).build())
           else g))
-        val declaredParts = Option(md.get.get("partitionColumns"))
-          .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Seq.empty)
-        val metaAction = metaDataJson(md.get, newSchema, declaredParts, configOf(md.get))
+        val metaAction = metaDataJson(md.get.node, newSchema, md.get.partCols, md.get.config)
         val v = DeltaScan.latestVersion(spark, tablePath) + 1
         try commit(spark, fs, ddf, tablePath, parts, version = v,
           metaOverride = Some(metaAction))
@@ -186,7 +184,7 @@ object DeltaWrite {
         val (ddf, parts) = deriveGenerated(md, dfd, partitionBy)
         validateAgainstMeta(md, ddf, parts)
         val v = DeltaScan.latestVersion(spark, tablePath) + 1
-        commit(spark, fs, ddf, tablePath, parts, version = v, metaNode = md)
+        commit(spark, fs, ddf, tablePath, parts, version = v, meta = md)
     }
   }
 
@@ -296,19 +294,13 @@ object DeltaWrite {
   def appendEvolve(spark: SparkSession, df: DataFrame, tablePath: String,
       partitionBy: Seq[String] = Nil): Unit = {
     import org.apache.spark.sql.functions.{col, lit}
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(new Path(tablePath, "_delta_log")),
-      s"no Delta table at $tablePath — use create")
-    val md = latestMetaNode(fs, tablePath).getOrElse(throw new IllegalStateException(
-      s"the JSON log of $tablePath carries no metaData — cannot evolve " +
-        "a checkpoint-truncated table"))
+    val view = new LogView(spark, tablePath)
+    require(view.exists, s"no Delta table at $tablePath — use create")
+    val md = view.jsonMetaOr(EvolveTruncated)
     val (df1, partitionBy1) = deriveGenerated(Some(md), df, partitionBy)
-    val declaredParts = Option(md.get("partitionColumns"))
-      .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Seq.empty)
-    require(declaredParts == partitionBy1,
-      s"append partitioning $partitionBy1 does not match the table's $declaredParts")
-    val declared = DataType.fromJson(md.get("schemaString").asText())
-      .asInstanceOf[StructType]
+    require(md.partCols == partitionBy1,
+      s"append partitioning $partitionBy1 does not match the table's ${md.partCols}")
+    val declared = md.schema
     val byName = df1.schema.fields.map(f => f.name -> f).toMap
     identityField(declared).foreach { case (f, _, _, _, allow) =>
       require(allow && byName.contains(f.name),
@@ -323,39 +315,40 @@ object DeltaWrite {
             "never changes types")
       }
     }
-    val newFields0 = df1.schema.fields
-      .filterNot(f => declared.fieldNames.contains(f.name))
-    // on a COLUMN-MAPPED table, new columns take fresh ids and fresh
-    // SYNTHETIC physical names: a reused human name could collide with
-    // an old physical column left behind by renameColumn/dropColumn
-    val config = configOf(md)
-    val mapped = config.getOrElse("delta.columnMapping.mode", "none") != "none"
-    val maxId = config.get("delta.columnMapping.maxColumnId").map(_.toLong).getOrElse(0L)
-    val newFields =
-      if (!mapped) newFields0
-      else newFields0.zipWithIndex.map { case (f, i) =>
-        f.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder().withMetadata(f.metadata)
-          .putLong("delta.columnMapping.id", maxId + 1 + i)
-          .putString("delta.columnMapping.physicalName",
-            s"col-${java.util.UUID.randomUUID()}")
-          .build())
-      }
+    val (newFields, newConfig) = mappedColumns(md,
+      df1.schema.fields.filterNot(f => declared.fieldNames.contains(f.name)).toSeq)
     val merged = StructType(declared.fields ++ newFields.map(_.copy(nullable = true)))
     val aligned = df1.select(merged.fields.map { f =>
       if (byName.contains(f.name)) col(f.name)
       else lit(null).cast(f.dataType).as(f.name)
     }.toSeq: _*)
-    val newConfig =
-      if (!mapped || newFields.isEmpty) config
-      else config + ("delta.columnMapping.maxColumnId" ->
-        (maxId + newFields.length).toString)
     val metaAction =
       if (newFields.isEmpty) scala.None
-      else Some(metaDataJson(md, merged, partitionBy1, newConfig))
+      else Some(metaDataJson(md.node, merged, partitionBy1, newConfig))
     val v = DeltaScan.latestVersion(spark, tablePath) + 1
-    commit(spark, fs, aligned, tablePath, partitionBy1, version = v,
-      metaOverride = metaAction)
+    commit(spark, view.fs, aligned, tablePath, partitionBy1, version = v,
+      metaOverride = metaAction, meta = Some(md))
   }
+
+  private val EvolveTruncated = " — cannot evolve a checkpoint-truncated table"
+
+  /** columns being ADDED take, on a COLUMN-MAPPED table, fresh ids and
+    * fresh SYNTHETIC physical names — a reused human name could collide
+    * with an old physical column left behind by renameColumn/dropColumn
+    * — and the configuration's maxColumnId advances past them */
+  private def mappedColumns(md: Meta,
+      added: Seq[StructField]): (Seq[StructField], Map[String, String]) =
+    if (!md.mapped || added.isEmpty) (added, md.config)
+    else {
+      val maxId = md.config.get("delta.columnMapping.maxColumnId").map(_.toLong).getOrElse(0L)
+      (added.zipWithIndex.map { case (f, i) =>
+        f.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder().withMetadata(f.metadata)
+          .putLong("delta.columnMapping.id", maxId + 1 + i)
+          .putString("delta.columnMapping.physicalName",
+            s"col-${java.util.UUID.randomUUID()}")
+          .build())
+      }, md.config + ("delta.columnMapping.maxColumnId" -> (maxId + added.length).toString))
+    }
 
   /** ADD COLUMNS as a METADATA-ONLY commit — the schema half of
     * [[appendEvolve]] without any data: the new columns are appended
@@ -371,13 +364,9 @@ object DeltaWrite {
       "duplicate column names in addColumns")
     defaults.keys.foreach(k => require(cols.exists(_.name == k),
       s"default for '$k' names no added column"))
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val root = fs.makeQualified(new Path(tablePath))
-    val md = latestMetaNode(fs, tablePath).getOrElse(throw new IllegalStateException(
-      s"the JSON log of $tablePath carries no metaData — cannot evolve " +
-        "a checkpoint-truncated table"))
-    val declared = DataType.fromJson(md.get("schemaString").asText())
-      .asInstanceOf[StructType]
+    val view = new LogView(spark, tablePath)
+    val md = view.jsonMetaOr(EvolveTruncated)
+    val declared = md.schema
     cols.foreach(f => require(!declared.fieldNames.contains(f.name),
       s"column '${f.name}' already exists"))
     // column DEFAULTS (protocol §Column Default Values, writer feature
@@ -392,33 +381,24 @@ object DeltaWrite {
             ColumnDefaults.sqlLiteral(f.dataType, v)).build())
       case scala.None => f
     })
-    val config = configOf(md)
-    val mapped = config.getOrElse("delta.columnMapping.mode", "none") != "none"
-    val maxId = config.get("delta.columnMapping.maxColumnId").map(_.toLong).getOrElse(0L)
-    val newFields =
-      if (!mapped) withDefaults
-      else withDefaults.zipWithIndex.map { case (f, i) =>
-        f.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder().withMetadata(f.metadata)
-          .putLong("delta.columnMapping.id", maxId + 1 + i)
-          .putString("delta.columnMapping.physicalName",
-            s"col-${java.util.UUID.randomUUID()}")
-          .build())
-      }
-    val merged = StructType(declared.fields ++ newFields.map(_.copy(nullable = true)))
-    val newConfig =
-      if (!mapped) config
-      else config + ("delta.columnMapping.maxColumnId" -> (maxId + cols.length).toString)
-    val partCols = Option(md.get("partitionColumns"))
-      .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Seq.empty)
+    val (newFields, newConfig) = mappedColumns(md, withDefaults)
     val pact =
       if (defaults.isEmpty) Seq.empty
-      else featureProtocolAction(latestProtoNodeAny(spark, fs, tablePath),
-        Seq("allowColumnDefaults"))
-    val v = DeltaScan.latestVersion(spark, tablePath) + 1
-    writeCommitFile(fs, root, v,
-      pact ++ Seq(metaDataJson(md, merged, partCols, newConfig)),
-      operation = Some("ADD COLUMNS"))
+      else featureProtocolAction(view.protocol, Seq("allowColumnDefaults"))
+    commitMetaData(view, md, "ADD COLUMNS")(pact,
+      StructType(declared.fields ++ newFields.map(_.copy(nullable = true))), newConfig)
   }
+
+  /** the METADATA-ONLY commit: re-declare `md` — partitioning, id and
+    * created time carried — with `schema` and `config`, after any
+    * `protocol` upgrade actions */
+  private def commitMetaData(view: LogView, md: Meta, operation: String)(
+      protocol: Seq[String] = Nil, schema: StructType = md.schema,
+      config: Map[String, String] = md.config): Unit =
+    writeCommitFile(view.fs, view.root,
+      DeltaScan.latestVersion(view.spark, view.root.toString) + 1,
+      protocol :+ metaDataJson(md.node, schema, md.partCols, config),
+      operation = Some(operation))
 
   /** fill declared columns the caller omitted that carry a
     * CURRENT_DEFAULT, in declared order (extras ride at the end for
@@ -460,12 +440,7 @@ object DeltaWrite {
       keys: Seq[String], txn: Option[(String, Long)] = None): (Long, Long) = {
     import org.apache.spark.sql.functions.col
     require(keys.nonEmpty, "merge needs at least one key column")
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val md = latestMetaNode(fs, tablePath).getOrElse(throw new IllegalStateException(
-      s"the JSON log of $tablePath carries no metaData — cannot evolve " +
-        "a checkpoint-truncated table"))
-    val declared = DataType.fromJson(md.get("schemaString").asText())
-      .asInstanceOf[StructType]
+    val declared = new LogView(spark, tablePath).jsonMetaOr(EvolveTruncated).schema
     keys.foreach { k =>
       require(source.columns.contains(k), s"merge key column '$k' is not in the source")
       require(declared.fieldNames.contains(k), s"merge key column '$k' is not in the table schema")
@@ -510,18 +485,17 @@ object DeltaWrite {
     * source-root-relative). The experimentation twin of Iceberg's
     * [[IcebergWrite.appendToBranch]] WAP branches. */
   def cloneShallow(spark: SparkSession, sourcePath: String, targetPath: String): Unit = {
-    val fs = new Path(sourcePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    requireNoRowTracking(spark, fs, sourcePath, "cloneShallow")
+    val view = new LogView(spark, sourcePath)
+    val fs = view.fs
+    requireNoRowTracking(view, "cloneShallow")
     require(!fs.exists(new Path(targetPath, "_delta_log")),
       s"Delta log already exists at $targetPath")
-    val sourceRoot = fs.makeQualified(new Path(sourcePath))
+    val sourceRoot = view.root
     val targetRoot = fs.makeQualified(new Path(targetPath))
-    val (latestAdds, proto) = replayLatestAdds(fs, sourceRoot.toString)
+    val latestAdds = view.latestAdds
     require(latestAdds.nonEmpty, s"no live files to clone at $sourcePath")
-    val md = latestMetaNode(fs, sourceRoot.toString).getOrElse(
-      throw new IllegalStateException(
-        s"the JSON log of $sourcePath carries no metaData — cannot clone"))
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val md = view.jsonMetaOr(" — cannot clone").node
+    val proto = view.protocol
     val mdClone = md.deepCopy().asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
     mdClone.put("id", java.util.UUID.randomUUID().toString)
     mdClone.put("createdTime", System.currentTimeMillis())
@@ -556,14 +530,10 @@ object DeltaWrite {
       name: String, sqlExpr: String): Unit = {
     require(name.matches("[A-Za-z_][A-Za-z0-9_]*"),
       s"constraint name '$name' is not an identifier")
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val root = fs.makeQualified(new Path(tablePath))
-    val md = latestMetaNodeAny(spark, fs, tablePath).getOrElse(
-      throw new IllegalStateException(
-        s"no metaData at $tablePath — cannot add a constraint"))
-    val config = configOf(md)
+    val view = new LogView(spark, tablePath)
+    val md = view.metaOr(" — cannot add a constraint")
     val key = s"delta.constraints.$name"
-    require(!config.contains(key), s"constraint '$name' already exists")
+    require(!md.config.contains(key), s"constraint '$name' already exists")
     // existing rows must already satisfy it — loud otherwise
     val bad = DeltaScan.read(spark, tablePath)
       .filter(org.apache.spark.sql.functions.not(
@@ -571,26 +541,15 @@ object DeltaWrite {
       .limit(1).count()
     require(bad == 0L,
       s"existing rows violate CHECK ($sqlExpr) — constraint not added")
-    val declared = DataType.fromJson(md.get("schemaString").asText())
-      .asInstanceOf[StructType]
-    val partCols = Option(md.get("partitionColumns"))
-      .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Seq.empty)
-    val v = DeltaScan.latestVersion(spark, tablePath) + 1
     // CHECK constraints are a writer-3 protocol feature
-    writeCommitFile(fs, root, v, Seq(
-      """{"protocol":{"minReaderVersion":1,"minWriterVersion":3}}""",
-      metaDataJson(md, declared, partCols, config + (key -> sqlExpr))),
-      operation = Some("ADD CONSTRAINT"))
+    commitMetaData(view, md, "ADD CONSTRAINT")(
+      Seq("""{"protocol":{"minReaderVersion":1,"minWriterVersion":3}}"""),
+      config = md.config + (key -> sqlExpr))
   }
 
   // ---- change data feed (protocol §Add CDC File) ------------------------
 
   private[sources] val CdfKey = "delta.enableChangeDataFeed"
-
-  private def cdfEnabled(spark: SparkSession, fs: FileSystem,
-      tablePath: String): Boolean =
-    latestMetaNodeAny(spark, fs, tablePath).exists(md =>
-      configOf(md).get(CdfKey).contains("true"))
 
   /** ALTER TABLE SET TBLPROPERTIES: re-declare the metaData with the
     * merged configuration (schema/partitioning verbatim). Protocol-
@@ -600,18 +559,9 @@ object DeltaWrite {
   def setProperties(spark: SparkSession, tablePath: String,
       props: Map[String, String]): Unit = {
     require(props.nonEmpty, "no properties to set")
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val root = fs.makeQualified(new Path(tablePath))
-    val md = latestMetaNodeAny(spark, fs, tablePath).getOrElse(
-      throw new IllegalStateException(s"no metaData at $tablePath"))
-    val declared = DataType.fromJson(md.get("schemaString").asText())
-      .asInstanceOf[StructType]
-    val partCols = Option(md.get("partitionColumns"))
-      .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Seq.empty)
-    val v = DeltaScan.latestVersion(spark, tablePath) + 1
-    writeCommitFile(fs, root, v,
-      Seq(metaDataJson(md, declared, partCols, configOf(md) ++ props)),
-      operation = Some("SET TBLPROPERTIES"))
+    val view = new LogView(spark, tablePath)
+    val md = view.metaOr("")
+    commitMetaData(view, md, "SET TBLPROPERTIES")(config = md.config ++ props)
   }
 
   /** ENABLE THE CHANGE DATA FEED (table property
@@ -626,26 +576,15 @@ object DeltaWrite {
     * changes as a complete feed here); column-mapped tables refuse
     * enablement (change files would need physical-name plumbing). */
   def enableChangeDataFeed(spark: SparkSession, tablePath: String): Unit = {
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val root = fs.makeQualified(new Path(tablePath))
-    val md = latestMetaNodeAny(spark, fs, tablePath).getOrElse(
-      throw new IllegalStateException(s"no metaData at $tablePath"))
-    val config = configOf(md)
-    require(!config.get(CdfKey).contains("true"),
-      s"change data feed is already enabled at $tablePath")
-    require(config.getOrElse("delta.columnMapping.mode", "none") == "none",
+    val view = new LogView(spark, tablePath)
+    val md = view.metaOr("")
+    require(!md.cdf, s"change data feed is already enabled at $tablePath")
+    require(!md.mapped,
       "change data feed on a column-mapped table is not supported by this writer")
-    requireNoDeletionVectors(spark, tablePath)
-    val declared = DataType.fromJson(md.get("schemaString").asText())
-      .asInstanceOf[StructType]
-    val partCols = Option(md.get("partitionColumns"))
-      .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Seq.empty)
-    val pact = featureProtocolAction(latestProtoNodeAny(spark, fs, tablePath),
-      Seq("changeDataFeed"))
-    val v = DeltaScan.latestVersion(spark, tablePath) + 1
-    writeCommitFile(fs, root, v,
-      pact ++ Seq(metaDataJson(md, declared, partCols, config + (CdfKey -> "true"))),
-      operation = Some("SET TBLPROPERTIES"))
+    requireNoDeletionVectors(view)
+    commitMetaData(view, md, "SET TBLPROPERTIES")(
+      featureProtocolAction(view.protocol, Seq("changeDataFeed")),
+      config = md.config + (CdfKey -> "true"))
   }
 
   /** stage `changes` (the table schema + `_change_type`) as parquet
@@ -669,9 +608,8 @@ object DeltaWrite {
 
   /** ops that cannot express their row changes as a complete feed
     * refuse on CDF tables instead of silently starving consumers */
-  private def refuseOnCdf(spark: SparkSession, fs: FileSystem,
-      tablePath: String, op: String): Unit =
-    require(!cdfEnabled(spark, fs, tablePath),
+  private def refuseOnCdf(view: LogView, op: String): Unit =
+    require(!view.meta.exists(_.cdf),
       s"$op on a change-data-feed table would leave the feed incomplete " +
         "(no cdc actions for its row changes) — disable CDF or use the " +
         "copy-on-write DML")
@@ -679,21 +617,11 @@ object DeltaWrite {
   /** drop a CHECK constraint (metadata-only) */
   def dropCheckConstraint(spark: SparkSession, tablePath: String,
       name: String): Unit = {
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val root = fs.makeQualified(new Path(tablePath))
-    val md = latestMetaNodeAny(spark, fs, tablePath).getOrElse(
-      throw new IllegalStateException(s"no metaData at $tablePath"))
-    val config = configOf(md)
+    val view = new LogView(spark, tablePath)
+    val md = view.metaOr("")
     val key = s"delta.constraints.$name"
-    require(config.contains(key), s"no constraint '$name' at $tablePath")
-    val declared = DataType.fromJson(md.get("schemaString").asText())
-      .asInstanceOf[StructType]
-    val partCols = Option(md.get("partitionColumns"))
-      .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Seq.empty)
-    val v = DeltaScan.latestVersion(spark, tablePath) + 1
-    writeCommitFile(fs, root, v,
-      Seq(metaDataJson(md, declared, partCols, config - key)),
-      operation = Some("DROP CONSTRAINT"))
+    require(md.config.contains(key), s"no constraint '$name' at $tablePath")
+    commitMetaData(view, md, "DROP CONSTRAINT")(config = md.config - key)
   }
 
   // ---- clustered tables (PROTOCOL §Clustered Table) --------------------
@@ -716,15 +644,9 @@ object DeltaWrite {
     * (they are already the coarser layout dimension). */
   def setClusteringColumns(spark: SparkSession, tablePath: String,
       cols: Seq[String]): Unit = {
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val root = fs.makeQualified(new Path(tablePath))
-    val md = latestMetaNodeAny(spark, fs, tablePath).getOrElse(
-      throw new IllegalStateException(
-        s"no metaData at $tablePath — cannot set clustering columns"))
-    val declared = DataType.fromJson(md.get("schemaString").asText())
-      .asInstanceOf[StructType]
-    val partCols = Option(md.get("partitionColumns"))
-      .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Seq.empty)
+    val view = new LogView(spark, tablePath)
+    val md = view.metaOr(" — cannot set clustering columns")
+    val (declared, partCols) = (md.schema, md.partCols)
     require(cols.distinct.size == cols.size,
       s"duplicate clustering columns in ${cols.mkString(", ")}")
     cols.foreach { c =>
@@ -735,8 +657,6 @@ object DeltaWrite {
         s"clustering column '$c' is a partition column — it already " +
           "drives the coarser directory layout")
     }
-    val mapped = configOf(md)
-      .getOrElse("delta.columnMapping.mode", "none") != "none"
     val action =
       if (cols.isEmpty) {
         require(DeltaScan.domainMetadata(spark, tablePath)
@@ -749,16 +669,16 @@ object DeltaWrite {
         // parts; this writer scopes to top-level columns)
         val phys = cols.map { c =>
           val f = declared(c)
-          if (mapped) DeltaScan.physicalName(f) else f.name
+          if (md.mapped) DeltaScan.physicalName(f) else f.name
         }
         val cfg = phys.map(p => s"[${jstr(p)}]").mkString(
           """{"clusteringColumns":[""", ",", "]}")
         s"""{"domainMetadata":{"domain":${jstr(ClusteringDomain)},""" +
           s""""configuration":${jstr(cfg)},"removed":false}}"""
       }
-    val proto = latestProtoNodeAny(spark, fs, tablePath)
     val v = DeltaScan.latestVersion(spark, tablePath) + 1
-    writeCommitFile(fs, root, v, clusteringProtocolAction(proto) ++ Seq(action),
+    writeCommitFile(view.fs, view.root, v,
+      featureProtocolAction(view.protocol, Seq("clustering", "domainMetadata")) :+ action,
       operation = Some(if (cols.isEmpty) "DROP CLUSTER BY" else "CLUSTER BY"))
   }
 
@@ -774,14 +694,12 @@ object DeltaWrite {
   private[sources] def commitDomainMetadataAt(spark: SparkSession,
       tablePath: String, domain: String, configuration: String,
       operation: String, version: Long): Unit = {
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val root = fs.makeQualified(new Path(tablePath))
+    val view = new LogView(spark, tablePath)
     val action =
       s"""{"domainMetadata":{"domain":${jstr(domain)},""" +
         s""""configuration":${jstr(configuration)},"removed":false}}"""
-    val proto = latestProtoNodeAny(spark, fs, tablePath)
-    writeCommitFile(fs, root, version,
-      featureProtocolAction(proto, Seq("domainMetadata")) ++ Seq(action),
+    writeCommitFile(view.fs, view.root, version,
+      featureProtocolAction(view.protocol, Seq("domainMetadata")) :+ action,
       operation = Some(operation))
   }
 
@@ -797,45 +715,6 @@ object DeltaWrite {
       5 -> Seq("columnMapping"),
       6 -> Seq("identityColumns"))
     ladder.filter(_._1 <= minWriter).flatMap(_._2)
-  }
-
-  /** protocol action upgrading to writer features `domainMetadata` +
-    * `clustering` (empty when already present); reader version and
-    * reader features carry verbatim — both features are writer-only */
-  private def clusteringProtocolAction(
-      proto: Option[com.fasterxml.jackson.databind.node.ObjectNode]): Seq[String] =
-    featureProtocolAction(proto, Seq("clustering", "domainMetadata"))
-
-  /** latest protocol action — JSON tail newest-first, else the
-    * checkpoint top files (mirrors [[latestMetaNodeAny]]) */
-  private def latestProtoNodeAny(spark: SparkSession, fs: FileSystem,
-      tablePath: String): Option[com.fasterxml.jackson.databind.node.ObjectNode] = {
-    val logDir = new Path(fs.makeQualified(new Path(tablePath)), "_delta_log")
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val versions = fs.listStatus(logDir).toSeq.map(_.getPath.getName)
-      .collect { case n if n.matches("\\d{20}\\.json") => n.stripSuffix(".json").toLong }
-      .sorted.reverse
-    val fromTail = versions.iterator.flatMap { v =>
-      val in = fs.open(new Path(logDir, f"$v%020d.json"))
-      val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-        finally in.close()
-      lines.map(mapper.readTree).filter(_.has("protocol"))
-        .map(_.get("protocol").asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode])
-        .lastOption
-    }.nextOption()
-    fromTail.orElse {
-      DeltaScan.lastCheckpoint(spark, fs, logDir).flatMap { case (v, parts) =>
-        val (cpFiles, isJson, _) = DeltaScan.checkpointTopFiles(fs, logDir, v, parts)
-        val df = if (isJson) spark.read.json(cpFiles: _*)
-                 else spark.read.parquet(cpFiles: _*)
-        if (!df.columns.contains("protocol")) scala.None
-        else df.filter(org.apache.spark.sql.functions.col("protocol.minReaderVersion").isNotNull)
-          .select("protocol").toJSON.collect() // [lint:bounded] one protocol row
-          .headOption
-          .map(j => mapper.readTree(j).get("protocol")
-            .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode])
-      }
-    }
   }
 
   /** every `delta.constraints.*` in `config` must hold on every row of
@@ -878,10 +757,8 @@ object DeltaWrite {
     * directory and stage new files under it — an ABSOLUTE add (a
     * shallow clone's pointer into the source table) would stage into
     * the SOURCE tree. Refuse loudly. */
-  private def requireNoAbsoluteAdds(spark: SparkSession, fs: FileSystem,
-      tablePath: String, op: String): Unit = {
-    val abs = replayActions(spark, fs, tablePath)
-      .collect { case (p, true, _, _) if isAbsolutePath(p) => p }
+  private def requireNoAbsoluteAdds(view: LogView, op: String): Unit = {
+    val abs = view.replay().live.filter(isAbsolutePath)
     require(abs.isEmpty,
       s"$op does not support tables with absolute-path adds (a shallow " +
         s"clone?): ${abs.take(3).mkString(", ")} — operate on the source " +
@@ -941,16 +818,10 @@ object DeltaWrite {
     * apply the schema transform, commit ONE metadata-only version */
   private def alterMapped(spark: SparkSession, tablePath: String, op: String)(
       xform: (StructType, Seq[String]) => StructType): Unit = {
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val root = fs.makeQualified(new Path(tablePath))
-    val md = latestMetaNode(fs, tablePath).getOrElse(throw new IllegalStateException(
-      s"the JSON log of $tablePath carries no metaData — cannot $op"))
-    val declared = DataType.fromJson(md.get("schemaString").asText())
-      .asInstanceOf[StructType]
-    val partCols = Option(md.get("partitionColumns"))
-      .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Seq.empty)
-    val config = configOf(md)
-    val alreadyMapped = config.getOrElse("delta.columnMapping.mode", "none") != "none"
+    val view = new LogView(spark, tablePath)
+    val md = view.jsonMetaOr(s" — cannot $op")
+    val (declared, partCols, config) = (md.schema, md.partCols, md.config)
+    val alreadyMapped = md.mapped
     val (mappedSchema, maxId) =
       if (alreadyMapped)
         (declared, config.get("delta.columnMapping.maxColumnId")
@@ -991,7 +862,8 @@ object DeltaWrite {
     val protoLine: Option[String] =
       if (alreadyMapped) scala.None
       else {
-        val (_, proto) = replayLatestAdds(fs, tablePath)
+        view.requireFullHistory()
+        val proto = view.protocol
         val minReader = proto.flatMap(p => Option(p.get("minReaderVersion")))
           .map(_.asInt()).getOrElse(1)
         def feats(name: String): Seq[String] = proto.toSeq.flatMap(p =>
@@ -1007,15 +879,8 @@ object DeltaWrite {
             s""""readerFeatures":${arr(r)},"writerFeatures":${arr(w)}}}""")
         }
       }
-    val v = DeltaScan.latestVersion(spark, tablePath) + 1
-    writeCommitFile(fs, root, v,
-      protoLine.toSeq :+ metaDataJson(md, next, partCols, newConfig),
-      operation = Some("ALTER COLUMN MAPPING"))
+    commitMetaData(view, md, "ALTER COLUMN MAPPING")(protoLine.toSeq, next, newConfig)
   }
-
-  private def configOf(md: com.fasterxml.jackson.databind.JsonNode): Map[String, String] =
-    Option(md.get("configuration")).map(_.properties().asScala
-      .map(e => e.getKey -> e.getValue.asText()).toMap).getOrElse(Map.empty)
 
   /** a metaData action line carrying `schema`/`partCols`/`config`, id
     * and createdTime from the previous metaData */
@@ -1055,15 +920,13 @@ object DeltaWrite {
   /** see [[createWithTxn]] */
   def appendWithTxn(spark: SparkSession, df: DataFrame, tablePath: String,
       appId: String, txnVersion: Long, partitionBy: Seq[String] = Nil): Unit = {
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val md = latestMetaNodeAny(spark, fs, tablePath)
-    val declared = md.map(m => DataType.fromJson(m.get("schemaString").asText())
-      .asInstanceOf[StructType])
-    val (ddf, parts) = deriveGenerated(md, fillColumnDefaults(declared, df), partitionBy)
+    val view = new LogView(spark, tablePath)
+    val md = view.meta
+    val (ddf, parts) = deriveGenerated(md, fillColumnDefaults(md.map(_.schema), df), partitionBy)
     validateAgainstMeta(md, ddf, parts)
     val v = DeltaScan.latestVersion(spark, tablePath) + 1
-    commit(spark, fs, ddf, tablePath, parts, version = v,
-      txn = Some((appId, txnVersion)), metaNode = md)
+    commit(spark, view.fs, ddf, tablePath, parts, version = v,
+      txn = Some((appId, txnVersion)), meta = md)
   }
 
   /** Highest `txn` version committed for `appId`, from the JSON tail
@@ -1072,35 +935,22 @@ object DeltaWrite {
     * appId forward exactly so this survives truncation. None if the
     * table does not exist or has no txn for the app. */
   def lastTxnVersion(spark: SparkSession, tablePath: String, appId: String): Option[Long] = {
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val logDir = new Path(fs.makeQualified(new Path(tablePath)), "_delta_log")
-    if (!fs.exists(logDir)) return scala.None
-    // the JSON tail may be empty after checkpoint truncation — list
-    // what is actually there instead of asking for a latest version
-    val jsonVersions = fs.listStatus(logDir).toSeq
-      .map(_.getPath.getName)
-      .collect { case n if n.matches("\\d{20}\\.json") => n.stripSuffix(".json").toLong }
-      .sorted
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val view = new LogView(spark, tablePath)
+    if (!view.exists) return scala.None
+    val (fs, logDir) = (view.fs, view.logDir)
     var best: Option[Long] = scala.None
     def consider(app: String, v: Long): Unit =
       if (app == appId && best.forall(_ < v)) best = Some(v)
     // checkpoint first (older state), then the JSON tail (newer wins on
     // equal versions anyway — we keep the max)
-    val cpFile = new Path(logDir, "_last_checkpoint")
-    val cpVersion: Long =
-      if (!fs.exists(cpFile)) -1L
-      else {
-        val in = fs.open(cpFile)
-        val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-        val node = mapper.readTree(txt)
-        val v = node.get("version").asLong(-1L)
+    val cpVersion: Long = view.lastCheckpoint match {
+      case scala.None => -1L
+      case Some((v, parts)) =>
         // honor multi-part AND v2 UUID-named checkpoints (external
         // writers): same resolution DeltaScan.read uses — missing a
         // txn here would silently break the exactly-once handshake
         // after truncation. V2 keeps non-file actions (txn included)
         // in the TOP file, so sidecars never need reading here.
-        val parts = Option(node.get("parts")).map(_.asInt())
         val resolved =
           if (v < 0) scala.None
           else scala.util.Try(
@@ -1118,14 +968,11 @@ object DeltaWrite {
             v
           case _ => -1L
         }
-      }
-    jsonVersions.filter(_ > cpVersion).foreach { v =>
-      val p = new Path(logDir, f"$v%020d.json")
-      val in = fs.open(p)
-      val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-        finally in.close()
-      lines.foreach { l =>
-        val node = mapper.readTree(l)
+    }
+    // the JSON tail may be empty after checkpoint truncation — replay
+    // what is actually there instead of asking for a latest version
+    view.jsonVersions.filter(_ > cpVersion).foreach { v =>
+      view.commit(v).foreach { node =>
         val t = node.get("txn")
         if (t != null && t.get("appId") != null)
           consider(t.get("appId").asText(), t.get("version").asLong())
@@ -1140,16 +987,12 @@ object DeltaWrite {
     * JSON tail carries no metaData — e.g. appending to a
     * checkpoint-truncated table another writer created, where metaData
     * lives only in the checkpoint parquet */
-  private def validateAgainstMeta(
-      metaNode: Option[com.fasterxml.jackson.databind.JsonNode],
+  private def validateAgainstMeta(meta: Option[Meta],
       df: DataFrame, partitionBy: Seq[String]): Unit = {
-    metaNode.foreach { md =>
-      val declaredParts = Option(md.get("partitionColumns"))
-        .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Seq.empty)
-      require(declaredParts == partitionBy,
-        s"append partitioning $partitionBy does not match the table's $declaredParts")
-      val declared = DataType.fromJson(md.get("schemaString").asText())
-        .asInstanceOf[StructType]
+    meta.foreach { md =>
+      require(md.partCols == partitionBy,
+        s"append partitioning $partitionBy does not match the table's ${md.partCols}")
+      val declared = md.schema
       val got = df.schema
       require(
         declared.fields.map(f => (f.name, f.dataType)).toSeq ==
@@ -1432,64 +1275,48 @@ object DeltaWrite {
     * directory listing, so each round writes fresh files and the lost
     * ones are vacuum fodder, never data corruption. */
   def appendWithRetry(spark: SparkSession, df: DataFrame, tablePath: String,
-      partitionBy: Seq[String] = Nil, maxRetries: Int = 5): Unit = {
-    require(maxRetries >= 0, s"maxRetries must be >= 0, got $maxRetries")
-    var attempt = 0
-    while (true) {
-      try { append(spark, df, tablePath, partitionBy); return }
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
-      }
-    }
-  }
+      partitionBy: Seq[String] = Nil, maxRetries: Int = 5): Unit =
+    LakeSupport.retryOnConflict(maxRetries)(append(spark, df, tablePath, partitionBy))
 
   /** test seam for the conditional-commit guard: commit at an explicit
     * log version — what a racing writer with a stale view of the log
     * does right before it loses the race */
   private[graft] def appendAt(spark: SparkSession, df: DataFrame,
       tablePath: String, version: Long): Unit = {
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    commit(spark, fs, df, tablePath, Nil, version)
+    val view = new LogView(spark, tablePath)
+    commit(spark, view.fs, df, tablePath, Nil, version, meta = view.meta)
   }
 
   private def commit(spark: SparkSession, fs: FileSystem, df: DataFrame,
       tablePath: String, partitionBy: Seq[String], version: Long,
       txn: Option[(String, Long)] = None,
       metaOverride: Option[String] = None,
-      metaNode: Option[com.fasterxml.jackson.databind.JsonNode] = None,
+      meta: Option[Meta] = None,
       protocol0: Option[String] = None): Unit = {
     val root = fs.makeQualified(new Path(tablePath))
     // COLUMN-MAPPED tables store PHYSICAL column names in parquet (and
     // physical hive partition dirs); `df` arrives logical, validated
     // against the logical schema — project right before the write. The
     // governing metaData is the override when this commit re-declares
-    // it (appendEvolve), else the table's latest.
+    // it (appendEvolve), else the table's latest (`meta`, read by the
+    // caller's planning view).
     val (wdf, wparts) = {
-      val mdNode =
+      val governing =
         if (version == 0L) scala.None
-        else metaOverride match {
-          case Some(j) => Option(new com.fasterxml.jackson.databind.ObjectMapper()
-            .readTree(j).get("metaData"))
-          case None => metaNode.orElse(latestMetaNodeAny(spark, fs, tablePath))
-        }
+        else metaOverride.map(j => Meta(mapper.readTree(j).get("metaData"))).orElse(meta)
       // CHECK constraints + declared NOT NULL gate every logical write
       // BEFORE any file is staged (one limit-1 early-exit pass per
       // constraint; the null check is FREE when the incoming frame's
       // own schema already proves non-nullability)
-      mdNode.foreach { md =>
-        enforceConstraints(df, configOf(md))
-        enforceRequired(df, DataType.fromJson(md.get("schemaString").asText())
-          .asInstanceOf[StructType])
+      governing.foreach { md =>
+        enforceConstraints(df, md.config)
+        enforceRequired(df, md.schema)
       }
-      mdNode.filter(md =>
-          configOf(md).getOrElse("delta.columnMapping.mode", "none") != "none") match {
+      governing.filter(_.mapped) match {
         case scala.None => (df, partitionBy)
         case Some(md) =>
           import org.apache.spark.sql.functions.col
-          val declared = DataType.fromJson(md.get("schemaString").asText())
-            .asInstanceOf[StructType]
+          val declared = md.schema
           val proj = declared.fields.map(f =>
             col(f.name).cast(DeltaScan.physicalType(f.dataType))
               .as(DeltaScan.physicalName(f))).toSeq
@@ -1517,7 +1344,7 @@ object DeltaWrite {
     // footer stats read in bounded parallel — a partitioned write can
     // emit thousands of files and a sequential footer walk is a
     // single-core commit bottleneck (16 concurrent metadata reads)
-    val adds = parMetaMap(added) { case (rel, size) =>
+    val adds = parMap(added) { case (rel, size) =>
       // partition values from the hive path segments col=value
       val pv = rel.split('/').dropRight(1).collect {
         case seg if seg.contains('=') =>
@@ -1578,53 +1405,6 @@ object DeltaWrite {
     maybeAutoCheckpoint(spark, fs, root, version)
   }
 
-  /** full-history replay → per path: (latest action is add?, version,
-    * remove deletionTimestamp). Driver-side metadata work over this
-    * writer's own JSON log (never truncated — checkpoint() enforces). */
-  private def replayActions(spark: SparkSession, fs: FileSystem,
-      tablePath: String, upTo: Option[Long] = None): Seq[(String, Boolean, Long, Long)] =
-    replayActionsWithRaw(spark, fs, tablePath, upTo)._1
-
-  /** like [[replayActions]] but additionally returns the set of RAW
-    * (undecoded) action paths ever logged — vacuum's last-resort
-    * exclusion namespace: whatever an external writer's encoding
-    * convention was, the raw bytes it logged are in here */
-  private def replayActionsWithRaw(spark: SparkSession, fs: FileSystem,
-      tablePath: String, upTo: Option[Long] = None): (Seq[(String, Boolean, Long, Long)], Set[String]) = {
-    val logDir = new Path(fs.makeQualified(new Path(tablePath)), "_delta_log")
-    val version = upTo.getOrElse(DeltaScan.latestVersion(spark, tablePath))
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val latest = scala.collection.mutable.LinkedHashMap.empty[String, (Boolean, Long, Long)]
-    val raw = Set.newBuilder[String]
-    (0L to version).foreach { v =>
-      val p = new Path(logDir, f"$v%020d.json")
-      require(fs.exists(p),
-        s"cannot replay $tablePath: commit $p is missing (log truncated?)")
-      val in = fs.open(p)
-      val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-        finally in.close()
-      lines.map(mapper.readTree).foreach { node =>
-        // spec-compliant external writers percent-encode action paths;
-        // decode to ON-DISK names (mirroring DeltaScan.read) so
-        // vacuum's tracked-set, compact's live-set, and existence
-        // checks all compare in the same namespace — an encoded live
-        // file must never look untracked (that deleted data)
-        if (node.has("add")) {
-          val rp = node.get("add").get("path").asText()
-          raw += rp
-          latest(decodePath(rp)) = (true, v, 0L)
-        } else if (node.has("remove")) {
-          val r = node.get("remove")
-          val rp = r.get("path").asText()
-          raw += rp
-          val ts = Option(r.get("deletionTimestamp")).map(_.asLong()).getOrElse(0L)
-          latest(decodePath(rp)) = (false, v, ts)
-        }
-      }
-    }
-    (latest.toSeq.map { case (p, (isAdd, v, ts)) => (p, isAdd, v, ts) }, raw.result())
-  }
-
   /** RESTORE the table to `toVersion` as a NEW commit (the RESTORE
     * command): files live at `toVersion` but dead now are re-ADDED,
     * files live now but absent then are REMOVED — history is
@@ -1635,17 +1415,15 @@ object DeltaWrite {
     * unrecoverable in Delta proper too). Returns
     * (filesReAdded, filesRemoved). */
   def restore(spark: SparkSession, tablePath: String, toVersion: Long): (Int, Int) = {
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    refuseOnCdf(spark, fs, tablePath, "restore")
-    requireNoDeletionVectors(spark, tablePath)
-    requireNoRowTracking(spark, fs, tablePath, "restore")
-    val root = fs.makeQualified(new Path(tablePath))
-    val cur = DeltaScan.latestVersion(spark, tablePath)
+    val view = new LogView(spark, tablePath)
+    val (fs, root) = (view.fs, view.root)
+    refuseOnCdf(view, "restore")
+    requireNoDeletionVectors(view)
+    requireNoRowTracking(view, "restore")
+    val cur = view.version
     require(toVersion >= 0 && toVersion <= cur,
       s"version $toVersion out of range 0..$cur for $tablePath")
-    def liveAt(v: Long): Set[String] =
-      replayActionsWithRaw(spark, fs, tablePath, Some(v))._1
-        .collect { case (p, true, _, _) => p }.toSet
+    def liveAt(v: Long): Set[String] = view.replay(v).live.toSet
     val target = liveAt(toVersion)
     val now = liveAt(cur)
     val toAdd = (target -- now).toSeq.sorted
@@ -1661,22 +1439,8 @@ object DeltaWrite {
     // RESTORE also restores the SCHEMA (delta-spark semantics): when
     // the metaData in force at toVersion differs from the current one
     // (appendEvolve in between), the restore commit re-declares it
-    val metaAt: Option[String] = {
-      val logDir = new Path(root, "_delta_log")
-      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-      (toVersion to 0L by -1L).iterator.flatMap { v =>
-        val p = new Path(logDir, f"$v%020d.json")
-        if (!fs.exists(p)) Iterator.empty
-        else {
-          val in = fs.open(p)
-          val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toSeq
-            finally in.close()
-          lines.map(mapper.readTree).filter(_.has("metaData"))
-            .map(_.get("metaData")).lastOption.iterator
-        }
-      }.nextOption().map(_.toString)
-    }
-    val metaAction = (metaAt, latestMetaNode(fs, tablePath).map(_.toString)) match {
+    val metaAction = (view.metaAt(toVersion).map(_.toString),
+        view.jsonMeta.map(_.node.toString)) match {
       case (Some(old), Some(curMeta)) if old != curMeta => Seq(s"""{"metaData":$old}""")
       case _ => Seq.empty
     }
@@ -1710,17 +1474,17 @@ object DeltaWrite {
   def compact(spark: SparkSession, tablePath: String,
       smallFileBytes: Long = 32L << 20, targetFiles: Int = 1): Unit = {
     require(targetFiles >= 1, s"targetFiles must be >= 1, got $targetFiles")
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val view = new LogView(spark, tablePath)
+    val (fs, root) = (view.fs, view.root)
     // (mapped tables compact fine: the raw-parquet rewrite is
     // column-name agnostic — physical names ride through verbatim)
     // a raw-parquet rewrite of a DV-carrying file would resurrect its
     // deleted rows (the re-add drops the descriptor) — refuse loudly
-    requireNoDeletionVectors(spark, tablePath)
-    requireNoAbsoluteAdds(spark, fs, tablePath, "compact")
-    val root = fs.makeQualified(new Path(tablePath))
-    val readV = DeltaScan.latestVersion(spark, tablePath)
-    val live = replayActions(spark, fs, tablePath, Some(readV))
-      .collect { case (p, true, _, _) => p }
+    requireNoDeletionVectors(view)
+    requireNoAbsoluteAdds(view, "compact")
+    val readV = view.version
+    val replayed = view.replay(readV)
+    val live = replayed.live
     val small = live.filter { rel =>
       fs.getFileStatus(new Path(root, rel)).getLen < smallFileBytes
     }
@@ -1745,11 +1509,16 @@ object DeltaWrite {
     // `_metadata.row_index`). The new files still get fresh
     // baseRowIds from the commit stamp, as the protocol requires —
     // the materialized values win on read.
-    val rtConf = latestMetaNodeAny(spark, fs, tablePath).map(configOf)
-      .getOrElse(Map.empty)
+    val rtConf = view.meta.map(_.config).getOrElse(Map.empty)
     val rtOn = rowTrackingEnabledConf(rtConf)
+    // latest add's (baseRowId, defaultRowCommitVersion) per live file
     val rtState: Map[String, (Long, Long)] =
-      if (!rtOn) Map.empty else rowTrackingFileState(fs, root.toString)
+      if (!rtOn) Map.empty
+      else replayed.latest.collect {
+        case (rel, Some(add), v, _) if Option(add.get("baseRowId")).exists(!_.isNull) =>
+          rel -> ((add.get("baseRowId").asLong(),
+            Option(add.get("defaultRowCommitVersion")).map(_.asLong()).getOrElse(v)))
+      }.toMap
     def materializeIds(src: DataFrame): DataFrame = {
       import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit}
       val matId = rtConf(MatRowIdKey)
@@ -1814,62 +1583,179 @@ object DeltaWrite {
 
   // ---- row-level DELETE / MERGE (copy-on-write) -----------------------
 
-  /** LATEST metaData action in the JSON log (newest commit wins —
-    * [[appendEvolve]] rewrites it, so commit 0 is only the initial
-    * value), scanning commits newest-first and stopping at the first
-    * hit. None when the JSON tail carries no metaData (fully
-    * checkpoint-truncated log — the checkpoint parquet has it then). */
-  private def latestMetaNode(fs: FileSystem,
-      tablePath: String): Option[com.fasterxml.jackson.databind.JsonNode] = {
-    val logDir = new Path(tablePath, "_delta_log")
-    if (!fs.exists(logDir)) return scala.None
-    val versions = fs.listStatus(logDir).toSeq.map(_.getPath.getName)
-      .collect { case n if n.matches("\\d{20}\\.json") => n.stripSuffix(".json").toLong }
-      .sorted.reverse
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    versions.iterator.flatMap { v =>
-      val in = fs.open(new Path(logDir, f"$v%020d.json"))
-      val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toSeq
-        finally in.close()
-      lines.map(mapper.readTree).filter(_.has("metaData")).map(_.get("metaData"))
-        .lastOption
-    }.nextOption()
+  /** a metaData action, decoded once */
+  private final case class Meta(node: JsonNode) {
+    lazy val schema: StructType =
+      DataType.fromJson(node.get("schemaString").asText()).asInstanceOf[StructType]
+    lazy val partCols: Seq[String] = Option(node.get("partitionColumns"))
+      .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Seq.empty)
+    lazy val config: Map[String, String] = Option(node.get("configuration"))
+      .map(_.properties().asScala.map(e => e.getKey -> e.getValue.asText()).toMap)
+      .getOrElse(Map.empty)
+    def mapped: Boolean = config.getOrElse("delta.columnMapping.mode", "none") != "none"
+    def cdf: Boolean = config.get(CdfKey).contains("true")
+    def rowTracking: Boolean = rowTrackingEnabledConf(config)
   }
 
-  /** [[latestMetaNode]] with a CHECKPOINT fallback: when the JSON tail
-    * has been cleaned past the last metaData-carrying commit (a
-    * long-lived streaming sink after [[checkpoint]]-based cleanup), the
-    * metaData lives in the checkpoint — read it there, one bounded job.
-    * Without this, appends to a checkpoint-truncated COLUMN-MAPPED
-    * table would miss the mapping and write logical names into files
-    * whose readers expect physical names. */
-  private def latestMetaNodeAny(spark: SparkSession, fs: FileSystem,
-      tablePath: String): Option[com.fasterxml.jackson.databind.JsonNode] =
-    latestMetaNode(fs, tablePath).orElse {
-      val logDir = new Path(fs.makeQualified(new Path(tablePath)), "_delta_log")
-      DeltaScan.lastCheckpoint(spark, fs, logDir).flatMap { case (v, parts) =>
+  /** full-history replay result: per decoded path its latest add
+    * (Some(node)) or remove (None) and that action's version, in
+    * first-seen order, plus every RAW path ever logged — vacuum's
+    * last-resort exclusion namespace: whatever an external writer's
+    * encoding convention was, the raw bytes it logged are in here */
+  private final case class Replay(
+      latest: Seq[(String, Option[ObjectNode], Long, Long)], raw: Set[String]) {
+    /** per path: (latest action is add?, version, remove deletionTimestamp) */
+    def actions: Seq[(String, Boolean, Long, Long)] =
+      latest.map { case (p, add, v, ts) => (p, add.isDefined, v, ts) }
+    def live: Seq[String] = latest.collect { case (p, Some(_), _, _) => p }
+  }
+
+  /** One operation's view of a Delta table's log: `_delta_log` is
+    * listed once and each commit JSON parsed at most once, on first
+    * use. It answers what an operation plans from — the latest
+    * metaData and protocol (JSON tail newest-first, then the
+    * checkpoint) and the full-history per-path replay. A view is built
+    * per operation and never kept; commit attempts read fresh state. */
+  private final class LogView(val spark: SparkSession, val tablePath: String) {
+    val fs: FileSystem =
+      new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val root: Path = fs.makeQualified(new Path(tablePath))
+    val logDir = new Path(root, "_delta_log")
+    val exists: Boolean = fs.exists(logDir)
+    /** JSON commit versions present, ascending */
+    val jsonVersions: Seq[Long] =
+      if (!exists) Seq.empty
+      else fs.listStatus(logDir).toSeq.map(_.getPath.getName)
+        .collect { case n if n.matches("\\d{20}\\.json") => n.stripSuffix(".json").toLong }
+        .sorted
+    private val present = jsonVersions.toSet
+    private val parsed = scala.collection.mutable.Map.empty[Long, Seq[JsonNode]]
+
+    /** commit `v`'s action lines */
+    def commit(v: Long): Seq[JsonNode] = parsed.getOrElseUpdate(v, {
+      val in = fs.open(new Path(logDir, f"$v%020d.json"))
+      val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
+        finally in.close()
+      lines.map(mapper.readTree)
+    })
+
+    lazy val lastCheckpoint: Option[(Long, Option[Int])] =
+      if (!exists) scala.None else DeltaScan.lastCheckpoint(spark, fs, logDir)
+
+    /** latest committed version ([[DeltaScan.latestVersion]]'s rule) */
+    lazy val version: Long = {
+      require(jsonVersions.nonEmpty || lastCheckpoint.nonEmpty,
+        s"no Delta log found under $tablePath/_delta_log")
+      (jsonVersions ++ lastCheckpoint.map(_._1)).max
+    }
+
+    /** newest `key` action among the JSON commits up to `upTo` */
+    private def newestInJson(key: String, upTo: Long = Long.MaxValue): Option[JsonNode] =
+      jsonVersions.reverseIterator.filter(_ <= upTo).flatMap { v =>
+        commit(v).filter(_.has(key)).map(_.get(key)).lastOption
+      }.nextOption()
+
+    /** the checkpoint's `key` action (one bounded job) */
+    private def fromCheckpoint(key: String, idField: String): Option[JsonNode] =
+      lastCheckpoint.flatMap { case (v, parts) =>
         val (cpFiles, isJson, _) = DeltaScan.checkpointTopFiles(fs, logDir, v, parts)
         val df = if (isJson) spark.read.json(cpFiles: _*)
                  else spark.read.parquet(cpFiles: _*)
-        if (!df.columns.contains("metaData")) scala.None
-        else df.filter(org.apache.spark.sql.functions.col("metaData.id").isNotNull)
-          .select("metaData").toJSON.collect() // [lint:bounded] one metaData row
-          .headOption
-          .map(j => new com.fasterxml.jackson.databind.ObjectMapper()
-            .readTree(j).get("metaData"))
+        if (!df.columns.contains(key)) scala.None
+        else df.filter(org.apache.spark.sql.functions.col(s"$key.$idField").isNotNull)
+          .select(key).toJSON.collect() // [lint:bounded] one action row
+          .headOption.map(j => mapper.readTree(j).get(key))
       }
+
+    /** LATEST metaData in the JSON log (newest commit wins —
+      * [[appendEvolve]] rewrites it, so commit 0 is only the initial
+      * value). None when the JSON tail carries none (a fully
+      * checkpoint-truncated log). */
+    lazy val jsonMeta: Option[Meta] = newestInJson("metaData").map(Meta)
+
+    /** [[jsonMeta]] with a CHECKPOINT fallback: when the JSON tail has
+      * been cleaned past the last metaData-carrying commit (a
+      * long-lived streaming sink after [[checkpoint]]-based cleanup),
+      * the metaData lives in the checkpoint. Without this, appends to a
+      * checkpoint-truncated COLUMN-MAPPED table would miss the mapping
+      * and write logical names into files whose readers expect
+      * physical names. */
+    lazy val meta: Option[Meta] =
+      jsonMeta.orElse(fromCheckpoint("metaData", "id").map(Meta))
+
+    /** latest protocol action — JSON tail newest-first, else the
+      * checkpoint */
+    lazy val protocol: Option[ObjectNode] =
+      newestInJson("protocol").orElse(fromCheckpoint("protocol", "minReaderVersion"))
+        .map(_.asInstanceOf[ObjectNode])
+
+    /** the metaData in force at version `v` (JSON commits only) */
+    def metaAt(v: Long): Option[JsonNode] = newestInJson("metaData", v)
+
+    def jsonMetaOr(why: String): Meta = jsonMeta.getOrElse(throw new IllegalStateException(
+      s"the JSON log of $tablePath carries no metaData$why"))
+
+    def metaOr(why: String): Meta = meta.getOrElse(throw new IllegalStateException(
+      s"no metaData at $tablePath$why"))
+
+    /** the declared table (schema, partitioning, mapping) DML plans on */
+    def tableMeta: Meta = {
+      require(exists, s"no Delta table at $tablePath")
+      jsonMetaOr("")
     }
 
-  /** table schema + partition columns from the latest metaData */
-  private def tableMeta(fs: FileSystem, tablePath: String): (StructType, Seq[String]) = {
-    require(fs.exists(new Path(tablePath, "_delta_log")), s"no Delta table at $tablePath")
-    val md = latestMetaNode(fs, tablePath).getOrElse(throw new IllegalStateException(
-      s"the JSON log of $tablePath carries no metaData"))
-    val partCols = Option(md.get("partitionColumns"))
-      .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Seq.empty)
-    (DataType.fromJson(md.get("schemaString").asText()).asInstanceOf[StructType],
-      partCols)
+    /** full-history replay through `upTo` (default: the latest
+      * version) — driver-side metadata work over this writer's own
+      * JSON log, which it never truncates (checkpoint() enforces) */
+    def replay(upTo: Long = version): Replay = {
+      val latest = scala.collection.mutable.LinkedHashMap
+        .empty[String, (Option[ObjectNode], Long, Long)]
+      val raw = Set.newBuilder[String]
+      (0L to upTo).foreach { v =>
+        require(present(v), s"cannot replay $tablePath: commit " +
+          s"${new Path(logDir, f"$v%020d.json")} is missing (log truncated?)")
+        commit(v).foreach { node =>
+          // spec-compliant external writers percent-encode action paths;
+          // decode to ON-DISK names (mirroring DeltaScan.read) so
+          // vacuum's tracked-set, compact's live-set, and existence
+          // checks all compare in the same namespace — an encoded live
+          // file must never look untracked (that deleted data)
+          if (node.has("add")) {
+            val add = node.get("add").asInstanceOf[ObjectNode]
+            val rp = add.get("path").asText()
+            raw += rp
+            latest(decodePath(rp)) = (Some(add), v, 0L)
+          } else if (node.has("remove")) {
+            val r = node.get("remove")
+            val rp = r.get("path").asText()
+            raw += rp
+            val ts = Option(r.get("deletionTimestamp")).map(_.asLong()).getOrElse(0L)
+            latest(decodePath(rp)) = (scala.None, v, ts)
+          }
+        }
+      }
+      Replay(latest.toSeq.map { case (p, (a, v, ts)) => (p, a, v, ts) }, raw.result())
+    }
+
+    /** a checkpoint-truncated tail would yield a silently PARTIAL add
+      * view — deleting/DV-ing against it corrupts; fail loudly instead */
+    def requireFullHistory(): Unit =
+      require(jsonVersions.headOption.contains(0L) &&
+          jsonVersions == (0L to jsonVersions.lastOption.getOrElse(-1L)),
+        s"the JSON log of $tablePath is truncated (have ${jsonVersions.size} of " +
+          s"${jsonVersions.lastOption.map(_ + 1).getOrElse(0L)} commits) — " +
+          "row-level ops need the full JSON history")
+
+    /** LATEST add action (a mutable Jackson node) per live file, over
+      * the complete JSON history — the raw-JSON view the DV ops clone
+      * so re-adds keep stats/partitionValues/size byte-identical */
+    lazy val latestAdds: Map[String, ObjectNode] = {
+      requireFullHistory()
+      replay(jsonVersions.last).latest
+        .collect { case (p, Some(add), _, _) => p -> add }.toMap
+    }
   }
+
 
   /** Live table rows plus a `__rel` column naming each row's data file
     * (table-relative path — the victim locator deleteWhere/merge
@@ -1932,11 +1818,6 @@ object DeltaWrite {
         Seq(col("__rel"), col("__pos")): _*)
   }
 
-  /** is the table's latest metaData column-mapped? */
-  private def isMapped(fs: FileSystem, tablePath: String): Boolean =
-    latestMetaNode(fs, tablePath).exists(md =>
-      configOf(md).getOrElse("delta.columnMapping.mode", "none") != "none")
-
   /** logical column list -> the physical write projection (identity
     * when unmapped); nested logical names re-label via a positional
     * struct cast, the reverse of the reader's toLogical */
@@ -1982,7 +1863,7 @@ object DeltaWrite {
   private def stagedAddLines(spark: SparkSession, fs: FileSystem, root: Path,
       added: Seq[(String, Long)]): Seq[String] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val counted = parMetaMap(added) { case (rel, size) =>
+    val counted = parMap(added) { case (rel, size) =>
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(root, rel), conf))
       (rel, size, (try r.getRecordCount finally r.close()) > 0L)
@@ -1990,30 +1871,12 @@ object DeltaWrite {
     val (kept, empty) = counted.partition(_._3)
     empty.foreach { case (rel, _, _) => fs.delete(new Path(root, rel), false) }
     val now = System.currentTimeMillis()
-    parMetaMap(kept) { case (rel, size, _) =>
+    parMap(kept) { case (rel, size, _) =>
       val stats = ParquetStats.statsJson(conf, new Path(root, rel))
         .map(s => s""","stats":${jstr(s)}""").getOrElse("")
       s"""{"add":{"path":${jstr(encodePath(rel))},"partitionValues":{${partitionValuesJson(rel)}},"size":$size,"modificationTime":$now,"dataChange":true$stats}}"""
     }
   }
-
-  /** bounded driver-side parallel map for per-file METADATA I/O
-    * (parquet footer reads) — a partitioned DML can touch thousands of
-    * files, and a sequential footer walk single-cores the commit.
-    * Order-preserving; exceptions propagate. */
-  private def parMetaMap[A, B](xs: Seq[A])(f: A => B): Seq[B] =
-    if (xs.lengthCompare(8) < 0) xs.map(f)
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(16)
-      try {
-        val futs = xs.map { x =>
-          pool.submit(new java.util.concurrent.Callable[B] { def call(): B = f(x) })
-        }
-        futs.map(_.get())
-      } catch {
-        case e: java.util.concurrent.ExecutionException => throw e.getCause
-      } finally pool.shutdown()
-    }
 
   /** Row-level DELETE, copy-on-write: remove every current row
     * matching `cond` by rewriting ONLY the files that hold matching
@@ -2032,16 +1895,15 @@ object DeltaWrite {
   def deleteWhere(spark: SparkSession, tablePath: String,
       cond: org.apache.spark.sql.Column): Long = {
     import org.apache.spark.sql.functions._
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    requireNoDeletionVectors(spark, tablePath)
-    requireNoAbsoluteAdds(spark, fs, tablePath, "deleteWhere")
-    requireNoRowTracking(spark, fs, tablePath, "deleteWhere")
-    val root = fs.makeQualified(new Path(tablePath))
-    val (schema, partCols) = tableMeta(fs, tablePath)
-    val mapped = isMapped(fs, tablePath)
-    val readV = DeltaScan.latestVersion(spark, tablePath)
-    val live = replayActions(spark, fs, tablePath, Some(readV))
-      .collect { case (p, true, _, _) => p }
+    val view = new LogView(spark, tablePath)
+    val (fs, root) = (view.fs, view.root)
+    requireNoDeletionVectors(view)
+    requireNoAbsoluteAdds(view, "deleteWhere")
+    requireNoRowTracking(view, "deleteWhere")
+    val md = view.tableMeta
+    val (schema, partCols, mapped) = (md.schema, md.partCols, md.mapped)
+    val readV = view.version
+    val live = view.replay(readV).live
     if (live.isEmpty) return 0L
     val hit = liveScan(spark, root, schema, partCols, live, mapped).filter(cond)
       .agg(count(lit(1)).as("n"), collect_set(col("__rel")).as("files"))
@@ -2055,7 +1917,7 @@ object DeltaWrite {
     // change data feed: the deleted rows, typed 'delete', land as
     // change files in the SAME commit
     val cdcLines =
-      if (!cdfEnabled(spark, fs, tablePath)) Seq.empty
+      if (!view.meta.exists(_.cdf)) Seq.empty
       else stageCdcFiles(spark, fs, root, schema, partCols,
         liveScan(spark, root, schema, partCols, victims, mapped)
           .filter(coalesce(cond, lit(false)))
@@ -2103,13 +1965,13 @@ object DeltaWrite {
       assignments: Seq[(String, org.apache.spark.sql.Column)]): Long = {
     import org.apache.spark.sql.functions._
     require(assignments.nonEmpty, "updateWhere needs at least one SET assignment")
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    requireNoDeletionVectors(spark, tablePath)
-    requireNoAbsoluteAdds(spark, fs, tablePath, "updateWhere")
-    requireNoRowTracking(spark, fs, tablePath, "updateWhere")
-    val root = fs.makeQualified(new Path(tablePath))
-    val (schema, partCols) = tableMeta(fs, tablePath)
-    val mapped = isMapped(fs, tablePath)
+    val view = new LogView(spark, tablePath)
+    val (fs, root) = (view.fs, view.root)
+    requireNoDeletionVectors(view)
+    requireNoAbsoluteAdds(view, "updateWhere")
+    requireNoRowTracking(view, "updateWhere")
+    val md = view.tableMeta
+    val (schema, partCols, mapped) = (md.schema, md.partCols, md.mapped)
     val setByName = assignments.toMap
     require(setByName.size == assignments.size, "duplicate SET column")
     assignments.foreach { case (n, _) =>
@@ -2120,9 +1982,8 @@ object DeltaWrite {
     }
     refuseGeneratedAssignments(schema, setByName.keys, "updateWhere")
     refuseIdentity(schema, "updateWhere", setByName.keys)
-    val readV = DeltaScan.latestVersion(spark, tablePath)
-    val live = replayActions(spark, fs, tablePath, Some(readV))
-      .collect { case (p, true, _, _) => p }
+    val readV = view.version
+    val live = view.replay(readV).live
     if (live.isEmpty) return 0L
     val hit = liveScan(spark, root, schema, partCols, live, mapped).filter(cond)
       .agg(count(lit(1)).as("n"), collect_set(col("__rel")).as("files"))
@@ -2151,16 +2012,16 @@ object DeltaWrite {
         s"assignments must preserve the table's ${declared.simpleString}")
 
     // CHECK constraints + NOT NULL gate the post-update rows (logical names)
-    latestMetaNodeAny(spark, fs, tablePath).foreach { md =>
+    view.meta.foreach { md =>
       val updatedRows = liveScan(spark, root, schema, partCols, victims, mapped)
         .select(projected.toSeq: _*)
-      enforceConstraints(updatedRows, configOf(md))
+      enforceConstraints(updatedRows, md.config)
       enforceRequired(updatedRows, schema)
     }
 
     // change data feed: pre/post images of exactly the fired rows
     val cdcLines =
-      if (!cdfEnabled(spark, fs, tablePath)) Seq.empty
+      if (!view.meta.exists(_.cdf)) Seq.empty
       else {
         val fired = liveScan(spark, root, schema, partCols, victims, mapped)
           .filter(fire)
@@ -2195,45 +2056,6 @@ object DeltaWrite {
     nUpdated
   }
 
-  /** Latest ADD action (as a mutable Jackson node) per live file, plus
-    * the latest protocol action — the raw-JSON view [[deleteWhereDV]]
-    * clones so re-adds keep stats/partitionValues/size byte-identical */
-  private def replayLatestAdds(fs: FileSystem, tablePath: String)
-      : (Map[String, com.fasterxml.jackson.databind.node.ObjectNode],
-         Option[com.fasterxml.jackson.databind.node.ObjectNode]) = {
-    val logDir = new Path(tablePath, "_delta_log")
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val latest = scala.collection.mutable.LinkedHashMap
-      .empty[String, Option[com.fasterxml.jackson.databind.node.ObjectNode]]
-    var proto: Option[com.fasterxml.jackson.databind.node.ObjectNode] = scala.None
-    val versions = fs.listStatus(logDir).toSeq.map(_.getPath.getName)
-      .collect { case n if n.matches("\\d{20}\\.json") => n.stripSuffix(".json").toLong }
-      .sorted
-    // a checkpoint-truncated tail would yield a silently PARTIAL add
-    // view — deleting/DV-ing against it corrupts; fail loudly instead
-    require(versions.headOption.contains(0L) &&
-        versions == (0L to versions.lastOption.getOrElse(-1L)),
-      s"the JSON log of $tablePath is truncated (have ${versions.size} of " +
-        s"${versions.lastOption.map(_ + 1).getOrElse(0L)} commits) — " +
-        "row-level ops need the full JSON history")
-    versions.foreach { v =>
-      val p = new Path(logDir, f"$v%020d.json")
-      val in = fs.open(p)
-      val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-        finally in.close()
-      lines.map(mapper.readTree).foreach { node =>
-        if (node.has("add")) {
-          val add = node.get("add").asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-          latest(decodePath(add.get("path").asText())) = Some(add)
-        } else if (node.has("remove"))
-          latest(decodePath(node.get("remove").get("path").asText())) = scala.None
-        else if (node.has("protocol"))
-          proto = Some(node.get("protocol").asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode])
-      }
-    }
-    (latest.collect { case (p, Some(n)) => p -> n }.toMap, proto)
-  }
-
   /** Row-level DELETE, merge-on-read: instead of rewriting files,
     * record the matching rows' ordinals as DELETION VECTORS (the
     * protocol's 'u'-storage RoaringBitmapArray files) and re-add each
@@ -2257,13 +2079,13 @@ object DeltaWrite {
   def deleteWhereDV(spark: SparkSession, tablePath: String,
       cond: org.apache.spark.sql.Column): Long = {
     import org.apache.spark.sql.functions._
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    refuseOnCdf(spark, fs, tablePath, "deleteWhereDV")
-    val root = fs.makeQualified(new Path(tablePath))
-    val (schema, partCols) = tableMeta(fs, tablePath)
-    val mapped = isMapped(fs, tablePath)
-    val readV = DeltaScan.latestVersion(spark, tablePath)
-    val (latestAdds, proto) = replayLatestAdds(fs, root.toString)
+    val view = new LogView(spark, tablePath)
+    val (fs, root) = (view.fs, view.root)
+    refuseOnCdf(view, "deleteWhereDV")
+    val md = view.tableMeta
+    val (schema, partCols, mapped) = (md.schema, md.partCols, md.mapped)
+    val readV = view.version
+    val (latestAdds, proto) = (view.latestAdds, view.protocol)
     if (latestAdds.isEmpty) return 0L
     val live = latestAdds.keys.toSeq.sorted
 
@@ -2340,7 +2162,6 @@ object DeltaWrite {
       }.collect().toSeq // [lint:bounded] one row per VICTIM FILE, never per row
     val adds = written.sortBy(_._1).map { case (rel, ref, off, size, card, _) =>
       val node = latestAdds(rel).deepCopy()
-      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
       node.set[com.fasterxml.jackson.databind.node.ObjectNode]("deletionVector",
         mapper.readTree(
           s"""{"storageType":"u","pathOrInlineDv":${jstr(ref)},"offset":$off,""" +
@@ -2381,11 +2202,11 @@ object DeltaWrite {
       assignments: Seq[(String, org.apache.spark.sql.Column)]): Long = {
     import org.apache.spark.sql.functions._
     require(assignments.nonEmpty, "updateWhereDV needs at least one SET assignment")
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    refuseOnCdf(spark, fs, tablePath, "updateWhereDV")
-    val root = fs.makeQualified(new Path(tablePath))
-    val (schema, partCols) = tableMeta(fs, tablePath)
-    val mapped = isMapped(fs, tablePath)
+    val view = new LogView(spark, tablePath)
+    val (fs, root) = (view.fs, view.root)
+    refuseOnCdf(view, "updateWhereDV")
+    val md = view.tableMeta
+    val (schema, partCols, mapped) = (md.schema, md.partCols, md.mapped)
     val setByName = assignments.toMap
     require(setByName.size == assignments.size, "duplicate SET column")
     assignments.foreach { case (n, _) =>
@@ -2396,8 +2217,8 @@ object DeltaWrite {
     }
     refuseGeneratedAssignments(schema, setByName.keys, "updateWhereDV")
     refuseIdentity(schema, "updateWhereDV", setByName.keys)
-    val readV = DeltaScan.latestVersion(spark, tablePath)
-    val (latestAdds, proto) = replayLatestAdds(fs, root.toString)
+    val readV = view.version
+    val (latestAdds, proto) = (view.latestAdds, view.protocol)
     if (latestAdds.isEmpty) return 0L
     val live = latestAdds.keys.toSeq.sorted
     val (oldDescByRel, oldPosDf) = dvState(spark, root.toString, latestAdds)
@@ -2427,9 +2248,9 @@ object DeltaWrite {
       s"UPDATE changes the schema to ${probe.simpleString} — " +
         s"assignments must preserve the table's ${declared.simpleString}")
     // CHECK constraints + NOT NULL gate the post-update images
-    latestMetaNodeAny(spark, fs, tablePath).foreach { md =>
+    view.meta.foreach { md =>
       val images = matched.select(projected.toSeq: _*)
-      enforceConstraints(images, configOf(md))
+      enforceConstraints(images, md.config)
       enforceRequired(images, schema)
     }
 
@@ -2465,18 +2286,17 @@ object DeltaWrite {
       keys: Seq[String], txn: Option[(String, Long)] = None): (Long, Long) = {
     import org.apache.spark.sql.functions._
     require(keys.nonEmpty, "merge needs at least one key column")
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    refuseOnCdf(spark, fs, tablePath, "mergeDV")
-    val root = fs.makeQualified(new Path(tablePath))
-    val (schema, partCols) = tableMeta(fs, tablePath)
+    val view = new LogView(spark, tablePath)
+    val (fs, root) = (view.fs, view.root)
+    refuseOnCdf(view, "mergeDV")
+    val md = view.tableMeta
+    val (schema, partCols, mapped) = (md.schema, md.partCols, md.mapped)
     refuseIdentity(schema, "mergeDV")
-    val mapped = isMapped(fs, tablePath)
     // generated partition columns are derived ON the source (hidden-
     // partitioning UX; merge is also the op that MOVES rows across
     // derived partition dirs — the partitioned write lands each merged
     // row in the directory its re-derived value names)
-    val source1 = deriveGenerated(latestMetaNodeAny(spark, fs, tablePath),
-      source, Nil)._1
+    val source1 = deriveGenerated(view.meta, source, Nil)._1
     require(
       schema.fields.map(f => (f.name, f.dataType)).toSeq ==
         source1.schema.fields.map(f => (f.name, f.dataType)).toSeq,
@@ -2494,8 +2314,8 @@ object DeltaWrite {
         "merge source has duplicate key tuples — ambiguous upsert")
       val srcK = src.select(keys.map(col): _*)
 
-      val readV = DeltaScan.latestVersion(spark, tablePath)
-      val (latestAdds, proto) = replayLatestAdds(fs, root.toString)
+      val readV = view.version
+      val (latestAdds, proto) = (view.latestAdds, view.protocol)
       val live = latestAdds.keys.toSeq.sorted
       val (oldDescByRel, oldPosDf) = dvState(spark, root.toString, latestAdds)
 
@@ -2519,8 +2339,8 @@ object DeltaWrite {
       val inserted = srcRows - matchedSrc
 
       val newLogical = src.select(schema.fieldNames.map(col).toSeq: _*)
-      latestMetaNodeAny(spark, fs, tablePath).foreach { md =>
-        enforceConstraints(newLogical, configOf(md))
+      view.meta.foreach { md =>
+        enforceConstraints(newLogical, md.config)
         enforceRequired(newLogical, schema)
       }
       val newData = newLogical
@@ -2560,14 +2380,14 @@ object DeltaWrite {
     * (filesPurged, deadRowsDropped). */
   def purge(spark: SparkSession, tablePath: String): (Int, Long) = {
     import org.apache.spark.sql.functions._
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    requireNoAbsoluteAdds(spark, fs, tablePath, "purge")
-    requireNoRowTracking(spark, fs, tablePath, "purge")
-    val root = fs.makeQualified(new Path(tablePath))
-    val (schema, partCols) = tableMeta(fs, tablePath)
-    val mapped = isMapped(fs, tablePath)
-    val readV = DeltaScan.latestVersion(spark, tablePath)
-    val (latestAdds, _) = replayLatestAdds(fs, root.toString)
+    val view = new LogView(spark, tablePath)
+    val (fs, root) = (view.fs, view.root)
+    requireNoAbsoluteAdds(view, "purge")
+    requireNoRowTracking(view, "purge")
+    val md = view.tableMeta
+    val (schema, partCols, mapped) = (md.schema, md.partCols, md.mapped)
+    val readV = view.version
+    val latestAdds = view.latestAdds
     val dvAdds = latestAdds.filter { case (_, add) =>
       add.get("deletionVector") != null && !add.get("deletionVector").isNull }
     if (dvAdds.isEmpty) return (0, 0L)
@@ -2646,20 +2466,19 @@ object DeltaWrite {
       tombstone: Option[String]): (Long, Long, Long) = {
     import org.apache.spark.sql.functions._
     require(keys.nonEmpty, "merge needs at least one key column")
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    requireNoDeletionVectors(spark, tablePath)
-    requireNoAbsoluteAdds(spark, fs, tablePath, "merge")
-    requireNoRowTracking(spark, fs, tablePath, "merge")
-    val root = fs.makeQualified(new Path(tablePath))
-    val (schema, partCols) = tableMeta(fs, tablePath)
+    val view = new LogView(spark, tablePath)
+    val (fs, root) = (view.fs, view.root)
+    requireNoDeletionVectors(view)
+    requireNoAbsoluteAdds(view, "merge")
+    requireNoRowTracking(view, "merge")
+    val md = view.tableMeta
+    val (schema, partCols, mapped) = (md.schema, md.partCols, md.mapped)
     refuseIdentity(schema, "merge")
-    val mapped = isMapped(fs, tablePath)
     // generated partition columns are derived ON the source (hidden-
     // partitioning UX; merge is also the op that MOVES rows across
     // derived partition dirs — the partitioned write lands each merged
     // row in the directory its re-derived value names)
-    val source1 = deriveGenerated(latestMetaNodeAny(spark, fs, tablePath),
-      source, Nil)._1
+    val source1 = deriveGenerated(view.meta, source, Nil)._1
     // ONE persist of the whole source — the data and tombstone
     // branches below both filter the same cached rows, so the
     // (possibly expensive — applyChanges feeds a CDF read + window
@@ -2708,9 +2527,8 @@ object DeltaWrite {
           "and tombstoned) — ambiguous apply")
       val allK = tombKeys.fold(dataK)(t => dataK.unionByName(t))
 
-      val readV = DeltaScan.latestVersion(spark, tablePath)
-      val live = replayActions(spark, fs, tablePath, Some(readV))
-        .collect { case (p, true, _, _) => p }
+      val readV = view.version
+      val live = view.replay(readV).live
       // ONE job for the victim-file sweep AND the three merge metrics
       // (was two: a semi-join collect_set over all live files, then a
       // victim-only metrics aggregate that re-scanned the victims):
@@ -2756,8 +2574,8 @@ object DeltaWrite {
       val newLogical = (survivorSeq :+
         src.select(schema.fieldNames.map(col).toSeq: _*)).reduce(_ unionByName _)
       // CHECK constraints + NOT NULL gate the merged rows (logical names)
-      latestMetaNodeAny(spark, fs, tablePath).foreach { md =>
-        enforceConstraints(newLogical, configOf(md))
+      view.meta.foreach { md =>
+        enforceConstraints(newLogical, md.config)
         enforceRequired(newLogical, schema)
       }
       val newData = newLogical
@@ -2768,7 +2586,7 @@ object DeltaWrite {
       // replacements (post), unmatched source rows (insert), and
       // tombstoned matches (delete)
       val cdcLines =
-        if (!cdfEnabled(spark, fs, tablePath)) Seq.empty
+        if (!view.meta.exists(_.cdf)) Seq.empty
         else if (victims.isEmpty) // pure insert: every source row inserts
           stageCdcFiles(spark, fs, root, schema, partCols,
             src.select(schema.fieldNames.map(col).toSeq: _*)
@@ -2872,22 +2690,21 @@ object DeltaWrite {
     require(targetFiles >= 1, s"targetFiles must be >= 1, got $targetFiles")
     require(bitsPerCol >= 1 && bitsPerCol * dims.size <= 63,
       s"bitsPerCol * nDims must fit a signed long, got $bitsPerCol * ${dims.size}")
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val root = fs.makeQualified(new Path(tablePath))
-    requireNoDeletionVectors(spark, tablePath)
-    requireNoAbsoluteAdds(spark, fs, tablePath, "zorder")
-    requireNoRowTracking(spark, fs, tablePath, "zorder")
-    val readV = DeltaScan.latestVersion(spark, tablePath)
-    val live = replayActions(spark, fs, tablePath, Some(readV))
-      .collect { case (p, true, _, _) => p }
+    val view = new LogView(spark, tablePath)
+    val (fs, root) = (view.fs, view.root)
+    requireNoDeletionVectors(view)
+    requireNoAbsoluteAdds(view, "zorder")
+    requireNoRowTracking(view, "zorder")
+    val readV = view.version
+    val live = view.replay(readV).live
     require(live.nonEmpty, s"no live data files to z-order at $tablePath")
     val groups = live.groupBy(rel => rel.split('/').dropRight(1).mkString("/"))
 
     import org.apache.spark.sql.functions._
     // the raw read below sees PHYSICAL column names — translate the
     // caller's logical dims on a mapped table
-    val physDims = if (!isMapped(fs, tablePath)) dims else {
-      val (sch, _) = tableMeta(fs, tablePath)
+    val physDims = if (!view.jsonMeta.exists(_.mapped)) dims else {
+      val sch = view.tableMeta.schema
       dims.map { d =>
         sch.fields.find(_.name == d).map(DeltaScan.physicalName)
           .getOrElse(d) // unknown dims keep their name for the loud check below
@@ -2955,14 +2772,11 @@ object DeltaWrite {
     * rewritten from its raw parquet (the dead rows would resurrect).
     * Superseded/historic DV adds are harmless — which is what lets
     * [[purge]] re-enable the copy-on-write ops on a DV table. */
-  private def requireNoDeletionVectors(spark: SparkSession, tablePath: String): Unit = {
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (latestAdds, _) = replayLatestAdds(fs,
-      fs.makeQualified(new Path(tablePath)).toString)
-    val dvFiles = latestAdds.collect { case (rel, add)
+  private def requireNoDeletionVectors(view: LogView): Unit = {
+    val dvFiles = view.latestAdds.collect { case (rel, add)
         if add.get("deletionVector") != null && !add.get("deletionVector").isNull => rel }
     require(dvFiles.isEmpty,
-      s"table $tablePath carries LIVE deletion vectors on ${dvFiles.size} " +
+      s"table ${view.tablePath} carries LIVE deletion vectors on ${dvFiles.size} " +
         "file(s) — rewriting those files from raw parquet would resurrect " +
         "deleted rows; run purge() first to materialize the DVs")
   }
@@ -2986,10 +2800,11 @@ object DeltaWrite {
   def vacuum(spark: SparkSession, tablePath: String,
       retainMs: Long = 7L * 24 * 3600 * 1000, dryRun: Boolean = false): Seq[String] = {
     require(retainMs >= 0, s"retainMs must be >= 0, got $retainMs")
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val root = fs.makeQualified(new Path(tablePath))
+    val view = new LogView(spark, tablePath)
+    val (fs, root) = (view.fs, view.root)
     val cutoff = System.currentTimeMillis() - retainMs
-    val (acts, rawLogged) = replayActionsWithRaw(spark, fs, tablePath)
+    val replayed = view.replay()
+    val (acts, rawLogged) = (replayed.actions, replayed.raw)
     val removed = acts
       .collect { case (p, false, _, ts) if ts <= cutoff => p }
       .filter(rel => fs.exists(new Path(root, rel)))
@@ -3043,8 +2858,7 @@ object DeltaWrite {
     val dvDoomed: Seq[String] =
       if (!fs.exists(root)) Seq.empty
       else {
-        val liveDv: Set[String] = replayLatestAdds(fs, root.toString)._1
-          .values.flatMap { add =>
+        val liveDv: Set[String] = view.latestAdds.values.flatMap { add =>
             val dv = add.get("deletionVector")
             if (dv == null || dv.isNull) scala.None
             else if (dv.get("storageType").asText() != "u") scala.None
@@ -3078,8 +2892,6 @@ object DeltaWrite {
       readsWholeTable: Boolean,
       pred: Option[(StructType, org.apache.spark.sql.Column)])
 
-  private val MaxCommitRetries = 5
-
   /** OCC validation of the commits in `(fromExclusive, toInclusive]`
     * against a DML's read/write scope — the delta-spark conflict
     * rules, conservatively:
@@ -3098,7 +2910,6 @@ object DeltaWrite {
   private def checkDmlConflicts(spark: SparkSession, fs: FileSystem, root: Path,
       scope: CommitScope, fromExclusive: Long, toInclusive: Long): Unit = {
     val logDir = new Path(root, "_delta_log")
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val predExpr = scope.pred.map { case (schema, c) =>
       ParquetStats.predicateExpr(spark, schema, c)
     }
@@ -3151,6 +2962,11 @@ object DeltaWrite {
     }
   }
 
+  /** test seam: runs between a DML's planning and its first commit
+    * attempt — the deterministic way to land a racing commit inside
+    * the TOCTOU window the OCC validation closes */
+  private[graft] var beforeDmlCommit: () => Unit = () => ()
+
   /** conditional DML commit with OCC RETRY: validates EVERY commit
     * that landed after the DML's read version (including ones that
     * landed between planning and this call — the classic TOCTOU
@@ -3159,33 +2975,26 @@ object DeltaWrite {
     * [[MaxCommitRetries]]. Commuting winners (appends the stats prove
     * disjoint, compactions of untouched files, txn markers) never
     * force a replan; conflicting ones abort loudly with the reason. */
-  /** test seam: runs between a DML's planning and its first commit
-    * attempt — the deterministic way to land a racing commit inside
-    * the TOCTOU window the OCC validation closes */
-  private[graft] var beforeDmlCommit: () => Unit = () => ()
-
   private def commitWithRetry(spark: SparkSession, fs: FileSystem, root: Path,
       lines: Seq[String], operation: Option[String], scope: CommitScope): Unit = {
     beforeDmlCommit()
     var checked = scope.readVersion
-    var attempt = 0
-    while (true) {
+    // the next version to commit at, once every commit since the last
+    // check is validated against the scope
+    def validated(): Long = {
       val latest = DeltaScan.latestVersion(spark, root.toString)
       if (latest > checked) {
         checkDmlConflicts(spark, fs, root, scope, checked, latest)
         checked = latest
       }
-      try { writeCommitFile(fs, root, latest + 1, lines, operation = operation); return }
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          if (attempt > MaxCommitRetries) throw e
-      }
+      latest + 1
+    }
+    var next = validated()
+    LakeSupport.retryOnConflict(MaxCommitRetries, _ => next = validated()) {
+      writeCommitFile(fs, root, next, lines, operation = operation)
     }
   }
 
-  /** shared conditional-commit write (create with overwrite=false is
-    * the atomic guard) */
   /** suppresses the auto-checkpoint while a checkpoint itself is being
     * written (its v2 protocol-upgrade commit must not recurse) */
   private val inCheckpoint = new ThreadLocal[java.lang.Boolean] {
@@ -3208,11 +3017,11 @@ object DeltaWrite {
       root: Path, version: Long): Unit = {
     if (version <= 0L || inCheckpoint.get()) return
     try {
-      val interval = latestMetaNodeAny(spark, fs, root.toString)
-        .flatMap(md => configOf(md).get("delta.checkpointInterval"))
+      val view = new LogView(spark, root.toString)
+      val interval = view.meta.flatMap(_.config.get("delta.checkpointInterval"))
         .map(_.trim.toInt).getOrElse(10)
       if (interval <= 0 || version % interval != 0L) return
-      val v2 = latestProtoNodeAny(spark, fs, root.toString).exists(p =>
+      val v2 = view.protocol.exists(p =>
         Option(p.get("writerFeatures")).exists(_.elements().asScala
           .exists(_.asText() == "v2Checkpoint")))
       inCheckpoint.set(true)
@@ -3358,17 +3167,6 @@ object DeltaWrite {
     * never crash replay. */
   private def decodePath(p: String): String = DeltaScan.percentDecode(p)
 
-  /** JSON string literal with full control-char escaping */
-  private def jstr(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
   // ======================================================================
   // ROW TRACKING (Delta PROTOCOL §Row Tracking): stable per-row
   // identifiers that survive maintenance. Every add-file carries a
@@ -3412,17 +3210,10 @@ object DeltaWrite {
   private def rowTrackingEnabledConf(conf: Map[String, String]): Boolean =
     conf.get(EnableRowTrackingKey).contains("true")
 
-  /** is the TABLE row-tracked (latest metaData configuration)? */
-  private[sources] def rowTrackingEnabled(spark: SparkSession, fs: FileSystem,
-      tablePath: String): Boolean =
-    latestMetaNodeAny(spark, fs, tablePath)
-      .exists(md => rowTrackingEnabledConf(configOf(md)))
-
-  private def requireNoRowTracking(spark: SparkSession, fs: FileSystem,
-      tablePath: String, op: String): Unit =
-    require(!rowTrackingEnabled(spark, fs, tablePath),
+  private def requireNoRowTracking(view: LogView, op: String): Unit =
+    require(!view.meta.exists(_.rowTracking),
       s"$op would silently re-identify rows of the row-tracked table " +
-        s"$tablePath (row ids are not preserved through this path) — use " +
+        s"${view.tablePath} (row ids are not preserved through this path) — use " +
         "the deletion-vector DML twins (deleteWhereDV/updateWhereDV/mergeDV) " +
         "and compact, which preserve row identity")
 
@@ -3430,7 +3221,7 @@ object DeltaWrite {
   private def rowIdHighWaterMark(spark: SparkSession, tablePath: String): Long =
     DeltaScan.domainMetadata(spark, tablePath).get(RowTrackingDomain)
       .flatMap { cfg =>
-        val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(cfg)
+        val node = mapper.readTree(cfg)
         Option(node.get("rowIdHighWaterMark")).map(_.asLong())
       }.getOrElse(-1L)
 
@@ -3443,35 +3234,29 @@ object DeltaWrite {
     * Existing rows get ids in path-sorted file order. Idempotent-safe:
     * enabling an already-enabled table refuses loudly. */
   def enableRowTracking(spark: SparkSession, tablePath: String): Unit = {
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val root = fs.makeQualified(new Path(tablePath))
-    val md = latestMetaNodeAny(spark, fs, tablePath).getOrElse(
-      throw new IllegalStateException(
-        s"no metaData at $tablePath — cannot enable row tracking"))
-    val conf0 = configOf(md)
-    require(!rowTrackingEnabledConf(conf0),
-      s"row tracking is already enabled on $tablePath")
+    val view = new LogView(spark, tablePath)
+    val (fs, root) = (view.fs, view.root)
+    val md = view.metaOr(" — cannot enable row tracking")
+    val conf0 = md.config
+    require(!md.rowTracking, s"row tracking is already enabled on $tablePath")
     val suffix = java.util.UUID.randomUUID().toString.take(8)
     val newConf = conf0 ++ Map(
       EnableRowTrackingKey -> "true",
       MatRowIdKey -> s"_rowtrack_row_id_$suffix",
       MatRowCommitKey -> s"_rowtrack_commit_version_$suffix")
-    val mdNode = md.deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val mdNode = md.node.deepCopy[ObjectNode]()
     val cfgNode = mapper.createObjectNode()
     newConf.foreach { case (k, v) => cfgNode.put(k, v) }
     mdNode.set[com.fasterxml.jackson.databind.node.ObjectNode]("configuration", cfgNode)
     val metaAction = s"""{"metaData":${mdNode.toString}}"""
-    val proto = latestProtoNodeAny(spark, fs, tablePath)
-    val protoActions = featureProtocolAction(proto,
+    val protoActions = featureProtocolAction(view.protocol,
       Seq("rowTracking", "domainMetadata"))
     // backfill: re-add every live file (the stamp pass below assigns
     // baseRowId to any add lacking one)
     val now = System.currentTimeMillis()
     val conf = spark.sparkContext.hadoopConfiguration
-    val live = replayActions(spark, fs, tablePath)
-      .collect { case (p, true, _, _) => p }.sorted
-    val backfill = parMetaMap(live) { rel =>
+    val live = view.replay().live.sorted
+    val backfill = parMap(live) { rel =>
       val p = new Path(root, rel)
       val size = fs.getFileStatus(p).getLen
       val stats = ParquetStats.statsJson(conf, p)
@@ -3497,7 +3282,6 @@ object DeltaWrite {
     * baseRowId and pass through untouched (their rows never moved). */
   private def stampRowTracking(fs: FileSystem, root: Path, version: Long,
       actions: Seq[String]): Seq[String] = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     lazy val parsed = actions.map(mapper.readTree)
     val spark = SparkSession.active
     val enabledInLines = actions.exists(_.contains(EnableRowTrackingKey)) &&
@@ -3505,7 +3289,7 @@ object DeltaWrite {
         Option(md.get("configuration")).exists(c =>
           Option(c.get(EnableRowTrackingKey)).exists(_.asText() == "true"))))
     val enabled = enabledInLines ||
-      rowTrackingEnabled(spark, fs, root.toString)
+      new LogView(spark, root.toString).meta.exists(_.rowTracking)
     if (!enabled) return actions
     val needsStamp = parsed.zipWithIndex.collect {
       case (n, i) if n.has("add") && !n.get("add").has("baseRowId") => i
@@ -3550,16 +3334,14 @@ object DeltaWrite {
     * state. */
   def readWithRowIds(spark: SparkSession, tablePath: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val root = fs.makeQualified(new Path(tablePath))
-    val md = latestMetaNodeAny(spark, fs, tablePath).getOrElse(
-      throw new IllegalStateException(s"no metaData at $tablePath"))
-    val conf = configOf(md)
+    val view = new LogView(spark, tablePath)
+    val root = view.root
+    val conf = view.metaOr("").config
     require(rowTrackingEnabledConf(conf),
       s"row tracking is not enabled on $tablePath — enableRowTracking first")
-    val (schema, partCols) = tableMeta(fs, tablePath)
-    val mapped = isMapped(fs, tablePath)
-    val (latestAdds, _) = replayLatestAdds(fs, root.toString)
+    val md = view.tableMeta
+    val (schema, partCols, mapped) = (md.schema, md.partCols, md.mapped)
+    val latestAdds = view.latestAdds
     val outFields = schema.fieldNames.toSeq ++ Seq("_row_id", "_row_commit_version")
     if (latestAdds.isEmpty)
       return spark.createDataFrame(
@@ -3590,38 +3372,6 @@ object DeltaWrite {
       .withColumn("_row_id", coalesce(col(matId), col("__base") + col("__pos")))
       .withColumn("_row_commit_version", coalesce(col(matCv), col("__dcv")))
       .select(outFields.map(col): _*)
-  }
-
-  /** latest add's (baseRowId, defaultRowCommitVersion) per LIVE file —
-    * the map compact's materialization joins against (file-count
-    * bounded; same full-JSON-replay constraint as [[replayActions]]) */
-  private[sources] def rowTrackingFileState(fs: FileSystem,
-      tablePath: String): Map[String, (Long, Long)] = {
-    val spark = SparkSession.active
-    val logDir = new Path(fs.makeQualified(new Path(tablePath)), "_delta_log")
-    val version = DeltaScan.latestVersion(spark, tablePath)
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val latest = scala.collection.mutable.LinkedHashMap.empty[String, Option[(Long, Long)]]
-    (0L to version).foreach { v =>
-      val p = new Path(logDir, f"$v%020d.json")
-      require(fs.exists(p),
-        s"cannot replay row-tracking state of $tablePath: commit $p is missing")
-      val in = fs.open(p)
-      val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-        finally in.close()
-      lines.map(mapper.readTree).foreach { node =>
-        if (node.has("add")) {
-          val add = node.get("add")
-          val rel = decodePath(add.get("path").asText())
-          latest(rel) = Option(add.get("baseRowId")).filterNot(_.isNull).map(b =>
-            (b.asLong(),
-              Option(add.get("defaultRowCommitVersion")).map(_.asLong()).getOrElse(v)))
-        } else if (node.has("remove")) {
-          latest.remove(decodePath(node.get("remove").get("path").asText()))
-        }
-      }
-    }
-    latest.collect { case (rel, Some(bc)) => rel -> bc }.toMap
   }
 
   /** generalization of the clustering upgrade: protocol action adding

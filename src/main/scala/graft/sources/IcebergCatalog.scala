@@ -168,7 +168,7 @@ object IcebergCatalog {
     val conf = spark.sessionState.newHadoopConf()
     val metaP = new org.apache.hadoop.fs.Path(loaded.metadataLocation)
     val fs = metaP.getFileSystem(conf)
-    val baseMeta = mapper.readTree(IcebergWrite.readUtf8(fs, metaP))
+    val baseMeta = mapper.readTree(LakeSupport.readUtf8(fs, metaP))
     val root = Option(baseMeta.get("location")).map(_.asText())
       .filter(_.nonEmpty)
       .getOrElse(metaP.getParent.getParent.toString)
@@ -181,8 +181,8 @@ object IcebergCatalog {
     require(fs.exists(hint),
       s"table storage at $root has no version hint — the commit path " +
         "stages through the directory head and cannot chain blindly")
-    val dirV = IcebergWrite.readUtf8(fs, hint).trim.toInt
-    val dirMeta = mapper.readTree(IcebergWrite.readUtf8(fs,
+    val dirV = LakeSupport.readUtf8(fs, hint).trim.toInt
+    val dirMeta = mapper.readTree(LakeSupport.readUtf8(fs,
       new org.apache.hadoop.fs.Path(root, s"metadata/v$dirV.metadata.json")))
     val dirSnap = Option(dirMeta.get("current-snapshot-id"))
       .map(_.asLong()).filter(_ != -1L)
@@ -193,7 +193,7 @@ object IcebergCatalog {
     // stage: the ordinary append (data files + manifests + list +
     // staged metadata, OCC-retried against directory races)
     IcebergWrite.append(spark, df, root)
-    val newV = IcebergWrite.readUtf8(fs, hint).trim.toInt
+    val newV = LakeSupport.readUtf8(fs, hint).trim.toInt
     val newMetaPath = s"$root/metadata/v$newV.metadata.json"
     postPointerAdvance(conn, table, parts, fs, uuid, baseSnap, newMetaPath)
   }
@@ -216,7 +216,7 @@ object IcebergCatalog {
     val conf = spark.sessionState.newHadoopConf()
     val metaP = new org.apache.hadoop.fs.Path(loaded.metadataLocation)
     val fs = metaP.getFileSystem(conf)
-    val baseMeta = mapper.readTree(IcebergWrite.readUtf8(fs, metaP))
+    val baseMeta = mapper.readTree(LakeSupport.readUtf8(fs, metaP))
     val root = Option(baseMeta.get("location")).map(_.asText())
       .filter(_.nonEmpty)
       .getOrElse(metaP.getParent.getParent.toString)
@@ -225,9 +225,9 @@ object IcebergCatalog {
     val uuid = Option(baseMeta.get("table-uuid")).map(_.asText())
     val hint = new org.apache.hadoop.fs.Path(root, "metadata/version-hint.text")
     require(fs.exists(hint), s"no version hint at $root — nothing staged")
-    val dirV = IcebergWrite.readUtf8(fs, hint).trim.toInt
+    val dirV = LakeSupport.readUtf8(fs, hint).trim.toInt
     val dirMetaPath = s"$root/metadata/v$dirV.metadata.json"
-    val dirSnap = Option(mapper.readTree(IcebergWrite.readUtf8(fs,
+    val dirSnap = Option(mapper.readTree(LakeSupport.readUtf8(fs,
         new org.apache.hadoop.fs.Path(dirMetaPath)))
       .get("current-snapshot-id")).map(_.asLong()).filter(_ != -1L)
     require(dirSnap != baseSnap,
@@ -242,7 +242,7 @@ object IcebergCatalog {
       parts: Seq[String], fs: org.apache.hadoop.fs.FileSystem,
       uuid: Option[String], baseSnap: Option[Long],
       newMetaPath: String): CommitResult = {
-    val newMeta = mapper.readTree(IcebergWrite.readUtf8(fs,
+    val newMeta = mapper.readTree(LakeSupport.readUtf8(fs,
       new org.apache.hadoop.fs.Path(newMetaPath)))
     val newSnapId = newMeta.get("current-snapshot-id").asLong()
     val snapNode = {

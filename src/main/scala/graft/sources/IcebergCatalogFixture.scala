@@ -33,7 +33,7 @@ object IcebergCatalogFixture {
 
     private def dirHeadMetaPath(): String = {
       val hint = new Path(tableRoot, "metadata/version-hint.text")
-      val v = IcebergWrite.readUtf8(fs, hint).trim.toInt
+      val v = LakeSupport.readUtf8(fs, hint).trim.toInt
       s"$tableRoot/metadata/v$v.metadata.json"
     }
 
@@ -54,7 +54,7 @@ object IcebergCatalogFixture {
     private def served: String = servedLocation
 
     private def servedMeta() =
-      mapper.readTree(IcebergWrite.readUtf8(fs, new Path(served)))
+      mapper.readTree(LakeSupport.readUtf8(fs, new Path(served)))
 
     private def json(status: Int, body: String): RestSql.Response =
       RestSql.Response(status, Map("content-type" -> "application/json"),
@@ -151,7 +151,7 @@ object IcebergCatalogFixture {
       // adopt the staged metadata (client-written model): the directory
       // head must BE the snapshot the updates describe
       val stagedPath = dirHeadMetaPath()
-      val staged = mapper.readTree(IcebergWrite.readUtf8(fs, new Path(stagedPath)))
+      val staged = mapper.readTree(LakeSupport.readUtf8(fs, new Path(stagedPath)))
       if (staged.get("current-snapshot-id").asLong() != added.get)
         return json(409, s"""{"error":{"message":"staged metadata head ${staged.get("current-snapshot-id").asLong()} is not the committed snapshot ${added.get}","type":"CommitFailedException","code":409}}""")
       servedOpt = Some(stagedPath)

@@ -2,12 +2,13 @@ package graft.sources
 
 import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+
+import LakeSupport.mapper
 
 /** Table STATISTICS files (Iceberg spec §Table Statistics + Puffin):
   * `analyze` computes one mergeable NDV sketch per column in a single
@@ -52,16 +53,8 @@ object IcebergNdv {
     * `columns` empty = every column. Returns the registered stats. */
   def analyze(spark: SparkSession, tablePath: String,
       columns: Seq[String] = Nil): Seq[ColumnStats] = {
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hint = new Path(tablePath, "metadata/version-hint.text")
-    require(fs.exists(hint), s"no Iceberg table at $tablePath — use create")
-    val prev = IcebergWrite.readUtf8(fs, hint).trim.toInt
-    val version = prev + 1
-    val root = fs.makeQualified(new Path(tablePath))
-    val metaDir = new Path(root, "metadata")
-    val mapper = new ObjectMapper()
-    val node = mapper.readTree(IcebergWrite.readUtf8(fs,
-      new Path(metaDir, s"v$prev.metadata.json"))).asInstanceOf[ObjectNode]
+    val cur = IcebergWrite.current(spark, tablePath)
+    val (fs, root, metaDir, version, node) = (cur.fs, cur.root, cur.metaDir, cur.next, cur.node)
     val snapshotId = Option(node.get("current-snapshot-id")).map(_.asLong())
       .filter(_ != -1L).getOrElse(throw new IllegalArgumentException(
         s"$tablePath has no current snapshot to analyze"))
@@ -125,16 +118,12 @@ object IcebergNdv {
     }
     node.set[ObjectNode]("statistics", kept)
     node.put("last-updated-ms", System.currentTimeMillis())
-    val metaPath = new Path(metaDir, s"v$version.metadata.json")
-    try IcebergWrite.writeUtf8(fs, metaPath, node.toString, overwrite = false)
+    try IcebergWrite.publishVersion(fs, metaDir, version, node.toString)
     catch {
-      case e: java.io.IOException =>
+      case e: java.util.ConcurrentModificationException =>
         fs.delete(statsPath, false)
-        throw new java.util.ConcurrentModificationException(
-          s"concurrent Iceberg commit detected: $metaPath already exists — " +
-            "another writer committed this version; re-run analyze", e)
+        throw e
     }
-    IcebergWrite.writeUtf8(fs, new Path(metaDir, "version-hint.text"), version.toString)
     sketches.map { case (n, fid, ndv, bytes) => ColumnStats(n, fid, ndv, bytes) }
   }
 
@@ -146,13 +135,8 @@ object IcebergNdv {
   def tableStatistics(spark: SparkSession,
       tablePath: String): Option[Seq[ColumnStats]] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(tablePath).getFileSystem(conf)
-    val hint = new Path(tablePath, "metadata/version-hint.text")
-    require(fs.exists(hint), s"no Iceberg table at $tablePath")
-    val prev = IcebergWrite.readUtf8(fs, hint).trim.toInt
-    val mapper = new ObjectMapper()
-    val node = mapper.readTree(IcebergWrite.readUtf8(fs,
-      new Path(tablePath, s"metadata/v$prev.metadata.json")))
+    val cur = IcebergWrite.current(spark, tablePath)
+    val (fs, node) = (cur.fs, cur.node)
     val snapshotId = Option(node.get("current-snapshot-id")).map(_.asLong())
       .filter(_ != -1L).getOrElse(return scala.None)
     val entry = Option(node.get("statistics")).toSeq
@@ -223,17 +207,8 @@ object IcebergPartitionStats {
     * data_file_count, total_data_file_size_in_bytes,
     * position_delete_record_count, equality_delete_record_count). */
   def write(spark: SparkSession, tablePath: String): DataFrame = {
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hint = new Path(tablePath, "metadata/version-hint.text")
-    require(fs.exists(hint), s"no Iceberg table at $tablePath — use create")
-    val prev = IcebergWrite.readUtf8(fs, hint).trim.toInt
-    val version = prev + 1
-    val root = fs.makeQualified(new Path(tablePath))
-    val metaDir = new Path(root, "metadata")
-    val mapper = new ObjectMapper()
-    val node = mapper.readTree(IcebergWrite.readUtf8(fs,
-      new Path(metaDir, s"v$prev.metadata.json")))
-      .asInstanceOf[ObjectNode]
+    val cur = IcebergWrite.current(spark, tablePath)
+    val (fs, root, metaDir, version, node) = (cur.fs, cur.root, cur.metaDir, cur.next, cur.node)
     val snapshotId = Option(node.get("current-snapshot-id")).map(_.asLong())
       .filter(_ != -1L).getOrElse(throw new IllegalArgumentException(
         s"$tablePath has no current snapshot"))
@@ -341,17 +316,12 @@ object IcebergPartitionStats {
     entry.put("file-size-in-bytes", fs.getFileStatus(statsPath).getLen)
     node.set[ObjectNode]("partition-statistics", kept)
     node.put("last-updated-ms", System.currentTimeMillis())
-    val metaPath = new Path(metaDir, s"v$version.metadata.json")
-    try IcebergWrite.writeUtf8(fs, metaPath, node.toString, overwrite = false)
+    try IcebergWrite.publishVersion(fs, metaDir, version, node.toString)
     catch {
-      case e: java.io.IOException =>
+      case e: java.util.ConcurrentModificationException =>
         fs.delete(statsPath, false)
-        throw new java.util.ConcurrentModificationException(
-          s"concurrent Iceberg commit detected: $metaPath already exists — " +
-            "another writer committed this version; re-run", e)
+        throw e
     }
-    IcebergWrite.writeUtf8(fs, new Path(metaDir, "version-hint.text"),
-      version.toString)
     df
   }
 
@@ -359,12 +329,7 @@ object IcebergPartitionStats {
     * (None when absent or stale, same snapshot-scoping as
     * [[IcebergNdv.tableStatistics]]) */
   def read(spark: SparkSession, tablePath: String): Option[DataFrame] = {
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hint = new Path(tablePath, "metadata/version-hint.text")
-    require(fs.exists(hint), s"no Iceberg table at $tablePath")
-    val prev = IcebergWrite.readUtf8(fs, hint).trim.toInt
-    val node = new ObjectMapper().readTree(IcebergWrite.readUtf8(fs,
-      new Path(tablePath, s"metadata/v$prev.metadata.json")))
+    val node = IcebergWrite.current(spark, tablePath).node
     val snapshotId = Option(node.get("current-snapshot-id")).map(_.asLong())
       .filter(_ != -1L).getOrElse(return scala.None)
     Option(node.get("partition-statistics")).toSeq

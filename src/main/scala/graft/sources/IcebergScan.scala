@@ -11,6 +11,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import LakeSupport.readUtf8
+
 /** Dependency-free read of Apache Iceberg tables — the `iceberg_scan`
   * analog (reference: src/TidierDB.jl:161-169 runs it via a DuckDB
   * extension). No connector jar required: table metadata is public-spec
@@ -1246,10 +1248,5 @@ object IcebergScan {
     val in = new FsInput(new Path(path), conf)
     val reader = DataFileReader.openReader(in, new GenericDatumReader[GenericRecord]())
     try reader.iterator().asScala.toVector finally { reader.close() }
-  }
-
-  private def readUtf8(fs: FileSystem, p: Path): String = {
-    val in = fs.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
   }
 }

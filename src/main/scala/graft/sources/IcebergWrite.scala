@@ -13,6 +13,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 
+import LakeSupport.{jstr, mapper, parMap, readUtf8, MaxCommitRetries}
+
 /** Minimal Iceberg WRITER (format-version 1, HadoopTables layout) — the
   * sink counterpart of [[IcebergScan]]. Emits the spec's file tree:
   * data files as Spark-written parquet under `data/`, one Avro
@@ -72,7 +74,7 @@ object IcebergWrite {
       s"duplicate partition field names in ${partitionBy.mkString(", ")}")
     require(pfs.filter(_.isIdentity).size < df.schema.length || pfs.isEmpty,
       "cannot identity-partition by every column")
-    commit(spark, fs, df, tablePath, version = 1, txn = txn,
+    commit(spark, fs, df, tablePath, prev = scala.None, txn = txn,
       carryOverride = Some(freshCarry(df.schema, pfs)))
   }
 
@@ -98,18 +100,8 @@ object IcebergWrite {
     * on a real mismatch). Lost attempts leave unreferenced files for
     * [[removeOrphanFiles]]-style cleanup, never corruption. */
   def appendWithRetry(spark: SparkSession, df: DataFrame, tablePath: String,
-      maxRetries: Int = 5): Unit = {
-    require(maxRetries >= 0, s"maxRetries must be >= 0, got $maxRetries")
-    var attempt = 0
-    while (true) {
-      try { append(spark, df, tablePath); return }
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
-      }
-    }
-  }
+      maxRetries: Int = 5): Unit =
+    LakeSupport.retryOnConflict(maxRetries)(append(spark, df, tablePath))
 
   /** OCC RE-EXECUTION wrapper for the copy-on-write ops (updateWhere /
     * merge / compact / zorder): a loser re-RUNS `body`, which replans
@@ -119,31 +111,16 @@ object IcebergWrite {
     * reuse) and [[deleteWhere]]/[[deleteEqual]] (delete files reused
     * when the winner commutes); use this for everything else:
     * `IcebergWrite.retryOnConflict() { IcebergWrite.merge(...) }`. */
-  def retryOnConflict[T](maxRetries: Int = 5)(body: => T): T = {
-    require(maxRetries >= 0, s"maxRetries must be >= 0, got $maxRetries")
-    var attempt = 0
-    while (true) {
-      try return body
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
+  def retryOnConflict[T](maxRetries: Int = 5)(body: => T): T =
+    LakeSupport.retryOnConflict(maxRetries)(body)
 
   private def appendTxn(spark: SparkSession, df: DataFrame, tablePath: String,
       txn: Option[(String, Long)]): Unit = {
     import org.apache.spark.sql.functions.col
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hint = new Path(tablePath, "metadata/version-hint.text")
-    require(fs.exists(hint), s"no Iceberg table at $tablePath — use create")
-    val prev = readUtf8(fs, hint).trim.toInt
+    val cur = current(spark, tablePath)
     // schema drift would silently corrupt the table: compare
     // (names, types) against the current metadata's spec schema
-    val prevMeta = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(readUtf8(fs, new Path(tablePath, s"metadata/v$prev.metadata.json")))
+    val prevMeta = cur.node
     val declared = IcebergScan.sparkSchema(prevMeta.get("schema"))
     // write-defaults (spec §Default values): a declared column the
     // caller omitted, whose schema field carries `write-default`, is
@@ -179,7 +156,7 @@ object IcebergWrite {
       declared.fields.map(f => (f.name, f.dataType)).toSeq ==
         df1.schema.fields.map(f => (f.name, f.dataType)).toSeq,
       s"append schema ${df1.schema.simpleString} does not match the table's ${declared.simpleString}")
-    commit(spark, fs, df1, tablePath, version = prev + 1, txn = txn)
+    commit(spark, cur.fs, df1, tablePath, Some(cur), txn = txn)
   }
 
   /** [[create]]/[[append]] carrying an exactly-once streaming-sink txn
@@ -197,16 +174,9 @@ object IcebergWrite {
 
   /** highest batch id committed for `appId`, from the current metadata
     * JSON's table properties; None if this app never committed */
-  def lastTxnVersion(spark: SparkSession, tablePath: String, appId: String): Option[Long] = {
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hint = new Path(tablePath, "metadata/version-hint.text")
-    if (!fs.exists(hint)) return scala.None
-    val v = readUtf8(fs, hint).trim.toInt
-    val node = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(readUtf8(fs, new Path(tablePath, s"metadata/v$v.metadata.json")))
-    Option(node.get("properties")).flatMap(p =>
-      Option(p.get(s"graft.txn.$appId")).map(_.asText().toLong))
-  }
+  def lastTxnVersion(spark: SparkSession, tablePath: String, appId: String): Option[Long] =
+    currentOpt(spark, tablePath).flatMap(cur => Option(cur.node.get("properties")))
+      .flatMap(p => Option(p.get(s"graft.txn.$appId")).map(_.asText().toLong))
 
   /** APPEND WITH SCHEMA EVOLUTION: columns of `df` the table lacks are
     * ADDED to the table schema with FRESH field ids continuing from
@@ -220,13 +190,8 @@ object IcebergWrite {
     * schema and carry it forward untouched. */
   def appendEvolve(spark: SparkSession, df: DataFrame, tablePath: String): Unit = {
     import org.apache.spark.sql.functions.{col, lit}
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hint = new Path(tablePath, "metadata/version-hint.text")
-    require(fs.exists(hint), s"no Iceberg table at $tablePath — use create")
-    val prev = readUtf8(fs, hint).trim.toInt
-    val metaDir = new Path(fs.makeQualified(new Path(tablePath)), "metadata")
-    val prevCarry = carryFromPrev(fs, metaDir, prev)
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val cur = current(spark, tablePath)
+    val prevCarry = cur.carry
     val schemaNode = mapper.readTree(prevCarry.schemaJson)
     val declared = IcebergScan.sparkSchema(schemaNode)
     val byName = df.schema.fields.map(f => f.name -> f).toMap
@@ -270,7 +235,7 @@ object IcebergWrite {
       if (byName.contains(f.name)) col(f.name)
       else lit(null).cast(f.dataType).as(f.name)
     }.toSeq: _*)
-    commit(spark, fs, aligned, tablePath, version = prev + 1,
+    commit(spark, cur.fs, aligned, tablePath, Some(cur),
       carryOverride = Some(carry))
   }
 
@@ -287,22 +252,15 @@ object IcebergWrite {
       "duplicate column names in addColumns")
     defaults.keys.foreach(k => require(cols.exists(_.name == k),
       s"default for '$k' names no added column"))
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hint = new Path(tablePath, "metadata/version-hint.text")
-    require(fs.exists(hint), s"no Iceberg table at $tablePath — use create")
-    val prev = readUtf8(fs, hint).trim.toInt
-    val version = prev + 1
-    val metaDir = new Path(fs.makeQualified(new Path(tablePath)), "metadata")
+    val cur = current(spark, tablePath)
     // default VALUES are a format-version-3 schema feature (spec
     // §Default values): v1/v2 readers would silently ignore them and
     // read NULL — a wrong-results hazard, so refuse rather than stamp
     if (defaults.nonEmpty)
-      require(prevFormatVersion(fs, metaDir, prev) >= 3,
+      require(cur.formatVersion >= 3,
         s"column defaults need format-version 3 — run upgradeFormatVersion($tablePath) first")
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = mapper.readTree(readUtf8(fs, new Path(metaDir, s"v$prev.metadata.json")))
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-    val carry = carryFromPrev(fs, metaDir, prev)
+    val node = cur.node
+    val carry = cur.carry
     val declared = IcebergScan.sparkSchema(mapper.readTree(carry.schemaJson))
     cols.foreach(f => require(!declared.fieldNames.contains(f.name),
       s"column '${f.name}' already exists"))
@@ -331,16 +289,7 @@ object IcebergWrite {
     node.set[com.fasterxml.jackson.databind.JsonNode]("schemas", schemasNode)
     node.put("current-schema-id", newSchemaId)
     node.put("last-column-id", carry.lastColumnId + cols.length)
-    node.put("last-updated-ms", System.currentTimeMillis())
-    val metaPath = new Path(metaDir, s"v$version.metadata.json")
-    try writeUtf8(fs, metaPath, node.toString, overwrite = false)
-    catch {
-      case e: java.io.IOException =>
-        throw new java.util.ConcurrentModificationException(
-          s"concurrent Iceberg commit detected: $metaPath already exists — " +
-            "another writer committed this version; re-read the table and retry", e)
-    }
-    writeUtf8(fs, new Path(metaDir, "version-hint.text"), version.toString)
+    cur.publishEdited()
   }
 
   /** MERGE WITH AUTOMATIC SCHEMA EVOLUTION — source columns the table
@@ -390,7 +339,9 @@ object IcebergWrite {
   private[graft] def commitAt(spark: SparkSession, df: DataFrame,
       tablePath: String, version: Int): Unit = {
     val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    commit(spark, fs, df, tablePath, version)
+    val prev = if (version == 1) scala.None
+      else Some(currentAt(fs, fs.makeQualified(new Path(tablePath)), version - 1))
+    commit(spark, fs, df, tablePath, prev)
   }
 
   /** The schema-tracking state a commit writes into the metadata JSON.
@@ -399,7 +350,7 @@ object IcebergWrite {
     * fresh only at create; replaced by appendEvolve. `specFieldsJson`
     * is the partition spec's fields array (identity transforms only,
     * spec field-ids from 1000) — `[]` for unpartitioned tables. */
-  private final case class SchemaCarry(
+  private[sources] final case class SchemaCarry(
       schemaJson: String, schemasArray: String, currentSchemaId: Int,
       lastColumnId: Int, tableUuid: String, specFieldsJson: String = "[]",
       allSpecsJson: String = "", defaultSpecId: Int = 0,
@@ -414,7 +365,6 @@ object IcebergWrite {
     def defaultSortFields: Seq[(String, Boolean, Boolean)] =
       if (defaultSortOrderId == 0 || sortOrdersJson.isEmpty) Seq.empty
       else {
-        val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
         val nameById = mapper.readTree(schemaJson).get("fields").elements().asScala
           .map(f => f.get("id").asInt() -> f.get("name").asText()).toMap
         val order = mapper.readTree(sortOrdersJson).elements().asScala
@@ -440,7 +390,7 @@ object IcebergWrite {
     def emptySpecId: Int =
       if (allSpecsJson.isEmpty) (if (partCols.isEmpty) 0 else 1)
       else {
-        val specs = new com.fasterxml.jackson.databind.ObjectMapper()
+        val specs = mapper
           .readTree(allSpecsJson)
         specs.elements().asScala.find(_.get("fields").size() == 0)
           .map(_.get("spec-id").asInt())
@@ -462,7 +412,7 @@ object IcebergWrite {
           s"manifest references partition-spec-id $specId but the table " +
             "metadata records no partition-specs history")
       } else {
-        val specs = new com.fasterxml.jackson.databind.ObjectMapper()
+        val specs = mapper
           .readTree(allSpecsJson)
         specs.elements().asScala.find(_.get("spec-id").asInt() == specId)
           .map(_.get("fields").toString)
@@ -478,7 +428,7 @@ object IcebergWrite {
       * field-summary layout is positional over ALL spec slots */
     def partFieldsIndexedFor(specId: Int): (Seq[(Int, IcebergTransforms.PartField)], Int) = {
       val json = specFieldsJsonFor(specId)
-      val schemaNode = new com.fasterxml.jackson.databind.ObjectMapper()
+      val schemaNode = mapper
         .readTree(schemaJson)
       val nameById = schemaNode.get("fields").elements().asScala
         .map(f => f.get("id").asInt() -> f.get("name").asText()).toMap
@@ -487,7 +437,7 @@ object IcebergWrite {
     }
     private def parseSpecFields(
         fieldsJson: String): Seq[IcebergTransforms.PartField] = {
-      val schemaNode = new com.fasterxml.jackson.databind.ObjectMapper()
+      val schemaNode = mapper
         .readTree(schemaJson)
       val nameById = schemaNode.get("fields").elements().asScala
         .map(f => f.get("id").asInt() -> f.get("name").asText()).toMap
@@ -498,7 +448,7 @@ object IcebergWrite {
   }
 
   private[sources] def specColNames(specFieldsJson: String): Seq[String] = {
-    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(specFieldsJson)
+    val node = mapper.readTree(specFieldsJson)
     node.elements().asScala.map(_.get("name").asText()).toSeq
   }
 
@@ -514,11 +464,87 @@ object IcebergWrite {
       java.util.UUID.randomUUID().toString, specJson)
   }
 
-  private def carryFromPrev(fs: FileSystem, metaDir: Path, prev: Int): SchemaCarry = {
-    val node = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(readUtf8(fs, new Path(metaDir, s"v$prev.metadata.json")))
+  /** A table's current state, read once per operation: the
+    * filesystem, qualified root and metadata dir, the version the hint
+    * names, and that version's parsed metadata JSON. An operation plans
+    * from one of these; each commit attempt after a lost race reads a
+    * fresh one. */
+  private[sources] final case class Current(fs: FileSystem, root: Path, metaDir: Path,
+      version: Int, node: com.fasterxml.jackson.databind.node.ObjectNode) {
+    /** the schema-tracking state the next commit carries forward */
+    lazy val carry: SchemaCarry = carryOf(node)
+    def formatVersion: Int =
+      Option(node.get("format-version")).map(_.asInt()).getOrElse(1)
+    def next: Int = version + 1
+    /** the v3 row-id counter (0 before the first v3 commit — see
+      * [[upgradeFormatVersion]]) */
+    def nextRowId: Long =
+      Option(node.get("next-row-id")).map(_.asLong()).getOrElse(0L)
+    /** commit `node`, edited in place, as the next version — the
+      * metadata-only commit (no new snapshot) */
+    def publishEdited(): Unit = {
+      node.put("last-updated-ms", System.currentTimeMillis())
+      publishVersion(fs, metaDir, next, node.toString)
+    }
+  }
+
+  /** the table's [[Current]] state, None when no table exists there */
+  private[sources] def currentOpt(spark: SparkSession, tablePath: String): Option[Current] = {
+    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val root = fs.makeQualified(new Path(tablePath))
+    val hint = new Path(root, "metadata/version-hint.text")
+    if (!fs.exists(hint)) scala.None
+    else Some(currentAt(fs, root, readUtf8(fs, hint).trim.toInt))
+  }
+
+  /** the table's [[Current]] state; loud when there is no table */
+  private[sources] def current(spark: SparkSession, tablePath: String): Current = {
+    val cur = currentOpt(spark, tablePath)
+    require(cur.isDefined, s"no Iceberg table at $tablePath — use create")
+    cur.get
+  }
+
+  /** the state at an explicit metadata version */
+  private def currentAt(fs: FileSystem, root: Path, version: Int): Current = {
+    val metaDir = new Path(root, "metadata")
+    Current(fs, root, metaDir, version, mapper
+      .readTree(readUtf8(fs, new Path(metaDir, s"v$version.metadata.json")))
+      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode])
+  }
+
+  /** Publish metadata `json` as `version`: the conditional create of
+    * `v{version}.metadata.json` is the commit (a writer racing to the
+    * same version loses here with ConcurrentModificationException),
+    * then the version hint swaps to it. Both files are content-atomic
+    * ([[AtomicFiles]]), so no reader observes a torn control file. */
+  private[sources] def publishVersion(fs: FileSystem, metaDir: Path,
+      version: Int, json: String): Unit = {
+    val metaPath = new Path(metaDir, s"v$version.metadata.json")
+    try AtomicFiles.publishUtf8(fs, metaPath, json, overwrite = false)
+    catch {
+      case e: java.io.IOException =>
+        throw new java.util.ConcurrentModificationException(
+          s"concurrent Iceberg commit detected: $metaPath already exists — " +
+            "another writer committed this version; re-read the table and retry", e)
+    }
+    AtomicFiles.publishUtf8(fs, new Path(metaDir, "version-hint.text"),
+      version.toString, overwrite = true)
+  }
+
+  /** fast-fail a stale writer BEFORE any data is written (no orphan
+    * files); [[publishVersion]]'s conditional create stays the atomic
+    * guard for the true photo-finish race */
+  private def requireVersionFree(fs: FileSystem, metaDir: Path, version: Int): Unit = {
+    val target = new Path(metaDir, s"v$version.metadata.json")
+    if (fs.exists(target))
+      throw new java.util.ConcurrentModificationException(
+        s"concurrent Iceberg commit detected: $target already exists — " +
+          "another writer committed this version; re-read the table and retry")
+  }
+
+  private def carryOf(node: com.fasterxml.jackson.databind.JsonNode): SchemaCarry = {
     val schemaJson = IcebergScan.currentSchemaJson(node)
-    val nFields = new com.fasterxml.jackson.databind.ObjectMapper()
+    val nFields = mapper
       .readTree(schemaJson).get("fields").size()
     // partition spec: v2 partition-specs[default-spec-id], else the v1
     // flat partition-spec array. The FULL spec list + default id carry
@@ -592,28 +618,22 @@ object IcebergWrite {
     rec
   }
 
+  /** append `df` as the snapshot after `prev` (None: create version 1) */
   private def commit(spark: SparkSession, fs: FileSystem, df: DataFrame,
-      tablePath: String, version: Int,
+      tablePath: String, prev: Option[Current],
       carryOverride: Option[SchemaCarry] = None,
       txn: Option[(String, Long)] = None,
       branch: Option[String] = scala.None): Unit = {
     val root = fs.makeQualified(new Path(tablePath))
-    // fast-fail a stale racing writer BEFORE any data is written (no
-    // orphan parquet); the overwrite=false create below remains the
-    // atomic guard for the true photo-finish race
-    val targetMeta = new Path(root, s"metadata/v$version.metadata.json")
-    if (fs.exists(targetMeta))
-      throw new java.util.ConcurrentModificationException(
-        s"concurrent Iceberg commit detected: $targetMeta already exists — " +
-          "another writer committed this version; re-read the table and retry")
     val conf = spark.sparkContext.hadoopConfiguration
     val metaDir = new Path(root, "metadata")
+    val version = prev.fold(1)(_.next)
+    requireVersionFree(fs, metaDir, version)
 
     // a table upgraded to v2 by deleteWhere stays v2 on later appends
-    val fmtVersion = if (version == 1) 1 else prevFormatVersion(fs, metaDir, version - 1)
+    val fmtVersion = prev.fold(1)(_.formatVersion)
     val carry = carryOverride.getOrElse(
-      if (version == 1) freshCarry(df.schema, Nil)
-      else carryFromPrev(fs, metaDir, version - 1))
+      prev.fold(freshCarry(df.schema, Nil))(_.carry))
     val schemaJson = carry.schemaJson
     val partFields = carry.partFields
     val partCols = partFields.map(_.specName)
@@ -624,7 +644,7 @@ object IcebergWrite {
     // spec `required` fields must hold no NULL — free when the
     // incoming frame's schema already proves non-nullability
     enforceRequired(df, IcebergScan.sparkSchema(
-      new com.fasterxml.jackson.databind.ObjectMapper().readTree(schemaJson)))
+      mapper.readTree(schemaJson)))
 
     val dataDir = new Path(root, "data")
     val pre = listParquet(fs, dataDir).toSet
@@ -735,8 +755,7 @@ object IcebergWrite {
       val branchHead: Option[Long] = branch.flatMap { b =>
         if (version == 1) scala.None
         else {
-          val prevNode = new com.fasterxml.jackson.databind.ObjectMapper()
-            .readTree(readUtf8(fs, new Path(root, s"metadata/v${version - 1}.metadata.json")))
+          val prevNode = currentAt(fs, root, version - 1).node
           Option(prevNode.get("refs")).flatMap(r => Option(r.get(b)))
             .map(_.get("snapshot-id").asLong())
         }
@@ -773,28 +792,19 @@ object IcebergWrite {
     var v = version
     var c = carry
     var fv = fmtVersion
-    var attempt = 0
-    while (attempt <= MaxCommitRetries) {
-      try { assemble(v, c, fv); return }
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          if (version == 1 || attempt > MaxCommitRetries) throw e
-          val latest = readUtf8(fs, new Path(root, "metadata/version-hint.text")).trim.toInt
-          val nc = carryFromPrev(fs, metaDir, latest)
-          if (nc.schemaJson != c.schemaJson || nc.specFieldsJson != c.specFieldsJson)
-            throw new java.util.ConcurrentModificationException(
-              s"append lost the commit race at $tablePath and the winner " +
-                "changed the schema or partition spec — the staged files " +
-                "carry the old field ids; re-run the append", e)
-          c = nc
-          fv = prevFormatVersion(fs, metaDir, latest)
-          v = latest + 1
-      }
-    }
+    LakeSupport.retryOnConflict(if (version == 1) 0 else MaxCommitRetries, { e =>
+      val now = current(spark, tablePath)
+      if (now.carry.schemaJson != c.schemaJson ||
+          now.carry.specFieldsJson != c.specFieldsJson)
+        throw new java.util.ConcurrentModificationException(
+          s"append lost the commit race at $tablePath and the winner " +
+            "changed the schema or partition spec — the staged files " +
+            "carry the old field ids; re-run the append", e)
+      c = now.carry
+      fv = now.formatVersion
+      v = now.next
+    })(assemble(v, c, fv))
   }
-
-  private val MaxCommitRetries = 5
 
   /** test seam: runs right before a commit's first CAS attempt — the
     * deterministic way to land a racing commit inside the window the
@@ -815,7 +825,7 @@ object IcebergWrite {
     * reads rename-proof (resolution by id, not name) */
   private def stampFieldIds(df: DataFrame, schemaJson: String): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val idByName = new com.fasterxml.jackson.databind.ObjectMapper()
+    val idByName = mapper
       .readTree(schemaJson).get("fields").elements().asScala
       .map(f => f.get("name").asText() -> f.get("id").asInt()).toMap
     df.select(df.schema.fields.map { f =>
@@ -862,17 +872,10 @@ object IcebergWrite {
     // column is fine — spec fields reference it by source-id, so
     // derivation and source-column pruning follow the new name
     // (proven in IcebergScanSpec).
-    val fs0 = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hint0 = new Path(tablePath, "metadata/version-hint.text")
-    if (fs0.exists(hint0)) {
-      val prev0 = readUtf8(fs0, hint0).trim.toInt
-      val metaDir0 = new Path(fs0.makeQualified(new Path(tablePath)), "metadata")
-      val specNames = carryFromPrev(fs0, metaDir0, prev0).partCols
-      require(!specNames.contains(to),
+    evolveSchema(spark, tablePath, s"renameColumn($from -> $to)", from,
+      precheck = carry => require(!carry.partCols.contains(to),
         s"cannot rename to '$to': it is a partition field name of the " +
-          "table's spec (the hive path layout)")
-    }
-    evolveSchema(spark, tablePath, s"renameColumn($from -> $to)", from) {
+          "table's spec (the hive path layout)")) {
       (schemaNode, names) =>
         require(names.contains(from), s"no column '$from' to rename")
         require(!names.contains(to), s"column '$to' already exists")
@@ -893,25 +896,19 @@ object IcebergWrite {
     * dropped field (its keys would become unresolvable). */
   def dropColumn(spark: SparkSession, tablePath: String, name: String): Unit = {
     // live eq-delete reference check BEFORE the metadata edit
-    val mapper0 = new com.fasterxml.jackson.databind.ObjectMapper()
-    val fs0 = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hint0 = new Path(tablePath, "metadata/version-hint.text")
-    if (fs0.exists(hint0)) {
-      val prev0 = readUtf8(fs0, hint0).trim.toInt
-      val metaDir0 = new Path(fs0.makeQualified(new Path(tablePath)), "metadata")
-      val carry0 = carryFromPrev(fs0, metaDir0, prev0)
+    def precheck(carry: SchemaCarry): Unit = {
       // a TRANSFORM spec field derives from its source by source-id: with
       // the source dropped the spec becomes unresolvable and every later
       // read/append fails parsing it — refuse up front (identity sources
       // are already refused by the partition-column guard below)
-      carry0.partFields.find(pf => !pf.isIdentity && pf.source.name == name)
+      carry.partFields.find(pf => !pf.isIdentity && pf.source.name == name)
         .foreach { pf =>
           throw new IllegalArgumentException(
             s"cannot drop '$name': partition field '${pf.specName}' " +
               s"(${pf.transformJson}) derives from it — rewrite into a table " +
               "without that partition field first")
         }
-      val idByName = mapper0.readTree(carry0.schemaJson)
+      val idByName = mapper.readTree(carry.schemaJson)
         .get("fields").elements().asScala
         .map(f => f.get("name").asText() -> f.get("id").asInt()).toMap
       idByName.get(name).foreach { id =>
@@ -921,13 +918,14 @@ object IcebergWrite {
             s"field id $id — compact first so the delete is applied and retired")
       }
     }
-    evolveSchema(spark, tablePath, s"dropColumn($name)", name) { (schemaNode, names) =>
-      require(names.contains(name), s"no column '$name' to drop")
-      require(names.size > 1, "cannot drop the last column")
-      val fields = schemaNode.withArray("fields")
-      val keep = fields.elements().asScala.filter(_.get("name").asText() != name).toSeq
-      fields.removeAll()
-      keep.foreach(fields.add)
+    evolveSchema(spark, tablePath, s"dropColumn($name)", name, precheck) {
+      (schemaNode, names) =>
+        require(names.contains(name), s"no column '$name' to drop")
+        require(names.size > 1, "cannot drop the last column")
+        val fields = schemaNode.withArray("fields")
+        val keep = fields.elements().asScala.filter(_.get("name").asText() != name).toSeq
+        fields.removeAll()
+        keep.foreach(fields.add)
     }
   }
 
@@ -950,17 +948,9 @@ object IcebergWrite {
     * format-version 2 (the version that defines spec evolution). */
   def updatePartitionSpec(spark: SparkSession, tablePath: String,
       partitionBy: Seq[String]): Unit = {
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hint = new Path(tablePath, "metadata/version-hint.text")
-    require(fs.exists(hint), s"no Iceberg table at $tablePath — use create")
-    val prev = readUtf8(fs, hint).trim.toInt
-    val version = prev + 1
-    val root = fs.makeQualified(new Path(tablePath))
-    val metaDir = new Path(root, "metadata")
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = mapper.readTree(readUtf8(fs, new Path(metaDir, s"v$prev.metadata.json")))
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-    val carry = carryFromPrev(fs, metaDir, prev)
+    val cur = current(spark, tablePath)
+    val node = cur.node
+    val carry = cur.carry
     val schema = IcebergScan.sparkSchema(mapper.readTree(carry.schemaJson))
 
     val pfs = partitionBy.map(IcebergTransforms.parse(_, schema))
@@ -1008,10 +998,9 @@ object IcebergWrite {
 
     // v1 tables upgrade to format-version 2 (same upgrade shape the
     // first row-level delete performs)
-    val fmtV = Option(node.get("format-version")).map(_.asInt()).getOrElse(1)
-    if (fmtV < 2) {
+    if (cur.formatVersion < 2) {
       node.put("format-version", 2)
-      node.put("last-sequence-number", prev)
+      node.put("last-sequence-number", cur.version)
       node.set[com.fasterxml.jackson.databind.JsonNode](
         "schemas", mapper.readTree(carry.schemasArray))
       node.put("current-schema-id", carry.currentSchemaId)
@@ -1028,16 +1017,7 @@ object IcebergWrite {
     node.set[com.fasterxml.jackson.databind.JsonNode](
       "partition-spec", mapper.readTree(newFieldsJson))
     node.put("last-partition-id", maxFieldId + pfs.size)
-    node.put("last-updated-ms", System.currentTimeMillis())
-    val metaPath = new Path(metaDir, s"v$version.metadata.json")
-    try writeUtf8(fs, metaPath, node.toString, overwrite = false)
-    catch {
-      case e: java.io.IOException =>
-        throw new java.util.ConcurrentModificationException(
-          s"concurrent Iceberg commit detected: $metaPath already exists — " +
-            "another writer committed this version; re-read the table and retry", e)
-    }
-    writeUtf8(fs, new Path(metaDir, "version-hint.text"), version.toString)
+    cur.publishEdited()
   }
 
   /** Register a table SORT ORDER (spec §Sort Orders) and make it the
@@ -1062,17 +1042,9 @@ object IcebergWrite {
     * format-version 2, same shape as [[updatePartitionSpec]]. */
   def setSortOrder(spark: SparkSession, tablePath: String,
       orderBy: Seq[String]): Unit = {
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hint = new Path(tablePath, "metadata/version-hint.text")
-    require(fs.exists(hint), s"no Iceberg table at $tablePath — use create")
-    val prev = readUtf8(fs, hint).trim.toInt
-    val version = prev + 1
-    val root = fs.makeQualified(new Path(tablePath))
-    val metaDir = new Path(root, "metadata")
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = mapper.readTree(readUtf8(fs, new Path(metaDir, s"v$prev.metadata.json")))
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-    val carry = carryFromPrev(fs, metaDir, prev)
+    val cur = current(spark, tablePath)
+    val node = cur.node
+    val carry = cur.carry
 
     val idByName = mapper.readTree(carry.schemaJson).get("fields").elements().asScala
       .map(f => f.get("name").asText() -> f.get("id").asInt()).toMap
@@ -1122,10 +1094,9 @@ object IcebergWrite {
 
     // v1 tables upgrade to format-version 2 (same upgrade shape
     // updatePartitionSpec performs)
-    val fmtV = Option(node.get("format-version")).map(_.asInt()).getOrElse(1)
-    if (fmtV < 2) {
+    if (cur.formatVersion < 2) {
       node.put("format-version", 2)
-      node.put("last-sequence-number", prev)
+      node.put("last-sequence-number", cur.version)
       node.set[com.fasterxml.jackson.databind.JsonNode](
         "schemas", mapper.readTree(carry.schemasArray))
       node.put("current-schema-id", carry.currentSchemaId)
@@ -1146,16 +1117,7 @@ object IcebergWrite {
     node.set[com.fasterxml.jackson.databind.JsonNode](
       "sort-orders", mapper.readTree(ordersJson))
     node.put("default-sort-order-id", defaultId)
-    node.put("last-updated-ms", System.currentTimeMillis())
-    val metaPath = new Path(metaDir, s"v$version.metadata.json")
-    try writeUtf8(fs, metaPath, node.toString, overwrite = false)
-    catch {
-      case e: java.io.IOException =>
-        throw new java.util.ConcurrentModificationException(
-          s"concurrent Iceberg commit detected: $metaPath already exists — " +
-            "another writer committed this version; re-read the table and retry", e)
-    }
-    writeUtf8(fs, new Path(metaDir, "version-hint.text"), version.toString)
+    cur.publishEdited()
   }
 
   /** the table's default sort order as (order-id, fields) —
@@ -1163,12 +1125,9 @@ object IcebergWrite {
     * transforms this writer can't honor */
   private[graft] def defaultSortOrder(spark: SparkSession,
       tablePath: String): (Int, Seq[(String, Boolean, Boolean)]) = {
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hint = new Path(tablePath, "metadata/version-hint.text")
-    if (!fs.exists(hint)) return (0, Seq.empty)
-    val prev = readUtf8(fs, hint).trim.toInt
-    val carry = carryFromPrev(fs, new Path(tablePath, "metadata"), prev)
-    (carry.defaultSortOrderId, carry.defaultSortFields)
+    currentOpt(spark, tablePath).map(_.carry)
+      .fold((0, Seq.empty[(String, Boolean, Boolean)]))(c =>
+        (c.defaultSortOrderId, c.defaultSortFields))
   }
 
   /** shared rename/drop core: field-id-marker + partition-column
@@ -1176,25 +1135,18 @@ object IcebergWrite {
     * transformed schema under the next schema-id (same snapshot —
     * nothing moves) */
   private def evolveSchema(spark: SparkSession, tablePath: String, op: String,
-      touched: String)(
+      touched: String, precheck: SchemaCarry => Unit = _ => ())(
       xform: (com.fasterxml.jackson.databind.node.ObjectNode, Seq[String]) => Unit): Unit = {
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hint = new Path(tablePath, "metadata/version-hint.text")
-    require(fs.exists(hint), s"no Iceberg table at $tablePath — use create")
-    val prev = readUtf8(fs, hint).trim.toInt
-    val version = prev + 1
-    val root = fs.makeQualified(new Path(tablePath))
-    val metaDir = new Path(root, "metadata")
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = mapper.readTree(readUtf8(fs, new Path(metaDir, s"v$prev.metadata.json")))
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    val cur = current(spark, tablePath)
+    precheck(cur.carry)
+    val node = cur.node
     val hasIds = Option(node.get("properties"))
       .flatMap(p => Option(p.get(FieldIdsProp))).exists(_.asText() == "true")
     require(hasIds,
       s"$op needs every data file to carry parquet field ids — " +
         s"$tablePath predates field-id stamping (no $FieldIdsProp property); " +
         "rewrite it (compact into a fresh table) first")
-    val carry = carryFromPrev(fs, metaDir, prev)
+    val carry = cur.carry
     require(!carry.partCols.contains(touched),
       s"'$touched' is a partition column — its name is the hive path layout; " +
         "repartition into a new table to change it")
@@ -1217,16 +1169,7 @@ object IcebergWrite {
     node.set("schema", evolved)
     node.set("schemas", schemasNode)
     node.put("current-schema-id", newSchemaId)
-    node.put("last-updated-ms", System.currentTimeMillis())
-    val metaPath = new Path(metaDir, s"v$version.metadata.json")
-    try writeUtf8(fs, metaPath, node.toString, overwrite = false)
-    catch {
-      case e: java.io.IOException =>
-        throw new java.util.ConcurrentModificationException(
-          s"concurrent Iceberg commit detected: $metaPath already exists — " +
-            "another writer committed this version; re-read the table and retry", e)
-    }
-    writeUtf8(fs, new Path(metaDir, "version-hint.text"), version.toString)
+    cur.publishEdited()
   }
 
   /** COMPACTION (the spec's `replace` snapshot): rewrite the live data
@@ -1329,17 +1272,9 @@ object IcebergWrite {
       // follow would be a false claim
       honorSortOrder: Boolean = false): (Int, Int) = {
     require(targetFiles >= 1, s"targetFiles must be >= 1, got $targetFiles")
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hint = new Path(tablePath, "metadata/version-hint.text")
-    require(fs.exists(hint), s"no Iceberg table at $tablePath — use create")
-    val prev = readUtf8(fs, hint).trim.toInt
-    val version = prev + 1
-    val root = fs.makeQualified(new Path(tablePath))
-    val targetMeta = new Path(root, s"metadata/v$version.metadata.json")
-    if (fs.exists(targetMeta))
-      throw new java.util.ConcurrentModificationException(
-        s"concurrent Iceberg commit detected: $targetMeta already exists — " +
-          "another writer committed this version; re-read the table and retry")
+    val cur = current(spark, tablePath)
+    val (fs, root, metaDir, version) = (cur.fs, cur.root, cur.metaDir, cur.next)
+    requireVersionFree(fs, metaDir, version)
 
     val (_, entries) = IcebergScan.currentEntries(spark, tablePath)
     val dataEntries = entries.filter(_.content == 0)
@@ -1349,11 +1284,9 @@ object IcebergWrite {
     val victimPaths = small.map(_._1.path).toSet
     val kept = sized.filterNot(s => victimPaths.contains(s._1.path))
 
-    val metaDir0 = new Path(root, "metadata")
-    val carry0 = carryFromPrev(fs, metaDir0, prev)
-    val partCols = carry0.partCols
-    val tableSchema0 = IcebergScan.sparkSchema(
-      new com.fasterxml.jackson.databind.ObjectMapper().readTree(carry0.schemaJson))
+    val carry = cur.carry
+    val partCols = carry.partCols
+    val tableSchema = IcebergScan.sparkSchema(mapper.readTree(carry.schemaJson))
 
     // rewrite through the READER so every applicable delete lands in
     // the output — compacting raw parquet would resurrect deleted rows
@@ -1362,21 +1295,21 @@ object IcebergWrite {
     val dataDir = new Path(root, "data")
     val pre = listParquet(fs, dataDir).toSet
     val shaped = shape(rewrite, targetFiles)
-    enforceRequired(shaped, tableSchema0)
+    enforceRequired(shaped, tableSchema)
     // partitioned tables keep their identity layout: rewritten rows
     // land back in their (possibly NEW, for an UPDATE that moves a
     // partition value) hive directories, so partition pruning and
     // path-derived partition records keep working
     val sortFields =
-      if (honorSortOrder) carry0.defaultSortFields else Seq.empty
+      if (honorSortOrder) carry.defaultSortFields else Seq.empty
     val stampSortId =
-      if (sortFields.isEmpty) scala.None else Some(carry0.defaultSortOrderId)
+      if (sortFields.isEmpty) scala.None else Some(carry.defaultSortOrderId)
     withFieldIdWrites(spark) {
       // transform fields re-derive their hive value from the (possibly
       // updated) source columns — a partition-migrating UPDATE on a
       // hidden-partitioned table lands its rows in their new derived dirs
-      val derived = carry0.partFields.filterNot(_.isIdentity).foldLeft(
-        stampFieldIds(shaped, carry0.schemaJson)) { (d, pf) =>
+      val derived = carry.partFields.filterNot(_.isIdentity).foldLeft(
+        stampFieldIds(shaped, carry.schemaJson)) { (d, pf) =>
         d.withColumn(pf.specName, IcebergTransforms.columnExpr(pf))
       }
       val sorted =
@@ -1399,11 +1332,7 @@ object IcebergWrite {
       n > 0L
     }
 
-    val metaDir = new Path(root, "metadata")
-    val fmtVersion = prevFormatVersion(fs, metaDir, prev)
-    val carry = carry0
-    val tableSchema = IcebergScan.sparkSchema(
-      new com.fasterxml.jackson.databind.ObjectMapper().readTree(carry.schemaJson))
+    val fmtVersion = cur.formatVersion
     val rootPrefix = root.toString.stripSuffix("/") + "/"
     def relOf(abs: String): String =
       if (abs.startsWith(rootPrefix)) abs.substring(rootPrefix.length) else abs
@@ -1449,7 +1378,7 @@ object IcebergWrite {
     // never reused, but compacted rows get new ones.
     val addedRowIds: Seq[Option[Long]] =
       if (!v3) addedWithRows.map(_ => scala.None)
-      else addedWithRows.scanLeft(nextRowIdOf(fs, metaDir, prev)) {
+      else addedWithRows.scanLeft(cur.nextRowId) {
         case (acc, (_, rows, _)) => acc + rows
       }.init.map(Some(_))
     val addedRecords = parMap(addedWithRows.zip(addedRowIds)) {
@@ -1727,44 +1656,21 @@ object IcebergWrite {
   def setProperties(spark: SparkSession, tablePath: String,
       props: Map[String, String]): Unit = {
     require(props.nonEmpty, "setProperties needs at least one property")
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hint = new Path(tablePath, "metadata/version-hint.text")
-    require(fs.exists(hint), s"no Iceberg table at $tablePath — use create")
-    val prev = readUtf8(fs, hint).trim.toInt
-    val version = prev + 1
-    val metaDir = new Path(fs.makeQualified(new Path(tablePath)), "metadata")
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = mapper.readTree(readUtf8(fs, new Path(metaDir, s"v$prev.metadata.json")))
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    val cur = current(spark, tablePath)
+    val node = cur.node
     val pnode = Option(node.get("properties"))
       .map(_.asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode])
       .getOrElse(node.putObject("properties"))
     props.foreach { case (k, v) => pnode.put(k, v) }
     node.set[com.fasterxml.jackson.databind.JsonNode]("properties", pnode)
-    node.put("last-updated-ms", System.currentTimeMillis())
-    val metaPath = new Path(metaDir, s"v$version.metadata.json")
-    try writeUtf8(fs, metaPath, node.toString, overwrite = false)
-    catch {
-      case e: java.io.IOException =>
-        throw new java.util.ConcurrentModificationException(
-          s"concurrent Iceberg commit detected: $metaPath already exists — " +
-            "another writer committed this version; re-read and retry", e)
-    }
-    writeUtf8(fs, new Path(metaDir, "version-hint.text"), version.toString)
+    cur.publishEdited()
   }
 
   /** current value of a table property, if set */
   def tableProperty(spark: SparkSession, tablePath: String,
-      key: String): Option[String] = {
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hint = new Path(tablePath, "metadata/version-hint.text")
-    if (!fs.exists(hint)) return scala.None
-    val prev = readUtf8(fs, hint).trim.toInt
-    val metaDir = new Path(fs.makeQualified(new Path(tablePath)), "metadata")
-    val node = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(readUtf8(fs, new Path(metaDir, s"v$prev.metadata.json")))
-    Option(node.get("properties")).flatMap(p => Option(p.get(key))).map(_.asText())
-  }
+      key: String): Option[String] =
+    currentOpt(spark, tablePath).flatMap(cur => Option(cur.node.get("properties")))
+      .flatMap(p => Option(p.get(key))).map(_.asText())
 
   // ---- merge-on-read DML -----------------------------------------------
 
@@ -1783,13 +1689,9 @@ object IcebergWrite {
       setByName: Map[String, org.apache.spark.sql.Column],
       tableSchema: StructType): Long = {
     import org.apache.spark.sql.functions._
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hint = new Path(tablePath, "metadata/version-hint.text")
-    val prev = readUtf8(fs, hint).trim.toInt
-    val version = prev + 1
-    val root = fs.makeQualified(new Path(tablePath))
-    val metaDir = new Path(root, "metadata")
-    val carry = carryFromPrev(fs, metaDir, prev)
+    val cur = current(spark, tablePath)
+    val (fs, root, metaDir, version) = (cur.fs, cur.root, cur.metaDir, cur.next)
+    val carry = cur.carry
     val partCols = carry.partCols
     val (_, plannedLive) = IcebergScan.currentDataFiles(spark, tablePath)
 
@@ -1800,7 +1702,7 @@ object IcebergWrite {
     try {
       // v3: the kill side is a deletion vector per victim file; v2:
       // parquet position-delete files. Same victims either way.
-      val fmtV = prevFormatVersion(fs, metaDir, prev)
+      val fmtV = cur.formatVersion
       val dvStaged: Option[(Seq[DvStaged], Map[String, (String, Long, Long)])] =
         if (fmtV < 3) scala.None
         else {
@@ -1852,13 +1754,13 @@ object IcebergWrite {
 
       dvStaged match {
         case Some((staged, seen)) =>
-          commitDvFold(spark, fs, root, metaDir, tablePath, carry,
-            plannedLive.toSet, version, staged, seen,
+          commitDvFold(spark, tablePath, cur,
+            plannedLive.toSet, staged, seen,
             operation = "overwrite", dropParquetPos = false,
             newData = dataWithRows)
         case scala.None =>
-          commitMorSnapshot(spark, fs, root, metaDir, tablePath, carry,
-            plannedLive.toSet, version, "overwrite", txn = scala.None,
+          commitMorSnapshot(spark, tablePath, cur,
+            plannedLive.toSet, "overwrite", txn = scala.None,
             tableSchema, dataWithRows, posDeletes = delWithRows,
             eqDeletes = scala.None)
       }
@@ -1884,13 +1786,9 @@ object IcebergWrite {
       src: DataFrame, keys: Seq[String], txn: Option[(String, Long)],
       tableSchema: StructType, srcRows: Long): (Long, Long) = {
     import org.apache.spark.sql.functions._
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hint = new Path(tablePath, "metadata/version-hint.text")
-    val prev = readUtf8(fs, hint).trim.toInt
-    val version = prev + 1
-    val root = fs.makeQualified(new Path(tablePath))
-    val metaDir = new Path(root, "metadata")
-    val carry = carryFromPrev(fs, metaDir, prev)
+    val cur = current(spark, tablePath)
+    val (fs, root, metaDir, version) = (cur.fs, cur.root, cur.metaDir, cur.next)
+    val carry = cur.carry
     val partCols = carry.partCols
 
     // counts against the planned snapshot (one pass over the pruned
@@ -1933,14 +1831,14 @@ object IcebergWrite {
     // equality deletes reference KEYS, not files: commute with any
     // winner that keeps schema + spec (plannedLive empty, like
     // deleteEqual) — the serial order is winner-first by construction
-    commitMorSnapshot(spark, fs, root, metaDir, tablePath, carry,
-      plannedLive = Set.empty, version, "overwrite", txn,
+    commitMorSnapshot(spark, tablePath, cur,
+      plannedLive = Set.empty, "overwrite", txn,
       tableSchema, dataWithRows, posDeletes = Seq.empty,
       eqDeletes = if (delWithRows.isEmpty) scala.None
                   else Some((delWithRows, eqIds)),
       // v3 keeps equality deletes; only the metadata/manifest format
       // version and row-id accounting change
-      fmtVersion = math.max(2, prevFormatVersion(fs, metaDir, prev)))
+      fmtVersion = math.max(2, cur.formatVersion))
     (updated, inserted)
   }
 
@@ -1967,9 +1865,8 @@ object IcebergWrite {
     * assembly (manifests + list + metadata JSON) retries at successive
     * versions while the winner commutes; the staged parquet is reused
     * verbatim. */
-  private def commitMorSnapshot(spark: SparkSession, fs: FileSystem,
-      root: Path, metaDir: Path, tablePath: String, carry: SchemaCarry,
-      plannedLive: Set[String], version: Int, operation: String,
+  private def commitMorSnapshot(spark: SparkSession, tablePath: String,
+      cur: Current, plannedLive: Set[String], operation: String,
       txn: Option[(String, Long)], tableSchema: StructType,
       dataWithRows: Seq[(String, Long, Long)],
       posDeletes: Seq[(String, Long, Long)],
@@ -1979,6 +1876,7 @@ object IcebergWrite {
     require(fmtVersion < 3 || posDeletes.isEmpty,
       "format-version 3 forbids parquet position-delete files — the MOR " +
         "caller must stage deletion vectors (commitDvFold) instead")
+    val (fs, root, metaDir) = (cur.fs, cur.root, cur.metaDir)
     val conf = spark.sparkContext.hadoopConfiguration
     def assemble(v: Int, c: SchemaCarry): Unit = {
       val recordFields = c.partFields.map(_.recordField)
@@ -2087,8 +1985,8 @@ object IcebergWrite {
         c, listRel, operation = operation, propsOverride = txnProps(txn),
         assignedRows = if (fmtVersion < 3) 0L else dataWithRows.map(_._2).sum)
     }
-    commitDeleteWithRetry(spark, fs, root, metaDir, tablePath, carry,
-      plannedLive, version, assemble)
+    commitDeleteWithRetry(spark, tablePath, cur,
+      plannedLive, assemble)
   }
 
   /** ROLLBACK: re-point `current-snapshot-id` at an earlier snapshot
@@ -2099,31 +1997,14 @@ object IcebergWrite {
     * resolves the previous list through the metadata pointer, never by
     * file-name convention). */
   def rollback(spark: SparkSession, tablePath: String, snapshotId: Long): Unit = {
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hint = new Path(tablePath, "metadata/version-hint.text")
-    require(fs.exists(hint), s"no Iceberg table at $tablePath — use create")
-    val prev = readUtf8(fs, hint).trim.toInt
-    val version = prev + 1
-    val root = fs.makeQualified(new Path(tablePath))
-    val metaDir = new Path(root, "metadata")
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = mapper.readTree(readUtf8(fs, new Path(metaDir, s"v$prev.metadata.json")))
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    val cur = current(spark, tablePath)
+    val node = cur.node
     val ids = Option(node.get("snapshots")).map(_.elements().asScala
       .map(_.get("snapshot-id").asLong()).toSeq).getOrElse(Seq.empty)
     require(ids.contains(snapshotId),
       s"snapshot $snapshotId not found in $tablePath (have ${ids.mkString(",")})")
     node.put("current-snapshot-id", snapshotId)
-    node.put("last-updated-ms", System.currentTimeMillis())
-    val metaPath = new Path(metaDir, s"v$version.metadata.json")
-    try writeUtf8(fs, metaPath, node.toString, overwrite = false)
-    catch {
-      case e: java.io.IOException =>
-        throw new java.util.ConcurrentModificationException(
-          s"concurrent Iceberg commit detected: $metaPath already exists — " +
-            "another writer committed this version; re-read the table and retry", e)
-    }
-    writeUtf8(fs, new Path(metaDir, "version-hint.text"), version.toString)
+    cur.publishEdited()
   }
 
   /** TAG a snapshot (the spec's `refs` map, type=tag): a named,
@@ -2133,7 +2014,7 @@ object IcebergWrite {
     * (drop it first), tagging a missing snapshot refuses. */
   def tagSnapshot(spark: SparkSession, tablePath: String,
       name: String, snapshotId: Long): Unit =
-    editRefs(spark, tablePath, s"tag($name)") { (mapper, refs, snapIds) =>
+    editRefs(spark, tablePath) { (refs, snapIds) =>
       require(snapIds.contains(snapshotId),
         s"snapshot $snapshotId not found in $tablePath (have ${snapIds.mkString(",")})")
       require(!refs.has(name), s"ref '$name' already exists — dropRef first")
@@ -2153,13 +2034,9 @@ object IcebergWrite {
   def appendToBranch(spark: SparkSession, df: DataFrame, tablePath: String,
       branch: String, txn: Option[(String, Long)] = scala.None): Unit = {
     require(branch != "main", "'main' IS the table — use append")
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hint = new Path(tablePath, "metadata/version-hint.text")
-    require(fs.exists(hint), s"no Iceberg table at $tablePath — use create")
-    val prev = readUtf8(fs, hint).trim.toInt
+    val cur = current(spark, tablePath)
     // same schema guard as plain append — a branch must not drift
-    val prevMeta = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(readUtf8(fs, new Path(tablePath, s"metadata/v$prev.metadata.json")))
+    val prevMeta = cur.node
     val declared = IcebergScan.sparkSchema(prevMeta.get("schema"))
     require(
       declared.fields.map(f => (f.name, f.dataType)).toSeq ==
@@ -2172,7 +2049,7 @@ object IcebergWrite {
       require(ref.get("type").asText() == "branch",
         s"ref '$branch' is a ${ref.get("type").asText()}, not a branch")
     }
-    commit(spark, fs, df, tablePath, version = prev + 1, branch = Some(branch),
+    commit(spark, cur.fs, df, tablePath, Some(cur), branch = Some(branch),
       txn = txn)
   }
 
@@ -2180,14 +2057,8 @@ object IcebergWrite {
     * head (metadata-only — the WAP publish step). The branch ref stays;
     * later branch appends keep chaining from its head. */
   def fastForward(spark: SparkSession, tablePath: String, branch: String): Unit = {
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hint = new Path(tablePath, "metadata/version-hint.text")
-    require(fs.exists(hint), s"no Iceberg table at $tablePath — use create")
-    val prev = readUtf8(fs, hint).trim.toInt
-    val metaDir = new Path(fs.makeQualified(new Path(tablePath)), "metadata")
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = mapper.readTree(readUtf8(fs, new Path(metaDir, s"v$prev.metadata.json")))
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    val cur = current(spark, tablePath)
+    val node = cur.node
     val head = Option(node.get("refs")).flatMap(r => Option(r.get(branch)))
       .getOrElse(throw new IllegalArgumentException(
         s"no branch '$branch' at $tablePath"))
@@ -2210,56 +2081,29 @@ object IcebergWrite {
     // whose txn markers already read committed.
     head.asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
       .put("graft-base", head.get("snapshot-id").asLong())
-    node.put("last-updated-ms", System.currentTimeMillis())
-    val metaPath = new Path(metaDir, s"v${prev + 1}.metadata.json")
-    try writeUtf8(fs, metaPath, node.toString, overwrite = false)
-    catch {
-      case e: java.io.IOException =>
-        throw new java.util.ConcurrentModificationException(
-          s"concurrent Iceberg commit detected: $metaPath already exists — " +
-            "another writer committed this version; re-read the table and retry", e)
-    }
-    writeUtf8(fs, new Path(metaDir, "version-hint.text"), (prev + 1).toString)
+    cur.publishEdited()
   }
 
   /** drop a named ref (tag); the snapshot itself stays until
     * [[expireSnapshots]] */
   def dropRef(spark: SparkSession, tablePath: String, name: String): Unit =
-    editRefs(spark, tablePath, s"dropRef($name)") { (_, refs, _) =>
+    editRefs(spark, tablePath) { (refs, _) =>
       require(refs.has(name), s"no ref '$name' at $tablePath")
       refs.remove(name); ()
     }
 
-  private def editRefs(spark: SparkSession, tablePath: String, op: String)(
-      edit: (com.fasterxml.jackson.databind.ObjectMapper,
-             com.fasterxml.jackson.databind.node.ObjectNode,
-             Seq[Long]) => Unit): Unit = {
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hint = new Path(tablePath, "metadata/version-hint.text")
-    require(fs.exists(hint), s"no Iceberg table at $tablePath — use create")
-    val prev = readUtf8(fs, hint).trim.toInt
-    val version = prev + 1
-    val metaDir = new Path(fs.makeQualified(new Path(tablePath)), "metadata")
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = mapper.readTree(readUtf8(fs, new Path(metaDir, s"v$prev.metadata.json")))
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+  private def editRefs(spark: SparkSession, tablePath: String)(
+      edit: (com.fasterxml.jackson.databind.node.ObjectNode, Seq[Long]) => Unit): Unit = {
+    val cur = current(spark, tablePath)
+    val node = cur.node
     val snapIds = Option(node.get("snapshots")).map(_.elements().asScala
       .map(_.get("snapshot-id").asLong()).toSeq).getOrElse(Seq.empty)
     val refs = Option(node.get("refs"))
       .map(_.asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode])
       .getOrElse(mapper.createObjectNode())
-    edit(mapper, refs, snapIds)
+    edit(refs, snapIds)
     node.set[com.fasterxml.jackson.databind.JsonNode]("refs", refs)
-    node.put("last-updated-ms", System.currentTimeMillis())
-    val metaPath = new Path(metaDir, s"v$version.metadata.json")
-    try writeUtf8(fs, metaPath, node.toString, overwrite = false)
-    catch {
-      case e: java.io.IOException =>
-        throw new java.util.ConcurrentModificationException(
-          s"concurrent Iceberg commit detected: $metaPath already exists — " +
-            "another writer committed this version; re-read the table and retry", e)
-    }
-    writeUtf8(fs, new Path(metaDir, "version-hint.text"), version.toString)
+    cur.publishEdited()
   }
 
   /** every path a snapshot pins: its manifest list, its manifests, and
@@ -2293,17 +2137,9 @@ object IcebergWrite {
   def expireSnapshots(spark: SparkSession, tablePath: String,
       keepLast: Int = 1): (Int, Seq[String]) = {
     require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hint = new Path(tablePath, "metadata/version-hint.text")
-    require(fs.exists(hint), s"no Iceberg table at $tablePath — use create")
-    val prev = readUtf8(fs, hint).trim.toInt
-    val version = prev + 1
-    val root = fs.makeQualified(new Path(tablePath))
-    val metaDir = new Path(root, "metadata")
+    val cur = current(spark, tablePath)
+    val (fs, root, node) = (cur.fs, cur.root, cur.node)
     val conf = spark.sparkContext.hadoopConfiguration
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = mapper.readTree(readUtf8(fs, new Path(metaDir, s"v$prev.metadata.json")))
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
     val snaps = Option(node.get("snapshots")).map(_.elements().asScala.toSeq)
       .getOrElse(Seq.empty)
     if (snaps.size <= keepLast) return (0, Seq.empty)
@@ -2335,16 +2171,7 @@ object IcebergWrite {
     val keptArr = mapper.createArrayNode()
     kept.sortBy(_.get("snapshot-id").asLong()).foreach(keptArr.add)
     node.set("snapshots", keptArr)
-    node.put("last-updated-ms", System.currentTimeMillis())
-    val metaPath = new Path(metaDir, s"v$version.metadata.json")
-    try writeUtf8(fs, metaPath, node.toString, overwrite = false)
-    catch {
-      case e: java.io.IOException =>
-        throw new java.util.ConcurrentModificationException(
-          s"concurrent Iceberg commit detected: $metaPath already exists — " +
-            "another writer committed this version; re-read the table and retry", e)
-    }
-    writeUtf8(fs, new Path(metaDir, "version-hint.text"), version.toString)
+    cur.publishEdited()
     doomed.foreach(p => fs.delete(new Path(p), false))
     (expired.size, doomed)
   }
@@ -2370,15 +2197,9 @@ object IcebergWrite {
       olderThanMs: Long = 3L * 24 * 3600 * 1000,
       dryRun: Boolean = true): Seq[String] = {
     require(olderThanMs >= 0, s"olderThanMs must be >= 0, got $olderThanMs")
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hint = new Path(tablePath, "metadata/version-hint.text")
-    require(fs.exists(hint), s"no Iceberg table at $tablePath — use create")
-    val prev = readUtf8(fs, hint).trim.toInt
-    val root = fs.makeQualified(new Path(tablePath))
-    val metaDir = new Path(root, "metadata")
+    val cur = current(spark, tablePath)
+    val (fs, root, metaDir, node) = (cur.fs, cur.root, cur.metaDir, cur.node)
     val conf = spark.sparkContext.hadoopConfiguration
-    val node = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(readUtf8(fs, new Path(metaDir, s"v$prev.metadata.json")))
     val snaps = Option(node.get("snapshots")).map(_.elements().asScala.toSeq)
       .getOrElse(Seq.empty)
     val referenced: Set[String] = snaps.flatMap { s =>
@@ -2456,8 +2277,7 @@ object IcebergWrite {
         // the previous metadata JSON (properties hold the streaming-
         // sink txn markers, refs hold tags — both must survive commits
         // and snapshot expiry)
-        val prevMeta = readUtf8(fs, new Path(metaDir, s"v${version - 1}.metadata.json"))
-        val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(prevMeta)
+        val node = currentAt(fs, root, version - 1).node
         val props = Option(node.get("properties")).map(_.properties().asScala
           .map(e => e.getKey -> e.getValue.asText()).toMap).getOrElse(Map.empty[String, String])
         (node.get("snapshots").elements().asScala
@@ -2485,7 +2305,7 @@ object IcebergWrite {
       else if (nSpecFields == 0) s"""[{"spec-id":0,"fields":${carry.specFieldsJson}}]"""
       else s"""[{"spec-id":0,"fields":${carry.specFieldsJson}},{"spec-id":1,"fields":[]}]"""
     val lastPartitionId = {
-      val ids = new com.fasterxml.jackson.databind.ObjectMapper().readTree(specsJson)
+      val ids = mapper.readTree(specsJson)
         .elements().asScala.flatMap(_.get("fields").elements().asScala)
         .map(f => f.get("field-id").asInt()).toSeq
       if (ids.isEmpty) 999 else ids.max
@@ -2515,7 +2335,6 @@ object IcebergWrite {
     // the ref records its BRANCHING POINT (graft-base, set once at the
     // first branch commit) so fastForward can refuse a diverged main
     val refsJson = {
-      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
       val base = prevRefs.map(mapper.readTree)
         .map(_.asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode])
         .getOrElse(mapper.createObjectNode())
@@ -2543,29 +2362,13 @@ object IcebergWrite {
          |"timestamp-ms":$now,"summary":{"operation":${jstr(operation)}},
          |"manifest-list":${jstr(listRel)}}]}"""
         .stripMargin.replaceAll("\n", "")
-    val metaPath = new Path(metaDir, s"v$version.metadata.json")
-    try writeUtf8(fs, metaPath, meta, overwrite = false)
-    catch {
-      case e: java.io.IOException =>
-        throw new java.util.ConcurrentModificationException(
-          s"concurrent Iceberg commit detected: $metaPath already exists — " +
-            "another writer committed this version; re-read the table and retry", e)
-    }
-    writeUtf8(fs, new Path(metaDir, "version-hint.text"), version.toString)
+    publishVersion(fs, metaDir, version, meta)
   }
 
-  /** the table's v3 row-id counter after version `prev` (0 before the
-    * first v3 commit — see [[upgradeFormatVersion]]) */
+  /** the table's v3 row-id counter after version `prev`, read fresh
+    * (commit attempts call this; planning uses [[Current.nextRowId]]) */
   private def nextRowIdOf(fs: FileSystem, metaDir: Path, prev: Int): Long =
-    Option(new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(readUtf8(fs, new Path(metaDir, s"v$prev.metadata.json")))
-      .get("next-row-id")).map(_.asLong()).getOrElse(0L)
-
-  private def prevFormatVersion(fs: FileSystem, metaDir: Path, prev: Int): Int = {
-    val node = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(readUtf8(fs, new Path(metaDir, s"v$prev.metadata.json")))
-    Option(node.get("format-version")).map(_.asInt()).getOrElse(1)
-  }
+    currentAt(fs, metaDir.getParent, prev).nextRowId
 
   /** a full v2 manifest-list row (content 0 = data, 1 = deletes).
     * `partitions` = the spec's field_summary list (field 507): per
@@ -2588,8 +2391,7 @@ object IcebergWrite {
       conf: org.apache.hadoop.conf.Configuration, root: Path,
       version: Int, fromSnapshot: Option[Long] = scala.None): Seq[ManifestRef] = {
     if (version == 1) return Seq.empty
-    val node = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(readUtf8(fs, new Path(root, s"metadata/v${version - 1}.metadata.json")))
+    val node = currentAt(fs, root, version - 1).node
     val currentId = fromSnapshot.orElse(
       Option(node.get("current-snapshot-id")).map(_.asLong()).filter(_ != -1L))
       .getOrElse(return Seq.empty)
@@ -2814,31 +2616,19 @@ object IcebergWrite {
     * it didn't name. */
   def deleteWhere(spark: SparkSession, tablePath: String,
       cond: org.apache.spark.sql.Column): Long = {
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hint = new Path(tablePath, "metadata/version-hint.text")
-    require(fs.exists(hint), s"no Iceberg table at $tablePath — use create")
-    val prev = readUtf8(fs, hint).trim.toInt
-    val version = prev + 1
-    val root = fs.makeQualified(new Path(tablePath))
-    val targetMeta = new Path(root, s"metadata/v$version.metadata.json")
-    if (fs.exists(targetMeta))
-      throw new java.util.ConcurrentModificationException(
-        s"concurrent Iceberg commit detected: $targetMeta already exists — " +
-          "another writer committed this version; re-read the table and retry")
+    val cur = current(spark, tablePath)
+    val (fs, root, metaDir, version) = (cur.fs, cur.root, cur.metaDir, cur.next)
+    requireVersionFree(fs, metaDir, version)
     // format-version 3 forbids parquet position-delete files: route to
     // the deletion-vector path
-    if (prevFormatVersion(fs, new Path(root, "metadata"), prev) >= 3)
-      return deleteWhereDv(spark, tablePath, cond, fs, root,
-        new Path(root, "metadata"), prev)
+    if (cur.formatVersion >= 3) return deleteWhereDv(spark, tablePath, cond, cur)
 
     val (_, dataFiles) = IcebergScan.currentDataFiles(spark, tablePath)
     if (dataFiles.isEmpty) return 0L
-    import org.apache.spark.sql.functions.{broadcast, col}
-    val metaDir = new Path(root, "metadata")
+    import org.apache.spark.sql.functions.col
     // schema state carried verbatim from the table's own metadata (the
     // delete commit must not drift the declared schema or its ids)
-    val carry = carryFromPrev(fs, metaDir, prev)
-    val schemaJson = carry.schemaJson
+    val carry = cur.carry
     // transform specs work here too: the delete files shard per derived
     // partition tuple (the values live in the manifest entries), so a
     // partition-pruned reader prunes the deletes alongside the data
@@ -2904,8 +2694,8 @@ object IcebergWrite {
     // concurrent APPENDS commute: the delete's higher sequence number
     // applies it to pre-existing files only, and the staged positions
     // name exactly the files this plan saw.
-    commitDeleteWithRetry(spark, fs, root, metaDir, tablePath, carry,
-      dataFiles.toSet, version, assemble)
+    commitDeleteWithRetry(spark, tablePath, cur,
+      dataFiles.toSet, assemble)
     nDeleted
   }
 
@@ -3005,39 +2795,30 @@ object IcebergWrite {
     * `assemble` at successive versions while the winner's commits
     * commute; `plannedLive` empty skips the file-liveness check
     * (equality deletes reference keys, not files). */
-  private def commitDeleteWithRetry(spark: SparkSession, fs: FileSystem,
-      root: Path, metaDir: Path, tablePath: String, carry: SchemaCarry,
-      plannedLive: Set[String], version: Int,
+  private def commitDeleteWithRetry(spark: SparkSession, tablePath: String,
+      cur: Current, plannedLive: Set[String],
       assemble: (Int, SchemaCarry) => Unit): Unit = {
     beforeCommit()
-    var v = version
-    var c = carry
-    var attempt = 0
-    while (true) {
-      try { assemble(v, c); return }
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          if (attempt > MaxCommitRetries) throw e
-          val latest = readUtf8(fs,
-            new Path(root, "metadata/version-hint.text")).trim.toInt
-          val nc = carryFromPrev(fs, metaDir, latest)
-          if (nc.schemaJson != c.schemaJson || nc.specFieldsJson != c.specFieldsJson)
-            throw new java.util.ConcurrentModificationException(
-              s"delete lost the commit race at $tablePath and the winner " +
-                "changed the schema or partition spec — re-run the delete", e)
-          if (plannedLive.nonEmpty) {
-            val nowLive = IcebergScan.currentDataFiles(spark, tablePath)._2.toSet
-            if (!plannedLive.subsetOf(nowLive))
-              throw new java.util.ConcurrentModificationException(
-                s"delete lost the commit race at $tablePath and the winner " +
-                  "removed/rewrote data files this delete references — " +
-                  "re-run the delete on the current table state", e)
-          }
-          c = nc
-          v = latest + 1
+    var v = cur.next
+    var c = cur.carry
+    LakeSupport.retryOnConflict(MaxCommitRetries, { e =>
+      val now = current(spark, tablePath)
+      if (now.carry.schemaJson != c.schemaJson ||
+          now.carry.specFieldsJson != c.specFieldsJson)
+        throw new java.util.ConcurrentModificationException(
+          s"delete lost the commit race at $tablePath and the winner " +
+            "changed the schema or partition spec — re-run the delete", e)
+      if (plannedLive.nonEmpty) {
+        val nowLive = IcebergScan.currentDataFiles(spark, tablePath)._2.toSet
+        if (!plannedLive.subsetOf(nowLive))
+          throw new java.util.ConcurrentModificationException(
+            s"delete lost the commit race at $tablePath and the winner " +
+              "removed/rewrote data files this delete references — " +
+              "re-run the delete on the current table state", e)
       }
-    }
+      c = now.carry
+      v = now.next
+    })(assemble(v, c))
   }
 
   /** manifest partition value → the Spark EXTERNAL type for a
@@ -3062,7 +2843,7 @@ object IcebergWrite {
       root: Path, keys: DataFrame, version: Int, carry: SchemaCarry,
       tablePath: String): (Seq[(String, Long, Long)], Seq[Int]) = {
     import org.apache.spark.sql.functions.col
-    val schemaNode = new com.fasterxml.jackson.databind.ObjectMapper()
+    val schemaNode = mapper
       .readTree(carry.schemaJson)
     val idByName = schemaNode.get("fields").elements().asScala
       .map(f => f.get("name").asText() -> f.get("id").asInt()).toMap
@@ -3125,21 +2906,12 @@ object IcebergWrite {
     * nothing about which partition holds it. */
   def deleteEqual(spark: SparkSession, tablePath: String, keys: DataFrame): Long = {
     import org.apache.spark.sql.functions.col
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hint = new Path(tablePath, "metadata/version-hint.text")
-    require(fs.exists(hint), s"no Iceberg table at $tablePath — use create")
+    val cur = current(spark, tablePath)
     require(keys.schema.fields.nonEmpty, "deleteEqual needs at least one key column")
-    val prev = readUtf8(fs, hint).trim.toInt
-    val version = prev + 1
-    val root = fs.makeQualified(new Path(tablePath))
-    val targetMeta = new Path(root, s"metadata/v$version.metadata.json")
-    if (fs.exists(targetMeta))
-      throw new java.util.ConcurrentModificationException(
-        s"concurrent Iceberg commit detected: $targetMeta already exists — " +
-          "another writer committed this version; re-read the table and retry")
+    val (fs, root, metaDir, version) = (cur.fs, cur.root, cur.metaDir, cur.next)
+    requireVersionFree(fs, metaDir, version)
 
-    val metaDir = new Path(root, "metadata")
-    val carry = carryFromPrev(fs, metaDir, prev)
+    val carry = cur.carry
     val (delWithRows, eqIds) =
       stageEqualityDeletes(spark, fs, root, keys, version, carry, tablePath)
     val conf = spark.sparkContext.hadoopConfiguration
@@ -3149,7 +2921,7 @@ object IcebergWrite {
     // defines sequence numbers); a v3 table stays v3 (equality deletes
     // remain first-class in v3 — only parquet POSITION deletes are
     // replaced by deletion vectors)
-    val fmtV = math.max(2, prevFormatVersion(fs, metaDir, prev))
+    val fmtV = math.max(2, cur.formatVersion)
 
     def assemble(v: Int, c: SchemaCarry): Unit = {
       val manifestRel = s"metadata/manifest-$v-${pathNonce()}.avro"
@@ -3199,8 +2971,8 @@ object IcebergWrite {
     // any winner that keeps the schema/spec (the delete's higher
     // sequence number applies it to every file the winner added or
     // rewrote, which IS the operation's read-time semantics)
-    commitDeleteWithRetry(spark, fs, root, metaDir, tablePath, carry,
-      plannedLive = Set.empty, version, assemble)
+    commitDeleteWithRetry(spark, tablePath, cur,
+      plannedLive = Set.empty, assemble)
     nKeys
   }
 
@@ -3228,15 +3000,9 @@ object IcebergWrite {
     * Reference surface: TidierDB delegates Iceberg versioning to its
     * backend (src/TidierDB.jl:209-212); this is superset depth. */
   def upgradeFormatVersion(spark: SparkSession, tablePath: String): Unit = {
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hint = new Path(tablePath, "metadata/version-hint.text")
-    require(fs.exists(hint), s"no Iceberg table at $tablePath — use create")
-    val prev = readUtf8(fs, hint).trim.toInt
-    val version = prev + 1
-    val root = fs.makeQualified(new Path(tablePath))
-    val metaDir = new Path(root, "metadata")
-    if (prevFormatVersion(fs, metaDir, prev) >= 3) return
-    val carry = carryFromPrev(fs, metaDir, prev)
+    val cur = current(spark, tablePath)
+    if (cur.formatVersion >= 3) return
+    val (fs, root, version) = (cur.fs, cur.root, cur.next)
     val (_, entries) = IcebergScan.currentEntries(spark, tablePath)
     val dataEntries = entries.filter(_.content == 0)
     val posParquet = entries.filter(e => e.content == 1 && e.fileFormat != "PUFFIN")
@@ -3262,8 +3028,8 @@ object IcebergWrite {
     }
     // same live-rows invariant as a compaction: the data file set and
     // every row's liveness are unchanged — "replace"
-    commitDvFold(spark, fs, root, metaDir, tablePath, carry,
-      plannedLive = dataEntries.map(_.path).toSet, version, staged,
+    commitDvFold(spark, tablePath, cur,
+      plannedLive = dataEntries.map(_.path).toSet, staged,
       seenDv = Map.empty, operation = "replace", dropParquetPos = true)
   }
 
@@ -3272,10 +3038,8 @@ object IcebergWrite {
     * a replacement must preserve previously deleted positions), then
     * fold-commit. Returns newly deleted rows. */
   private def deleteWhereDv(spark: SparkSession, tablePath: String,
-      cond: org.apache.spark.sql.Column, fs: FileSystem, root: Path,
-      metaDir: Path, prev: Int): Long = {
-    val version = prev + 1
-    val carry = carryFromPrev(fs, metaDir, prev)
+      cond: org.apache.spark.sql.Column, cur: Current): Long = {
+    val (fs, root, version) = (cur.fs, cur.root, cur.next)
     val (_, entries) = IcebergScan.currentEntries(spark, tablePath)
     val dataEntries = entries.filter(_.content == 0)
     if (dataEntries.isEmpty) return 0L
@@ -3288,8 +3052,8 @@ object IcebergWrite {
       .filter(cond).select(col("__raw_file"), col("__pos"))
     val staged = stageDeletionVectors(spark, fs, root, victims, existingDv, version)
     if (staged.isEmpty) return 0L
-    commitDvFold(spark, fs, root, metaDir, tablePath, carry,
-      plannedLive = dataEntries.map(_.path).toSet, version, staged,
+    commitDvFold(spark, tablePath, cur,
+      plannedLive = dataEntries.map(_.path).toSet, staged,
       seenDv = existingDv, operation = "delete", dropParquetPos = false)
     staged.map(_.newRows).sum
   }
@@ -3367,24 +3131,24 @@ object IcebergWrite {
     * winner that committed a DV for a file THIS delete also staged
     * aborts loudly (the staged blob unioned a stale bitmap — retrying
     * would lose the winner's positions). */
-  private def commitDvFold(spark: SparkSession, fs: FileSystem, root: Path,
-      metaDir: Path, tablePath: String, carry: SchemaCarry,
-      plannedLive: Set[String], version: Int, staged: Seq[DvStaged],
+  private def commitDvFold(spark: SparkSession, tablePath: String,
+      cur: Current, plannedLive: Set[String], staged: Seq[DvStaged],
       seenDv: Map[String, (String, Long, Long)], operation: String,
       dropParquetPos: Boolean,
       // a MOR UPDATE commits its re-written row images in the SAME
       // snapshot as the DVs that kill the originals
       newData: Seq[(String, Long, Long)] = Seq.empty): Unit = {
+    val (fs, root, metaDir) = (cur.fs, cur.root, cur.metaDir)
     val conf = spark.sparkContext.hadoopConfiguration
     val rootPrefix = root.toString.stripSuffix("/") + "/"
     def relOf(abs: String): String =
       if (abs.startsWith(rootPrefix)) abs.substring(rootPrefix.length) else abs
 
     def assemble(v: Int, c: SchemaCarry): Unit = {
-      val (_, cur) = IcebergScan.currentEntries(spark, tablePath)
-      val dataByNorm = cur.filter(_.content == 0)
+      val (_, live) = IcebergScan.currentEntries(spark, tablePath)
+      val dataByNorm = live.filter(_.content == 0)
         .map(e => IcebergScan.normalizePath(e.path) -> e).toMap
-      val dels = cur.filter(_.content != 0)
+      val dels = live.filter(_.content != 0)
       if (!dropParquetPos)
         require(!dels.exists(e => e.content == 1 && e.fileFormat != "PUFFIN"),
           s"$tablePath carries parquet position deletes in format-version 3")
@@ -3526,8 +3290,8 @@ object IcebergWrite {
       writeMetadataJson(fs, metaDir, root, v, fmtVersion = 3, c, listRel,
         operation = operation, assignedRows = newData.map(_._2).sum)
     }
-    commitDeleteWithRetry(spark, fs, root, metaDir, tablePath, carry,
-      plannedLive, version, assemble)
+    commitDeleteWithRetry(spark, tablePath, cur,
+      plannedLive, assemble)
   }
 
   /** Spark → Iceberg schema JSON with 1-based field ids; primitives
@@ -3727,26 +3491,6 @@ object IcebergWrite {
     arr
   }
 
-  /** bounded driver-side parallel map for per-file METADATA I/O
-    * (parquet footer reads): commit cost is O(added files), and a
-    * sequential footer walk is a single-core bottleneck once a
-    * partitioned write emits thousands of files — 16 concurrent
-    * footer reads cut the commit's metadata phase ~10x at high file
-    * counts. Order-preserving; exceptions propagate. */
-  private def parMap[A, B](xs: Seq[A])(f: A => B): Seq[B] =
-    if (xs.lengthCompare(8) < 0) xs.map(f)
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(16)
-      try {
-        val futs = xs.map { x =>
-          pool.submit(new java.util.concurrent.Callable[B] { def call(): B = f(x) })
-        }
-        futs.map(_.get())
-      } catch {
-        case e: java.util.concurrent.ExecutionException => throw e.getCause
-      } finally pool.shutdown()
-    }
-
   // schemaJson → (field ids by name, Spark schema): parsed once per
   // schema, not once per FILE (attachStats runs per added file)
   private val statsSchemaCache =
@@ -3760,7 +3504,6 @@ object IcebergWrite {
       schemaJson: String): Unit = {
     if (statsSchemaCache.size > 64) statsSchemaCache.clear()
     val (idByName, sparkSch) = statsSchemaCache.computeIfAbsent(schemaJson, { sj =>
-      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
       val ids = mapper.readTree(sj).get("fields").elements().asScala
         .map(f => f.get("name").asText() -> f.get("id").asInt()).toMap
       (ids, IcebergScan.sparkSchema(mapper.readTree(sj)))
@@ -3839,24 +3582,4 @@ object IcebergWrite {
     }
     out.result()
   }
-
-  private[sources] def readUtf8(fs: FileSystem, p: Path): String = {
-    val in = fs.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-  }
-
-  // content-atomic ([[AtomicFiles]]): the metadata-json CAS
-  // (overwrite=false) and the version-hint swap (overwrite=true) are
-  // both rename-published, so no reader — the admission-controlled
-  // stream source in particular — can observe a torn control file
-  private[sources] def writeUtf8(fs: FileSystem, p: Path, s: String,
-      overwrite: Boolean = true): Unit =
-    AtomicFiles.publishUtf8(fs, p, s, overwrite)
-
-  private def jstr(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
 }

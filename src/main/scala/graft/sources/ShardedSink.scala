@@ -2,6 +2,8 @@ package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 
+import LakeSupport.jstr
+
 /** Commit protocol shared by the executor-side Arrow/Avro shard
   * writers ([[ArrowWrite.writeSharded]] / [[AvroWrite.writeSharded]]):
   * tasks write uniquely-named `part-NNNNN-xxxxxxxx.<ext>` files
@@ -87,11 +89,4 @@ private[sources] object ShardedSink {
       parts
     }
   }
-
-  private def jstr(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
 }

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec}
 import org.apache.spark.sql.functions._
 import graft.sources.{BucketJoin, IcebergScan, IcebergWrite}
 
@@ -44,18 +46,17 @@ class BucketJoinSpec extends SparkSpec {
     // stage cache materializes ONE broadcast stage and every other
     // branch reuses it (N broadcast-build jobs collapse to one with
     // the same live bytes). Visible only in the executed final plan:
-    // all BroadcastQueryStage occurrences carry the same stage id.
+    // one BroadcastExchangeExec node, every other stage a reuse of it.
     joined.collect()
-    val finalLines = joined.queryExecution.executedPlan.toString.linesIterator
-      .takeWhile(!_.contains("== Initial Plan ==")).mkString("\n")
-    // a ReusedExchange line repeats the exchange description it points
-    // at — count builds only on lines that are not reuses
-    val builds = finalLines.linesIterator.count(l =>
-      l.contains("BroadcastExchange") && !l.contains("ReusedExchange"))
-    val reused = finalLines.linesIterator.count(_.contains("ReusedExchange"))
+    val finalPlan = joined.queryExecution.executedPlan
+    // walks the final adaptive plan through its query stages; a reuse
+    // is a leaf, so the exchange it points at is not counted again
+    object Stages extends AdaptiveSparkPlanHelper
+    val builds = Stages.collect(finalPlan) { case b: BroadcastExchangeExec => b }.size
+    val reused = Stages.collect(finalPlan) { case r: ReusedExchangeExec => r }.size
     assert(builds == 1 && reused >= 1,
       s"expected one shared broadcast build + reuses, got builds=$builds " +
-        s"reused=$reused:\n$finalLines")
+        s"reused=$reused:\n$finalPlan")
   }
 
   test("bucket-aligned left join keeps unmatched and null-key fact rows") {
