@@ -263,12 +263,12 @@ object Bench {
     // counted (bounded: 3 extra passes). Min-of-reps sheds short
     // stalls, but a storm spanning a whole pass poisons every rep of
     // the queries it covers; retrying the pass re-measures in (with
-    // luck) a quieter window. Discarded passes' timings are STILL fed
-    // into the min (they can only tighten it, never inflate it) — only
-    // the pass budget and the reported stall telemetry treat them as
-    // retries. The metric line's stalls/stall_sec cover the counted
-    // passes (the measurement window that produced the record);
-    // "retries" rides the line when any pass was re-run.
+    // luck) a quieter window. A discarded pass's timings are dropped,
+    // so every query's min is over exactly `reps` counted passes and
+    // records stay sample-count comparable. The metric line's
+    // stalls/stall_sec cover the counted passes (the measurement window
+    // that produced the record); "retries" rides the line when any pass
+    // was re-run.
     var countedStallCount = 0L
     var countedStallNanos = 0L
     var passesDone = 0
@@ -277,13 +277,12 @@ object Bench {
     while (passesDone < reps) {
       val sc0 = stallCount.get(); val sn0 = stallNanos.get()
       val w0 = System.nanoTime()
-      selected.foreach { name =>
-        SparkEntry.queries.get(name).foreach { fn =>
+      val pass = selected.flatMap { name =>
+        SparkEntry.queries.get(name).map { fn =>
           val t0 = System.nanoTime()
           val ok = try { fn(spark, sfDir).count(); true }
                    catch { case _: Throwable => false }
-          val t = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-          times(name) = t :: times.getOrElse(name, Nil)
+          name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
         }
       }
       val wall = System.nanoTime() - w0
@@ -291,6 +290,7 @@ object Bench {
       if (passStalls > 0.05 * wall && retries < maxRetries) {
         retries += 1
       } else {
+        pass.foreach { case (name, t) => times(name) = t :: times.getOrElse(name, Nil) }
         countedStallCount += stallCount.get() - sc0
         countedStallNanos += passStalls
         passesDone += 1

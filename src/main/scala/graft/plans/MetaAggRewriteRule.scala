@@ -84,12 +84,10 @@ object MetaAggRewriteRule extends Rule[LogicalPlan] {
       if (reg.format == "delta")
         Some(graft.sources.DeltaScan.latestVersion(spark, path))
       else {
-        val p = new org.apache.hadoop.fs.Path(path, "metadata/version-hint.text")
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val in = fs.open(p)
-        val hint = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        Some(hint.trim.toLong)
+        val metaDir = new org.apache.hadoop.fs.Path(path, "metadata")
+        graft.sources.IcebergScan.hintedVersion(
+          metaDir.getFileSystem(spark.sparkContext.hadoopConfiguration), metaDir)
+          .map(_.toLong)
       }
     } catch { case scala.util.control.NonFatal(_) => None }
 

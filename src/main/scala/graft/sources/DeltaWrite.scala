@@ -10,7 +10,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 
-import LakeSupport.{jstr, mapper, parMap, MaxCommitRetries}
+import LakeSupport.{footerRows, jstr, mapper, parMap, MaxCommitRetries}
 
 /** Minimal dependency-free Delta Lake WRITER — the sink half of the
   * built-in lakehouse support (reader: [[DeltaScan]]). Writes the
@@ -1864,9 +1864,7 @@ object DeltaWrite {
       added: Seq[(String, Long)]): Seq[String] = {
     val conf = spark.sparkContext.hadoopConfiguration
     val counted = parMap(added) { case (rel, size) =>
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(root, rel), conf))
-      (rel, size, (try r.getRecordCount finally r.close()) > 0L)
+      (rel, size, footerRows(conf, new Path(root, rel)) > 0L)
     }
     val (kept, empty) = counted.partition(_._3)
     empty.foreach { case (rel, _, _) => fs.delete(new Path(root, rel), false) }
@@ -2409,9 +2407,7 @@ object DeltaWrite {
     // row-preserving swap: dataChange=false adds (no DV) + removes
     val conf = spark.sparkContext.hadoopConfiguration
     val (kept, empty) = added.partition { case (rel, _) =>
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(root, rel), conf))
-      (try r.getRecordCount finally r.close()) > 0L
+      footerRows(conf, new Path(root, rel)) > 0L
     }
     empty.foreach { case (rel, _) => fs.delete(new Path(root, rel), false) }
     val now = System.currentTimeMillis()
@@ -3303,12 +3299,7 @@ object DeltaWrite {
         .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
       val rows = Option(add.get("stats")).filterNot(_.isNull).flatMap { st =>
         Option(mapper.readTree(st.asText()).get("numRecords")).map(_.asLong())
-      }.getOrElse {
-        val p = new Path(root, decodePath(add.get("path").asText()))
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
-        try r.getRecordCount finally r.close()
-      }
+      }.getOrElse(footerRows(conf, new Path(root, decodePath(add.get("path").asText()))))
       add.put("baseRowId", hwm + 1L)
       add.put("defaultRowCommitVersion", version)
       hwm += math.max(rows, 0L)

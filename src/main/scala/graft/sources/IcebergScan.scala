@@ -2,7 +2,7 @@ package graft.sources
 
 import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.JsonNode
 import org.apache.avro.file.DataFileReader
 import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
 import org.apache.avro.mapred.FsInput
@@ -11,7 +11,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import LakeSupport.readUtf8
+import LakeSupport.{mapper, readUtf8}
 
 /** Dependency-free read of Apache Iceberg tables — the `iceberg_scan`
   * analog (reference: src/TidierDB.jl:161-169 runs it via a DuckDB
@@ -232,7 +232,7 @@ object IcebergScan {
     val conf = spark.sessionState.newHadoopConf()
     val p = new Path(metadataFile)
     val fs = p.getFileSystem(conf)
-    val meta = new ObjectMapper().readTree(readUtf8(fs, p))
+    val meta = mapper.readTree(readUtf8(fs, p))
     val tablePath = Option(meta.get("location")).map(_.asText())
       .filter(_.nonEmpty)
       .getOrElse(p.getParent.getParent.toString) // {table}/metadata/x.json
@@ -871,14 +871,11 @@ object IcebergScan {
     val conf = spark.sessionState.newHadoopConf()
     val metaDir = new Path(tablePath, "metadata")
     val fs = metaDir.getFileSystem(conf)
-    val mapper = new ObjectMapper()
     def metaAt(n: Int): JsonNode = {
       val p = new Path(metaDir, s"v$n.metadata.json")
       require(fs.exists(p),
         s"streaming source lost metadata version $n of $tablePath (expired?)")
-      val in = fs.open(p)
-      try mapper.readTree(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
-      finally in.close()
+      mapper.readTree(readUtf8(fs, p))
     }
     def snapshotOf(meta: JsonNode): Option[JsonNode] =
       Option(meta.get("current-snapshot-id")).map(_.asLong()).filter(_ != -1L)
@@ -1143,19 +1140,41 @@ object IcebergScan {
   private[sources] def normalizePathCol(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     regexp_replace(c, "^[A-Za-z][A-Za-z0-9+.\\-]*:/+", "/")
 
-  /** Latest table metadata as parsed JSON: prefer version-hint.text
-    * (HadoopTables), else the lexically-highest *.metadata.json. */
+  /** The table's latest metadata version by the HadoopTables rule
+    * (Iceberg's `HadoopTableOperations.findVersion`): a commit creates
+    * `v{N}.metadata.json` (the commit point) and only then swaps
+    * `version-hint.text`, so a crash between the two leaves the hint one
+    * behind, and a crash inside a swap that is a delete plus a rename
+    * leaves none. The hint is therefore a LOWER BOUND: without a
+    * readable hint the newest listed `v{n}.metadata.json` stands in,
+    * and either way the version steps forward while
+    * `v{n+1}.metadata.json` exists. None when neither exists. The one
+    * resolver batch reads and [[IcebergWrite]] commits share. */
+  private[graft] def hintedVersion(fs: FileSystem, metaDir: Path): Option[Int] = {
+    val hint = new Path(metaDir, "version-hint.text")
+    val start =
+      (if (fs.exists(hint)) scala.util.Try(readUtf8(fs, hint).trim.toInt).toOption else None)
+        .orElse(if (!fs.exists(metaDir)) None else fs.listStatus(metaDir).toSeq
+          .map(_.getPath.getName).collect { case VersionFile(n) => n.toInt }.maxOption)
+    start.map { v0 =>
+      var v = v0
+      while (fs.exists(new Path(metaDir, s"v${v + 1}.metadata.json"))) v += 1
+      v
+    }
+  }
+  private val VersionFile = """v(\d+)\.metadata\.json""".r
+
+  /** Latest table metadata as parsed JSON: the [[hintedVersion]]
+    * (HadoopTables), else the lexically-highest *.metadata.json (foreign
+    * `00001-<uuid>` layouts). */
   private def parseMetadata(fs: FileSystem, metaDir: Path): JsonNode = {
     require(fs.exists(metaDir), s"no Iceberg metadata directory at $metaDir")
-    val mapper = new ObjectMapper()
-    val hint = new Path(metaDir, "version-hint.text")
     val metaFile =
-      if (fs.exists(hint)) {
-        val v = readUtf8(fs, hint).trim
+      hintedVersion(fs, metaDir).map { v =>
         val cands = Seq(s"v$v.metadata.json", s"$v.metadata.json").map(new Path(metaDir, _))
         cands.find(fs.exists).getOrElse(throw new IllegalStateException(
           s"version-hint.text names version $v but no matching metadata file exists in $metaDir"))
-      } else {
+      }.getOrElse {
         val all = fs.listStatus(metaDir).map(_.getPath)
           .filter(_.getName.endsWith(".metadata.json"))
         require(all.nonEmpty, s"no *.metadata.json under $metaDir")

@@ -1,9 +1,6 @@
 package graft.sources
 
-import java.nio.charset.StandardCharsets
-
 import scala.jdk.CollectionConverters._
-import scala.util.chaining._
 
 import org.apache.avro.Schema
 import org.apache.avro.file.{DataFileReader, DataFileWriter}
@@ -13,7 +10,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 
-import LakeSupport.{jstr, mapper, parMap, readUtf8, MaxCommitRetries}
+import LakeSupport.{jstr, mapper, parMap, readFooter, readUtf8, MaxCommitRetries}
 
 /** Minimal Iceberg WRITER (format-version 1, HadoopTables layout) — the
   * sink counterpart of [[IcebergScan]]. Emits the spec's file tree:
@@ -492,9 +489,7 @@ object IcebergWrite {
   private[sources] def currentOpt(spark: SparkSession, tablePath: String): Option[Current] = {
     val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val root = fs.makeQualified(new Path(tablePath))
-    val hint = new Path(root, "metadata/version-hint.text")
-    if (!fs.exists(hint)) scala.None
-    else Some(currentAt(fs, root, readUtf8(fs, hint).trim.toInt))
+    IcebergScan.hintedVersion(fs, new Path(root, "metadata")).map(currentAt(fs, root, _))
   }
 
   /** the table's [[Current]] state; loud when there is no table */
@@ -591,10 +586,10 @@ object IcebergWrite {
     txn.map { case (appId, batchId) => s"graft.txn.$appId" -> batchId.toString }.toMap
 
 
-  /** typed partition record rebuilt from a live manifest entry's
-    * partition values (the EXISTING-entry path of a rewrite — the
-    * original record must be carried byte-identical, not re-parsed
-    * from the path, so non-hive layouts survive too) */
+  /** typed partition record of an entry's partition values: a staged
+    * file's come from its hive path; a kept entry's are carried as its
+    * manifest records them, not re-parsed from the path, so non-hive
+    * layouts survive too */
   private def partitionRecordFromEntry(dataFileSchema: Schema,
       partFields: Seq[IcebergTransforms.PartField],
       e: IcebergScan.FileEntry): GenericData.Record = {
@@ -625,59 +620,270 @@ object IcebergWrite {
       txn: Option[(String, Long)] = None,
       branch: Option[String] = scala.None): Unit = {
     val root = fs.makeQualified(new Path(tablePath))
-    val conf = spark.sparkContext.hadoopConfiguration
     val metaDir = new Path(root, "metadata")
     val version = prev.fold(1)(_.next)
     requireVersionFree(fs, metaDir, version)
 
-    // a table upgraded to v2 by deleteWhere stays v2 on later appends
-    val fmtVersion = prev.fold(1)(_.formatVersion)
     val carry = carryOverride.getOrElse(
       prev.fold(freshCarry(df.schema, Nil))(_.carry))
-    val schemaJson = carry.schemaJson
-    val partFields = carry.partFields
-    val partCols = partFields.map(_.specName)
-    partFields.foreach(pf => require(df.schema.fieldNames.contains(pf.source.name),
+    carry.partFields.foreach(pf => require(df.schema.fieldNames.contains(pf.source.name),
       s"the table is partitioned by '${pf.specName}' whose source column " +
         s"'${pf.source.name}' is not a column of the input"))
 
     // spec `required` fields must hold no NULL — free when the
     // incoming frame's schema already proves non-nullability
     enforceRequired(df, IcebergScan.sparkSchema(
-      mapper.readTree(schemaJson)))
+      mapper.readTree(carry.schemaJson)))
 
+    // CLUSTER the append by the partition columns: without it every
+    // task writes every partition dir it sees — files = tasks x
+    // touched partitions (a day+bucket layout at 32 tasks x 240
+    // tuples = 7680 tiny files per append, measured at sf1). One
+    // hash shuffle puts each partition tuple in exactly one task →
+    // files = touched partitions. HONOR the table's default sort
+    // order: each data file's rows sorted by it, and the entries stamp
+    // sort_order_id — the claim external engines read. The order is
+    // the carry READ AT WRITE TIME: an OCC retry stamps this order's
+    // id even if a racing setSortOrder changed the default (order ids
+    // are never reused, so it stays resolvable in the winner's
+    // metadata). An empty input keeps its one empty file.
+    val added = writeDataFiles(spark, fs, root, df, carry,
+      carry.defaultSortFields, cluster = true, keepEmpty = true)
+    require(added.nonEmpty, "write produced no data files (empty input?)")
+    fs.mkdirs(metaDir)
+
+    // OCC assembly retry: a fast-append commutes with ANY concurrent
+    // commit that leaves the schema and partition spec intact — on a
+    // lost CAS the winner's manifests are re-read, ours is rebuilt at
+    // the next version (the expensive data files are reused verbatim;
+    // the lost attempt's manifest/list avros are unreferenced orphans).
+    // A concurrent schema/spec change rethrows loudly: the staged
+    // files were stamped with the OLD schema's field ids. The field-id
+    // marker rides the FIRST commit: every data file this writer emits
+    // carries parquet field ids, which is what makes renameColumn's
+    // id-based read resolution sound for the whole table.
+    commitSnapshot(spark, tablePath, fs, root, prev, carry, "append",
+      RacePolicy(if (version == 1) 0 else MaxCommitRetries, "append",
+        "the staged files carry the old field ids; re-run the append"),
+      fmtVersion = _.fold(1)(_.formatVersion),
+      props = txnProps(txn) ++
+        (if (version == 1) Map(FieldIdsProp -> "true") else Map.empty),
+      branch = branch) { at =>
+      SnapshotDelta(Seq(writeManifest(at, at.carry.defaultSpecId,
+        at.withRowIds(added).map(Added))))
+    }
+  }
+
+  // ---- the snapshot producer --------------------------------------------
+  //
+  // Every snapshot this writer commits is built the same way: the
+  // operation stages its files, then [[commitSnapshot]] runs the OCC
+  // attempts. Each attempt writes the operation's new manifests
+  // ([[writeManifest]], one [[manifestEntry]] per file) and a manifest
+  // list that carries the previous snapshot's manifests the operation
+  // keeps, then publishes the metadata JSON. A live file a rewrite
+  // keeps is carried as its manifest records it — no footer re-read.
+
+  /** one manifest entry to write: a file this commit adds (its
+    * sequence numbers inherit from the list row), or a live file it
+    * keeps (carried with its original sequence number) */
+  private sealed trait Entry { def file: IcebergScan.FileEntry }
+  private final case class Added(file: IcebergScan.FileEntry) extends Entry
+  private final case class Kept(file: IcebergScan.FileEntry) extends Entry
+
+  /** what one commit attempt contributes: its new manifests, and which
+    * of the previous snapshot's manifests the list carries (listed
+    * before the new ones unless `prevFirst` is false) */
+  private final case class SnapshotDelta(manifests: Seq[ManifestRef],
+      carryPrev: ManifestRef => Boolean = _ => true, prevFirst: Boolean = true)
+
+  /** a commit's OCC policy: how many times an attempt that lost the
+    * CAS race re-assembles at the next version (0: the loss surfaces),
+    * and how the loser names its operation and remedy when the winner
+    * invalidated its plan */
+  private final case class RacePolicy(retries: Int, op: String, rerun: String)
+  private val NoRetry = RacePolicy(0, "", "")
+  private val DeleteRace = RacePolicy(MaxCommitRetries, "delete", "re-run the delete")
+
+  /** one commit attempt: the snapshot after `prev` (None: the table's
+    * first), built with `carry`'s schema and specs */
+  private final case class Attempt(fs: FileSystem, root: Path,
+      prev: Option[Current], carry: SchemaCarry, fmtVersion: Int) {
+    val version: Int = prev.fold(1)(_.next)
+    private val rootPrefix = root.toString.stripSuffix("/") + "/"
+    /** a path as the manifests record it: table-relative when under root */
+    def relOf(p: String): String =
+      if (p.startsWith(rootPrefix)) p.substring(rootPrefix.length) else p
+    /** v3 row lineage: added data files get EXPLICIT sequential
+      * first_row_ids from the table's row-id counter, so their ids stay
+      * stable however later rewrites reorder manifests */
+    def withRowIds(files: Seq[IcebergScan.FileEntry]): Seq[IcebergScan.FileEntry] =
+      if (fmtVersion < 3) files
+      else files.zip(files.scanLeft(prev.fold(0L)(_.nextRowId))(_ + _.rows))
+        .map { case (f, id) => f.copy(firstRowId = Some(id)) }
+  }
+
+  /** Commit one snapshot. Runs [[beforeCommit]], then the OCC loop:
+    * each attempt calls `attempt` for the new manifests, writes the
+    * manifest list (the previous snapshot's manifests the delta
+    * carries — a branch commit chains from the branch head — plus the
+    * new ones) and the metadata JSON, whose conditional create is the
+    * commit. A loser re-reads the table and checks that the winner kept
+    * the schema and partition spec and, when `plannedLive` is set,
+    * every data file the plan references; then the next attempt builds
+    * on the winner's version. `fmtVersion` gives the format version an
+    * attempt commits, from the version it builds on. */
+  private def commitSnapshot(spark: SparkSession, tablePath: String,
+      fs: FileSystem, root: Path, planned: Option[Current], carry: SchemaCarry,
+      operation: String, race: RacePolicy, fmtVersion: Option[Current] => Int,
+      plannedLive: Set[String] = Set.empty,
+      props: Map[String, String] = Map.empty,
+      branch: Option[String] = scala.None)(
+      attempt: Attempt => SnapshotDelta): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    beforeCommit()
+    var prev = planned
+    var c = carry
+    LakeSupport.retryOnConflict(race.retries, { e =>
+      val now = current(spark, tablePath)
+      if (now.carry.schemaJson != c.schemaJson ||
+          now.carry.specFieldsJson != c.specFieldsJson)
+        throw new java.util.ConcurrentModificationException(
+          s"${race.op} lost the commit race at $tablePath and the winner " +
+            s"changed the schema or partition spec — ${race.rerun}", e)
+      if (plannedLive.nonEmpty &&
+          !plannedLive.subsetOf(IcebergScan.currentDataFiles(spark, tablePath)._2.toSet))
+        throw new java.util.ConcurrentModificationException(
+          s"${race.op} lost the commit race at $tablePath and the winner " +
+            s"removed/rewrote data files this ${race.op} references — " +
+            s"re-run the ${race.op} on the current table state", e)
+      prev = Some(now)
+      c = now.carry
+    }) {
+      val at = Attempt(fs, root, prev, c, fmtVersion(prev))
+      val delta = attempt(at)
+      val prevNode = prev.map(_.node)
+      val branchHead = for {
+        b <- branch; n <- prevNode; refs <- Option(n.get("refs")); ref <- Option(refs.get(b))
+      } yield ref.get("snapshot-id").asLong()
+      val carried = readPrevManifests(fs, conf, root, prevNode, branchHead)
+        .filter(delta.carryPrev)
+      val listRel = s"metadata/snap-${at.version}-${pathNonce()}.avro"
+      writeAvro(fs, new Path(root, listRel), manifestListSchema,
+        listRecords(fs, conf, root, c,
+          if (delta.prevFirst) carried ++ delta.manifests else delta.manifests ++ carried),
+        manifestListMeta(at.version, at.fmtVersion))
+      // v3: the snapshot assigns fresh row ids to exactly its added data rows
+      val assignedRows = if (at.fmtVersion < 3) 0L
+        else delta.manifests.filter(_.content == 0).map(_.addedRows).sum
+      writeMetadataJson(fs, root, prevNode, at.version, at.fmtVersion, c,
+        listRel, operation, props, branch, assignedRows)
+    }
+  }
+
+  /** Write one manifest of `at`'s snapshot under partition spec
+    * `specId`: a delete manifest when `entries` are delete files, else a
+    * data manifest. Its list row — length, added/existing file and row
+    * counts, min sequence number — is derived from `entries`.
+    * Format-version-3 snapshots stamp the v3 data_file fields unless
+    * `v2Schema` (equality-delete manifests keep the v2 entry shape at
+    * any format version). */
+  private def writeManifest(at: Attempt, specId: Int,
+      entries: Seq[Entry], v2Schema: Boolean = false): ManifestRef = {
+    val content = if (entries.forall(_.file.content == 0)) 0 else 1
+    val pfs = at.carry.partFieldsFor(specId)
+    val es = manifestSchemaFor(pfs.map(_.recordField),
+      v3 = at.fmtVersion >= 3 && !v2Schema)
+    val rel = s"metadata/manifest-${at.version}-${pathNonce()}.avro"
+    val length = writeAvro(at.fs, new Path(at.root, rel), es,
+      entries.map(manifestEntry(at, es, pfs, _)),
+      manifestMeta(at.carry.schemaJson, at.fmtVersion,
+        content = if (content == 0) "data" else "deletes",
+        specFieldsJson = at.carry.specFieldsJsonFor(specId), specId = specId))
+    val added = entries.collect { case Added(f) => f }
+    val kept = entries.collect { case Kept(f) => f }
+    val v = at.version.toLong
+    ManifestRef(rel, length, specId, content, seq = v,
+      minSeq = (kept.map(_.seq) :+ v).min, snapshotId = v,
+      addedFiles = added.size, existingFiles = kept.size, deletedFiles = 0,
+      addedRows = added.map(_.rows).sum, existingRows = kept.map(_.rows).sum,
+      deletedRows = 0L)
+  }
+
+  /** The one manifest_entry builder: a data_file record (content,
+    * path, format, partition, counts, column stats, sort order,
+    * equality ids, v3 row lineage and deletion-vector address) wrapped
+    * in its entry. ADDED entries leave the sequence numbers null (the
+    * spec's inheritance from the list row); KEPT entries carry their
+    * original one, so delete gating stays intact. */
+  private def manifestEntry(at: Attempt, es: Schema,
+      pfs: Seq[IcebergTransforms.PartField], entry: Entry): GenericData.Record = {
+    val e = entry.file
+    val dfs = es.getField("data_file").schema()
+    val f = new GenericData.Record(dfs)
+    f.put("content", e.content)
+    f.put("file_path", at.relOf(e.path))
+    f.put("file_format", e.fileFormat)
+    f.put("partition", partitionRecordFromEntry(dfs, pfs, e))
+    f.put("record_count", e.rows)
+    f.put("file_size_in_bytes", e.bytes)
+    f.put("block_size_in_bytes", DefaultBlockSize)
+    if (e.nullCounts.nonEmpty)
+      f.put("null_value_counts", kvArray(dfs, "null_value_counts",
+        e.nullCounts, (v: Long) => java.lang.Long.valueOf(v)))
+    if (e.lower.nonEmpty)
+      f.put("lower_bounds", kvArray(dfs, "lower_bounds",
+        e.lower, (v: Array[Byte]) => java.nio.ByteBuffer.wrap(v)))
+    if (e.upper.nonEmpty)
+      f.put("upper_bounds", kvArray(dfs, "upper_bounds",
+        e.upper, (v: Array[Byte]) => java.nio.ByteBuffer.wrap(v)))
+    if (e.eqIds.nonEmpty) f.put("equality_ids", e.eqIds.map(Int.box).asJava)
+    e.sortOrderId.foreach(id => f.put("sort_order_id", Integer.valueOf(id)))
+    if (dfs.getField("first_row_id") != null) {
+      e.firstRowId.foreach(id => f.put("first_row_id", Long.box(id)))
+      e.refDataFile.foreach { ref =>
+        f.put("referenced_data_file", at.relOf(ref))
+        f.put("content_offset", Long.box(e.contentOffset.get))
+        f.put("content_size_in_bytes", Long.box(e.contentSize.get))
+      }
+    }
+    val en = new GenericData.Record(es)
+    en.put("status", entry match { case _: Added => 1; case _: Kept => 0 })
+    en.put("snapshot_id", at.version.toLong)
+    if (entry.isInstanceOf[Kept]) {
+      en.put("sequence_number", e.seq)
+      en.put("file_sequence_number", e.seq)
+    }
+    en.put("data_file", f)
+    en
+  }
+
+  /** The table-layout data write every data-adding snapshot shares
+    * (append, rewrite, merge-on-read update and merge): stamps the
+    * table's field ids, derives the hidden-partitioning transform
+    * columns (partitionBy drops the DERIVED column from the payload
+    * while the SOURCE column stays — the spec's layout; identity
+    * fields keep the column-dropped hive layout), optionally clusters
+    * by the partition columns, sorts each file by `sortFields`, and
+    * writes hive-partitioned parquet under `data/`. Returns the new
+    * files as ADDED entries (see [[stagedFiles]]); a sorted write
+    * stamps the table's default sort order id. */
+  private def writeDataFiles(spark: SparkSession, fs: FileSystem, root: Path,
+      df: DataFrame, carry: SchemaCarry,
+      sortFields: Seq[(String, Boolean, Boolean)] = Seq.empty,
+      cluster: Boolean = false, keepEmpty: Boolean = false): Seq[IcebergScan.FileEntry] = {
+    val partCols = carry.partFields.map(_.specName) // void slots write no column
     val dataDir = new Path(root, "data")
-    val pre = listParquet(fs, dataDir).toSet
-    // the physical sort applied below follows the carry READ AT WRITE
-    // TIME — an OCC retry must stamp this order's id even if a racing
-    // setSortOrder changed the default (order ids are never reused, so
-    // the id stays resolvable in the winner's metadata)
-    val sortFields = carry.defaultSortFields
-    val stampSortId =
-      if (sortFields.isEmpty) scala.None else Some(carry.defaultSortOrderId)
+    val pre = listParquet(fs, dataDir).map(_._1).toSet
     withFieldIdWrites(spark) {
-      // transform fields derive their hive value; partitionBy drops the
-      // DERIVED column from the payload while the SOURCE column stays —
-      // exactly the spec's hidden-partitioning layout (identity fields
-      // keep the existing column-dropped hive layout)
-      val derived = partFields.filterNot(_.isIdentity).foldLeft(
-        stampFieldIds(df, schemaJson)) { (d, pf) =>
+      val derived = carry.partFields.filterNot(_.isIdentity).foldLeft(
+        stampFieldIds(df, carry.schemaJson)) { (d, pf) =>
         d.withColumn(pf.specName, IcebergTransforms.columnExpr(pf))
       }
-      // CLUSTER the append by the partition columns: without it every
-      // task writes every partition dir it sees — files = tasks x
-      // touched partitions (a day+bucket layout at 32 tasks x 240
-      // tuples = 7680 tiny files per append, measured at sf1). One
-      // hash shuffle puts each partition tuple in exactly one task →
-      // files = touched partitions. Skewed tuples trade write
-      // parallelism for file count — the standard partitioned-write
-      // contract (Spark's own rebalance does the same).
-      val clustered = WriteLayout.clusterByPartitions(spark, derived, partCols)
-      // HONOR the table's default sort order: each data file's rows
-      // sorted by it (prefixing the partition columns keeps the
-      // FileFormatWriter's required ordering satisfied, so it adds no
-      // sort of its own on top). The manifest entries then stamp
-      // sort_order_id — the claim external engines read.
+      val clustered =
+        if (cluster) WriteLayout.clusterByPartitions(spark, derived, partCols) else derived
+      // prefixing the partition columns keeps the FileFormatWriter's
+      // required ordering satisfied, so it adds no sort of its own
       val sorted =
         if (sortFields.isEmpty) clustered
         else clustered.sortWithinPartitions(
@@ -687,123 +893,32 @@ object IcebergWrite {
       (if (partCols.nonEmpty) writer.partitionBy(partCols: _*) else writer)
         .parquet(dataDir.toString)
     }
-    val added = listParquet(fs, dataDir).filterNot(pre.contains)
-    require(added.nonEmpty, "write produced no data files (empty input?)")
-    fs.mkdirs(metaDir)
+    val sortId = if (sortFields.isEmpty) scala.None else Some(carry.defaultSortOrderId)
+    stagedFiles(fs, root, listParquet(fs, dataDir).filterNot(f => pre(f._1)),
+      content = 0, carry, keepEmpty).map(_.copy(sortOrderId = sortId))
+  }
 
-    // record counts / sizes from the parquet footers — no data
-    // re-read; reusable verbatim across OCC retries (the data files
-    // never move, only the metadata around them is re-assembled)
-    val filesWithRows = parMap(added) { rel =>
-      val dataPath = new Path(root, rel)
-      val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(dataPath, conf))
-      val rows = try footer.getRecordCount finally footer.close()
-      (rel, rows, fs.getFileStatus(dataPath).getLen)
-    }
-
-    // one manifest for this commit's files (relative paths);
-    // partitioned tables get typed partition records parsed from the
-    // hive path. Version-DEPENDENT (snapshot ids, seq, file names) —
-    // assembled per OCC attempt.
-    def assemble(version: Int, carry: SchemaCarry, fmtVersion: Int): Unit = {
-      // nonce'd names: two writers racing to the same version must not
-      // collide on the avro paths (resolution is pointer-based through
-      // the metadata JSON; only the v$N.metadata.json CAS arbitrates)
-      val manifestRel = s"metadata/manifest-$version-${pathNonce()}.avro"
-      val recordFields = carry.partFields.map(_.recordField)
-      val entrySchema = manifestSchemaFor(recordFields, v3 = fmtVersion >= 3)
-      val dataFileSchema = entrySchema.getField("data_file").schema()
-      // v3 row lineage: added files get EXPLICIT first_row_id stamped
-      // (sequential from the table's row-id counter) so their ids stay
-      // stable however later rewrites reorder manifests
-      val rowIdBase: Seq[Option[Long]] =
-        if (fmtVersion < 3) filesWithRows.map(_ => scala.None)
-        else filesWithRows.scanLeft(nextRowIdOf(fs, metaDir, version - 1)) {
-          case (acc, (_, rows, _)) => acc + rows
-        }.init.map(Some(_))
-      writeAvro(fs, new Path(root, manifestRel), entrySchema,
-        parMap(filesWithRows.zip(rowIdBase)) { case ((rel, rows, len), rowId) => // footer stats in parallel
-          val file = new GenericData.Record(dataFileSchema)
-          file.put("content", 0) // DATA
-          file.put("file_path", rel)
-          file.put("file_format", "PARQUET")
-          file.put("partition",
-            partitionRecordOf(dataFileSchema, recordFields, rel))
-          file.put("record_count", rows)
-          file.put("file_size_in_bytes", len)
-          file.put("block_size_in_bytes", DefaultBlockSize)
-          stampSortId.foreach(id => file.put("sort_order_id", Integer.valueOf(id)))
-          rowId.foreach(id => file.put("first_row_id", Long.box(id)))
-          attachStats(file, dataFileSchema, conf, new Path(root, rel), carry.schemaJson)
-          val entry = new GenericData.Record(entrySchema)
-          entry.put("status", 1) // ADDED
-          entry.put("snapshot_id", version.toLong)
-          // sequence_number / file_sequence_number stay null on ADDED
-          // entries: the spec's inheritance rule fills them from the
-          // manifest-list row at read time
-          entry.put("data_file", file)
-          entry
-        }, manifestMeta(carry.schemaJson, fmtVersion, content = "data",
-          specFieldsJson = carry.specFieldsJson, specId = carry.defaultSpecId))
-      val manifestLen = fs.getFileStatus(new Path(root, manifestRel)).getLen
-
-      // snapshot's manifest list = all prior manifests (their length /
-      // spec-id / seq / counts carried forward verbatim) + this one.
-      // A BRANCH commit chains from the branch head (falling back to the
-      // branching point = the current snapshot on first branch commit)
-      val branchHead: Option[Long] = branch.flatMap { b =>
-        if (version == 1) scala.None
-        else {
-          val prevNode = currentAt(fs, root, version - 1).node
-          Option(prevNode.get("refs")).flatMap(r => Option(r.get(b)))
-            .map(_.get("snapshot-id").asLong())
-        }
+  /** Freshly written parquet files (table-relative path, listed length)
+    * as ADDED entries: the row count from one footer read — which also
+    * yields the column stats, for data files only — and the partition
+    * values from the hive path (equality deletes are global: none).
+    * Zero-row files are deleted and dropped unless `keepEmpty`. */
+  private def stagedFiles(fs: FileSystem, root: Path, files: Seq[(String, Long)],
+      content: Int, carry: SchemaCarry,
+      keepEmpty: Boolean = false): Seq[IcebergScan.FileEntry] = {
+    val recordFields = if (content == 2) Nil else carry.partFields.map(_.recordField)
+    val (idByName, sparkSch) = statsSchema(carry.schemaJson)
+    parMap(files) { case (rel, bytes) =>
+      val (rows, (lo, hi, nulls)) = readFooter(fs.getConf, new Path(root, rel)) { footer =>
+        if (content == 0) IcebergStats.footerBounds(footer, sparkSch, idByName)
+        else (Map.empty[Int, Array[Byte]], Map.empty[Int, Array[Byte]], Map.empty[Int, Long])
       }
-      val prevManifests = readPrevManifests(fs, conf, root, version, branchHead)
-      val listRel = s"metadata/snap-$version-${pathNonce()}.avro"
-      writeAvro(fs, new Path(root, listRel), manifestListSchema,
-        (prevManifests :+ ManifestRef(manifestRel, manifestLen, carry.defaultSpecId,
-          content = 0, seq = version.toLong, minSeq = version.toLong,
-          snapshotId = version.toLong, addedFiles = filesWithRows.size,
-          existingFiles = 0, deletedFiles = 0,
-          addedRows = filesWithRows.map(_._2).sum, existingRows = 0L,
-          deletedRows = 0L)) pipe (rs => listRecords(fs, conf, root, carry, rs)),
-        manifestListMeta(version, fmtVersion))
-
-      // the field-id marker rides the FIRST commit: every data file this
-      // writer emits carries parquet field ids, which is what makes
-      // renameColumn's id-based read resolution sound for the whole table
-      writeMetadataJson(fs, metaDir, root, version, fmtVersion,
-        carry, listRel, operation = "append", propsOverride = txnProps(txn) ++
-          (if (version == 1) Map(FieldIdsProp -> "true") else Map.empty),
-        branchRef = branch,
-        assignedRows = if (fmtVersion < 3) 0L else filesWithRows.map(_._2).sum)
+      IcebergScan.FileEntry(rel, seq = 0L, content, eqIds = Nil, rows, lo, hi, nulls,
+        partition = stagedPartition(recordFields, rel), bytes = bytes)
+    }.filter { f =>
+      if (f.rows == 0L && !keepEmpty) fs.delete(new Path(root, f.path), false)
+      f.rows > 0L || keepEmpty
     }
-
-    // OCC assembly retry: a fast-append commutes with ANY concurrent
-    // commit that leaves the schema and partition spec intact — on a
-    // lost CAS the winner's manifests are re-read, ours is rebuilt at
-    // the next version (the expensive data files are reused verbatim;
-    // the lost attempt's manifest/list avros are unreferenced orphans).
-    // A concurrent schema/spec change rethrows loudly: the staged
-    // files were stamped with the OLD schema's field ids.
-    beforeCommit()
-    var v = version
-    var c = carry
-    var fv = fmtVersion
-    LakeSupport.retryOnConflict(if (version == 1) 0 else MaxCommitRetries, { e =>
-      val now = current(spark, tablePath)
-      if (now.carry.schemaJson != c.schemaJson ||
-          now.carry.specFieldsJson != c.specFieldsJson)
-        throw new java.util.ConcurrentModificationException(
-          s"append lost the commit race at $tablePath and the winner " +
-            "changed the schema or partition spec — the staged files " +
-            "carry the old field ids; re-run the append", e)
-      c = now.carry
-      fv = now.formatVersion
-      v = now.next
-    })(assemble(v, c, fv))
   }
 
   /** test seam: runs right before a commit's first CAS attempt — the
@@ -811,7 +926,10 @@ object IcebergWrite {
     * OCC retry covers */
   private[graft] var beforeCommit: () => Unit = () => ()
 
-  /** short unique suffix for manifest/list file names (see assemble) */
+  /** short unique suffix for staged file names: two writers racing to
+    * the same version must not collide on their paths (resolution is
+    * pointer-based through the metadata JSON; only the
+    * `v{N}.metadata.json` conditional create arbitrates) */
   private[sources] def pathNonce(): String =
     java.util.UUID.randomUUID().toString.take(8)
 
@@ -1199,8 +1317,8 @@ object IcebergWrite {
       if (sortFields.isEmpty) (df, t) => df.repartition(t)
       else (df, t) => df.repartitionByRange(t, sortOrderExprs(sortFields): _*)
     rewriteSnapshot(spark, tablePath,
-      pick = { sized =>
-        val small = sized.filter(_._2 < smallFileBytes)
+      pick = { live =>
+        val small = live.filter(_.bytes < smallFileBytes)
         if (small.size < 2) Seq.empty else small // fewer than 2: nothing to gain
       },
       targetFiles, shape, operation = "replace", honorSortOrder = true)
@@ -1254,14 +1372,16 @@ object IcebergWrite {
   }
 
   /** Shared OVERWRITE/REPLACE snapshot core: `pick` selects the victim
-    * data files from the sized live entries (empty ⇒ no-op, no commit),
+    * data files from the live entries (empty ⇒ no-op, no commit),
     * `shape` maps the victims-through-the-reader view (all applicable
-    * deletes applied) to the replacement rows. The commit's single data
+    * deletes applied) to the replacement rows. The commit's data
     * manifest holds ADDED entries for the outputs (sequence = this
-    * commit) + EXISTING entries for untouched files with their original
-    * sequence numbers; delete manifests carry forward verbatim. */
+    * commit) + EXISTING entries for untouched files, carried as their
+    * manifests record them (original sequence numbers, sizes and
+    * stats — no filesystem read); delete manifests carry forward
+    * verbatim. A lost race is not retried (see [[retryOnConflict]]). */
   private def rewriteSnapshot(spark: SparkSession, tablePath: String,
-      pick: Seq[(IcebergScan.FileEntry, Long)] => Seq[(IcebergScan.FileEntry, Long)],
+      pick: Seq[IcebergScan.FileEntry] => Seq[IcebergScan.FileEntry],
       targetFiles: Int,
       shape: (DataFrame, Int) => DataFrame, operation: String,
       txn: Option[(String, Long)] = None,
@@ -1273,102 +1393,28 @@ object IcebergWrite {
       honorSortOrder: Boolean = false): (Int, Int) = {
     require(targetFiles >= 1, s"targetFiles must be >= 1, got $targetFiles")
     val cur = current(spark, tablePath)
-    val (fs, root, metaDir, version) = (cur.fs, cur.root, cur.metaDir, cur.next)
-    requireVersionFree(fs, metaDir, version)
+    requireVersionFree(cur.fs, cur.metaDir, cur.next)
 
     val (_, entries) = IcebergScan.currentEntries(spark, tablePath)
     val dataEntries = entries.filter(_.content == 0)
-    val sized = dataEntries.map(e => (e, fs.getFileStatus(new Path(e.path)).getLen))
-    val small = pick(sized)
-    if (small.isEmpty) return (0, 0)
-    val victimPaths = small.map(_._1.path).toSet
-    val kept = sized.filterNot(s => victimPaths.contains(s._1.path))
+    val victims = pick(dataEntries)
+    if (victims.isEmpty) return (0, 0)
+    val victimPaths = victims.map(_.path).toSet
+    val kept = dataEntries.filterNot(e => victimPaths.contains(e.path))
 
     val carry = cur.carry
-    val partCols = carry.partCols
-    val tableSchema = IcebergScan.sparkSchema(mapper.readTree(carry.schemaJson))
-
     // rewrite through the READER so every applicable delete lands in
     // the output — compacting raw parquet would resurrect deleted rows
-    val rewrite = IcebergScan.readFiltered(spark, tablePath, scala.None,
-      Some(small.map(_._1.path).toSet))
-    val dataDir = new Path(root, "data")
-    val pre = listParquet(fs, dataDir).toSet
-    val shaped = shape(rewrite, targetFiles)
-    enforceRequired(shaped, tableSchema)
-    // partitioned tables keep their identity layout: rewritten rows
-    // land back in their (possibly NEW, for an UPDATE that moves a
-    // partition value) hive directories, so partition pruning and
-    // path-derived partition records keep working
-    val sortFields =
-      if (honorSortOrder) carry.defaultSortFields else Seq.empty
-    val stampSortId =
-      if (sortFields.isEmpty) scala.None else Some(carry.defaultSortOrderId)
-    withFieldIdWrites(spark) {
-      // transform fields re-derive their hive value from the (possibly
-      // updated) source columns — a partition-migrating UPDATE on a
-      // hidden-partitioned table lands its rows in their new derived dirs
-      val derived = carry.partFields.filterNot(_.isIdentity).foldLeft(
-        stampFieldIds(shaped, carry.schemaJson)) { (d, pf) =>
-        d.withColumn(pf.specName, IcebergTransforms.columnExpr(pf))
-      }
-      val sorted =
-        if (sortFields.isEmpty) derived
-        else derived.sortWithinPartitions(
-          (partCols.map(org.apache.spark.sql.functions.col) ++
-            sortOrderExprs(sortFields)): _*)
-      val writer0 = sorted.write.mode("append")
-      (if (partCols.nonEmpty) writer0.partitionBy(partCols: _*) else writer0)
-        .parquet(dataDir.toString)
-    }
-    val conf = spark.sparkContext.hadoopConfiguration
-    val added0 = listParquet(fs, dataDir).filterNot(pre.contains)
-    // drop empty outputs (every row of the small set may have died)
-    val added = added0.filter { rel =>
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(root, rel), conf))
-      val n = try r.getRecordCount finally r.close()
-      if (n == 0L) fs.delete(new Path(root, rel), false)
-      n > 0L
-    }
+    val shaped = shape(IcebergScan.readFiltered(spark, tablePath, scala.None,
+      Some(victimPaths)), targetFiles)
+    enforceRequired(shaped, IcebergScan.sparkSchema(mapper.readTree(carry.schemaJson)))
+    // partitioned tables keep their layout: rewritten rows land back in
+    // their (possibly NEW, for an UPDATE that moves a partition value)
+    // hive directories; transform fields re-derive from the updated
+    // source columns. Empty outputs drop (every victim row may have died)
+    val added = writeDataFiles(spark, cur.fs, cur.root, shaped, carry,
+      sortFields = if (honorSortOrder) carry.defaultSortFields else Seq.empty)
 
-    val fmtVersion = cur.formatVersion
-    val rootPrefix = root.toString.stripSuffix("/") + "/"
-    def relOf(abs: String): String =
-      if (abs.startsWith(rootPrefix)) abs.substring(rootPrefix.length) else abs
-
-    // ONE rewritten data manifest: ADDED outputs (seq inherits the
-    // list row = this commit) + EXISTING kept files with explicit
-    // original sequence numbers
-    beforeCommit()
-    val manifestRel = s"metadata/manifest-$version-${pathNonce()}.avro"
-    val recordFields = carry.partFields.map(_.recordField)
-    val v3 = fmtVersion >= 3
-    val entrySchema = manifestSchemaFor(recordFields, v3 = v3)
-    val dataFileSchema = entrySchema.getField("data_file").schema()
-    def fileRecord(relPath: String, rows: Long, len: Long,
-        part: GenericData.Record,
-        firstRowId: Option[Long]): GenericData.Record = {
-      val f = new GenericData.Record(dataFileSchema)
-      f.put("content", 0)
-      f.put("file_path", relPath)
-      f.put("file_format", "PARQUET")
-      f.put("partition", part)
-      f.put("record_count", rows)
-      f.put("file_size_in_bytes", len)
-      f.put("block_size_in_bytes", DefaultBlockSize)
-      stampSortId.foreach(id => f.put("sort_order_id", Integer.valueOf(id)))
-      firstRowId.foreach(id => f.put("first_row_id", Long.box(id)))
-      attachStats(f, dataFileSchema, conf, new Path(root, relPath), carry.schemaJson)
-      f
-    }
-    val addedWithRows = parMap(added) { rel =>
-      val p = new Path(root, rel)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
-      val rows = try r.getRecordCount finally r.close()
-      (rel, rows, fs.getFileStatus(p).getLen)
-    }
     // v3 row lineage: the rewrite OUTPUTS are new files and receive
     // fresh sequential ids from the table counter (kept files carry
     // their original first_row_id verbatim — stable across rewrites).
@@ -1376,113 +1422,37 @@ object IcebergWrite {
     // thread per-ROW id preservation through a rewrite (spec
     // row-lineage carry-over for replaced rows); ids are valid and
     // never reused, but compacted rows get new ones.
-    val addedRowIds: Seq[Option[Long]] =
-      if (!v3) addedWithRows.map(_ => scala.None)
-      else addedWithRows.scanLeft(cur.nextRowId) {
-        case (acc, (_, rows, _)) => acc + rows
-      }.init.map(Some(_))
-    val addedRecords = parMap(addedWithRows.zip(addedRowIds)) {
-      case ((rel, rows, len), rowId) =>
-        val e = new GenericData.Record(entrySchema)
-        e.put("status", 1) // ADDED
-        e.put("snapshot_id", version.toLong)
-        e.put("data_file", fileRecord(rel, rows, len,
-          partitionRecordOf(dataFileSchema, recordFields, rel), rowId))
-        e
-    }
-    // kept files group by their ORIGINAL spec-id: one manifest per
+    //
+    // Kept files group by their ORIGINAL spec-id: one manifest per
     // spec, each with its own partition-spec-id header and a partition
     // record typed by THAT spec. Folding a pre-evolution file into a
     // manifest stamped with the current spec would null-fill the new
     // transform fields — and a null partition value means "source is
     // null" to external partition evaluators, which would silently
     // prune the file (dropping its rows for any interop reader).
-    val keptBySpec = kept.groupBy(_._1.specId)
-    def keptEntryRecord(es: Schema, dfs: Schema,
-        pfs: Seq[IcebergTransforms.PartField],
-        entry: IcebergScan.FileEntry, len: Long): GenericData.Record = {
-      val f = new GenericData.Record(dfs)
-      f.put("content", 0)
-      f.put("file_path", relOf(entry.path))
-      f.put("file_format", "PARQUET")
-      f.put("partition", partitionRecordFromEntry(dfs, pfs, entry))
-      f.put("record_count", entry.rows)
-      f.put("file_size_in_bytes", len)
-      f.put("block_size_in_bytes", DefaultBlockSize)
-      // the kept file's rows don't move — its ordering claim carries
-      // forward verbatim
-      entry.sortOrderId.foreach(id => f.put("sort_order_id", Integer.valueOf(id)))
-      // v3: the kept file's explicitly-assigned row-id range is part of
-      // its identity — carried verbatim so its rows' ids never shift
-      if (dfs.getField("first_row_id") != null)
-        entry.firstRowId.foreach(id => f.put("first_row_id", Long.box(id)))
-      attachStats(f, dfs, conf, new Path(root, relOf(entry.path)), carry.schemaJson)
-      val e = new GenericData.Record(es)
-      e.put("status", 0) // EXISTING
-      e.put("snapshot_id", version.toLong)
-      e.put("sequence_number", entry.seq) // original — delete gating intact
-      e.put("file_sequence_number", entry.seq)
-      e.put("data_file", f)
-      e
-    }
-    val defaultKept = keptBySpec.getOrElse(carry.defaultSpecId, Seq.empty)
-    val keptRecords = defaultKept.map { case (entry, len) =>
-      keptEntryRecord(entrySchema, dataFileSchema, carry.partFields, entry, len)
-    }
-    writeAvro(fs, new Path(root, manifestRel), entrySchema,
-      addedRecords ++ keptRecords,
-      manifestMeta(carry.schemaJson, fmtVersion, content = "data",
-        specFieldsJson = carry.specFieldsJson, specId = carry.defaultSpecId))
-    val manifestLen = fs.getFileStatus(new Path(root, manifestRel)).getLen
-    // one EXISTING-only manifest per historical spec still holding files
-    val historicalManifests =
-      (keptBySpec - carry.defaultSpecId).toSeq.sortBy(_._1).map {
-        case (sid, entries) =>
-          val specPartFields = carry.partFieldsFor(sid)
-          val es = manifestSchemaFor(specPartFields.map(_.recordField), v3 = v3)
-          val dfs = es.getField("data_file").schema()
-          val rel = s"metadata/manifest-$version-spec$sid-${pathNonce()}.avro"
-          writeAvro(fs, new Path(root, rel), es,
-            entries.map { case (entry, len) =>
-              keptEntryRecord(es, dfs, specPartFields, entry, len) },
-            manifestMeta(carry.schemaJson, fmtVersion, content = "data",
-              specFieldsJson = carry.specFieldsJsonFor(sid), specId = sid))
-          ManifestRef(rel, fs.getFileStatus(new Path(root, rel)).getLen,
-            sid, content = 0, seq = version.toLong,
-            minSeq = entries.map(_._1.seq).min, snapshotId = version.toLong,
-            addedFiles = 0, existingFiles = entries.size, deletedFiles = 0,
-            addedRows = 0L, existingRows = entries.map(_._1.rows).sum,
-            deletedRows = 0L)
+    //
+    // The list REPLACES the previous data manifests and carries the
+    // delete manifests forward. FOLDING: a delete manifest older than
+    // every surviving data file can never fire again — position
+    // deletes need delete.seq >= data.seq and equality deletes strictly
+    // > — so it drops here instead of riding every future snapshot; a
+    // FULL rewrite (kept empty) folds them all (this is what makes
+    // compact() fold merge-on-read deltas away).
+    val keptBySpec = kept.groupBy(_.specId)
+    val minKeptDataSeq = if (kept.isEmpty) Long.MaxValue else kept.map(_.seq).min
+    commitSnapshot(spark, tablePath, cur.fs, cur.root, Some(cur), carry,
+      operation, NoRetry, fmtVersion = _ => cur.formatVersion,
+      props = txnProps(txn)) { at =>
+      val default = writeManifest(at, carry.defaultSpecId,
+        at.withRowIds(added).map(Added) ++
+          keptBySpec.getOrElse(carry.defaultSpecId, Seq.empty).map(Kept))
+      val historical = (keptBySpec - carry.defaultSpecId).toSeq.sortBy(_._1).map {
+        case (sid, es) => writeManifest(at, sid, es.map(Kept))
       }
-
-    // manifest list: the rewritten data manifest + delete manifests
-    // carried forward (previous DATA manifests are replaced). FOLDING:
-    // a delete manifest older than every surviving data file can never
-    // fire again — position deletes need delete.seq >= data.seq and
-    // equality deletes strictly > — so it drops here instead of riding
-    // every future snapshot; a FULL rewrite (kept empty) folds them all
-    // (this is what makes compact() fold merge-on-read deltas away).
-    val minKeptDataSeq =
-      if (kept.isEmpty) Long.MaxValue else kept.map(_._1.seq).min
-    val prevDeleteManifests = readPrevManifests(fs, conf, root, version)
-      .filter(m => m.content == 1 && m.seq >= minKeptDataSeq)
-    val minSeq = (kept.map(_._1.seq) :+ version.toLong).min
-    val listRel = s"metadata/snap-$version-${pathNonce()}.avro"
-    writeAvro(fs, new Path(root, listRel), manifestListSchema,
-      (ManifestRef(manifestRel, manifestLen, carry.defaultSpecId,
-        content = 0, seq = version.toLong, minSeq = minSeq,
-        snapshotId = version.toLong,
-        addedFiles = addedRecords.size, existingFiles = defaultKept.size,
-        deletedFiles = 0,
-        addedRows = addedWithRows.map(_._2).sum,
-        existingRows = defaultKept.map(_._1.rows).sum, deletedRows = 0L) +:
-        (historicalManifests ++ prevDeleteManifests)) pipe (rs => listRecords(fs, conf, root, carry, rs)),
-      manifestListMeta(version, fmtVersion))
-
-    writeMetadataJson(fs, metaDir, root, version, fmtVersion,
-      carry, listRel, operation = operation, propsOverride = txnProps(txn),
-      assignedRows = if (!v3) 0L else addedWithRows.map(_._2).sum)
-    (small.size, added.size)
+      SnapshotDelta(default +: historical,
+        carryPrev = m => m.content == 1 && m.seq >= minKeptDataSeq, prevFirst = false)
+    }
+    (victims.size, added.size)
   }
 
   /** Row-level UPDATE, copy-on-write (the spec's `overwrite` snapshot):
@@ -1508,7 +1478,6 @@ object IcebergWrite {
       assignments: Seq[(String, org.apache.spark.sql.Column)]): Long = {
     import org.apache.spark.sql.functions._
     require(assignments.nonEmpty, "updateWhere needs at least one SET assignment")
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val (schema, _) = IcebergScan.currentDataFiles(spark, tablePath)
     val setByName = assignments.toMap
     require(setByName.size == assignments.size, "duplicate SET column")
@@ -1543,8 +1512,8 @@ object IcebergWrite {
         .getOrElse(col(n))
     }.toSeq
     val (picked, written) = rewriteSnapshot(spark, tablePath,
-      pick = { sized =>
-        val hits = sized.filter(s => victims.contains(IcebergScan.normalizePath(s._1.path)))
+      pick = { live =>
+        val hits = live.filter(e => victims.contains(IcebergScan.normalizePath(e.path)))
         // a victim the live entries can't name means the path namespaces
         // diverged (the silent-no-op bug class) — corrupt loudly, never quietly
         require(hits.size == victims.size,
@@ -1630,8 +1599,8 @@ object IcebergWrite {
 
       val cols = schema.fieldNames.map(col).toSeq
       val (picked, written) = rewriteSnapshot(spark, tablePath,
-        pick = { sized =>
-          val hits = sized.filter(s => victims.contains(IcebergScan.normalizePath(s._1.path)))
+        pick = { live =>
+          val hits = live.filter(e => victims.contains(IcebergScan.normalizePath(e.path)))
           require(hits.size == victims.size,
             s"victim files ${victims.size} != matched live entries ${hits.size} — " +
               "path namespace mismatch between the lineage view and the manifest")
@@ -1690,9 +1659,8 @@ object IcebergWrite {
       tableSchema: StructType): Long = {
     import org.apache.spark.sql.functions._
     val cur = current(spark, tablePath)
-    val (fs, root, metaDir, version) = (cur.fs, cur.root, cur.metaDir, cur.next)
+    val (fs, root, version) = (cur.fs, cur.root, cur.next)
     val carry = cur.carry
-    val partCols = carry.partCols
     val (_, plannedLive) = IcebergScan.currentDataFiles(spark, tablePath)
 
     // ONE persisted matched-row set feeds both halves of the commit —
@@ -1712,12 +1680,11 @@ object IcebergWrite {
             matched.select(col("__raw_file"), col("__pos")), existingDv,
             version), existingDv))
         }
-      val delWithRows = if (dvStaged.isDefined) Seq.empty
+      val posDeletes = if (dvStaged.isDefined) Seq.empty
         else stagePositionDeletes(spark, fs, root, tablePath,
-          matched.select(col("__raw_file"), col("__pos")), version,
-          carry.partFields.map(_.recordField))
+          matched.select(col("__raw_file"), col("__pos")), version, carry)
       val nUpdated = dvStaged.map(_._1.map(_.newRows).sum)
-        .getOrElse(delWithRows.map(_._2).sum)
+        .getOrElse(posDeletes.map(_.rows).sum)
       if (nUpdated == 0L) return 0L
 
       val fire = coalesce(cond, lit(false)) // all matched, but keep UPDATE semantics
@@ -1732,24 +1699,11 @@ object IcebergWrite {
         s"UPDATE changes the schema to ${shaped.schema.simpleString} — " +
           s"assignments must preserve the table's ${tableSchema.simpleString}")
       enforceRequired(shaped, tableSchema)
-      val dataDir = new Path(root, "data")
-      val pre = listParquet(fs, dataDir).toSet
-      withFieldIdWrites(spark) {
-        val derived = carry.partFields.filterNot(_.isIdentity).foldLeft(
-          stampFieldIds(shaped, carry.schemaJson)) { (d, pf) =>
-          d.withColumn(pf.specName, IcebergTransforms.columnExpr(pf))
-        }
-        // cluster by partition columns: files = touched partitions,
-        // not tasks x partitions (see the append path)
-        val clustered = WriteLayout.clusterByPartitions(spark, derived, partCols)
-        val w = clustered.write.mode("append")
-        (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w)
-          .parquet(dataDir.toString)
-      }
-      val dataWithRows = sizeParquet(fs, root,
-        listParquet(fs, dataDir).filterNot(pre.contains))
-      require(dataWithRows.map(_._2).sum == nUpdated,
-        s"MOR update wrote ${dataWithRows.map(_._2).sum} new rows for " +
+      // cluster by partition columns: files = touched partitions,
+      // not tasks x partitions (see the append path)
+      val added = writeDataFiles(spark, fs, root, shaped, carry, cluster = true)
+      require(added.map(_.rows).sum == nUpdated,
+        s"MOR update wrote ${added.map(_.rows).sum} new rows for " +
           s"$nUpdated deleted positions — aborting before commit")
 
       dvStaged match {
@@ -1757,12 +1711,11 @@ object IcebergWrite {
           commitDvFold(spark, tablePath, cur,
             plannedLive.toSet, staged, seen,
             operation = "overwrite", dropParquetPos = false,
-            newData = dataWithRows)
+            newData = added)
         case scala.None =>
           commitMorSnapshot(spark, tablePath, cur,
             plannedLive.toSet, "overwrite", txn = scala.None,
-            tableSchema, dataWithRows, posDeletes = delWithRows,
-            eqDeletes = scala.None)
+            added, posDeletes = posDeletes, eqDeletes = Seq.empty)
       }
       nUpdated
     } finally matched.unpersist()
@@ -1787,9 +1740,8 @@ object IcebergWrite {
       tableSchema: StructType, srcRows: Long): (Long, Long) = {
     import org.apache.spark.sql.functions._
     val cur = current(spark, tablePath)
-    val (fs, root, metaDir, version) = (cur.fs, cur.root, cur.metaDir, cur.next)
+    val (fs, root, version) = (cur.fs, cur.root, cur.next)
     val carry = cur.carry
-    val partCols = carry.partCols
 
     // counts against the planned snapshot (one pass over the pruned
     // lineage view): updated = live rows a source key hits
@@ -1803,29 +1755,16 @@ object IcebergWrite {
 
     // the equality-delete key set: distinct non-NULL-key source tuples
     val nonNull = keys.map(col(_).isNotNull).reduce(_ && _)
-    val (delWithRows, eqIds) = stageEqualityDeletes(spark, fs, root,
+    val eqDeletes = stageEqualityDeletes(spark, fs, root,
       src.filter(nonNull).select(keys.map(col): _*), version, carry, tablePath)
 
     enforceRequired(src, tableSchema)
-    val dataDir = new Path(root, "data")
-    val pre = listParquet(fs, dataDir).toSet
-    val cols = tableSchema.fieldNames.map(col).toSeq
-    withFieldIdWrites(spark) {
-      val derived = carry.partFields.filterNot(_.isIdentity).foldLeft(
-        stampFieldIds(src.select(cols: _*), carry.schemaJson)) { (d, pf) =>
-        d.withColumn(pf.specName, IcebergTransforms.columnExpr(pf))
-      }
-      // cluster by partition columns: files = touched partitions,
-      // not tasks x partitions (see the append path)
-      val clustered = WriteLayout.clusterByPartitions(spark, derived, partCols)
-      val w = clustered.write.mode("append")
-      (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w)
-        .parquet(dataDir.toString)
-    }
-    val dataWithRows = sizeParquet(fs, root,
-      listParquet(fs, dataDir).filterNot(pre.contains))
-    require(dataWithRows.map(_._2).sum == srcRows,
-      s"MOR merge wrote ${dataWithRows.map(_._2).sum} rows for a " +
+    // cluster by partition columns: files = touched partitions,
+    // not tasks x partitions (see the append path)
+    val added = writeDataFiles(spark, fs, root,
+      src.select(tableSchema.fieldNames.map(col).toSeq: _*), carry, cluster = true)
+    require(added.map(_.rows).sum == srcRows,
+      s"MOR merge wrote ${added.map(_.rows).sum} rows for a " +
         s"$srcRows-row source — aborting before commit")
 
     // equality deletes reference KEYS, not files: commute with any
@@ -1833,160 +1772,40 @@ object IcebergWrite {
     // deleteEqual) — the serial order is winner-first by construction
     commitMorSnapshot(spark, tablePath, cur,
       plannedLive = Set.empty, "overwrite", txn,
-      tableSchema, dataWithRows, posDeletes = Seq.empty,
-      eqDeletes = if (delWithRows.isEmpty) scala.None
-                  else Some((delWithRows, eqIds)),
+      added, posDeletes = Seq.empty, eqDeletes = eqDeletes,
       // v3 keeps equality deletes; only the metadata/manifest format
       // version and row-id accounting change
       fmtVersion = math.max(2, cur.formatVersion))
     (updated, inserted)
   }
 
-  /** parquet footer row counts + file sizes for a set of staged rels */
-  private def sizeParquet(fs: FileSystem, root: Path,
-      rels: Seq[String]): Seq[(String, Long, Long)] = {
-    val conf = fs.getConf
-    parMap(rels) { rel =>
-      val p = new Path(root, rel)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
-      val rows = try r.getRecordCount finally r.close()
-      (rel, rows, fs.getFileStatus(p).getLen)
-    }.filter { case (rel, rows, _) =>
-      if (rows == 0L) fs.delete(new Path(root, rel), false)
-      rows > 0L
-    }
-  }
-
   /** ONE snapshot carrying a data manifest (ADDED files, seq = this
     * commit) plus up to one position-delete and one equality-delete
     * manifest at the same sequence number — the merge-on-read commit
-    * shape. OCC semantics delegate to [[commitDeleteWithRetry]]:
-    * assembly (manifests + list + metadata JSON) retries at successive
-    * versions while the winner commutes; the staged parquet is reused
-    * verbatim. */
+    * shape. Delete-commit OCC: assembly retries at successive versions
+    * while the winner commutes; the staged parquet is reused verbatim. */
   private def commitMorSnapshot(spark: SparkSession, tablePath: String,
       cur: Current, plannedLive: Set[String], operation: String,
-      txn: Option[(String, Long)], tableSchema: StructType,
-      dataWithRows: Seq[(String, Long, Long)],
-      posDeletes: Seq[(String, Long, Long)],
-      eqDeletes: Option[(Seq[(String, Long, Long)], Seq[Int])],
+      txn: Option[(String, Long)], data: Seq[IcebergScan.FileEntry],
+      posDeletes: Seq[IcebergScan.FileEntry],
+      eqDeletes: Seq[IcebergScan.FileEntry],
       fmtVersion: Int = 2): Unit = {
-    require(dataWithRows.nonEmpty, "MOR commit with no data files")
+    require(data.nonEmpty, "MOR commit with no data files")
     require(fmtVersion < 3 || posDeletes.isEmpty,
       "format-version 3 forbids parquet position-delete files — the MOR " +
         "caller must stage deletion vectors (commitDvFold) instead")
-    val (fs, root, metaDir) = (cur.fs, cur.root, cur.metaDir)
-    val conf = spark.sparkContext.hadoopConfiguration
-    def assemble(v: Int, c: SchemaCarry): Unit = {
-      val recordFields = c.partFields.map(_.recordField)
-      val entrySchema = manifestSchemaFor(recordFields, v3 = fmtVersion >= 3)
-      val dataFileSchema = entrySchema.getField("data_file").schema()
-
-      // data manifest (v3: explicit sequential first_row_id per file)
-      val dataRowIds: Seq[Option[Long]] =
-        if (fmtVersion < 3) dataWithRows.map(_ => scala.None)
-        else dataWithRows.scanLeft(nextRowIdOf(fs, metaDir, v - 1)) {
-          case (acc, (_, rows, _)) => acc + rows
-        }.init.map(Some(_))
-      val dataRel = s"metadata/manifest-$v-${pathNonce()}.avro"
-      writeAvro(fs, new Path(root, dataRel), entrySchema,
-        parMap(dataWithRows.zip(dataRowIds)) { case ((rel, rows, len), rowId) =>
-          val file = new GenericData.Record(dataFileSchema)
-          file.put("content", 0)
-          file.put("file_path", rel)
-          file.put("file_format", "PARQUET")
-          file.put("partition",
-            partitionRecordOf(dataFileSchema, recordFields, rel))
-          file.put("record_count", rows)
-          file.put("file_size_in_bytes", len)
-          file.put("block_size_in_bytes", DefaultBlockSize)
-          rowId.foreach(id => file.put("first_row_id", Long.box(id)))
-          attachStats(file, dataFileSchema, conf, new Path(root, rel), c.schemaJson)
-          val entry = new GenericData.Record(entrySchema)
-          entry.put("status", 1) // ADDED
-          entry.put("snapshot_id", v.toLong)
-          entry.put("data_file", file)
-          entry
-        }, manifestMeta(c.schemaJson, fmtVersion, content = "data",
-          specFieldsJson = c.specFieldsJson, specId = c.defaultSpecId))
-      val dataRef = ManifestRef(dataRel,
-        fs.getFileStatus(new Path(root, dataRel)).getLen, c.defaultSpecId,
-        content = 0, seq = v.toLong, minSeq = v.toLong, snapshotId = v.toLong,
-        addedFiles = dataWithRows.size, existingFiles = 0, deletedFiles = 0,
-        addedRows = dataWithRows.map(_._2).sum, existingRows = 0L,
-        deletedRows = 0L)
-
-      // position-delete manifest (partition-scoped entries)
-      val posRef = if (posDeletes.isEmpty) scala.None else {
-        val rel = s"metadata/manifest-$v-${pathNonce()}.avro"
-        writeAvro(fs, new Path(root, rel), entrySchema,
-          posDeletes.map { case (r, rows, len) =>
-            val file = new GenericData.Record(dataFileSchema)
-            file.put("content", 1) // POSITION DELETES
-            file.put("file_path", r)
-            file.put("file_format", "PARQUET")
-            file.put("partition",
-              partitionRecordOf(dataFileSchema, recordFields, r))
-            file.put("record_count", rows)
-            file.put("file_size_in_bytes", len)
-            file.put("block_size_in_bytes", DefaultBlockSize)
-            val entry = new GenericData.Record(entrySchema)
-            entry.put("status", 1)
-            entry.put("snapshot_id", v.toLong)
-            entry.put("data_file", file)
-            entry
-          }, manifestMeta(c.schemaJson, fmtVersion, content = "deletes",
-            specFieldsJson = c.specFieldsJson, specId = c.defaultSpecId))
-        Some(ManifestRef(rel, fs.getFileStatus(new Path(root, rel)).getLen, c.defaultSpecId,
-          content = 1, seq = v.toLong, minSeq = v.toLong, snapshotId = v.toLong,
-          addedFiles = posDeletes.size, existingFiles = 0, deletedFiles = 0,
-          addedRows = posDeletes.map(_._2).sum, existingRows = 0L,
-          deletedRows = 0L))
-      }
-
-      // equality-delete manifest (GLOBAL — unpartitioned spec)
-      val eqRef = eqDeletes.map { case (dels, eqIds) =>
-        val rel = s"metadata/manifest-$v-${pathNonce()}.avro"
-        val globalSpecId = c.emptySpecId
-        val gSchema = manifestSchema.getField("data_file").schema()
-        writeAvro(fs, new Path(root, rel), manifestSchema,
-          dels.map { case (r, rows, len) =>
-            val file = new GenericData.Record(gSchema)
-            file.put("content", 2) // EQUALITY DELETES
-            file.put("file_path", r)
-            file.put("file_format", "PARQUET")
-            file.put("partition",
-              new GenericData.Record(gSchema.getField("partition").schema()))
-            file.put("record_count", rows)
-            file.put("file_size_in_bytes", len)
-            file.put("block_size_in_bytes", DefaultBlockSize)
-            file.put("equality_ids", eqIds.map(Int.box).asJava)
-            val entry = new GenericData.Record(manifestSchema)
-            entry.put("status", 1)
-            entry.put("snapshot_id", v.toLong)
-            entry.put("data_file", file)
-            entry
-          }, manifestMeta(c.schemaJson, fmtVersion, content = "deletes",
-            specId = globalSpecId))
-        ManifestRef(rel, fs.getFileStatus(new Path(root, rel)).getLen,
-          globalSpecId, content = 1, seq = v.toLong, minSeq = v.toLong,
-          snapshotId = v.toLong, addedFiles = dels.size, existingFiles = 0,
-          deletedFiles = 0, addedRows = dels.map(_._2).sum,
-          existingRows = 0L, deletedRows = 0L)
-      }
-
-      val prevManifests = readPrevManifests(fs, conf, root, v)
-      val listRel = s"metadata/snap-$v-${pathNonce()}.avro"
-      writeAvro(fs, new Path(root, listRel), manifestListSchema,
-        (prevManifests ++ Seq(dataRef) ++ posRef.toSeq ++ eqRef.toSeq) pipe (rs => listRecords(fs, conf, root, c, rs)),
-        manifestListMeta(v, fmtVersion))
-      writeMetadataJson(fs, metaDir, root, v, fmtVersion,
-        c, listRel, operation = operation, propsOverride = txnProps(txn),
-        assignedRows = if (fmtVersion < 3) 0L else dataWithRows.map(_._2).sum)
+    commitSnapshot(spark, tablePath, cur.fs, cur.root, Some(cur), cur.carry,
+      operation, DeleteRace, fmtVersion = _ => fmtVersion, plannedLive,
+      props = txnProps(txn)) { at =>
+      val c = at.carry
+      SnapshotDelta(
+        writeManifest(at, c.defaultSpecId, at.withRowIds(data).map(Added)) +:
+          (Option.when(posDeletes.nonEmpty)( // partition-scoped entries
+            writeManifest(at, c.defaultSpecId, posDeletes.map(Added))) ++
+          Option.when(eqDeletes.nonEmpty)( // GLOBAL — the unpartitioned spec
+            writeManifest(at, c.emptySpecId, eqDeletes.map(Added),
+              v2Schema = true))).toSeq)
     }
-    commitDeleteWithRetry(spark, tablePath, cur,
-      plannedLive, assemble)
   }
 
   /** ROLLBACK: re-point `current-snapshot-id` at an earlier snapshot
@@ -2232,8 +2051,8 @@ object IcebergWrite {
   /** spec-required key-value metadata on a manifest Avro file — what
     * external readers use to interpret it without the table metadata */
   private def manifestMeta(schemaJson: String, fmtVersion: Int,
-      content: String, specFieldsJson: String = "[]",
-      specId: Int = 0): Seq[(String, String)] =
+      content: String, specFieldsJson: String,
+      specId: Int): Seq[(String, String)] =
     Seq(
       "schema" -> schemaJson,
       "schema-id" -> "0",
@@ -2256,28 +2075,29 @@ object IcebergWrite {
     * additionally carries last-sequence-number / schemas /
     * partition-specs / sort-orders and a per-snapshot sequence-number
     * (= the version — one commit, one sequence). */
-  private def writeMetadataJson(fs: FileSystem, metaDir: Path, root: Path,
+  private def writeMetadataJson(fs: FileSystem, root: Path,
+      prev: Option[com.fasterxml.jackson.databind.JsonNode],
       version: Int, fmtVersion: Int, carry: SchemaCarry,
       listRel: String, operation: String,
-      propsOverride: Map[String, String] = Map.empty,
-      branchRef: Option[String] = scala.None,
+      propsOverride: Map[String, String],
+      branchRef: Option[String],
       // v3 row lineage: rows assigned FRESH row ids by this snapshot
       // (added data rows without an inherited first_row_id). The
       // snapshot's first-row-id = the table's next-row-id before the
       // commit; next-row-id advances by exactly this count
-      assignedRows: Long = 0L): Unit = {
+      assignedRows: Long): Unit = {
     val now = System.currentTimeMillis()
     val (prevSnapshots, prevProps, prevRefs, prevCurrentId, prevNextRowId,
         prevStatistics, prevPartStatistics)
         : (String, Map[String, String], Option[String], Long, Long,
            Option[String], Option[String]) =
-      if (version == 1) ("", Map.empty, scala.None, -1L, 0L, scala.None, scala.None)
-      else {
+      prev match {
+        case scala.None => ("", Map.empty, scala.None, -1L, 0L, scala.None, scala.None)
+        case Some(node) =>
         // carry prior snapshots, table properties AND refs forward from
         // the previous metadata JSON (properties hold the streaming-
         // sink txn markers, refs hold tags — both must survive commits
         // and snapshot expiry)
-        val node = currentAt(fs, root, version - 1).node
         val props = Option(node.get("properties")).map(_.properties().asScala
           .map(e => e.getKey -> e.getValue.asText()).toMap).getOrElse(Map.empty[String, String])
         (node.get("snapshots").elements().asScala
@@ -2362,13 +2182,8 @@ object IcebergWrite {
          |"timestamp-ms":$now,"summary":{"operation":${jstr(operation)}},
          |"manifest-list":${jstr(listRel)}}]}"""
         .stripMargin.replaceAll("\n", "")
-    publishVersion(fs, metaDir, version, meta)
+    publishVersion(fs, new Path(root, "metadata"), version, meta)
   }
-
-  /** the table's v3 row-id counter after version `prev`, read fresh
-    * (commit attempts call this; planning uses [[Current.nextRowId]]) */
-  private def nextRowIdOf(fs: FileSystem, metaDir: Path, prev: Int): Long =
-    currentAt(fs, metaDir.getParent, prev).nextRowId
 
   /** a full v2 manifest-list row (content 0 = data, 1 = deletes).
     * `partitions` = the spec's field_summary list (field 507): per
@@ -2389,9 +2204,9 @@ object IcebergWrite {
     * an older snapshot whose list is not `snap-{version-1}` */
   private def readPrevManifests(fs: FileSystem,
       conf: org.apache.hadoop.conf.Configuration, root: Path,
-      version: Int, fromSnapshot: Option[Long] = scala.None): Seq[ManifestRef] = {
-    if (version == 1) return Seq.empty
-    val node = currentAt(fs, root, version - 1).node
+      prev: Option[com.fasterxml.jackson.databind.JsonNode],
+      fromSnapshot: Option[Long]): Seq[ManifestRef] = {
+    val node = prev.getOrElse(return Seq.empty)
     val currentId = fromSnapshot.orElse(
       Option(node.get("current-snapshot-id")).map(_.asLong()).filter(_ != -1L))
       .getOrElse(return Seq.empty)
@@ -2627,64 +2442,22 @@ object IcebergWrite {
     if (dataFiles.isEmpty) return 0L
     import org.apache.spark.sql.functions.col
     // schema state carried verbatim from the table's own metadata (the
-    // delete commit must not drift the declared schema or its ids)
-    val carry = cur.carry
-    // transform specs work here too: the delete files shard per derived
+    // delete commit must not drift the declared schema or its ids).
+    // Transform specs work here too: the delete files shard per derived
     // partition tuple (the values live in the manifest entries), so a
     // partition-pruned reader prunes the deletes alongside the data
-    val recordFields = carry.partFields.map(_.recordField)
+    val carry = cur.carry
 
     // victims come from the DELETE-APPLIED lineage view, so a row
     // already dead under an earlier position/equality delete is never
     // re-listed or re-counted; `cond` rides in as the manifest pruner
     val victims = IcebergScan.readWithLineage(spark, tablePath, Some(cond))
       .filter(cond).select(col("__raw_file"), col("__pos"))
-    val delWithRows = stagePositionDeletes(spark, fs, root, tablePath,
-      victims, version, recordFields)
-    val nDeleted = delWithRows.map(_._2).sum
+    val deletes = stagePositionDeletes(spark, fs, root, tablePath,
+      victims, version, carry)
+    val nDeleted = deletes.map(_.rows).sum
     if (nDeleted == 0L) return 0L // helper already cleaned its staging dir
-    val conf = spark.sparkContext.hadoopConfiguration
 
-    def assemble(v: Int, c: SchemaCarry): Unit = {
-      val manifestRel = s"metadata/manifest-$v-${pathNonce()}.avro"
-      val entrySchema = manifestSchemaFor(recordFields)
-      val dataFileSchema = entrySchema.getField("data_file").schema()
-      val delEntries = delWithRows.map { case (rel, rows, len) =>
-        val file = new GenericData.Record(dataFileSchema)
-        file.put("content", 1) // POSITION DELETES
-        file.put("file_path", rel)
-        file.put("file_format", "PARQUET")
-        file.put("partition",
-          partitionRecordOf(dataFileSchema, recordFields, rel))
-        file.put("record_count", rows)
-        file.put("file_size_in_bytes", len)
-        file.put("block_size_in_bytes", DefaultBlockSize)
-        val entry = new GenericData.Record(entrySchema)
-        entry.put("status", 1) // ADDED
-        entry.put("snapshot_id", v.toLong)
-        entry.put("data_file", file)
-        entry
-      }
-      writeAvro(fs, new Path(root, manifestRel), entrySchema, delEntries,
-        manifestMeta(c.schemaJson, fmtVersion = 2, content = "deletes",
-          specFieldsJson = c.specFieldsJson, specId = c.defaultSpecId))
-      val manifestLen = fs.getFileStatus(new Path(root, manifestRel)).getLen
-
-      val prevManifests = readPrevManifests(fs, conf, root, v)
-      val listRel = s"metadata/snap-$v-${pathNonce()}.avro"
-      writeAvro(fs, new Path(root, listRel), manifestListSchema,
-        (prevManifests :+
-          ManifestRef(manifestRel, manifestLen, c.defaultSpecId,
-            content = 1, seq = v.toLong, minSeq = v.toLong,
-            snapshotId = v.toLong, addedFiles = delEntries.size,
-            existingFiles = 0,
-            deletedFiles = 0, addedRows = nDeleted, existingRows = 0L,
-            deletedRows = 0L)) pipe (rs => listRecords(fs, conf, root, c, rs)),
-        manifestListMeta(v, fmtVersion = 2))
-
-      writeMetadataJson(fs, metaDir, root, v, fmtVersion = 2,
-        c, listRel, operation = "delete")
-    }
     // OCC retry: the staged delete files reference (file_path, pos) of
     // the PLANNED snapshot's data files — a lost CAS re-validates that
     // the winner (a) left schema + partition spec intact and (b)
@@ -2694,8 +2467,11 @@ object IcebergWrite {
     // concurrent APPENDS commute: the delete's higher sequence number
     // applies it to pre-existing files only, and the staged positions
     // name exactly the files this plan saw.
-    commitDeleteWithRetry(spark, tablePath, cur,
-      dataFiles.toSet, assemble)
+    commitSnapshot(spark, tablePath, fs, root, Some(cur), carry, "delete",
+      DeleteRace, fmtVersion = _ => 2, plannedLive = dataFiles.toSet) { at =>
+      SnapshotDelta(Seq(writeManifest(at, at.carry.defaultSpecId,
+        deletes.map(Added))))
+    }
     nDeleted
   }
 
@@ -2706,7 +2482,8 @@ object IcebergWrite {
     * merge-on-read [[updateWhere]] path. */
   private def stagePositionDeletes(spark: SparkSession, fs: FileSystem,
       root: Path, tablePath: String, victims0: DataFrame, version: Int,
-      recordFields: Seq[StructField]): Seq[(String, Long, Long)] = {
+      carry: SchemaCarry): Seq[IcebergScan.FileEntry] = {
+    val recordFields = carry.partFields.map(_.recordField)
     val partCols = recordFields.map(_.name)
     import org.apache.spark.sql.functions.{broadcast, col}
     // the spec reserves parquet field ids for position-delete columns:
@@ -2779,46 +2556,11 @@ object IcebergWrite {
           .write.partitionBy(partCols: _*).mode("overwrite").parquet(delDir.toString)
       }
     }
-    val conf = spark.sparkContext.hadoopConfiguration
-    val staged = listParquet(fs, delDir).map("data/" + _).map { rel =>
-      val p = new Path(root, rel)
-      val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
-      val rows = try footer.getRecordCount finally footer.close()
-      (rel, rows, fs.getFileStatus(p).getLen)
-    }.filter(_._2 > 0L)
+    val staged = stagedFiles(fs, root,
+      listParquet(fs, delDir).map { case (rel, len) => ("data/" + rel, len) },
+      content = 1, carry)
     if (staged.isEmpty) fs.delete(delDir, true)
     staged
-  }
-
-  /** shared OCC loop for delete commits (see [[deleteWhere]]): retry
-    * `assemble` at successive versions while the winner's commits
-    * commute; `plannedLive` empty skips the file-liveness check
-    * (equality deletes reference keys, not files). */
-  private def commitDeleteWithRetry(spark: SparkSession, tablePath: String,
-      cur: Current, plannedLive: Set[String],
-      assemble: (Int, SchemaCarry) => Unit): Unit = {
-    beforeCommit()
-    var v = cur.next
-    var c = cur.carry
-    LakeSupport.retryOnConflict(MaxCommitRetries, { e =>
-      val now = current(spark, tablePath)
-      if (now.carry.schemaJson != c.schemaJson ||
-          now.carry.specFieldsJson != c.specFieldsJson)
-        throw new java.util.ConcurrentModificationException(
-          s"delete lost the commit race at $tablePath and the winner " +
-            "changed the schema or partition spec — re-run the delete", e)
-      if (plannedLive.nonEmpty) {
-        val nowLive = IcebergScan.currentDataFiles(spark, tablePath)._2.toSet
-        if (!plannedLive.subsetOf(nowLive))
-          throw new java.util.ConcurrentModificationException(
-            s"delete lost the commit race at $tablePath and the winner " +
-              "removed/rewrote data files this delete references — " +
-              "re-run the delete on the current table state", e)
-      }
-      c = now.carry
-      v = now.next
-    })(assemble(v, c))
   }
 
   /** manifest partition value → the Spark EXTERNAL type for a
@@ -2837,11 +2579,11 @@ object IcebergWrite {
   /** validate + stage equality-delete parquet files (distinct sorted
     * key tuples, table field ids stamped) under
     * `data/eqdeletes-v$version-<nonce>/`; returns the non-empty staged
-    * files and the key columns' field ids. Shared by [[deleteEqual]]
-    * and the merge-on-read [[merge]] path. */
+    * files, each carrying the key columns' field ids. Shared by
+    * [[deleteEqual]] and the merge-on-read [[merge]] path. */
   private def stageEqualityDeletes(spark: SparkSession, fs: FileSystem,
       root: Path, keys: DataFrame, version: Int, carry: SchemaCarry,
-      tablePath: String): (Seq[(String, Long, Long)], Seq[Int]) = {
+      tablePath: String): Seq[IcebergScan.FileEntry] = {
     import org.apache.spark.sql.functions.col
     val schemaNode = mapper
       .readTree(carry.schemaJson)
@@ -2874,9 +2616,11 @@ object IcebergWrite {
         .sortWithinPartitions(keys.schema.fieldNames.map(col).toSeq: _*)
         .write.mode("overwrite").parquet(delDir.toString)
     }
-    val staged = sizeParquet(fs, root, listParquet(fs, delDir).map("data/" + _))
+    val staged = stagedFiles(fs, root,
+      listParquet(fs, delDir).map { case (rel, len) => ("data/" + rel, len) },
+      content = 2, carry).map(_.copy(eqIds = eqIds))
     if (staged.isEmpty) fs.delete(delDir, true)
-    (staged, eqIds)
+    staged
   }
 
   /** EQUALITY-DELETE commit (v2): delete every row whose values in
@@ -2905,17 +2649,13 @@ object IcebergWrite {
     * partitions, and the right one here because a key tuple says
     * nothing about which partition holds it. */
   def deleteEqual(spark: SparkSession, tablePath: String, keys: DataFrame): Long = {
-    import org.apache.spark.sql.functions.col
     val cur = current(spark, tablePath)
     require(keys.schema.fields.nonEmpty, "deleteEqual needs at least one key column")
     val (fs, root, metaDir, version) = (cur.fs, cur.root, cur.metaDir, cur.next)
     requireVersionFree(fs, metaDir, version)
 
-    val carry = cur.carry
-    val (delWithRows, eqIds) =
-      stageEqualityDeletes(spark, fs, root, keys, version, carry, tablePath)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val nKeys = delWithRows.map(_._2).sum
+    val deletes = stageEqualityDeletes(spark, fs, root, keys, version, cur.carry, tablePath)
+    val nKeys = deletes.map(_.rows).sum
     if (nKeys == 0L) return 0L // helper already cleaned its staging dir
     // a v1 table upgrades to v2 at its first delete (the version that
     // defines sequence numbers); a v3 table stays v3 (equality deletes
@@ -2923,56 +2663,17 @@ object IcebergWrite {
     // replaced by deletion vectors)
     val fmtV = math.max(2, cur.formatVersion)
 
-    def assemble(v: Int, c: SchemaCarry): Unit = {
-      val manifestRel = s"metadata/manifest-$v-${pathNonce()}.avro"
-      val dataFileSchema = manifestSchema.getField("data_file").schema()
-      val delEntries = delWithRows.map { case (rel, rows, len) =>
-        val file = new GenericData.Record(dataFileSchema)
-        file.put("content", 2) // EQUALITY DELETES
-        file.put("file_path", rel)
-        file.put("file_format", "PARQUET")
-        file.put("partition",
-          new GenericData.Record(dataFileSchema.getField("partition").schema()))
-        file.put("record_count", rows)
-        file.put("file_size_in_bytes", len)
-        file.put("block_size_in_bytes", DefaultBlockSize)
-        file.put("equality_ids", eqIds.map(Int.box).asJava)
-        val entry = new GenericData.Record(manifestSchema)
-        entry.put("status", 1) // ADDED
-        entry.put("snapshot_id", v.toLong)
-        entry.put("data_file", file)
-        entry
-      }
-      // on a partitioned table this manifest declares the UNPARTITIONED
-      // spec-id 1 (a global delete); the empty partition records above are
-      // exactly that spec's record shape
-      val globalSpecId = c.emptySpecId
-      writeAvro(fs, new Path(root, manifestRel), manifestSchema, delEntries,
-        manifestMeta(c.schemaJson, fmtV, content = "deletes",
-          specId = globalSpecId))
-      val manifestLen = fs.getFileStatus(new Path(root, manifestRel)).getLen
-
-      val prevManifests = readPrevManifests(fs, conf, root, v)
-      val listRel = s"metadata/snap-$v-${pathNonce()}.avro"
-      writeAvro(fs, new Path(root, listRel), manifestListSchema,
-        (prevManifests :+
-          ManifestRef(manifestRel, manifestLen, globalSpecId,
-            content = 1, seq = v.toLong, minSeq = v.toLong,
-            snapshotId = v.toLong, addedFiles = delEntries.size,
-            existingFiles = 0,
-            deletedFiles = 0, addedRows = nKeys, existingRows = 0L,
-            deletedRows = 0L)) pipe (rs => listRecords(fs, conf, root, c, rs)),
-        manifestListMeta(v, fmtV))
-
-      writeMetadataJson(fs, metaDir, root, v, fmtV,
-        c, listRel, operation = "delete")
-    }
     // equality deletes reference KEYS, not files — they commute with
     // any winner that keeps the schema/spec (the delete's higher
     // sequence number applies it to every file the winner added or
-    // rewrote, which IS the operation's read-time semantics)
-    commitDeleteWithRetry(spark, tablePath, cur,
-      plannedLive = Set.empty, assemble)
+    // rewrote, which IS the operation's read-time semantics). On a
+    // partitioned table the manifest declares the UNPARTITIONED spec (a
+    // global delete), whose empty partition record every entry carries
+    commitSnapshot(spark, tablePath, fs, root, Some(cur), cur.carry, "delete",
+      DeleteRace, fmtVersion = _ => fmtV) { at =>
+      SnapshotDelta(Seq(writeManifest(at, at.carry.emptySpecId,
+        deletes.map(Added), v2Schema = true)))
+    }
     nKeys
   }
 
@@ -3137,14 +2838,9 @@ object IcebergWrite {
       dropParquetPos: Boolean,
       // a MOR UPDATE commits its re-written row images in the SAME
       // snapshot as the DVs that kill the originals
-      newData: Seq[(String, Long, Long)] = Seq.empty): Unit = {
-    val (fs, root, metaDir) = (cur.fs, cur.root, cur.metaDir)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val rootPrefix = root.toString.stripSuffix("/") + "/"
-    def relOf(abs: String): String =
-      if (abs.startsWith(rootPrefix)) abs.substring(rootPrefix.length) else abs
-
-    def assemble(v: Int, c: SchemaCarry): Unit = {
+      newData: Seq[IcebergScan.FileEntry] = Seq.empty): Unit =
+    commitSnapshot(spark, tablePath, cur.fs, cur.root, Some(cur), cur.carry,
+      operation, DeleteRace, fmtVersion = _ => 3, plannedLive) { at =>
       val (_, live) = IcebergScan.currentEntries(spark, tablePath)
       val dataByNorm = live.filter(_.content == 0)
         .map(e => IcebergScan.normalizePath(e.path) -> e).toMap
@@ -3185,114 +2881,28 @@ object IcebergWrite {
             .exists(n => dataByNorm.contains(n) && !superseded(n))
         else !dropParquetPos
       }
-      val newBySpec = staged.groupBy(s =>
-        dataByNorm(IcebergScan.normalizePath(s.refRaw)).specId)
+      // a staged DV is a position delete (DV form) in the referenced
+      // data file's partition, under that file's spec
+      val added = staged.sortBy(_.refRaw).map { s =>
+        val ref = dataByNorm(IcebergScan.normalizePath(s.refRaw))
+        IcebergScan.FileEntry(s.puffinRel, seq = 0L, content = 1, eqIds = Nil,
+          s.cardinality, partition = ref.partition, specId = ref.specId,
+          bytes = s.puffinBytes, fileFormat = "PUFFIN", refDataFile = Some(ref.path),
+          contentOffset = Some(s.offset), contentSize = Some(s.length))
+      }
       val keptBySpec = kept.groupBy(_.specId)
-      val refs = (newBySpec.keySet ++ keptBySpec.keySet).toSeq.sorted.map { sid =>
-        val pfs = c.partFieldsFor(sid)
-        val es = manifestSchemaFor(pfs.map(_.recordField), v3 = true)
-        val dfs = es.getField("data_file").schema()
-        val keptEs = keptBySpec.getOrElse(sid, Seq.empty).sortBy(_.path)
-        val keptRecs = keptEs.map { e =>
-          val f = new GenericData.Record(dfs)
-          f.put("content", e.content)
-          f.put("file_path", relOf(e.path))
-          f.put("file_format", e.fileFormat)
-          f.put("partition", partitionRecordFromEntry(dfs, pfs, e))
-          f.put("record_count", e.rows)
-          f.put("file_size_in_bytes", e.bytes)
-          f.put("block_size_in_bytes", DefaultBlockSize)
-          if (e.eqIds.nonEmpty) f.put("equality_ids", e.eqIds.map(Int.box).asJava)
-          if (e.fileFormat == "PUFFIN") {
-            f.put("referenced_data_file", relOf(e.refDataFile.get))
-            f.put("content_offset", Long.box(e.contentOffset.get))
-            f.put("content_size_in_bytes", Long.box(e.contentSize.get))
-          }
-          val en = new GenericData.Record(es)
-          en.put("status", 0) // EXISTING — original seq, delete gating intact
-          en.put("snapshot_id", v.toLong)
-          en.put("sequence_number", e.seq)
-          en.put("file_sequence_number", e.seq)
-          en.put("data_file", f)
-          en
-        }
-        val newSs = newBySpec.getOrElse(sid, Seq.empty).sortBy(_.refRaw)
-        val newRecs = newSs.map { s =>
-          val ref = dataByNorm(IcebergScan.normalizePath(s.refRaw))
-          val f = new GenericData.Record(dfs)
-          f.put("content", 1) // POSITION DELETES (DV form)
-          f.put("file_path", s.puffinRel)
-          f.put("file_format", "PUFFIN")
-          f.put("partition", partitionRecordFromEntry(dfs, pfs, ref))
-          f.put("record_count", s.cardinality)
-          f.put("file_size_in_bytes", s.puffinBytes)
-          f.put("block_size_in_bytes", DefaultBlockSize)
-          f.put("referenced_data_file", relOf(ref.path))
-          f.put("content_offset", Long.box(s.offset))
-          f.put("content_size_in_bytes", Long.box(s.length))
-          val en = new GenericData.Record(es)
-          en.put("status", 1) // ADDED — seq inherits this commit's
-          en.put("snapshot_id", v.toLong)
-          en.put("data_file", f)
-          en
-        }
-        val rel = s"metadata/manifest-$v-dv-spec$sid-${pathNonce()}.avro"
-        writeAvro(fs, new Path(root, rel), es, keptRecs ++ newRecs,
-          manifestMeta(c.schemaJson, fmtVersion = 3, content = "deletes",
-            specFieldsJson = c.specFieldsJsonFor(sid), specId = sid))
-        ManifestRef(rel, fs.getFileStatus(new Path(root, rel)).getLen, sid,
-          content = 1, seq = v.toLong,
-          minSeq = (keptEs.map(_.seq) :+ v.toLong).min, snapshotId = v.toLong,
-          addedFiles = newRecs.size, existingFiles = keptRecs.size,
-          deletedFiles = 0, addedRows = newSs.map(_.cardinality).sum,
-          existingRows = keptEs.map(_.rows).sum, deletedRows = 0L)
+      val addedBySpec = added.groupBy(_.specId)
+      val deleteManifests = (addedBySpec.keySet ++ keptBySpec.keySet).toSeq.sorted.map { sid =>
+        writeManifest(at, sid,
+          keptBySpec.getOrElse(sid, Seq.empty).sortBy(_.path).map(Kept) ++
+            addedBySpec.getOrElse(sid, Seq.empty).map(Added))
       }
-      // optional data manifest: MOR-update row images (ADDED, explicit
-      // sequential first_row_id from the table counter)
-      val dataRef: Option[ManifestRef] = if (newData.isEmpty) scala.None else {
-        val recordFields = c.partFields.map(_.recordField)
-        val es = manifestSchemaFor(recordFields, v3 = true)
-        val dfs = es.getField("data_file").schema()
-        val rowIds = newData.scanLeft(nextRowIdOf(fs, metaDir, v - 1)) {
-          case (acc, (_, rows, _)) => acc + rows
-        }.init
-        val rel = s"metadata/manifest-$v-${pathNonce()}.avro"
-        writeAvro(fs, new Path(root, rel), es,
-          parMap(newData.zip(rowIds)) { case ((r, rows, len), rowId) =>
-            val f = new GenericData.Record(dfs)
-            f.put("content", 0)
-            f.put("file_path", r)
-            f.put("file_format", "PARQUET")
-            f.put("partition", partitionRecordOf(dfs, recordFields, r))
-            f.put("record_count", rows)
-            f.put("file_size_in_bytes", len)
-            f.put("block_size_in_bytes", DefaultBlockSize)
-            f.put("first_row_id", Long.box(rowId))
-            attachStats(f, dfs, conf, new Path(root, r), c.schemaJson)
-            val en = new GenericData.Record(es)
-            en.put("status", 1) // ADDED
-            en.put("snapshot_id", v.toLong)
-            en.put("data_file", f)
-            en
-          }, manifestMeta(c.schemaJson, fmtVersion = 3, content = "data",
-            specFieldsJson = c.specFieldsJson, specId = c.defaultSpecId))
-        Some(ManifestRef(rel, fs.getFileStatus(new Path(root, rel)).getLen,
-          c.defaultSpecId, content = 0, seq = v.toLong, minSeq = v.toLong,
-          snapshotId = v.toLong, addedFiles = newData.size, existingFiles = 0,
-          deletedFiles = 0, addedRows = newData.map(_._2).sum,
-          existingRows = 0L, deletedRows = 0L))
-      }
-      val prevData = readPrevManifests(fs, conf, root, v).filter(_.content == 0)
-      val listRel = s"metadata/snap-$v-${pathNonce()}.avro"
-      writeAvro(fs, new Path(root, listRel), manifestListSchema,
-        (prevData ++ dataRef.toSeq ++ refs) pipe (rs => listRecords(fs, conf, root, c, rs)),
-        manifestListMeta(v, fmtVersion = 3))
-      writeMetadataJson(fs, metaDir, root, v, fmtVersion = 3, c, listRel,
-        operation = operation, assignedRows = newData.map(_._2).sum)
+      // data manifests carry forward untouched; MOR-update row images
+      // join as one more
+      val dataManifest = Option.when(newData.nonEmpty)(writeManifest(at,
+        at.carry.defaultSpecId, at.withRowIds(newData).map(Added)))
+      SnapshotDelta(dataManifest.toSeq ++ deleteManifests, carryPrev = _.content == 0)
     }
-    commitDeleteWithRetry(spark, tablePath, cur,
-      plannedLive, assemble)
-  }
 
   /** Spark → Iceberg schema JSON with 1-based field ids; primitives
     * only (the minimal-writer scope — nested types fail loudly). */
@@ -3345,11 +2955,6 @@ object IcebergWrite {
       }
     }
 
-  /** the table's identity-partition source fields, in spec order */
-  private def partFieldsOf(schema: StructType, partCols: Seq[String]): Seq[StructField] =
-    partCols.map(n => schema.fields.find(_.name == n).getOrElse(
-      throw new IllegalArgumentException(s"partition column '$n' not in schema")))
-
   /** Avro primitive for a partition record field (the subset
     * [[hivePartitionable]] admits) */
   private def avroPartType(dt: DataType, name: String): String = dt match {
@@ -3364,10 +2969,9 @@ object IcebergWrite {
 
   /** manifest_entry Avro schema whose data_file.partition record
     * carries one nullable field per identity-partition column (spec
-    * partition field-ids from 1000) — [[manifestSchema]] is the
-    * unpartitioned instance */
+    * partition field-ids from 1000) */
   private def manifestSchemaFor(partFields: Seq[StructField],
-      v3: Boolean = false): Schema = {
+      v3: Boolean): Schema = {
     val pf = partFields.zipWithIndex.map { case (f, i) =>
       s"""{"name":${jstr(f.name)},"type":["null",${avroPartType(f.dataType, f.name)}],""" +
         s""""default":null,"field-id":${1000 + i}}"""
@@ -3421,32 +3025,21 @@ object IcebergWrite {
       |"type":["null",{"type":"array","items":"int","element-id":136}]},
       |{"name":"sort_order_id","type":["null","int"],"default":null,"field-id":140}]}}]}""".stripMargin
 
-  private val manifestSchema = manifestSchemaFor(Nil)
-
-  /** typed partition record for one hive-layout data file, values
-    * parsed from the file's `k=v` path segments */
-  /** identity-spec form: record fields ARE the source schema fields */
-  private def partitionRecord(dataFileSchema: Schema, schema: StructType,
-      partCols: Seq[String], relPath: String): GenericData.Record =
-    partitionRecordOf(dataFileSchema, partCols.map(n => schema(n)
-      .copy(name = n)), relPath)
-
-  /** typed manifest partition record parsed from the hive path, typed
-    * by the spec fields' RECORD types (transform result types — a
-    * day field parses as a date, a bucket as an int) */
-  private def partitionRecordOf(dataFileSchema: Schema,
-      recordFields: Seq[StructField], relPath: String): GenericData.Record = {
-    val rec = new GenericData.Record(dataFileSchema.getField("partition").schema())
-    if (recordFields.isEmpty) return rec
+  /** typed partition values of a freshly written file, parsed from its
+    * hive `k=v` path segments and typed by the spec fields' RECORD
+    * types (transform result types — a day field parses as a date, a
+    * bucket as an int) */
+  private def stagedPartition(recordFields: Seq[StructField],
+      relPath: String): Map[String, AnyRef] = {
+    if (recordFields.isEmpty) return Map.empty
     val names = recordFields.map(_.name)
     val raw = hivePathValues(relPath, names).getOrElse(
       throw new IllegalStateException(
         s"written data file $relPath does not carry hive segments for " +
           s"partition fields ${names.mkString(", ")}"))
-    recordFields.foreach { f =>
-      rec.put(f.name, raw(f.name).map(typedPartitionValue(f.dataType, f.name, _)).orNull)
-    }
-    rec
+    recordFields.map { f =>
+      f.name -> raw(f.name).map(typedPartitionValue(f.dataType, f.name, _)).orNull
+    }.toMap
   }
 
   /** `k=v` hive segments of a path, percent-decoded;
@@ -3492,32 +3085,18 @@ object IcebergWrite {
   }
 
   // schemaJson → (field ids by name, Spark schema): parsed once per
-  // schema, not once per FILE (attachStats runs per added file)
+  // schema, not once per FILE (footer stats are read per added file)
   private val statsSchemaCache =
     new java.util.concurrent.ConcurrentHashMap[String, (Map[String, Int], StructType)]()
 
-  /** attach lower/upper bounds + null counts (from one parquet footer)
-    * to a data_file record — column stats external planners and our
-    * own skippingFilter prune with. Thread-safe (used under [[parMap]]). */
-  private def attachStats(file: GenericData.Record, dataFileSchema: Schema,
-      conf: org.apache.hadoop.conf.Configuration, dataPath: Path,
-      schemaJson: String): Unit = {
+  /** the field ids and Spark schema footer stats are keyed and typed by */
+  private def statsSchema(schemaJson: String): (Map[String, Int], StructType) = {
     if (statsSchemaCache.size > 64) statsSchemaCache.clear()
-    val (idByName, sparkSch) = statsSchemaCache.computeIfAbsent(schemaJson, { sj =>
+    statsSchemaCache.computeIfAbsent(schemaJson, { sj =>
       val ids = mapper.readTree(sj).get("fields").elements().asScala
         .map(f => f.get("name").asText() -> f.get("id").asInt()).toMap
       (ids, IcebergScan.sparkSchema(mapper.readTree(sj)))
     })
-    val (lo, hi, nulls) = IcebergStats.footerBounds(conf, dataPath, sparkSch, idByName)
-    if (nulls.nonEmpty)
-      file.put("null_value_counts", kvArray(dataFileSchema, "null_value_counts",
-        nulls, (v: Long) => java.lang.Long.valueOf(v)))
-    if (lo.nonEmpty)
-      file.put("lower_bounds", kvArray(dataFileSchema, "lower_bounds",
-        lo, (v: Array[Byte]) => java.nio.ByteBuffer.wrap(v)))
-    if (hi.nonEmpty)
-      file.put("upper_bounds", kvArray(dataFileSchema, "upper_bounds",
-        hi, (v: Array[Byte]) => java.nio.ByteBuffer.wrap(v)))
   }
 
   private val DefaultBlockSize = 67108864L // 64 MiB, the spec's customary default
@@ -3552,14 +3131,16 @@ object IcebergWrite {
       |    {"name":"upper_bound","type":["null","bytes"],"default":null,"field-id":511}]},
       |  "element-id":508}],"default":null,"field-id":507}]}""".stripMargin)
 
+  /** write an Avro container; returns its length in bytes */
   private def writeAvro(fs: FileSystem, path: Path, schema: Schema,
       records: Seq[GenericRecord],
-      meta: Seq[(String, String)] = Seq.empty): Unit = {
+      meta: Seq[(String, String)]): Long = {
     val out = fs.create(path, false)
     val writer = new DataFileWriter(new GenericDatumWriter[GenericRecord](schema))
     meta.foreach { case (k, v) => writer.setMeta(k, v) }
     writer.create(schema, out)
-    try records.foreach(writer.append) finally writer.close()
+    try { records.foreach(writer.append); writer.flush(); out.getPos }
+    finally writer.close()
   }
 
   private def readAvro(fs: FileSystem, conf: org.apache.hadoop.conf.Configuration,
@@ -3569,16 +3150,18 @@ object IcebergWrite {
     try reader.iterator().asScala.toVector finally reader.close()
   }
 
-  private def listParquet(fs: FileSystem, dir: Path): Seq[String] = {
+  /** parquet files under `dir` as (path relative to `dir`'s parent,
+    * length) */
+  private def listParquet(fs: FileSystem, dir: Path): Seq[(String, Long)] = {
     if (!fs.exists(dir)) return Seq.empty
     val base = dir.getParent.toString.stripSuffix("/") + "/"
-    val out = Seq.newBuilder[String]
+    val out = Seq.newBuilder[(String, Long)]
     val it = fs.listFiles(dir, true)
     while (it.hasNext) {
       val st = it.next()
       val p = st.getPath.toString
       if (p.startsWith(base) && p.endsWith(".parquet"))
-        out += p.substring(base.length)
+        out += p.substring(base.length) -> st.getLen
     }
     out.result()
   }

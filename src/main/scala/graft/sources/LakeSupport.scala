@@ -3,12 +3,16 @@ package graft.sources
 import java.util.ConcurrentModificationException
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
 
 /** Plumbing the lakehouse writers ([[DeltaWrite]], [[IcebergWrite]])
   * and the sinks beside them share: JSON string literals, one Jackson
-  * mapper, UTF-8 control-file reads, bounded parallel footer I/O, and
-  * the optimistic-concurrency retry loop. */
+  * mapper, UTF-8 control-file reads, parquet footer reads, bounded
+  * parallel footer I/O, and the optimistic-concurrency retry loop. */
 private[sources] object LakeSupport {
 
   /** shared parser/serializer — an ObjectMapper is thread-safe once
@@ -34,6 +38,16 @@ private[sources] object LakeSupport {
     val in = fs.open(p)
     try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
   }
+
+  /** One parquet footer read: the file's row count, plus whatever
+    * `more` derives from the same footer (column stats) */
+  def readFooter[T](conf: Configuration, p: Path)(more: ParquetMetadata => T): (Long, T) = {
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
+    try (r.getRecordCount, more(r.getFooter)) finally r.close()
+  }
+
+  /** a parquet file's row count, from its footer */
+  def footerRows(conf: Configuration, p: Path): Long = readFooter(conf, p)(_ => ())._1
 
   /** bounded driver-side parallel map for per-file METADATA I/O
     * (parquet footer reads): a partitioned commit can name thousands

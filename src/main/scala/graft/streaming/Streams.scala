@@ -779,7 +779,8 @@ object Streams {
     val spark = batch.sparkSession
     val fs = new org.apache.hadoop.fs.Path(tablePath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(tablePath, "metadata/version-hint.text"))) {
+    if (graft.sources.IcebergScan.hintedVersion(
+        fs, new org.apache.hadoop.fs.Path(tablePath, "metadata")).isDefined) {
       val last = graft.sources.IcebergWrite.lastTxnVersion(spark, tablePath, appId)
       if (last.exists(_ >= batchId)) false // re-delivered: already committed
       else {
@@ -859,7 +860,8 @@ object Streams {
     }
     val fs = new org.apache.hadoop.fs.Path(tablePath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(tablePath, "metadata/version-hint.text"))) {
+    if (graft.sources.IcebergScan.hintedVersion(
+        fs, new org.apache.hadoop.fs.Path(tablePath, "metadata")).isEmpty) {
       graft.sources.IcebergWrite.createWithTxn(
         spark, collapsed, tablePath, appId, batchId)
       (0L, collapsed.count())

@@ -1,23 +1,58 @@
 package graft
 
+import java.io.IOException
 import java.net.URI
 import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{DelegateToFileSystem, FSDataInputStream, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{DelegateToFileSystem, FSDataInputStream, FSDataOutputStream, LocatedFileStatus, Path, RawLocalFileSystem, RemoteIterator}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
 
 /** Test-only local filesystem under the `countfs` scheme that records
   * the path of every file it opens. Point a table at
   * `countfs:///tmp/...` after [[CountingFileSystem.register]] and every
   * read the library makes — through `FileSystem` or, via [[CountingFs]],
   * through `FileContext` (which `AtomicFiles.publish` uses) — lands in
-  * [[CountingFileSystem.opened]]. */
+  * [[CountingFileSystem.opened]]. It also counts every create and
+  * rename of a path under a `metadata/` directory and, when armed with
+  * [[CountingFileSystem.failAt]], throws IOException on the k-th one. */
 class CountingFileSystem extends RawLocalFileSystem {
   override def getUri: URI = CountingFileSystem.Uri
   override def getScheme: String = CountingFileSystem.Scheme
   override def open(f: Path, bufferSize: Int): FSDataInputStream = {
     CountingFileSystem.opened.add(f.toUri.getPath)
     super.open(f, bufferSize)
+  }
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int,
+      replication: Short, blockSize: Long, progress: Progressable): FSDataOutputStream = {
+    CountingFileSystem.mutate(f)
+    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+  }
+  override def create(f: Path, permission: FsPermission, overwrite: Boolean,
+      bufferSize: Int, replication: Short, blockSize: Long,
+      progress: Progressable): FSDataOutputStream = {
+    CountingFileSystem.mutate(f)
+    super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
+  }
+  override def rename(src: Path, dst: Path): Boolean = {
+    CountingFileSystem.mutate(dst)
+    super.rename(src, dst)
+  }
+  // the inherited LocatedFileStatus reads each file's permission through
+  // java.io.File, which takes `file:` URIs only; no permission, as
+  // Spark's own file listing builds them
+  override def listLocatedStatus(f: Path): RemoteIterator[LocatedFileStatus] = {
+    val it = listStatus(f).iterator
+    new RemoteIterator[LocatedFileStatus] {
+      def hasNext: Boolean = it.hasNext
+      def next(): LocatedFileStatus = {
+        val s = it.next()
+        new LocatedFileStatus(s.getLen, s.isDirectory, s.getReplication, s.getBlockSize,
+          s.getModificationTime, 0L, null, null, null, null, s.getPath, null)
+      }
+    }
   }
 }
 
@@ -27,6 +62,19 @@ object CountingFileSystem {
 
   /** local paths of every open, in order, across all instances */
   val opened = new ConcurrentLinkedQueue[String]()
+
+  /** creates and renames of `metadata/` paths since the last [[failAt]] */
+  val mutations = new AtomicInteger(0)
+  @volatile private var failing = 0
+
+  /** count metadata mutations from zero; the `k`-th throws (0: never) */
+  def failAt(k: Int): Unit = { mutations.set(0); failing = k }
+
+  private def mutate(p: Path): Unit =
+    if (p.toUri.getPath.contains("/metadata/")) {
+      val n = mutations.incrementAndGet()
+      if (n == failing) throw new IOException(s"injected fault at metadata mutation $n: $p")
+    }
 
   /** map the scheme to this filesystem for both Hadoop client APIs */
   def register(conf: Configuration): Unit = {

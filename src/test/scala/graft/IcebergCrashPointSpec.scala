@@ -1,0 +1,104 @@
+package graft
+
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Path => JPath, Paths}
+
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
+import graft.sources.{IcebergScan, IcebergWrite}
+
+/** Iceberg commits are atomic under a crash at any metadata I/O step.
+  * The version hint is a lower bound: a commit whose hint rewrite never
+  * happened is still the table's current version, for readers and for
+  * the next writer alike. */
+class IcebergCrashPointSpec extends SparkSpec {
+  import spark.implicits._
+
+  CountingFileSystem.register(spark.sparkContext.hadoopConfiguration)
+
+  private def rows(ids: Seq[Long], v: String): DataFrame =
+    ids.map(i => (i, v)).toDF("id", "v").coalesce(1)
+
+  private def state(dir: String): Map[Long, String] =
+    IcebergScan.read(spark, dir).as[(Long, String)].collect().toMap
+
+  test("a version hint left behind by a crash is a lower bound") {
+    val dir = Files.createTempDirectory("graft_ice_hint").toString
+    IcebergWrite.create(spark, rows(1L to 3L, "a"), dir)
+    IcebergWrite.append(spark, rows(4L to 6L, "b"), dir)
+    // a crash between v2's conditional create and its hint rewrite
+    val hint = Paths.get(dir, "metadata", "version-hint.text")
+    Files.write(hint, "1".getBytes(StandardCharsets.UTF_8))
+    Files.deleteIfExists(Paths.get(dir, "metadata", ".version-hint.text.crc"))
+    assert(IcebergScan.read(spark, dir).count() == 6L, "the read must see version 2")
+    IcebergWrite.append(spark, rows(7L to 9L, "c"), dir)
+    assert(state(dir).keySet == (1L to 9L).toSet)
+    assert(new String(Files.readAllBytes(hint), StandardCharsets.UTF_8).trim == "3")
+    // a hint swap (delete, then rename) cut short leaves no hint at all
+    Files.delete(hint)
+    assert(IcebergScan.read(spark, dir).count() == 9L, "the read must see version 3")
+    IcebergWrite.append(spark, rows(10L to 12L, "d"), dir)
+    assert(state(dir).keySet == (1L to 12L).toSet)
+  }
+
+  test("a crash at any metadata create or rename leaves the before or the after state") {
+    val base = CountingFileSystem.tempDir("graft_ice_crash")
+    val baseDir = base + "/base"
+    IcebergWrite.create(spark, rows(0L until 20L, "a"), baseDir)
+    IcebergWrite.append(spark, rows(20L until 40L, "b"), baseDir)
+    val before = state(baseDir)
+    val localRoot = Paths.get(base.stripPrefix(s"${CountingFileSystem.Scheme}://"))
+    var copies = 0
+    // a fresh copy of the two-file base table (manifests hold relative paths)
+    def copyOfBase(): String = {
+      copies += 1
+      val src = localRoot.resolve("base")
+      val dst = localRoot.resolve(s"t$copies")
+      Files.walk(src).iterator().asScala.toSeq.foreach { p: JPath =>
+        Files.copy(p, dst.resolve(src.relativize(p).toString))
+      }
+      s"$base/t$copies"
+    }
+
+    val ops: Seq[(String, String => Unit, Map[Long, String])] = Seq(
+      ("append", d => IcebergWrite.append(spark, rows(100L until 105L, "n"), d),
+        before ++ (100L until 105L).map(_ -> "n")),
+      ("deleteWhere", d => IcebergWrite.deleteWhere(spark, d, col("id") < 5),
+        before -- (0L until 5L)),
+      ("updateWhere", d => IcebergWrite.updateWhere(spark, d, col("id") === 25L,
+        Seq("v" -> lit("u"))), before + (25L -> "u")),
+      ("merge", d => IcebergWrite.merge(spark, d,
+        Seq((30L, "m"), (200L, "m")).toDF("id", "v"), Seq("id")),
+        before + (30L -> "m") + (200L -> "m")),
+      ("compact", d => IcebergWrite.compact(spark, d, smallFileBytes = 1L << 30), before))
+
+    ops.foreach { case (name, op, after) =>
+      val clean = copyOfBase()
+      CountingFileSystem.failAt(0)
+      op(clean)
+      val n = CountingFileSystem.mutations.get()
+      assert(state(clean) == after, s"$name without a fault")
+      assert(n >= 4, s"$name made $n metadata mutations")
+      (1 to n).foreach { k =>
+        val d = copyOfBase()
+        CountingFileSystem.failAt(k)
+        try op(d) catch { case NonFatal(_) => () }
+        finally CountingFileSystem.failAt(0)
+        val got = state(d)
+        assert(got == before || got == after,
+          s"$name with a fault at metadata mutation $k of $n reads a torn state: $got")
+        if (got == before) {
+          op(d)
+          assert(state(d) == after, s"$name re-run after a fault at mutation $k of $n")
+        }
+        IcebergWrite.append(spark, rows(Seq(999L), "z"), d)
+        assert(state(d) == after + (999L -> "z"),
+          s"append after $name with a fault at mutation $k of $n")
+      }
+    }
+  }
+}
