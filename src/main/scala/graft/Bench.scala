@@ -204,7 +204,39 @@ object Bench {
     "q_join_cbo", "q_join_prune", "q_join_star", "q_meta_rewrite",
     "q_iceberg_catalog_commit", "q_delta_ndv", "q_join_cbo_delta")
 
+  // LINE-PRIORITY set (round 12): every query that rode the ROUND-11
+  // metric line stays on the line regardless of how cheap it gets —
+  // a round-over-round diff of the line reads a query that vanishes
+  // from the line as "dropped_from_bench", so an entry must never
+  // fall off just because an optimization made it fast (three did
+  // exactly that under plain by-time keeping). Same pinned-subset
+  // precedent as baseline16; the remaining budget fills with the
+  // most expensive of the rest. A name that is not a query fails the
+  // run at startup: it would pin nothing, silently.
+  private val linePriority: Set[String] = Set(
+    "q_window_rank", "q_dedup_exact", "q_dedup_minhash", "q_pipeline_clean",
+    "q_decontaminate", "q_text_lm", "q_dedup_semantic", "q_pipeline_prepare",
+    "q_profile_sketch", "q_asof_full", "q_tpch_q5", "q_text_lm_backoff",
+    "q_tpch_q7", "q_tpch_q8", "q_tpch_q11a", "q_tpch_q21a",
+    "q_ingest_neardup", "q_pipeline_crawl", "q_pagerank", "q_simjoin",
+    "q_rollup_incr", "q_harmonic", "q_mix_temperature", "q_token_shards",
+    "q_sessionize_batch", "q_pipeline_objectives", "q_jdbc_scan", "q_text_langid2",
+    "q_pipeline_multilingual", "q_embed_recall", "q_tpch_q2", "q_tpch_q21",
+    "q_iceberg_delete", "q_arrow_sharded", "q_avro_sharded", "q_tpch_q9",
+    "q_delta_merge", "q_iceberg_compact", "q_iceberg_merge", "q_iceberg_partitioned",
+    "q_iceberg_part_dml", "q_iceberg_rename", "q_delta_cdf", "q_iceberg_cdf",
+    "q_bucket_join", "q_delta_transform", "q_bucket_agg", "q_iceberg_spec_evolve",
+    "q_iceberg_sorted", "q_delta_cluster", "q_delta_rowtrack", "q_iceberg_dv",
+    "q_iceberg_stats", "q_iceberg_partstats", "q_meta_agg", "q_meta_partcount",
+    "q_delta_merge_evolve", "q_iceberg_merge_evolve", "q_delta_identity", "q_default_cols",
+    "q_delta_cdf_files", "q_delta_cdc_apply", "q_join_cbo", "q_join_prune",
+    "q_join_star", "q_meta_rewrite", "q_iceberg_catalog_commit", "q_delta_ndv",
+    "q_join_cbo_delta")
+
   def main(args: Array[String]): Unit = {
+    val unknown = linePriority.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty,
+      s"linePriority names queries SparkEntry.queries lacks: ${unknown.toSeq.sorted.mkString(", ")}")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // dev loop: SPARK_GRAFT_BENCH_ONLY=q_a,q_b times a subset
@@ -372,33 +404,6 @@ object Bench {
     // 2000-char tail minus sbt's "[success] Total time ..." trailer
     // (~76 chars) with a small margin
     val maxLine = 1890
-    // LINE-PRIORITY set (round 12): every query that rode the ROUND-11
-    // metric line stays on the line regardless of how cheap it gets —
-    // the driver's round-over-round diff reads a query that vanishes
-    // from the line as "dropped_from_bench", so an entry must never
-    // fall off just because an optimization made it fast (three did
-    // exactly that under plain by-time keeping). Same pinned-subset
-    // precedent as baseline16; the remaining budget fills with the
-    // most expensive of the rest.
-    val linePriority: Set[String] = Set(
-      "q_window_rank", "q_dedup_exact", "q_dedup_minhash", "q_pipeline_clean",
-      "q_decontaminate", "q_text_lm", "q_dedup_semantic", "q_pipeline_prepare",
-      "q_profile_sketch", "q_asof_full", "q_tpch_q5", "q_text_lm_backoff",
-      "q_tpch_q7", "q_tpch_q8", "q_tpch_q11a", "q_tpch_q21a",
-      "q_ingest_neardup", "q_pipeline_crawl", "q_pagerank", "q_simjoin",
-      "q_rollup_incr", "q_harmonic", "q_mix_temperature", "q_token_shards",
-      "q_sessionize_batch", "q_pipeline_objectives", "q_jdbc_scan", "q_text_langid2",
-      "q_pipeline_multilingual", "q_embed_recall", "q_tpch_q2", "q_tpch_q21",
-      "q_iceberg_delete", "q_arrow_sharded", "q_avro_sharded", "q_tpch_q9",
-      "q_delta_merge", "q_iceberg_compact", "q_iceberg_merge", "q_iceberg_partitioned",
-      "q_iceberg_part_dml", "q_iceberg_rename", "q_delta_cdf", "q_iceberg_cdf",
-      "q_bucket_join", "q_delta_transform", "q_bucket_agg", "q_iceberg_spec_evolve",
-      "q_iceberg_sorted", "q_delta_cluster", "q_delta_rowtrack", "q_iceberg_dv",
-      "q_iceberg_stats", "q_iceberg_partstats", "q_meta_agg", "q_meta_partcount",
-      "q_delta_merge_evolve", "q_iceberg_merge_evolve", "q_delta_identity", "q_default_cols",
-      "q_delta_cdf_files", "q_delta_cdc_apply", "q_join_cbo", "q_join_prune",
-      "q_join_star", "q_meta_rewrite", "q_iceberg_catalog_commit", "q_delta_ndv",
-      "q_join_cbo_delta")
     var kept = results
     while (line(kept, results.size - kept.size, 2).length > maxLine && kept.nonEmpty) {
       val (prio, rest) = kept.partition(r => linePriority(r._1))

@@ -32,8 +32,17 @@ import org.apache.hadoop.fs.{CreateFlag, FileContext, FileSystem, Options, Path}
   * Files go through the RAW `FileContext` (no client-side checksum
   * layer), so no `.crc` sidecar is produced; a STALE sidecar from a
   * pre-fix in-place write of the same path is deleted first, else a
-  * checksummed reader would verify the new bytes against the old sum. */
+  * checksummed reader would verify the new bytes against the old sum.
+  *
+  * On a filesystem without an atomic rename-if-absent (the local one)
+  * `FileContext` checks the target and then renames: two writers could
+  * both pass the check, and the later rename would silently replace
+  * the earlier commit. Conditional renames therefore run one at a time
+  * in the JVM, which makes them put-if-absent for writers sharing it —
+  * the same guarantee delta-spark's local log store gives. */
 private[graft] object AtomicFiles {
+
+  private val conditionalRename = new Object
 
   def publish(fs: FileSystem, file: Path, bytes: Array[Byte],
       overwrite: Boolean): Unit = {
@@ -53,7 +62,7 @@ private[graft] object AtomicFiles {
     catch { case _: java.io.IOException => () }
     try {
       if (overwrite) fc.rename(tmp, file, Options.Rename.OVERWRITE)
-      else fc.rename(tmp, file, Options.Rename.NONE)
+      else conditionalRename.synchronized(fc.rename(tmp, file, Options.Rename.NONE))
     } catch {
       case e: Throwable =>
         try fc.delete(tmp, false) catch { case _: java.io.IOException => () }

@@ -952,7 +952,6 @@ object DeltaScan {
     (fs, versions.sorted)
   }
 
-  /** `_last_checkpoint` → (version, parts), if present. */
   /** Current DOMAIN METADATA state (PROTOCOL §Domain Metadata): domain
     * → configuration for every domain whose latest action is not a
     * `removed` tombstone — checkpoint state first, JSON tail overrides
@@ -966,6 +965,22 @@ object DeltaScan {
     require(fs.exists(logDir), s"no Delta table at $tablePath")
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val cp = lastCheckpoint(spark, fs, logDir)
+    val from = cp.map(_._1 + 1).getOrElse(0L)
+    val tail = (from to latestVersion(spark, tablePath)).iterator
+      .map(v => new Path(logDir, f"$v%020d.json")).filter(fs.exists).map { p =>
+        val in = fs.open(p)
+        val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
+          finally in.close()
+        lines.map(mapper.readTree)
+      }
+    domainState(spark, fs, logDir, cp, tail)
+  }
+
+  /** [[domainMetadata]] from the checkpoint `cp` and the action lines
+    * of each JSON commit after it, in version order */
+  private[sources] def domainState(spark: SparkSession, fs: FileSystem, logDir: Path,
+      cp: Option[(Long, Option[Int])],
+      tail: Iterator[Seq[com.fasterxml.jackson.databind.JsonNode]]): Map[String, String] = {
     // (domain -> (configuration, removed)), oldest..newest application
     var state = Map.empty[String, (String, Boolean)]
     cp.foreach { case (v, parts) =>
@@ -988,29 +1003,23 @@ object DeltaScan {
               !r.isNullAt(2) && r.getBoolean(2))
         }
     }
-    val from = cp.map(_._1 + 1).getOrElse(0L)
-    val to = latestVersion(spark, tablePath)
-    (from to to).foreach { v =>
-      val p = new Path(logDir, f"$v%020d.json")
-      if (fs.exists(p)) {
-        val in = fs.open(p)
-        val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-          finally in.close()
-        lines.map(mapper.readTree).filter(_.has("domainMetadata")).foreach { n =>
-          val d = n.get("domainMetadata")
-          state += d.get("domain").asText() ->
-            (Option(d.get("configuration")).map(_.asText()).getOrElse(""),
-              Option(d.get("removed")).exists(_.asBoolean(false)))
-        }
-      }
-    }
+    tail.foreach(_.filter(_.has("domainMetadata")).foreach { n =>
+      val d = n.get("domainMetadata")
+      state += d.get("domain").asText() ->
+        (Option(d.get("configuration")).map(_.asText()).getOrElse(""),
+          Option(d.get("removed")).exists(_.asBoolean(false)))
+    })
     state.collect { case (k, (cfg, false)) => k -> cfg }
   }
 
   /** the table's clustering columns (PHYSICAL names, top-level) from
     * the `delta.clustering` domain — empty when not a clustered table */
   def clusteringColumns(spark: SparkSession, tablePath: String): Seq[String] =
-    domainMetadata(spark, tablePath).get("delta.clustering").toSeq.flatMap { cfg =>
+    clusteringColumns(domainMetadata(spark, tablePath))
+
+  /** the clustering columns named by a [[domainMetadata]] state */
+  private[sources] def clusteringColumns(domains: Map[String, String]): Seq[String] =
+    domains.get("delta.clustering").toSeq.flatMap { cfg =>
       if (cfg.isEmpty) Seq.empty
       else {
         val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(cfg)
@@ -1022,6 +1031,7 @@ object DeltaScan {
       }
     }
 
+  /** `_last_checkpoint` → (version, parts), if present. */
   private[sources] def lastCheckpoint(
       spark: SparkSession, fs: FileSystem, logDir: Path): Option[(Long, Option[Int])] = {
     val p = new Path(logDir, "_last_checkpoint")

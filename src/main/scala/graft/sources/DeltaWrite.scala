@@ -10,7 +10,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 
-import LakeSupport.{footerRows, jstr, mapper, parMap, MaxCommitRetries}
+import LakeSupport.{footerRows, jstr, mapper, parMap, readFooter, MaxCommitRetries}
 
 /** Minimal dependency-free Delta Lake WRITER — the sink half of the
   * built-in lakehouse support (reader: [[DeltaScan]]). Writes the
@@ -50,11 +50,10 @@ object DeltaWrite {
     * Iceberg-only (its spec hash is not SQL-expressible) — refused. */
   def create(spark: SparkSession, df: DataFrame, tablePath: String,
       partitionBy: Seq[String] = Nil): Unit = {
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(!fs.exists(new Path(tablePath, "_delta_log")),
-      s"Delta log already exists at $tablePath — use append")
+    val view = new LogView(spark, tablePath)
+    require(!view.exists, s"Delta log already exists at $tablePath — use append")
     val (ddf, parts) = withGenerated(df, partitionBy)
-    commit(spark, fs, ddf, tablePath, parts, version = 0L)
+    commitData(view, ddf, parts, createHeader(ddf, parts), at = Some(0L))
   }
 
   /** transform `partitionBy` entries → generated columns appended to
@@ -152,7 +151,6 @@ object DeltaWrite {
   def append(spark: SparkSession, df: DataFrame, tablePath: String,
       partitionBy: Seq[String] = Nil): Unit = {
     val view = new LogView(spark, tablePath)
-    val fs = view.fs
     val md = view.meta
     val declared = md.map(_.schema)
     val dfd = fillColumnDefaults(declared, df)
@@ -171,9 +169,7 @@ object DeltaWrite {
               .withMetadata(g.metadata).putLong(IdHwmKey, newHwm).build())
           else g))
         val metaAction = metaDataJson(md.get.node, newSchema, md.get.partCols, md.get.config)
-        val v = DeltaScan.latestVersion(spark, tablePath) + 1
-        try commit(spark, fs, ddf, tablePath, parts, version = v,
-          metaOverride = Some(metaAction))
+        try commitData(view, ddf, parts, Seq(metaAction))
         finally release()
       case Some((f, _, _, _, allow)) if !allow =>
         throw new IllegalArgumentException(
@@ -183,8 +179,7 @@ object DeltaWrite {
       case _ => // explicit insert allowed, or no identity column
         val (ddf, parts) = deriveGenerated(md, dfd, partitionBy)
         validateAgainstMeta(md, ddf, parts)
-        val v = DeltaScan.latestVersion(spark, tablePath) + 1
-        commit(spark, fs, ddf, tablePath, parts, version = v, meta = md)
+        commitData(view, ddf, parts)
     }
   }
 
@@ -264,9 +259,8 @@ object DeltaWrite {
     require(step != 0L, "identity step must be nonzero")
     require(!df.columns.contains(idCol),
       s"the frame already has '$idCol' — identity values are generated, not provided")
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(!fs.exists(new Path(tablePath, "_delta_log")),
-      s"Delta log already exists at $tablePath — use append")
+    val view = new LogView(spark, tablePath)
+    require(!view.exists, s"Delta log already exists at $tablePath — use append")
     val (ddf0, parts) = withGenerated(df, partitionBy)
     val (ddf, _, release) = assignIdentity(spark, ddf0, idCol, start, step,
       prevHwm = scala.None, allow = allowExplicitInsert)
@@ -276,8 +270,7 @@ object DeltaWrite {
     // without the feature gate, letting a non-identity-aware writer
     // that wins commit 1 append without maintaining the water mark
     val pact = featureProtocolAction(scala.None, Seq("identityColumns"))
-    try commit(spark, fs, ddf, tablePath, parts, version = 0L,
-      protocol0 = pact.headOption)
+    try commitData(view, ddf, parts, createHeader(ddf, parts, pact.headOption), at = Some(0L))
     finally release()
   }
 
@@ -323,11 +316,9 @@ object DeltaWrite {
       else lit(null).cast(f.dataType).as(f.name)
     }.toSeq: _*)
     val metaAction =
-      if (newFields.isEmpty) scala.None
-      else Some(metaDataJson(md.node, merged, partitionBy1, newConfig))
-    val v = DeltaScan.latestVersion(spark, tablePath) + 1
-    commit(spark, view.fs, aligned, tablePath, partitionBy1, version = v,
-      metaOverride = metaAction, meta = Some(md))
+      if (newFields.isEmpty) Seq.empty
+      else Seq(metaDataJson(md.node, merged, partitionBy1, newConfig))
+    commitData(view, aligned, partitionBy1, metaAction)
   }
 
   private val EvolveTruncated = " — cannot evolve a checkpoint-truncated table"
@@ -395,10 +386,8 @@ object DeltaWrite {
   private def commitMetaData(view: LogView, md: Meta, operation: String)(
       protocol: Seq[String] = Nil, schema: StructType = md.schema,
       config: Map[String, String] = md.config): Unit =
-    writeCommitFile(view.fs, view.root,
-      DeltaScan.latestVersion(view.spark, view.root.toString) + 1,
-      protocol :+ metaDataJson(md.node, schema, md.partCols, config),
-      operation = Some(operation))
+    commitLog(view, Some(operation),
+      protocol :+ metaDataJson(md.node, schema, md.partCols, config))
 
   /** fill declared columns the caller omitted that carry a
     * CURRENT_DEFAULT, in declared order (extras ride at the end for
@@ -488,10 +477,9 @@ object DeltaWrite {
     val view = new LogView(spark, sourcePath)
     val fs = view.fs
     requireNoRowTracking(view, "cloneShallow")
-    require(!fs.exists(new Path(targetPath, "_delta_log")),
-      s"Delta log already exists at $targetPath")
+    val target = new LogView(spark, targetPath)
+    require(!target.exists, s"Delta log already exists at $targetPath")
     val sourceRoot = view.root
-    val targetRoot = fs.makeQualified(new Path(targetPath))
     val latestAdds = view.latestAdds
     require(latestAdds.nonEmpty, s"no live files to clone at $sourcePath")
     val md = view.jsonMetaOr(" — cannot clone").node
@@ -501,22 +489,20 @@ object DeltaWrite {
     mdClone.put("createdTime", System.currentTimeMillis())
     val protoLine = proto.map(p => s"""{"protocol":${p.toString}}""").getOrElse(
       """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""")
-    val addLines = latestAdds.toSeq.sortBy(_._1).map { case (rel, add) =>
+    val adds = latestAdds.toSeq.sortBy(_._1).map { case (rel, add) =>
       require(add.get("deletionVector") == null || add.get("deletionVector").isNull,
         s"source file $rel carries a deletion vector — DV descriptors are " +
           "source-root-relative; compact the source first, then clone")
-      val a = add.deepCopy().asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+      val a = add.deepCopy[ObjectNode]()
       // absolute paths go through the SAME percent-encoding as relative
       // adds: the reader percent-decodes every action path, so a raw
       // source path containing a literal '%' (hive-escaped partition
       // dirs) would decode to a DIFFERENT on-disk name and 404
       a.put("path", encodePath(fs.makeQualified(new Path(sourceRoot, rel)).toString))
-      a.put("dataChange", true)
-      s"""{"add":${a.toString}}"""
+      Carried(a)
     }
-    writeCommitFile(fs, targetRoot, 0,
-      protoLine +: s"""{"metaData":${mdClone.toString}}""" +: addLines,
-      operation = Some("CLONE"))
+    commitLog(target, Some("CLONE"),
+      Seq(protoLine, s"""{"metaData":${mdClone.toString}}"""), adds, at = Some(0L))
   }
 
   /** ADD a CHECK CONSTRAINT (the protocol's `delta.constraints.<name>`
@@ -590,18 +576,11 @@ object DeltaWrite {
   /** stage `changes` (the table schema + `_change_type`) as parquet
     * under `_change_data/` (partitioned like the data) and return the
     * commit's `cdc` action lines — `dataChange=false` per protocol */
-  private def stageCdcFiles(spark: SparkSession, fs: FileSystem, root: Path,
-      schema: StructType, partCols: Seq[String],
-      changes: DataFrame): Seq[String] = {
+  private def stageCdcFiles(view: LogView, schema: StructType,
+      partCols: Seq[String], changes: DataFrame): Seq[String] = {
     import org.apache.spark.sql.functions.col
-    val staged = writeStaged(fs, root, destPrefix = "_change_data") { staging =>
-      val ordered = changes.select(
-        (schema.fieldNames.map(col) :+ col("_change_type")).toSeq: _*)
-      val clustered = WriteLayout.clusterByPartitions(spark, ordered, partCols)
-      val w = clustered.write.mode("append")
-      (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w).parquet(staging)
-    }
-    staged.map { case (rel, size) =>
+    val ordered = changes.select((schema.fieldNames.map(col) :+ col("_change_type")).toSeq: _*)
+    writeTable(view, ordered, scala.None, partCols, destPrefix = "_change_data").map { case (rel, size) =>
       s"""{"cdc":{"path":${jstr(encodePath(rel))},"partitionValues":{${partitionValuesJson(rel)}},"size":$size,"dataChange":false}}"""
     }
   }
@@ -659,8 +638,7 @@ object DeltaWrite {
     }
     val action =
       if (cols.isEmpty) {
-        require(DeltaScan.domainMetadata(spark, tablePath)
-            .contains(ClusteringDomain),
+        require(view.domains.contains(ClusteringDomain),
           s"no clustering columns set at $tablePath — nothing to remove")
         s"""{"domainMetadata":{"domain":${jstr(ClusteringDomain)},""" +
           s""""configuration":"","removed":true}}"""
@@ -676,10 +654,8 @@ object DeltaWrite {
         s"""{"domainMetadata":{"domain":${jstr(ClusteringDomain)},""" +
           s""""configuration":${jstr(cfg)},"removed":false}}"""
       }
-    val v = DeltaScan.latestVersion(spark, tablePath) + 1
-    writeCommitFile(view.fs, view.root, v,
-      featureProtocolAction(view.protocol, Seq("clustering", "domainMetadata")) :+ action,
-      operation = Some(if (cols.isEmpty) "DROP CLUSTER BY" else "CLUSTER BY"))
+    commitLog(view, Some(if (cols.isEmpty) "DROP CLUSTER BY" else "CLUSTER BY"),
+      featureProtocolAction(view.protocol, Seq("clustering", "domainMetadata")) :+ action)
   }
 
   private[sources] val ClusteringDomain = "delta.clustering"
@@ -698,9 +674,8 @@ object DeltaWrite {
     val action =
       s"""{"domainMetadata":{"domain":${jstr(domain)},""" +
         s""""configuration":${jstr(configuration)},"removed":false}}"""
-    writeCommitFile(view.fs, view.root, version,
-      featureProtocolAction(view.protocol, Seq("domainMetadata")) :+ action,
-      operation = Some(operation))
+    commitLog(view, Some(operation),
+      featureProtocolAction(view.protocol, Seq("domainMetadata")) :+ action, at = Some(version))
   }
 
   /** legacy minWriterVersion → the writer features it implies — when a
@@ -898,7 +873,23 @@ object DeltaWrite {
         .map(_.asLong()).getOrElse(System.currentTimeMillis())}}}"""
   }
 
-
+  /** commit 0's protocol (`protocol`, else reader 1 / writer 2) and
+    * metaData (fresh id, `df`'s schema) for a table created from `df` */
+  private def createHeader(df: DataFrame, partitionBy: Seq[String],
+      protocol: Option[String] = scala.None): Seq[String] = {
+    // generated-column tables record the timezone their generation
+    // expressions were evaluated under (graft pins UTC in every
+    // entry point): readers may derive source-column bounds from a
+    // partition VALUE only when the write TZ is known — CAST(ts AS
+    // DATE)/year(ts) are session-TZ-dependent on TimestampType, so
+    // a foreign table without this property must not source-prune
+    // those shapes ([[DeltaScan]] checks it)
+    val cfg =
+      if (DeltaTransforms.generatedFields(df.schema).isEmpty) Map.empty[String, String]
+      else Map(DeltaTransforms.WriteTimezoneKey -> "UTC")
+    Seq(protocol.getOrElse("""{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}"""),
+      metaDataJson(mapper.createObjectNode(), df.schema, partitionBy, cfg))
+  }
 
   /** [[create]]/[[append]] carrying a `txn` action (the public
     * protocol's application transaction identifier): the commit records
@@ -909,12 +900,11 @@ object DeltaWrite {
     * skipped instead of double-appended). */
   def createWithTxn(spark: SparkSession, df: DataFrame, tablePath: String,
       appId: String, txnVersion: Long, partitionBy: Seq[String] = Nil): Unit = {
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(!fs.exists(new Path(tablePath, "_delta_log")),
-      s"Delta log already exists at $tablePath — use appendWithTxn")
+    val view = new LogView(spark, tablePath)
+    require(!view.exists, s"Delta log already exists at $tablePath — use appendWithTxn")
     val (ddf, parts) = withGenerated(df, partitionBy)
-    commit(spark, fs, ddf, tablePath, parts, version = 0L,
-      txn = Some((appId, txnVersion)))
+    commitData(view, ddf, parts, createHeader(ddf, parts),
+      txn = Some((appId, txnVersion)), at = Some(0L))
   }
 
   /** see [[createWithTxn]] */
@@ -924,9 +914,7 @@ object DeltaWrite {
     val md = view.meta
     val (ddf, parts) = deriveGenerated(md, fillColumnDefaults(md.map(_.schema), df), partitionBy)
     validateAgainstMeta(md, ddf, parts)
-    val v = DeltaScan.latestVersion(spark, tablePath) + 1
-    commit(spark, view.fs, ddf, tablePath, parts, version = v,
-      txn = Some((appId, txnVersion)), meta = md)
+    commitData(view, ddf, parts, txn = Some((appId, txnVersion)))
   }
 
   /** Highest `txn` version committed for `appId`, from the JSON tail
@@ -1159,9 +1147,10 @@ object DeltaWrite {
         val newReader = (readerFeats ++ legacy :+ "v2Checkpoint").distinct.sorted
         val newWriter = (writerFeats ++ legacy :+ "v2Checkpoint").distinct.sorted
         def arr(xs: Seq[String]) = xs.map(jstr).mkString("[", ",", "]")
-        writeCommitFile(fs, fs.makeQualified(new Path(tablePath)), version + 1,
+        commitLog(new LogView(spark, tablePath), operation = scala.None,
           Seq(s"""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,""" +
-            s""""readerFeatures":${arr(newReader)},"writerFeatures":${arr(newWriter)}}}"""))
+            s""""readerFeatures":${arr(newReader)},"writerFeatures":${arr(newWriter)}}}"""),
+          at = Some(version + 1))
         return checkpointImpl(spark, tablePath, v2) // feature present now
       }
     }
@@ -1282,127 +1271,54 @@ object DeltaWrite {
     * log version — what a racing writer with a stale view of the log
     * does right before it loses the race */
   private[graft] def appendAt(spark: SparkSession, df: DataFrame,
-      tablePath: String, version: Long): Unit = {
-    val view = new LogView(spark, tablePath)
-    commit(spark, view.fs, df, tablePath, Nil, version, meta = view.meta)
+      tablePath: String, version: Long): Unit =
+    commitData(new LogView(spark, tablePath), df, Nil, at = Some(version))
+
+  /** the create/append family's commit: CHECK constraints and declared
+    * NOT NULL gate the frame BEFORE any file is staged (one limit-1
+    * early-exit pass per constraint; the null check is FREE when the
+    * frame's own schema already proves non-nullability), then one
+    * table-layout write and one commit of its files. The governing
+    * metaData is the one this commit re-declares (appendEvolve, an
+    * identity water mark), else the table's latest; a create (version
+    * 0) has none. The version is fixed before the write, over the
+    * snapshot the caller planned from. */
+  private def commitData(view: LogView, df: DataFrame, partitionBy: Seq[String],
+      actions: Seq[String] = Nil, txn: Option[(String, Long)] = scala.None,
+      at: Option[Long] = scala.None): Unit = {
+    val version = at.getOrElse(view.version + 1)
+    val governing =
+      if (version == 0L) scala.None else actionMeta(actions).orElse(view.meta)
+    governing.foreach { md =>
+      enforceConstraints(df, md.config)
+      enforceRequired(df, md.schema)
+    }
+    val added = writeTable(view, df, governing, partitionBy)
+    require(added.nonEmpty, "write produced no data files (empty input?)")
+    commitLog(view, Some(if (version == 0L) "CREATE TABLE AS SELECT" else "WRITE"),
+      actions, added.map(Staged.tupled), txn = txn, at = Some(version))
   }
 
-  private def commit(spark: SparkSession, fs: FileSystem, df: DataFrame,
-      tablePath: String, partitionBy: Seq[String], version: Long,
-      txn: Option[(String, Long)] = None,
-      metaOverride: Option[String] = None,
-      meta: Option[Meta] = None,
-      protocol0: Option[String] = None): Unit = {
-    val root = fs.makeQualified(new Path(tablePath))
-    // COLUMN-MAPPED tables store PHYSICAL column names in parquet (and
-    // physical hive partition dirs); `df` arrives logical, validated
-    // against the logical schema — project right before the write. The
-    // governing metaData is the override when this commit re-declares
-    // it (appendEvolve), else the table's latest (`meta`, read by the
-    // caller's planning view).
-    val (wdf, wparts) = {
-      val governing =
-        if (version == 0L) scala.None
-        else metaOverride.map(j => Meta(mapper.readTree(j).get("metaData"))).orElse(meta)
-      // CHECK constraints + declared NOT NULL gate every logical write
-      // BEFORE any file is staged (one limit-1 early-exit pass per
-      // constraint; the null check is FREE when the incoming frame's
-      // own schema already proves non-nullability)
-      governing.foreach { md =>
-        enforceConstraints(df, md.config)
-        enforceRequired(df, md.schema)
-      }
-      governing.filter(_.mapped) match {
-        case scala.None => (df, partitionBy)
-        case Some(md) =>
-          import org.apache.spark.sql.functions.col
-          val declared = md.schema
-          val proj = declared.fields.map(f =>
-            col(f.name).cast(DeltaScan.physicalType(f.dataType))
-              .as(DeltaScan.physicalName(f))).toSeq
-          (df.select(proj: _*),
-            partitionBy.map(p => DeltaScan.physicalName(declared(p))))
-      }
+  /** the table-layout data write, STAGE-then-MOVE ([[writeStaged]]):
+    * `df`'s logical columns projected to `md`'s on-disk ones (COLUMN-
+    * MAPPED tables store PHYSICAL names in parquet and in the hive
+    * partition dirs; no `md` writes `df` as-is), CLUSTERED by the
+    * partition columns first — one hash shuffle puts each partition
+    * tuple in exactly one task, so files = touched partitions instead
+    * of tasks x partitions (the small-file explosion measured at sf1 on
+    * the generated layout) — and hive-partitioned under `destPrefix` */
+  private def writeTable(view: LogView, df: DataFrame, md: Option[Meta],
+      partCols: Seq[String], destPrefix: String = ""): Seq[(String, Long)] = {
+    val (wdf, wparts) = md match {
+      case scala.None => (df, partCols)
+      case Some(m) =>
+        (df.select(toPhysical(m.schema, m.mapped, m.schema.fieldNames.toSeq): _*),
+          partCols.map(p => if (m.mapped) DeltaScan.physicalName(m.schema(p)) else p))
     }
-    // STAGE-then-MOVE: the add list is EXACTLY the files this writer
-    // moved (see writeStaged) — never a directory-listing diff that
-    // could cross-claim a concurrent writer's in-flight files.
-    // Partitioned writes CLUSTER by the partition columns first: one
-    // hash shuffle puts each partition tuple in exactly one task, so
-    // files = touched partitions instead of tasks x partitions (the
-    // small-file explosion measured at sf1 on the generated layout).
-    val added = writeStaged(fs, root, destPrefix = "") { staging =>
-      val clustered = WriteLayout.clusterByPartitions(spark, wdf, wparts)
-      val writer = clustered.write.mode("append")
-      (if (wparts.nonEmpty) writer.partitionBy(wparts: _*) else writer)
-        .parquet(staging)
+    writeStaged(view.fs, view.root, destPrefix) { staging =>
+      val w = WriteLayout.clusterByPartitions(view.spark, wdf, wparts).write.mode("append")
+      (if (wparts.nonEmpty) w.partitionBy(wparts: _*) else w).parquet(staging)
     }
-    require(added.nonEmpty, "write produced no data files (empty input?)")
-
-    val now = System.currentTimeMillis()
-    val conf = spark.sparkContext.hadoopConfiguration
-    // footer stats read in bounded parallel — a partitioned write can
-    // emit thousands of files and a sequential footer walk is a
-    // single-core commit bottleneck (16 concurrent metadata reads)
-    val adds = parMap(added) { case (rel, size) =>
-      // partition values from the hive path segments col=value
-      val pv = rel.split('/').dropRight(1).collect {
-        case seg if seg.contains('=') =>
-          val Array(k, v) = seg.split("=", 2)
-          s"${jstr(k)}:${jstr(hiveUnescape(v))}"
-      }.mkString(",")
-      // per-file stats from the parquet FOOTER (metadata-only read) —
-      // the data-skipping index DeltaScan prunes with
-      val stats = ParquetStats.statsJson(conf, new Path(root, rel))
-        .map(s => s""","stats":${jstr(s)}""").getOrElse("")
-      s"""{"add":{"path":${jstr(encodePath(rel))},"partitionValues":{$pv},"size":$size,"modificationTime":$now,"dataChange":true$stats}}"""
-    }
-    val header =
-      if (version == 0L) {
-        val schemaJson = df.schema.json // already a JSON document
-        val pcols = partitionBy.map(jstr).mkString(",")
-        // generated-column tables record the timezone their generation
-        // expressions were evaluated under (graft pins UTC in every
-        // entry point): readers may derive source-column bounds from a
-        // partition VALUE only when the write TZ is known — CAST(ts AS
-        // DATE)/year(ts) are session-TZ-dependent on TimestampType, so
-        // a foreign table without this property must not source-prune
-        // those shapes ([[DeltaScan]] checks it)
-        val cfg =
-          if (DeltaTransforms.generatedFields(df.schema).nonEmpty)
-            s"""${jstr(DeltaTransforms.WriteTimezoneKey)}:${jstr("UTC")}"""
-          else ""
-        Seq(
-          protocol0.getOrElse(
-            """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}"""),
-          s"""{"metaData":{"id":${jstr(java.util.UUID.randomUUID().toString)},""" +
-            s""""format":{"provider":"parquet","options":{}},""" +
-            s""""schemaString":${jstr(schemaJson)},""" +
-            s""""partitionColumns":[$pcols],"configuration":{$cfg},"createdTime":$now}}""")
-      } else metaOverride.toSeq // an evolved-schema commit re-declares metaData
-    val logDir = new Path(root, "_delta_log")
-    fs.mkdirs(logDir)
-    val commitFile = new Path(logDir, f"$version%020d.json")
-    val txnLines = txn.toSeq.map { case (app, v) =>
-      s"""{"txn":{"appId":${jstr(app)},"version":$v,"lastUpdated":$now}}"""
-    }
-    val ci = s"""{"commitInfo":{"timestamp":$now,"operation":${jstr(
-      if (version == 0L) "CREATE TABLE AS SELECT" else "WRITE")}}}"""
-    // conditional commit via content-atomic rename ([[AtomicFiles]]):
-    // of two writers racing to the same log version the second fails
-    // loudly here, and a concurrent reader can never observe a torn
-    // commit file. Row-tracked tables stamp baseRowIds first.
-    val lines = stampRowTracking(fs, root, version, header ++ txnLines ++ adds)
-    try AtomicFiles.publishUtf8(fs, commitFile,
-      (ci +: lines).mkString("", "\n", "\n"),
-      overwrite = false)
-    catch {
-      case e: java.io.IOException =>
-        throw new java.util.ConcurrentModificationException(
-          s"concurrent Delta commit detected: $commitFile already exists — " +
-            "another writer committed this version; re-read the table and retry", e)
-    }
-    maybeAutoCheckpoint(spark, fs, root, version)
   }
 
   /** RESTORE the table to `toVersion` as a NEW commit (the RESTORE
@@ -1423,19 +1339,17 @@ object DeltaWrite {
     val cur = view.version
     require(toVersion >= 0 && toVersion <= cur,
       s"version $toVersion out of range 0..$cur for $tablePath")
-    def liveAt(v: Long): Set[String] = view.replay(v).live.toSet
-    val target = liveAt(toVersion)
-    val now = liveAt(cur)
-    val toAdd = (target -- now).toSeq.sorted
-    val toRemove = (now -- target).toSeq.sorted
+    // each file live at toVersion, carried as its add there records it
+    val target = view.replay(toVersion).latest.collect { case (rel, Some(add), _, _) => rel -> add }.toMap
+    val now = view.replay(cur).live.toSet
+    val toAdd = (target.keySet -- now).toSeq.sorted
+    val toRemove = (now -- target.keySet).toSeq.sorted
     if (toAdd.isEmpty && toRemove.isEmpty) return (0, 0)
     toAdd.foreach { rel =>
       require(fs.exists(new Path(root, rel)),
         s"cannot restore $tablePath to version $toVersion: data file $rel " +
           "was already vacuumed from disk")
     }
-    val conf = spark.sparkContext.hadoopConfiguration
-    val nowMs = System.currentTimeMillis()
     // RESTORE also restores the SCHEMA (delta-spark semantics): when
     // the metaData in force at toVersion differs from the current one
     // (appendEvolve in between), the restore commit re-declares it
@@ -1444,16 +1358,8 @@ object DeltaWrite {
       case (Some(old), Some(curMeta)) if old != curMeta => Seq(s"""{"metaData":$old}""")
       case _ => Seq.empty
     }
-    val actions = metaAction ++
-      toAdd.map { rel =>
-        val p = new Path(root, rel)
-        val stats = ParquetStats.statsJson(conf, p)
-          .map(s => s""","stats":${jstr(s)}""").getOrElse("")
-        s"""{"add":{"path":${jstr(encodePath(rel))},"partitionValues":{${partitionValuesJson(rel)}},"size":${fs.getFileStatus(p).getLen},"modificationTime":$nowMs,"dataChange":true$stats}}"""
-      } ++ toRemove.map { rel =>
-        s"""{"remove":{"path":${jstr(encodePath(rel))},"deletionTimestamp":$nowMs,"dataChange":true}}"""
-      }
-    writeCommitFile(fs, root, cur + 1, actions, operation = Some("RESTORE"))
+    commitLog(view, Some("RESTORE"), metaAction,
+      toAdd.map(rel => Carried(target(rel))) ++ toRemove.map(Removed))
     (toAdd.size, toRemove.size)
   }
 
@@ -1500,7 +1406,7 @@ object DeltaWrite {
     // the raw-parquet read returns them for mapped tables too. Columns
     // missing from the files (post-drop metadata) fall back to the
     // plain repartition rather than failing maintenance.
-    val cluster = DeltaScan.clusteringColumns(spark, tablePath)
+    val cluster = DeltaScan.clusteringColumns(view.domains)
     // ROW-TRACKED tables: a compaction MOVES rows, so the rewrite
     // MATERIALIZES each row's id/commit-version into the hidden
     // materialized columns (coalesced over any value an earlier
@@ -1564,21 +1470,12 @@ object DeltaWrite {
       }
     }
     require(added.nonEmpty, "compaction rewrite produced no files")
-
-    val now = System.currentTimeMillis()
-    val conf = spark.sparkContext.hadoopConfiguration
-    val actions =
-      added.map { case (rel, size) =>
-        val stats = ParquetStats.statsJson(conf, new Path(root, rel))
-          .map(s => s""","stats":${jstr(s)}""").getOrElse("")
-        s"""{"add":{"path":${jstr(encodePath(rel))},"partitionValues":{${partitionValuesJson(rel)}},"size":$size,"modificationTime":$now,"dataChange":false$stats}}"""
-      } ++ groups.values.flatten.toSeq.sorted.map { rel =>
-        s"""{"remove":{"path":${jstr(encodePath(rel))},"deletionTimestamp":$now,"dataChange":false}}"""
-      }
+    val removed = groups.values.flatten.toSeq.sorted
     // reads only the named small files — concurrent appends commute
-    commitWithRetry(spark, fs, root, actions, Some("OPTIMIZE"),
-      CommitScope("OPTIMIZE", readV, groups.values.flatten.toSet,
-        readsWholeTable = false, pred = scala.None))
+    commitLog(view, Some("OPTIMIZE"),
+      files = added.map(Staged.tupled) ++ removed.map(Removed), dataChange = false,
+      scope = Some(CommitScope("OPTIMIZE", readV, removed.toSet,
+        readsWholeTable = false, pred = scala.None)))
   }
 
   // ---- row-level DELETE / MERGE (copy-on-write) -----------------------
@@ -1614,9 +1511,12 @@ object DeltaWrite {
     * listed once and each commit JSON parsed at most once, on first
     * use. It answers what an operation plans from — the latest
     * metaData and protocol (JSON tail newest-first, then the
-    * checkpoint) and the full-history per-path replay. A view is built
-    * per operation and never kept; commit attempts read fresh state. */
-  private final class LogView(val spark: SparkSession, val tablePath: String) {
+    * checkpoint), the metadata domains and the full-history per-path
+    * replay. A view is built per operation and never kept across
+    * operations; a retrying commit [[advance]]s it. */
+  private final class LogView(val spark: SparkSession, val tablePath: String,
+      parsed: scala.collection.mutable.Map[Long, Seq[JsonNode]] =
+        scala.collection.mutable.Map.empty[Long, Seq[JsonNode]]) {
     val fs: FileSystem =
       new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val root: Path = fs.makeQualified(new Path(tablePath))
@@ -1629,7 +1529,10 @@ object DeltaWrite {
         .collect { case n if n.matches("\\d{20}\\.json") => n.stripSuffix(".json").toLong }
         .sorted
     private val present = jsonVersions.toSet
-    private val parsed = scala.collection.mutable.Map.empty[Long, Seq[JsonNode]]
+
+    /** this log re-listed: commits the view already parsed are reused
+      * (a committed JSON is immutable), newer ones parse on first use */
+    def advance(): LogView = new LogView(spark, tablePath, parsed)
 
     /** commit `v`'s action lines */
     def commit(v: Long): Seq[JsonNode] = parsed.getOrElseUpdate(v, {
@@ -1689,6 +1592,15 @@ object DeltaWrite {
       newestInJson("protocol").orElse(fromCheckpoint("protocol", "minReaderVersion"))
         .map(_.asInstanceOf[ObjectNode])
 
+    /** live metadata domains → configuration (the checkpoint's, then
+      * the JSON commits after it; [[DeltaScan.domainMetadata]]'s rule) */
+    lazy val domains: Map[String, String] = {
+      require(exists, s"no Delta table at $tablePath")
+      val cpV = lastCheckpoint.map(_._1).getOrElse(-1L)
+      DeltaScan.domainState(spark, fs, logDir, lastCheckpoint,
+        jsonVersions.iterator.filter(_ > cpV).map(commit))
+    }
+
     /** the metaData in force at version `v` (JSON commits only) */
     def metaAt(v: Long): Option[JsonNode] = newestInJson("metaData", v)
 
@@ -1724,13 +1636,13 @@ object DeltaWrite {
             val add = node.get("add").asInstanceOf[ObjectNode]
             val rp = add.get("path").asText()
             raw += rp
-            latest(decodePath(rp)) = (Some(add), v, 0L)
+            latest(DeltaScan.percentDecode(rp)) = (Some(add), v, 0L)
           } else if (node.has("remove")) {
             val r = node.get("remove")
             val rp = r.get("path").asText()
             raw += rp
             val ts = Option(r.get("deletionTimestamp")).map(_.asLong()).getOrElse(0L)
-            latest(decodePath(rp)) = (scala.None, v, ts)
+            latest(DeltaScan.percentDecode(rp)) = (scala.None, v, ts)
           }
         }
       }
@@ -1832,50 +1744,6 @@ object DeltaWrite {
     }
   }
 
-  /** shared rewrite-commit tail: drop zero-row staged files (a victim
-    * file whose every row died leaves an empty part), log adds with
-    * footer stats + removes, one conditional commit */
-  private def commitRewrite(spark: SparkSession, fs: FileSystem, root: Path,
-      added: Seq[(String, Long)], removedRels: Seq[String],
-      txn: Option[(String, Long)] = None,
-      operation: Option[String] = scala.None,
-      scope: Option[CommitScope] = scala.None,
-      extraActions: Seq[String] = Nil): Unit = {
-    val now = System.currentTimeMillis()
-    val actions =
-      stagedAddLines(spark, fs, root, added) ++ removedRels.map { rel =>
-        s"""{"remove":{"path":${jstr(encodePath(rel))},"deletionTimestamp":$now,"dataChange":true}}"""
-      } ++ extraActions
-    val txnLines = txn.toSeq.map { case (app, tv) =>
-      s"""{"txn":{"appId":${jstr(app)},"version":$tv,"lastUpdated":$now}}"""
-    }
-    scope match {
-      case Some(s) => commitWithRetry(spark, fs, root, txnLines ++ actions, operation, s)
-      case None =>
-        val v = DeltaScan.latestVersion(spark, root.toString) + 1
-        writeCommitFile(fs, root, v, txnLines ++ actions, operation = operation)
-    }
-  }
-
-  /** add-action lines for freshly staged files: zero-row parts dropped
-    * (a victim file whose every row died leaves an empty part), footer
-    * stats attached — shared by [[commitRewrite]] and the DV DMLs */
-  private def stagedAddLines(spark: SparkSession, fs: FileSystem, root: Path,
-      added: Seq[(String, Long)]): Seq[String] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val counted = parMap(added) { case (rel, size) =>
-      (rel, size, footerRows(conf, new Path(root, rel)) > 0L)
-    }
-    val (kept, empty) = counted.partition(_._3)
-    empty.foreach { case (rel, _, _) => fs.delete(new Path(root, rel), false) }
-    val now = System.currentTimeMillis()
-    parMap(kept) { case (rel, size, _) =>
-      val stats = ParquetStats.statsJson(conf, new Path(root, rel))
-        .map(s => s""","stats":${jstr(s)}""").getOrElse("")
-      s"""{"add":{"path":${jstr(encodePath(rel))},"partitionValues":{${partitionValuesJson(rel)}},"size":$size,"modificationTime":$now,"dataChange":true$stats}}"""
-    }
-  }
-
   /** Row-level DELETE, copy-on-write: remove every current row
     * matching `cond` by rewriting ONLY the files that hold matching
     * rows — survivors rewritten beside them, untouched files
@@ -1894,7 +1762,7 @@ object DeltaWrite {
       cond: org.apache.spark.sql.Column): Long = {
     import org.apache.spark.sql.functions._
     val view = new LogView(spark, tablePath)
-    val (fs, root) = (view.fs, view.root)
+    val root = view.root
     requireNoDeletionVectors(view)
     requireNoAbsoluteAdds(view, "deleteWhere")
     requireNoRowTracking(view, "deleteWhere")
@@ -1911,41 +1779,26 @@ object DeltaWrite {
     val victims = hit.getSeq[String](1).sorted
 
     val keep = !coalesce(cond, lit(false))
-    val dataCols = schema.fieldNames.filterNot(partCols.contains)
     // change data feed: the deleted rows, typed 'delete', land as
     // change files in the SAME commit
     val cdcLines =
       if (!view.meta.exists(_.cdf)) Seq.empty
-      else stageCdcFiles(spark, fs, root, schema, partCols,
+      else stageCdcFiles(view, schema, partCols,
         liveScan(spark, root, schema, partCols, victims, mapped)
           .filter(coalesce(cond, lit(false)))
           .select(schema.fieldNames.map(col).toSeq: _*)
           .withColumn("_change_type", lit("delete")))
-    // ONE staged write for every victim dir (writeStaged moves nested
-    // hive dirs): the former per-partition-directory loop launched one
-    // Spark job per touched directory — a delete spanning D dirs paid
-    // D sequential job latencies; the dynamic partitionBy write is the
-    // same single-job shape commit() and merge already use, and the
-    // partition-column clustering keeps files = touched partitions
-    val added = writeStaged(fs, root, destPrefix = "") { staging =>
-      val survivors = liveScan(spark, root, schema, partCols, victims, mapped)
-        .filter(keep)
-      if (partCols.isEmpty)
-        survivors.select(toPhysical(schema, mapped, dataCols.toSeq): _*)
-          .write.mode("append").parquet(staging)
-      else {
-        val physParts = partCols.map(p =>
-          if (mapped) DeltaScan.physicalName(schema(p)) else p)
-        WriteLayout.clusterByPartitions(spark,
-          survivors.select(toPhysical(schema, mapped, schema.fieldNames.toSeq): _*),
-          physParts)
-          .write.mode("append").partitionBy(physParts: _*).parquet(staging)
-      }
-    }
-    commitRewrite(spark, fs, root, added, victims, operation = Some("DELETE"),
-      scope = Some(CommitScope("DELETE", readV, victims.toSet,
-        readsWholeTable = false, pred = Some((schema, cond)))),
-      extraActions = cdcLines)
+    // ONE table-layout write for every victim dir (writeStaged moves
+    // nested hive dirs): a per-partition-directory loop would launch one
+    // Spark job per touched directory — a delete spanning D dirs paying
+    // D sequential job latencies
+    val added = writeTable(view,
+      liveScan(spark, root, schema, partCols, victims, mapped).filter(keep),
+      Some(md), partCols)
+    commitLog(view, Some("DELETE"),
+      files = added.map(Staged.tupled) ++ victims.map(Removed), cdc = cdcLines,
+      dropEmpty = true, scope = Some(CommitScope("DELETE", readV, victims.toSet,
+        readsWholeTable = false, pred = Some((schema, cond)))))
     nDeleted
   }
 
@@ -1964,7 +1817,7 @@ object DeltaWrite {
     import org.apache.spark.sql.functions._
     require(assignments.nonEmpty, "updateWhere needs at least one SET assignment")
     val view = new LogView(spark, tablePath)
-    val (fs, root) = (view.fs, view.root)
+    val root = view.root
     requireNoDeletionVectors(view)
     requireNoAbsoluteAdds(view, "updateWhere")
     requireNoRowTracking(view, "updateWhere")
@@ -2028,29 +1881,17 @@ object DeltaWrite {
         val post = fired.select(schema.fieldNames.map(n =>
             setByName.get(n).map(e => e.as(n)).getOrElse(col(n))).toSeq: _*)
           .withColumn("_change_type", lit("update_postimage"))
-        stageCdcFiles(spark, fs, root, schema, partCols, pre.unionByName(post))
+        stageCdcFiles(view, schema, partCols, pre.unionByName(post))
       }
-    // ONE staged write for every victim dir — same single-job dynamic
-    // partitionBy shape as deleteWhere/merge (was a job per directory)
-    val added = writeStaged(fs, root, destPrefix = "") { staging =>
-      val updated = liveScan(spark, root, schema, partCols, victims, mapped)
-        .select((projected ++ partCols.map(col)).toSeq: _*)
-      if (partCols.isEmpty)
-        updated.select(toPhysical(schema, mapped, dataCols.toSeq): _*)
-          .write.mode("append").parquet(staging)
-      else {
-        val physParts = partCols.map(p =>
-          if (mapped) DeltaScan.physicalName(schema(p)) else p)
-        WriteLayout.clusterByPartitions(spark,
-          updated.select(toPhysical(schema, mapped, schema.fieldNames.toSeq): _*),
-          physParts)
-          .write.mode("append").partitionBy(physParts: _*).parquet(staging)
-      }
-    }
-    commitRewrite(spark, fs, root, added, victims, operation = Some("UPDATE"),
-      scope = Some(CommitScope("UPDATE", readV, victims.toSet,
-        readsWholeTable = false, pred = Some((schema, cond)))),
-      extraActions = cdcLines)
+    // ONE table-layout write for every victim dir, as in deleteWhere
+    val added = writeTable(view,
+      liveScan(spark, root, schema, partCols, victims, mapped)
+        .select((projected ++ partCols.map(col)).toSeq: _*),
+      Some(md), partCols)
+    commitLog(view, Some("UPDATE"),
+      files = added.map(Staged.tupled) ++ victims.map(Removed), cdc = cdcLines,
+      dropEmpty = true, scope = Some(CommitScope("UPDATE", readV, victims.toSet,
+        readsWholeTable = false, pred = Some((schema, cond)))))
     nUpdated
   }
 
@@ -2078,7 +1919,7 @@ object DeltaWrite {
       cond: org.apache.spark.sql.Column): Long = {
     import org.apache.spark.sql.functions._
     val view = new LogView(spark, tablePath)
-    val (fs, root) = (view.fs, view.root)
+    val root = view.root
     refuseOnCdf(view, "deleteWhereDV")
     val md = view.tableMeta
     val (schema, partCols, mapped) = (md.schema, md.partCols, md.mapped)
@@ -2096,10 +1937,9 @@ object DeltaWrite {
     val (dvAdds, nDeleted, victimFiles) =
       stageDvReAdds(spark, root.toString, latestAdds, oldDescByRel, victims)
     if (nDeleted == 0L) return 0L
-    commitWithRetry(spark, fs, root, dvProtocolAction(proto) ++ dvAdds,
-      Some("DELETE (DV)"),
-      CommitScope("DELETE (DV)", readV, victimFiles,
-        readsWholeTable = false, pred = Some((schema, cond))))
+    commitLog(view, Some("DELETE (DV)"), dvProtocolAction(proto), dvAdds,
+      scope = Some(CommitScope("DELETE (DV)", readV, victimFiles,
+        readsWholeTable = false, pred = Some((schema, cond)))))
     nDeleted
   }
 
@@ -2130,13 +1970,13 @@ object DeltaWrite {
 
   /** per-victim-file DV union + EXECUTOR-side bin writes for a
     * (__rel, __pos) victim frame (already excluding rows dead under
-    * existing DVs): returns (re-add action lines carrying the new
-    * descriptors, newly-dead row count, victim file set). Shared by
-    * the three DV DMLs. */
+    * existing DVs): returns (re-adds carrying the new descriptors,
+    * newly-dead row count, victim file set). Shared by the three DV
+    * DMLs. */
   private def stageDvReAdds(spark: SparkSession, rootStr: String,
       latestAdds: Map[String, com.fasterxml.jackson.databind.node.ObjectNode],
       oldDescByRel: Map[String, DeletionVectors.Descriptor],
-      victims: DataFrame): (Seq[String], Long, Set[String]) = {
+      victims: DataFrame): (Seq[Carried], Long, Set[String]) = {
     import org.apache.spark.sql.functions._
     val holder = new DeletionVectors.ConfHolder(spark.sparkContext.hadoopConfiguration)
     // one pass: per victim file, the sorted new ordinals; DV files are
@@ -2165,8 +2005,7 @@ object DeltaWrite {
           s"""{"storageType":"u","pathOrInlineDv":${jstr(ref)},"offset":$off,""" +
             s""""sizeInBytes":$size,"cardinality":$card}""")
           .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode])
-      node.put("dataChange", true)
-      s"""{"add":${node.toString}}"""
+      Carried(node)
     }
     (adds, written.map(_._6).sum, written.map(_._1).toSet)
   }
@@ -2266,11 +2105,10 @@ object DeltaWrite {
             .write.mode("append").parquet(staging)
         }
       }
-    commitWithRetry(spark, fs, root,
-      dvProtocolAction(proto) ++ dvAdds ++ stagedAddLines(spark, fs, root, added),
-      Some("UPDATE (DV)"),
-      CommitScope("UPDATE (DV)", readV, victimFiles,
-        readsWholeTable = false, pred = Some((schema, cond))))
+    commitLog(view, Some("UPDATE (DV)"), dvProtocolAction(proto),
+      dvAdds ++ added.map(Staged.tupled), dropEmpty = true,
+      scope = Some(CommitScope("UPDATE (DV)", readV, victimFiles,
+        readsWholeTable = false, pred = Some((schema, cond)))))
     nUpdated
   }
 
@@ -2285,7 +2123,7 @@ object DeltaWrite {
     import org.apache.spark.sql.functions._
     require(keys.nonEmpty, "merge needs at least one key column")
     val view = new LogView(spark, tablePath)
-    val (fs, root) = (view.fs, view.root)
+    val root = view.root
     refuseOnCdf(view, "mergeDV")
     val md = view.tableMeta
     val (schema, partCols, mapped) = (md.schema, md.partCols, md.mapped)
@@ -2325,7 +2163,7 @@ object DeltaWrite {
       val (dvAdds, updated, victimFiles) = matched match {
         case Some(m) => stageDvReAdds(spark, root.toString, latestAdds,
           oldDescByRel, m.select(col("__rel"), col("__pos")))
-        case scala.None => (Seq.empty[String], 0L, Set.empty[String])
+        case scala.None => (Seq.empty[Carried], 0L, Set.empty[String])
       }
       // matched rows live only in victim files by construction
       val matchedSrc =
@@ -2341,26 +2179,12 @@ object DeltaWrite {
         enforceConstraints(newLogical, md.config)
         enforceRequired(newLogical, schema)
       }
-      val newData = newLogical
-        .select(toPhysical(schema, mapped, schema.fieldNames.toSeq): _*)
-      val physParts = partCols.map(p =>
-        if (mapped) DeltaScan.physicalName(schema(p)) else p)
-      val added = writeStaged(fs, root, destPrefix = "") { staging =>
-        // cluster by partition columns: files = touched partitions,
-        // not tasks x partitions (see commit())
-        val clustered = WriteLayout.clusterByPartitions(spark, newData, physParts)
-        val w = clustered.write.mode("append")
-        (if (physParts.nonEmpty) w.partitionBy(physParts: _*) else w).parquet(staging)
-      }
+      val added = writeTable(view, newLogical, Some(md), partCols)
       // merge read the WHOLE table — every concurrent data append conflicts
-      commitWithRetry(spark, fs, root,
-        txn.toSeq.map { case (app, tv) =>
-          s"""{"txn":{"appId":${jstr(app)},"version":$tv,"lastUpdated":${System.currentTimeMillis()}}}"""
-        } ++ dvProtocolAction(proto) ++ dvAdds ++
-          stagedAddLines(spark, fs, root, added),
-        Some("MERGE (DV)"),
-        CommitScope("MERGE (DV)", readV, victimFiles,
-          readsWholeTable = true, pred = scala.None))
+      commitLog(view, Some("MERGE (DV)"), dvProtocolAction(proto),
+        dvAdds ++ added.map(Staged.tupled), txn = txn, dropEmpty = true,
+        scope = Some(CommitScope("MERGE (DV)", readV, victimFiles,
+          readsWholeTable = true, pred = scala.None)))
       (updated, inserted)
     } finally src.unpersist()
   }
@@ -2404,25 +2228,13 @@ object DeltaWrite {
             .write.mode("append").parquet(staging)
         }
       }
-    // row-preserving swap: dataChange=false adds (no DV) + removes
-    val conf = spark.sparkContext.hadoopConfiguration
-    val (kept, empty) = added.partition { case (rel, _) =>
-      footerRows(conf, new Path(root, rel)) > 0L
-    }
-    empty.foreach { case (rel, _) => fs.delete(new Path(root, rel), false) }
-    val now = System.currentTimeMillis()
-    val actions =
-      kept.map { case (rel, size) =>
-        val stats = ParquetStats.statsJson(conf, new Path(root, rel))
-          .map(s => s""","stats":${jstr(s)}""").getOrElse("")
-        s"""{"add":{"path":${jstr(encodePath(rel))},"partitionValues":{${partitionValuesJson(rel)}},"size":$size,"modificationTime":$now,"dataChange":false$stats}}"""
-      } ++ victims.map { rel =>
-        s"""{"remove":{"path":${jstr(encodePath(rel))},"deletionTimestamp":$now,"dataChange":false}}"""
-      }
+    // row-preserving swap: dataChange=false adds (no DV) + removes;
     // reads exactly the victim files — disjoint concurrent work commutes
-    commitWithRetry(spark, fs, root, actions, Some("PURGE"),
-      CommitScope("PURGE", readV, victims.toSet,
-        readsWholeTable = false, pred = scala.None))
+    commitLog(view, Some("PURGE"),
+      files = added.map(Staged.tupled) ++ victims.map(Removed),
+      dataChange = false, dropEmpty = true,
+      scope = Some(CommitScope("PURGE", readV, victims.toSet,
+        readsWholeTable = false, pred = scala.None)))
     (victims.size, dropped)
   }
 
@@ -2463,7 +2275,7 @@ object DeltaWrite {
     import org.apache.spark.sql.functions._
     require(keys.nonEmpty, "merge needs at least one key column")
     val view = new LogView(spark, tablePath)
-    val (fs, root) = (view.fs, view.root)
+    val root = view.root
     requireNoDeletionVectors(view)
     requireNoAbsoluteAdds(view, "merge")
     requireNoRowTracking(view, "merge")
@@ -2574,17 +2386,13 @@ object DeltaWrite {
         enforceConstraints(newLogical, md.config)
         enforceRequired(newLogical, schema)
       }
-      val newData = newLogical
-        .select(toPhysical(schema, mapped, schema.fieldNames.toSeq): _*)
-      val physParts = partCols.map(p =>
-        if (mapped) DeltaScan.physicalName(schema(p)) else p)
       // change data feed: matched target rows (pre), their source
       // replacements (post), unmatched source rows (insert), and
       // tombstoned matches (delete)
       val cdcLines =
         if (!view.meta.exists(_.cdf)) Seq.empty
         else if (victims.isEmpty) // pure insert: every source row inserts
-          stageCdcFiles(spark, fs, root, schema, partCols,
+          stageCdcFiles(view, schema, partCols,
             src.select(schema.fieldNames.map(col).toSeq: _*)
               .withColumn("_change_type", lit("insert")))
         else {
@@ -2601,24 +2409,19 @@ object DeltaWrite {
           val dels = tombKeys.map(t => vScan.join(t, keys, "left_semi")
             .select(schema.fieldNames.map(col).toSeq: _*)
             .withColumn("_change_type", lit("delete")))
-          stageCdcFiles(spark, fs, root, schema, partCols,
+          stageCdcFiles(view, schema, partCols,
             dels.foldLeft(matchedPre.unionByName(matchedPost).unionByName(ins))(
               _ unionByName _))
         }
-      val added = writeStaged(fs, root, destPrefix = "") { staging =>
-        // cluster by partition columns: files = touched partitions,
-        // not tasks x partitions (see commit())
-        val clustered = WriteLayout.clusterByPartitions(spark, newData, physParts)
-        val w = clustered.write.mode("append")
-        (if (physParts.nonEmpty) w.partitionBy(physParts: _*) else w).parquet(staging)
-      }
+      val added = writeTable(view, newLogical, Some(md), partCols)
       // merge read the WHOLE table (any concurrently appended row could
       // collide with a source key and flip a not-matched INSERT into a
       // duplicate) — every concurrent data append is a conflict
-      commitRewrite(spark, fs, root, added, victims, txn, operation = Some("MERGE"),
+      commitLog(view, Some("MERGE"),
+        files = added.map(Staged.tupled) ++ victims.map(Removed), cdc = cdcLines,
+        txn = txn, dropEmpty = true,
         scope = Some(CommitScope("MERGE", readV, victims.toSet,
-          readsWholeTable = true, pred = scala.None)),
-        extraActions = cdcLines)
+          readsWholeTable = true, pred = scala.None)))
       (updated, inserted, deleted)
     } finally sourceP.unpersist()
   }
@@ -2743,26 +2546,14 @@ object DeltaWrite {
       }
     }
     require(added.nonEmpty, "z-order rewrite produced no files")
-
-    val now = System.currentTimeMillis()
-    val conf = spark.sparkContext.hadoopConfiguration
-    val actions =
-      added.map { case (rel, size) =>
-        val stats = ParquetStats.statsJson(conf, new Path(root, rel))
-          .map(s => s""","stats":${jstr(s)}""").getOrElse("")
-        s"""{"add":{"path":${jstr(encodePath(rel))},"partitionValues":{${partitionValuesJson(rel)}},"size":$size,"modificationTime":$now,"dataChange":false$stats}}"""
-      } ++ live.sorted.map { rel =>
-        s"""{"remove":{"path":${jstr(encodePath(rel))},"deletionTimestamp":$now,"dataChange":false}}"""
-      }
     // rewrites exactly the live files it read — concurrent appends land
     // as files this swap never touches and commute
-    commitWithRetry(spark, fs, root, actions, Some("OPTIMIZE (ZORDER)"),
-      CommitScope("OPTIMIZE (ZORDER)", readV, live.toSet,
-        readsWholeTable = false, pred = scala.None))
+    commitLog(view, Some("OPTIMIZE (ZORDER)"),
+      files = added.map(Staged.tupled) ++ live.sorted.map(Removed), dataChange = false,
+      scope = Some(CommitScope("OPTIMIZE (ZORDER)", readV, live.toSet,
+        readsWholeTable = false, pred = scala.None)))
   }
 
-  /** rewriting a DV-carrying file from its raw parquet would resurrect
-    * the deleted rows — refuse loudly */
   /** the safety condition for raw-parquet rewrites is the LIVE view:
     * a file whose CURRENT add carries a deletion vector cannot be
     * rewritten from its raw parquet (the dead rows would resurrect).
@@ -2782,7 +2573,7 @@ object DeltaWrite {
     rel.split('/').dropRight(1).collect {
       case seg if seg.contains('=') =>
         val Array(k, v) = seg.split("=", 2)
-        s"${jstr(k)}:${jstr(hiveUnescape(v))}"
+        s"${jstr(k)}:${jstr(DeltaScan.percentDecode(v))}"
     }.mkString(",")
 
   /** VACUUM: physically delete data files whose latest log action is a
@@ -2903,11 +2694,10 @@ object DeltaWrite {
     *  - txn / commitInfo / cdc actions and `dataChange=false`
     *    compaction swaps of UNtouched files commute.
     * Throws ConcurrentModificationException on conflict. */
-  private def checkDmlConflicts(spark: SparkSession, fs: FileSystem, root: Path,
-      scope: CommitScope, fromExclusive: Long, toInclusive: Long): Unit = {
-    val logDir = new Path(root, "_delta_log")
+  private def checkDmlConflicts(view: LogView, scope: CommitScope,
+      fromExclusive: Long, toInclusive: Long): Unit = {
     val predExpr = scope.pred.map { case (schema, c) =>
-      ParquetStats.predicateExpr(spark, schema, c)
+      ParquetStats.predicateExpr(view.spark, schema, c)
     }
     def conflict(v: Long, why: String): Nothing =
       throw new java.util.ConcurrentModificationException(
@@ -2915,13 +2705,9 @@ object DeltaWrite {
           s"with concurrent commit $v: $why — re-run the operation on the " +
           "current table state")
     ((fromExclusive + 1) to toInclusive).foreach { v =>
-      val p = new Path(logDir, f"$v%020d.json")
-      require(fs.exists(p),
-        s"cannot validate concurrent commit $v of $root — log truncated?")
-      val in = fs.open(p)
-      val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-        finally in.close()
-      lines.map(mapper.readTree).foreach { node =>
+      require(view.jsonVersions.contains(v),
+        s"cannot validate concurrent commit $v of ${view.root} — log truncated?")
+      view.commit(v).foreach { node =>
         if (node.has("metaData")) conflict(v, "table metadata changed")
         else if (node.has("protocol")) conflict(v, "table protocol changed")
         else if (node.has("domainMetadata"))
@@ -2931,13 +2717,13 @@ object DeltaWrite {
           conflict(v, "table domain metadata changed concurrently " +
             s"(domain ${node.get("domainMetadata").get("domain").asText()})")
         else if (node.has("remove")) {
-          val rel = decodePath(node.get("remove").get("path").asText())
+          val rel = DeltaScan.percentDecode(node.get("remove").get("path").asText())
           if (scope.touched(rel))
             conflict(v, s"file $rel this operation rewrites/removes was " +
               "removed concurrently")
         } else if (node.has("add")) {
           val add = node.get("add")
-          val rel = decodePath(add.get("path").asText())
+          val rel = DeltaScan.percentDecode(add.get("path").asText())
           if (scope.touched(rel))
             conflict(v, s"file $rel this operation rewrites/removes was " +
               "rewritten concurrently")
@@ -2963,33 +2749,127 @@ object DeltaWrite {
     * the TOCTOU window the OCC validation closes */
   private[graft] var beforeDmlCommit: () => Unit = () => ()
 
-  /** conditional DML commit with OCC RETRY: validates EVERY commit
-    * that landed after the DML's read version (including ones that
-    * landed between planning and this call — the classic TOCTOU
-    * window), then commits at the next version; a lost CAS re-reads,
-    * re-validates just the new commits, and tries again, up to
-    * [[MaxCommitRetries]]. Commuting winners (appends the stats prove
-    * disjoint, compactions of untouched files, txn markers) never
-    * force a replan; conflicting ones abort loudly with the reason. */
-  private def commitWithRetry(spark: SparkSession, fs: FileSystem, root: Path,
-      lines: Seq[String], operation: Option[String], scope: CommitScope): Unit = {
-    beforeDmlCommit()
-    var checked = scope.readVersion
-    // the next version to commit at, once every commit since the last
-    // check is validated against the scope
-    def validated(): Long = {
-      val latest = DeltaScan.latestVersion(spark, root.toString)
-      if (latest > checked) {
-        checkDmlConflicts(spark, fs, root, scope, checked, latest)
-        checked = latest
+  /** One file action of a commit */
+  private sealed trait FileAction
+  /** a data file this operation staged (table-relative path, size) */
+  private final case class Staged(rel: String, size: Long) extends FileAction
+  /** a file re-added as the log records it */
+  private final case class Carried(add: ObjectNode) extends FileAction
+  /** a file the commit removes */
+  private final case class Removed(rel: String) extends FileAction
+
+  /** THE Delta commit producer: every commit is one put-if-absent log
+    * record over a snapshot the operation already read. An operation
+    * hands over only its non-file `actions` (protocol, metaData,
+    * domainMetadata), its file actions and its `cdc` lines; the
+    * producer
+    *  - reads each staged file's footer once ([[stagedFiles]]);
+    *  - builds every add and remove line, `dataChange` per commit;
+    *  - picks the version: `at` when pinned, else the one after the
+    *    view. A `scope`d commit (DML, compact, zorder, purge) runs the
+    *    [[beforeDmlCommit]] seam, then on every attempt advances the
+    *    view, validates the commits it has not seen
+    *    ([[checkDmlConflicts]]) and commits after them, retrying a lost
+    *    race up to [[MaxCommitRetries]] times. An unscoped commit makes
+    *    one attempt, exactly over the snapshot it planned from, and a
+    *    lost race surfaces;
+    *  - stamps row tracking ([[stampRowTracking]]) and publishes
+    *    `_delta_log/<v>.json` — commitInfo, `actions`, txn, file
+    *    actions, `cdc` — through [[AtomicFiles]]' content-atomic
+    *    conditional rename: of two writers racing to one version the
+    *    second fails loudly, and no reader sees a torn commit;
+    *  - auto-checkpoints.
+    * The view answers the row-tracking and checkpoint decisions; this
+    * commit's own metaData and protocol, when present, win. */
+  private def commitLog(view: LogView, operation: Option[String],
+      actions: Seq[String] = Nil, files: Seq[FileAction] = Nil,
+      cdc: Seq[String] = Nil, txn: Option[(String, Long)] = scala.None,
+      dataChange: Boolean = true, dropEmpty: Boolean = false,
+      scope: Option[CommitScope] = scala.None, at: Option[Long] = scala.None): Unit = {
+    val now = System.currentTimeMillis()
+    val stats = stagedFiles(view, files.collect { case s: Staged => s }, dropEmpty)
+    val fileLines = files.flatMap {
+      case Staged(rel, size) => stats.get(rel).map(addLine(rel, size, now, dataChange, _))
+      case Carried(add) =>
+        val a = add.deepCopy[ObjectNode]()
+        a.put("dataChange", dataChange)
+        Some(s"""{"add":$a}""")
+      case Removed(rel) => Some(removeLine(rel, now, dataChange))
+    }
+    val txnLines = txn.toSeq.map { case (app, v) =>
+      s"""{"txn":{"appId":${jstr(app)},"version":$v,"lastUpdated":$now}}"""
+    }
+    val body = actions ++ txnLines ++ fileLines ++ cdc
+    val ownMeta = actionMeta(actions)
+    val ownProtocol = actions.filter(_.startsWith("""{"protocol"""")).lastOption
+      .map(mapper.readTree(_).get("protocol"))
+    var cur = view
+    var checked = scope.fold(-1L)(_.readVersion)
+    def advance(): Unit = scope.foreach { s =>
+      cur = cur.advance()
+      if (cur.version > checked) {
+        checkDmlConflicts(cur, s, checked, cur.version)
+        checked = cur.version
       }
-      latest + 1
     }
-    var next = validated()
-    LakeSupport.retryOnConflict(MaxCommitRetries, _ => next = validated()) {
-      writeCommitFile(fs, root, next, lines, operation = operation)
+    if (scope.nonEmpty) beforeDmlCommit()
+    advance()
+    val version = LakeSupport.retryOnConflict(
+        if (scope.isEmpty) 0 else MaxCommitRetries, _ => advance()) {
+      val v = at.getOrElse(cur.version + 1)
+      // a commitInfo with the operation name makes DESCRIBE-HISTORY-style
+      // tooling (and timestamp travel) read in-commit evidence; row
+      // tracking stamps inside the attempt, so a retry re-stamps from the
+      // advanced view's high-water mark
+      val lines = operation.map(op => s"""{"commitInfo":{"timestamp":""" +
+          s"""${System.currentTimeMillis()},"operation":${jstr(op)}}}""").toSeq ++
+        stampRowTracking(cur, v, ownMeta, body)
+      val commitFile = new Path(cur.logDir, f"$v%020d.json")
+      try AtomicFiles.publishUtf8(cur.fs, commitFile, lines.mkString("", "\n", "\n"),
+        overwrite = false)
+      catch {
+        case e: java.io.IOException =>
+          throw new java.util.ConcurrentModificationException(
+            s"concurrent Delta commit detected: $commitFile already exists — " +
+              "another writer committed this version; re-read the table and retry", e)
+      }
+      v
     }
+    maybeAutoCheckpoint(cur, version, ownMeta, ownProtocol)
   }
+
+  /** the metaData a commit's `actions` re-declare, if any */
+  private def actionMeta(actions: Seq[String]): Option[Meta] =
+    actions.filter(_.startsWith("""{"metaData"""")).lastOption
+      .map(j => Meta(mapper.readTree(j).get("metaData")))
+
+  /** staged file → its footer stats, from ONE footer read per file (in
+    * bounded parallel — a partitioned write can emit thousands of
+    * files); with `dropEmpty`, zero-row files (a victim file whose
+    * every row died leaves an empty part) are deleted and left out */
+  private def stagedFiles(view: LogView, staged: Seq[Staged],
+      dropEmpty: Boolean): Map[String, Option[String]] = {
+    val conf = view.spark.sparkContext.hadoopConfiguration
+    val read = parMap(staged) { s =>
+      (s.rel, readFooter(conf, new Path(view.root, s.rel))(f => ParquetStats.statsJson(f)))
+    }
+    val (kept, empty) = read.partition { case (_, (rows, _)) => !dropEmpty || rows > 0L }
+    empty.foreach { case (rel, _) => view.fs.delete(new Path(view.root, rel), false) }
+    kept.map { case (rel, (_, stats)) => rel -> stats }.toMap
+  }
+
+  /** the `add` action of a staged file: partition values from its hive
+    * path, per-file footer stats — the data-skipping index
+    * [[DeltaScan]] prunes with */
+  private def addLine(rel: String, size: Long, now: Long, dataChange: Boolean,
+      stats: Option[String]): String = {
+    val st = stats.map(s => s""","stats":${jstr(s)}""").getOrElse("")
+    s"""{"add":{"path":${jstr(encodePath(rel))},"partitionValues":{${partitionValuesJson(rel)}},""" +
+      s""""size":$size,"modificationTime":$now,"dataChange":$dataChange$st}}"""
+  }
+
+  private def removeLine(rel: String, now: Long, dataChange: Boolean): String =
+    s"""{"remove":{"path":${jstr(encodePath(rel))},"deletionTimestamp":$now,"dataChange":$dataChange}}"""
 
   /** suppresses the auto-checkpoint while a checkpoint itself is being
     * written (its v2 protocol-upgrade commit must not recurse) */
@@ -3008,56 +2888,29 @@ object DeltaWrite {
     * retries incrementally. `delta.checkpointInterval = 0` disables.
     * The layout follows the table: v2 (UUID + sidecars) only when the
     * protocol already carries the v2Checkpoint feature — the auto path
-    * never upgrades a protocol on its own. */
-  private def maybeAutoCheckpoint(spark: SparkSession, fs: FileSystem,
-      root: Path, version: Long): Unit = {
+    * never upgrades a protocol on its own. `view` is the log just
+    * before `version`; the commit's own metaData/protocol win over it. */
+  private def maybeAutoCheckpoint(view: LogView, version: Long,
+      ownMeta: Option[Meta], ownProtocol: Option[JsonNode]): Unit = {
     if (version <= 0L || inCheckpoint.get()) return
     try {
-      val view = new LogView(spark, root.toString)
-      val interval = view.meta.flatMap(_.config.get("delta.checkpointInterval"))
+      val interval = ownMeta.orElse(view.meta).flatMap(_.config.get("delta.checkpointInterval"))
         .map(_.trim.toInt).getOrElse(10)
       if (interval <= 0 || version % interval != 0L) return
-      val v2 = view.protocol.exists(p =>
+      val v2 = ownProtocol.orElse(view.protocol).exists(p =>
         Option(p.get("writerFeatures")).exists(_.elements().asScala
           .exists(_.asText() == "v2Checkpoint")))
       inCheckpoint.set(true)
-      try checkpointImpl(spark, root.toString, v2 = v2)
+      try checkpointImpl(view.spark, view.tablePath, v2 = v2)
       finally inCheckpoint.set(false)
     } catch {
       case scala.util.control.NonFatal(e) =>
         org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"auto-checkpoint at version $version of $root failed " +
+          s"auto-checkpoint at version $version of ${view.root} failed " +
             "(commit is durable; the next interval retries)", e)
     }
   }
 
-  private def writeCommitFile(fs: FileSystem, root: Path, version: Long,
-      actions0: Seq[String], operation: Option[String] = scala.None): Unit = {
-    // row-tracked tables: adds get baseRowId/defaultRowCommitVersion +
-    // the bumped high-watermark HERE, inside the commit write, so OCC
-    // retries re-stamp from fresh state (identity when not enabled)
-    val stamped = stampRowTracking(fs, root, version, actions0)
-    // a commitInfo with the operation name makes DESCRIBE-HISTORY-style
-    // tooling (and timestamp travel) read in-commit evidence
-    val actions = operation.map(op =>
-      s"""{"commitInfo":{"timestamp":${System.currentTimeMillis()},"operation":${jstr(op)}}}""")
-      .toSeq ++ stamped
-    val logDir = new Path(root, "_delta_log")
-    fs.mkdirs(logDir)
-    val commitFile = new Path(logDir, f"$version%020d.json")
-    try AtomicFiles.publishUtf8(fs, commitFile,
-      actions.mkString("", "\n", "\n"), overwrite = false)
-    catch {
-      case e: java.io.IOException =>
-        throw new java.util.ConcurrentModificationException(
-          s"concurrent Delta commit detected: $commitFile already exists — " +
-            "another writer committed this version; re-read the table and retry", e)
-    }
-    maybeAutoCheckpoint(SparkSession.active, fs, root, version)
-  }
-
-  /** all data files under the table root, as (relative path, size),
-    * excluding the log dir and non-parquet markers */
   /** STAGE-then-MOVE write: `run` writes parquet into a writer-private
     * hidden staging dir; every produced file is then renamed under
     * `root/destPrefix` and returned as (relative path, size). The
@@ -3110,6 +2963,8 @@ object DeltaWrite {
     moved
   }
 
+  /** all data files under the table root, as (relative path, size),
+    * excluding the log dir and non-parquet markers */
   private def listDataFiles(fs: FileSystem, root: Path): Seq[(String, Long)] = {
     if (!fs.exists(root)) return Seq.empty
     val rootStr = root.toString.stripSuffix("/") + "/"
@@ -3131,9 +2986,6 @@ object DeltaWrite {
     out.result()
   }
 
-  /** minimal hive-path unescape (%xx sequences) for partition values */
-  private def hiveUnescape(s: String): String = DeltaScan.percentDecode(s)
-
   /** on-disk relative path → spec-compliant log action path: every
     * byte outside the unreserved set percent-encodes (incl. '%' itself
     * and '+', which URLDecoder would otherwise mangle); '/' and the
@@ -3152,16 +3004,6 @@ object DeltaWrite {
     }
     sb.toString
   }
-
-  /** log action path → on-disk relative path (the same percent-only
-    * decode DeltaScan.read uses, so reader and writer agree on the
-    * decoded namespace). RFC 3986 semantics: '+' stays literal —
-    * form-decoding would turn an external writer's unencoded
-    * `a+b.parquet` into `a b.parquet` and make vacuum delete the live
-    * file as an orphan. Malformed escapes pass through RAW rather than
-    * throwing — a legacy log must degrade to the old raw comparison,
-    * never crash replay. */
-  private def decodePath(p: String): String = DeltaScan.percentDecode(p)
 
   // ======================================================================
   // ROW TRACKING (Delta PROTOCOL §Row Tracking): stable per-row
@@ -3214,8 +3056,8 @@ object DeltaWrite {
         "and compact, which preserve row identity")
 
   /** current rowIdHighWaterMark (-1 when unset) */
-  private def rowIdHighWaterMark(spark: SparkSession, tablePath: String): Long =
-    DeltaScan.domainMetadata(spark, tablePath).get(RowTrackingDomain)
+  private def rowIdHighWaterMark(view: LogView): Long =
+    view.domains.get(RowTrackingDomain)
       .flatMap { cfg =>
         val node = mapper.readTree(cfg)
         Option(node.get("rowIdHighWaterMark")).map(_.asLong())
@@ -3231,7 +3073,6 @@ object DeltaWrite {
     * enabling an already-enabled table refuses loudly. */
   def enableRowTracking(spark: SparkSession, tablePath: String): Unit = {
     val view = new LogView(spark, tablePath)
-    val (fs, root) = (view.fs, view.root)
     val md = view.metaOr(" — cannot enable row tracking")
     val conf0 = md.config
     require(!md.rowTracking, s"row tracking is already enabled on $tablePath")
@@ -3247,59 +3088,41 @@ object DeltaWrite {
     val metaAction = s"""{"metaData":${mdNode.toString}}"""
     val protoActions = featureProtocolAction(view.protocol,
       Seq("rowTracking", "domainMetadata"))
-    // backfill: re-add every live file (the stamp pass below assigns
-    // baseRowId to any add lacking one)
-    val now = System.currentTimeMillis()
-    val conf = spark.sparkContext.hadoopConfiguration
-    val live = view.replay().live.sorted
-    val backfill = parMap(live) { rel =>
-      val p = new Path(root, rel)
-      val size = fs.getFileStatus(p).getLen
-      val stats = ParquetStats.statsJson(conf, p)
-        .map(s => s""","stats":${jstr(s)}""").getOrElse("")
-      s"""{"add":{"path":${jstr(encodePath(rel))},"partitionValues":{${partitionValuesJson(rel)}},"size":$size,"modificationTime":$now,"dataChange":false$stats}}"""
-    }
-    val v = DeltaScan.latestVersion(spark, tablePath) + 1
-    // writeCommitFile stamps the backfill adds (the in-lines metaData
-    // already declares the property) and appends the high-watermark
-    writeCommitFile(fs, root, v,
-      protoActions ++ Seq(metaAction) ++ backfill,
-      operation = Some("ENABLE ROW TRACKING"))
+    // backfill: re-add every live file as the log records it; the
+    // commit's stamp (its own metaData declares the property) assigns
+    // each a baseRowId and appends the high-watermark
+    val backfill = view.replay().latest
+      .collect { case (rel, Some(add), _, _) => (rel, Carried(add)) }.sortBy(_._1).map(_._2)
+    commitLog(view, Some("ENABLE ROW TRACKING"), protoActions :+ metaAction, backfill,
+      dataChange = false)
   }
 
   /** Stamp `baseRowId` + `defaultRowCommitVersion` onto every add
     * action that lacks them, and append the bumped high-watermark
-    * domain action — a no-op (identity) unless the table (or this very
-    * commit's metaData) declares row tracking. Runs INSIDE the commit
-    * write so OCC retries re-read the watermark and re-stamp from
-    * fresh state. Row counts come from the add's own stats
+    * domain action — a no-op (identity) unless the commit's own
+    * metaData (`own`) or, without one, the table `view` before it
+    * declares row tracking. Row counts come from the add's own stats
     * (numRecords), falling back to one footer read — metadata-bounded,
     * never row-bounded. DV re-adds arrive with their original
     * baseRowId and pass through untouched (their rows never moved). */
-  private def stampRowTracking(fs: FileSystem, root: Path, version: Long,
+  private def stampRowTracking(view: LogView, version: Long, own: Option[Meta],
       actions: Seq[String]): Seq[String] = {
-    lazy val parsed = actions.map(mapper.readTree)
-    val spark = SparkSession.active
-    val enabledInLines = actions.exists(_.contains(EnableRowTrackingKey)) &&
-      parsed.exists(n => Option(n.get("metaData")).exists(md =>
-        Option(md.get("configuration")).exists(c =>
-          Option(c.get(EnableRowTrackingKey)).exists(_.asText() == "true"))))
-    val enabled = enabledInLines ||
-      new LogView(spark, root.toString).meta.exists(_.rowTracking)
-    if (!enabled) return actions
+    if (!own.orElse(view.meta).exists(_.rowTracking)) return actions
+    val parsed = actions.map(mapper.readTree)
     val needsStamp = parsed.zipWithIndex.collect {
       case (n, i) if n.has("add") && !n.get("add").has("baseRowId") => i
     }
     if (needsStamp.isEmpty) return actions
-    val conf = spark.sparkContext.hadoopConfiguration
-    var hwm = rowIdHighWaterMark(spark, root.toString)
+    val conf = view.spark.sparkContext.hadoopConfiguration
+    var hwm = rowIdHighWaterMark(view)
     val out = actions.toArray
     needsStamp.foreach { i =>
       val add = parsed(i).get("add")
         .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
       val rows = Option(add.get("stats")).filterNot(_.isNull).flatMap { st =>
         Option(mapper.readTree(st.asText()).get("numRecords")).map(_.asLong())
-      }.getOrElse(footerRows(conf, new Path(root, decodePath(add.get("path").asText()))))
+      }.getOrElse(footerRows(conf,
+        new Path(view.root, DeltaScan.percentDecode(add.get("path").asText()))))
       add.put("baseRowId", hwm + 1L)
       add.put("defaultRowCommitVersion", version)
       hwm += math.max(rows, 0L)

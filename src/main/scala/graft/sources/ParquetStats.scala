@@ -10,6 +10,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.column.statistics.Statistics
 import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 
 import LakeSupport.jstr
@@ -53,42 +54,45 @@ object ParquetStats {
   def statsJson(conf: Configuration, file: Path): Option[String] =
     try {
       val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
-      try {
-        val footer = reader.getFooter
-        val blocks = footer.getBlocks.asScala.toSeq
-        val numRecords = blocks.map(_.getRowCount).sum
-        val fields = footer.getFileMetaData.getSchema.getFields.asScala.toSeq
-        val minB = Seq.newBuilder[(String, String)]
-        val maxB = Seq.newBuilder[(String, String)]
-        val nullB = Seq.newBuilder[(String, String)]
-        fields.filter(_.isPrimitive).foreach { f =>
-          val name = f.getName
-          val prim = f.asPrimitiveType()
-          val chunks = blocks.flatMap(_.getColumns.asScala.find { c =>
-            val p = c.getPath.toArray
-            p.length == 1 && p(0) == name
-          })
-          if (chunks.length == blocks.length && blocks.nonEmpty) {
-            val stats: Seq[Statistics[_]] = chunks.map(_.getStatistics)
-            if (stats.forall(s => s != null && s.isNumNullsSet))
-              nullB += ((name, stats.map(_.getNumNulls).sum.toString))
-            // min/max only when EVERY row group has real non-null bounds
-            if (stats.forall(s => s != null && s.hasNonNullValue)) {
-              val bounds = stats.flatMap(s => jsonBounds(prim, s))
-              if (bounds.length == stats.length) {
-                minB += ((name, bounds.minBy(_._3)(cmpOrdering)._1))
-                maxB += ((name, bounds.maxBy(_._4)(cmpOrdering)._2))
-              }
+      try statsJson(reader.getFooter) finally reader.close()
+    } catch { case scala.util.control.NonFatal(_) => None }
+
+  /** [[statsJson]] of an already-read footer */
+  def statsJson(footer: ParquetMetadata): Option[String] =
+    try {
+      val blocks = footer.getBlocks.asScala.toSeq
+      val numRecords = blocks.map(_.getRowCount).sum
+      val fields = footer.getFileMetaData.getSchema.getFields.asScala.toSeq
+      val minB = Seq.newBuilder[(String, String)]
+      val maxB = Seq.newBuilder[(String, String)]
+      val nullB = Seq.newBuilder[(String, String)]
+      fields.filter(_.isPrimitive).foreach { f =>
+        val name = f.getName
+        val prim = f.asPrimitiveType()
+        val chunks = blocks.flatMap(_.getColumns.asScala.find { c =>
+          val p = c.getPath.toArray
+          p.length == 1 && p(0) == name
+        })
+        if (chunks.length == blocks.length && blocks.nonEmpty) {
+          val stats: Seq[Statistics[_]] = chunks.map(_.getStatistics)
+          if (stats.forall(s => s != null && s.isNumNullsSet))
+            nullB += ((name, stats.map(_.getNumNulls).sum.toString))
+          // min/max only when EVERY row group has real non-null bounds
+          if (stats.forall(s => s != null && s.hasNonNullValue)) {
+            val bounds = stats.flatMap(s => jsonBounds(prim, s))
+            if (bounds.length == stats.length) {
+              minB += ((name, bounds.minBy(_._3)(cmpOrdering)._1))
+              maxB += ((name, bounds.maxBy(_._4)(cmpOrdering)._2))
             }
           }
         }
-        def obj(kvs: Seq[(String, String)]): String =
-          kvs.map { case (k, v) => s"${jstr(k)}:$v" }.mkString("{", ",", "}")
-        Some(s"""{"numRecords":$numRecords,""" +
-          s""""minValues":${obj(minB.result())},""" +
-          s""""maxValues":${obj(maxB.result())},""" +
-          s""""nullCount":${obj(nullB.result())}}""")
-      } finally reader.close()
+      }
+      def obj(kvs: Seq[(String, String)]): String =
+        kvs.map { case (k, v) => s"${jstr(k)}:$v" }.mkString("{", ",", "}")
+      Some(s"""{"numRecords":$numRecords,""" +
+        s""""minValues":${obj(minB.result())},""" +
+        s""""maxValues":${obj(maxB.result())},""" +
+        s""""nullCount":${obj(nullB.result())}}""")
     } catch { case scala.util.control.NonFatal(_) => None }
 
   /** one row group's (minJson, maxJson, minKey, maxKey), or None when

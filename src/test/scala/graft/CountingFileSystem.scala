@@ -2,8 +2,11 @@ package graft
 
 import java.io.IOException
 import java.net.URI
+import java.nio.file.{Files, Path => JPath, Paths}
 import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{DelegateToFileSystem, FSDataInputStream, FSDataOutputStream, LocatedFileStatus, Path, RawLocalFileSystem, RemoteIterator}
@@ -16,8 +19,9 @@ import org.apache.hadoop.util.Progressable
   * read the library makes — through `FileSystem` or, via [[CountingFs]],
   * through `FileContext` (which `AtomicFiles.publish` uses) — lands in
   * [[CountingFileSystem.opened]]. It also counts every create and
-  * rename of a path under a `metadata/` directory and, when armed with
-  * [[CountingFileSystem.failAt]], throws IOException on the k-th one. */
+  * rename of a path under a `metadata/` (Iceberg) or `_delta_log/`
+  * (Delta) directory and, when armed with [[CountingFileSystem.failAt]],
+  * throws IOException on the k-th one. */
 class CountingFileSystem extends RawLocalFileSystem {
   override def getUri: URI = CountingFileSystem.Uri
   override def getScheme: String = CountingFileSystem.Scheme
@@ -37,6 +41,7 @@ class CountingFileSystem extends RawLocalFileSystem {
     super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
   }
   override def rename(src: Path, dst: Path): Boolean = {
+    CountingFileSystem.beforeRename()
     CountingFileSystem.mutate(dst)
     super.rename(src, dst)
   }
@@ -63,15 +68,19 @@ object CountingFileSystem {
   /** local paths of every open, in order, across all instances */
   val opened = new ConcurrentLinkedQueue[String]()
 
-  /** creates and renames of `metadata/` paths since the last [[failAt]] */
+  /** creates and renames of table-log paths since the last [[failAt]] */
   val mutations = new AtomicInteger(0)
   @volatile private var failing = 0
+
+  /** runs at the start of every rename — `FileContext`'s conditional
+    * rename has already checked that the target is absent */
+  @volatile var beforeRename: () => Unit = () => ()
 
   /** count metadata mutations from zero; the `k`-th throws (0: never) */
   def failAt(k: Int): Unit = { mutations.set(0); failing = k }
 
   private def mutate(p: Path): Unit =
-    if (p.toUri.getPath.contains("/metadata/")) {
+    if (p.toUri.getPath.contains("/metadata/") || p.toUri.getPath.contains("/_delta_log/")) {
       val n = mutations.incrementAndGet()
       if (n == failing) throw new IOException(s"injected fault at metadata mutation $n: $p")
     }
@@ -85,6 +94,23 @@ object CountingFileSystem {
   /** a fresh empty directory, as a `countfs://` URI string */
   def tempDir(prefix: String): String =
     s"$Scheme://" + java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** a source of fresh copies of the table at `<dir>/base` (a
+    * [[tempDir]]): each call copies it to a new sibling `<dir>/t<n>`
+    * and returns that. Both formats log table-relative paths. */
+  def copies(dir: String): () => String = {
+    val local = Paths.get(dir.stripPrefix(s"$Scheme://"))
+    var n = 0
+    () => {
+      n += 1
+      val src = local.resolve("base")
+      val dst = local.resolve(s"t$n")
+      Files.walk(src).iterator().asScala.toSeq.foreach { p: JPath =>
+        Files.copy(p, dst.resolve(src.relativize(p).toString))
+      }
+      s"$dir/t$n"
+    }
+  }
 }
 
 /** `FileContext` binding of [[CountingFileSystem]] */

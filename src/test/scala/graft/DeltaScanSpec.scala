@@ -761,7 +761,7 @@ class DeltaScanSpec extends SparkSpec {
     }
     assert(readAll() == (0L to 24L).toSet)
 
-    // DML paths (writeCommitFile funnel) auto-checkpoint too: the
+    // DML paths (the commitLog producer) auto-checkpoint too: the
     // interval property re-times it
     DeltaWrite.setProperties(spark, dir,
       Map("delta.checkpointInterval" -> "5")) // v25

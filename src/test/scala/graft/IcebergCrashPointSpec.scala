@@ -1,10 +1,7 @@
 package graft
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path => JPath, Paths}
-
-import scala.jdk.CollectionConverters._
-import scala.util.control.NonFatal
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -15,7 +12,7 @@ import graft.sources.{IcebergScan, IcebergWrite}
   * The version hint is a lower bound: a commit whose hint rewrite never
   * happened is still the table's current version, for readers and for
   * the next writer alike. */
-class IcebergCrashPointSpec extends SparkSpec {
+class IcebergCrashPointSpec extends SparkSpec with CrashPoints {
   import spark.implicits._
 
   CountingFileSystem.register(spark.sparkContext.hadoopConfiguration)
@@ -51,18 +48,7 @@ class IcebergCrashPointSpec extends SparkSpec {
     IcebergWrite.create(spark, rows(0L until 20L, "a"), baseDir)
     IcebergWrite.append(spark, rows(20L until 40L, "b"), baseDir)
     val before = state(baseDir)
-    val localRoot = Paths.get(base.stripPrefix(s"${CountingFileSystem.Scheme}://"))
-    var copies = 0
-    // a fresh copy of the two-file base table (manifests hold relative paths)
-    def copyOfBase(): String = {
-      copies += 1
-      val src = localRoot.resolve("base")
-      val dst = localRoot.resolve(s"t$copies")
-      Files.walk(src).iterator().asScala.toSeq.foreach { p: JPath =>
-        Files.copy(p, dst.resolve(src.relativize(p).toString))
-      }
-      s"$base/t$copies"
-    }
+    val copyOfBase = CountingFileSystem.copies(base)
 
     val ops: Seq[(String, String => Unit, Map[Long, String])] = Seq(
       ("append", d => IcebergWrite.append(spark, rows(100L until 105L, "n"), d),
@@ -77,28 +63,8 @@ class IcebergCrashPointSpec extends SparkSpec {
       ("compact", d => IcebergWrite.compact(spark, d, smallFileBytes = 1L << 30), before))
 
     ops.foreach { case (name, op, after) =>
-      val clean = copyOfBase()
-      CountingFileSystem.failAt(0)
-      op(clean)
-      val n = CountingFileSystem.mutations.get()
-      assert(state(clean) == after, s"$name without a fault")
-      assert(n >= 4, s"$name made $n metadata mutations")
-      (1 to n).foreach { k =>
-        val d = copyOfBase()
-        CountingFileSystem.failAt(k)
-        try op(d) catch { case NonFatal(_) => () }
-        finally CountingFileSystem.failAt(0)
-        val got = state(d)
-        assert(got == before || got == after,
-          s"$name with a fault at metadata mutation $k of $n reads a torn state: $got")
-        if (got == before) {
-          op(d)
-          assert(state(d) == after, s"$name re-run after a fault at mutation $k of $n")
-        }
-        IcebergWrite.append(spark, rows(Seq(999L), "z"), d)
-        assert(state(d) == after + (999L -> "z"),
-          s"append after $name with a fault at mutation $k of $n")
-      }
+      crashAtEveryMutation(name, copyOfBase, state, before, after, op,
+        d => IcebergWrite.append(spark, rows(Seq(999L), "z"), d), minMutations = 4)
     }
   }
 }

@@ -6,10 +6,13 @@ import org.apache.spark.sql.functions._
 
 import graft.sources.DeltaWrite
 
-/** A Delta DML plans from ONE read of the table's log: each commit
-  * JSON is opened at most once between the operation's start and its
-  * first commit attempt (the `beforeDmlCommit` seam). Commit attempts
-  * themselves re-read fresh state and are not counted. */
+/** A Delta operation runs on ONE read of the table's log. A DML plans
+  * from it: each commit JSON is opened at most once between the
+  * operation's start and its first commit attempt (the
+  * `beforeDmlCommit` seam). Its commit reuses it: from start to return,
+  * an append or a DML opens each commit JSON once and each data file it
+  * stages once (the footer read that gives the file's row count and
+  * stats). */
 class LogReadOnceSpec extends SparkSpec {
   import spark.implicits._
 
@@ -51,5 +54,49 @@ class LogReadOnceSpec extends SparkSpec {
 
     val rows = graft.sources.DeltaScan.read(spark, dir).as[(Long, String)].collect()
     assert(rows.length == 57 && rows.count(_._2 == "u") == 10)
+  }
+
+  test("append, deleteWhere, updateWhere, merge and compact open each commit JSON " +
+      "and each staged file exactly once through the commit") {
+    val base = CountingFileSystem.tempDir("graft_logonce_commit")
+    val baseDir = base + "/base"
+    DeltaWrite.create(spark, (0L until 10L).map(i => (i, s"v$i")).toDF("id", "v"), baseDir)
+    (1 to 5).foreach { b =>
+      DeltaWrite.append(spark,
+        (0L until 10L).map(i => (b * 10L + i, s"v$b")).toDF("id", "v"), baseDir)
+    }
+    val copyOfBase = CountingFileSystem.copies(base)
+    val ops: Seq[(String, String => Unit)] = Seq(
+      "append" -> (d => DeltaWrite.append(spark,
+        (100L until 110L).map(i => (i, "n")).toDF("id", "v"), d)),
+      "deleteWhere" -> (d => DeltaWrite.deleteWhere(spark, d, col("id") < 3)),
+      "updateWhere" -> (d => DeltaWrite.updateWhere(spark, d, col("id") >= 50,
+        Seq("v" -> lit("u")))),
+      "merge" -> (d => DeltaWrite.merge(spark, d,
+        Seq((30L, "m"), (200L, "m")).toDF("id", "v"), Seq("id"))),
+      "compact" -> (d => DeltaWrite.compact(spark, d, smallFileBytes = 1L << 30)))
+
+    ops.foreach { case (name, op) =>
+      val d = copyOfBase()
+      val local = d.stripPrefix(s"${CountingFileSystem.Scheme}://")
+      CountingFileSystem.opened.clear()
+      op(d)
+      val opens = CountingFileSystem.opened.asScala.toList
+        .groupBy(identity).map { case (p, ps) => p -> ps.size }
+      val logOpens = opens.filter(_._1.matches(".*/_delta_log/\\d{20}\\.json"))
+      assert(logOpens == (0 until 6).map(v => f"$local/_delta_log/$v%020d.json" -> 1).toMap,
+        s"$name must open each of the 6 commit JSONs exactly once: $logOpens")
+      // the commit's adds are exactly the files the operation staged
+      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+      val staged = java.nio.file.Files.readAllLines(
+          java.nio.file.Paths.get(f"$local/_delta_log/${6}%020d.json")).asScala
+        .map(mapper.readTree)
+        .filter(_.has("add")).map(a => s"$local/${a.get("add").get("path").asText()}")
+      assert(staged.nonEmpty, s"$name staged no file")
+      staged.foreach { p =>
+        assert(opens.getOrElse(p, 0) == 1,
+          s"$name must open its staged file $p exactly once: ${opens.getOrElse(p, 0)}")
+      }
+    }
   }
 }
