@@ -233,6 +233,81 @@ object Bench {
     "q_join_star", "q_meta_rewrite", "q_iceberg_catalog_commit", "q_delta_ndv",
     "q_join_cbo_delta")
 
+  /** seconds `run` took, or None when it threw: a throwing query is a
+    * failure, never a time */
+  private[graft] def timed(run: => Unit): Option[Double] = {
+    val t0 = System.nanoTime()
+    try { run; Some((System.nanoTime() - t0) / 1e9) }
+    catch { case _: Throwable => None }
+  }
+
+  /** one suite pass over `names` */
+  private[graft] def pass(names: Seq[String])(run: String => Unit): Seq[(String, Option[Double])] =
+    names.map(name => name -> timed(run(name)))
+
+  /** each query's min over its passes, in `names` order; a query that
+    * threw in any pass is FAILED instead — listed, and left out of
+    * every time and total, so a crash can never read as a speed-up */
+  private[graft] def summarize(names: Seq[String],
+      passes: Map[String, List[Option[Double]]]): (Seq[(String, Double)], Seq[String]) = {
+    val ran = names.flatMap(n => passes.get(n).map(n -> _))
+    val (bad, good) = ran.partition(_._2.exists(_.isEmpty))
+    (good.map { case (n, ts) => n -> ts.flatten.min }, bad.map(_._1))
+  }
+
+  /** the metric line's scalar fields */
+  private[graft] final case class LineFields(total: Double, retries: Int, stalls: Long,
+      stallSec: Double, baseline16: Double, calSec: Double, sf: String)
+
+  private def fmt(rs: Seq[(String, Double)], dp: Int): String =
+    rs.map { case (k, v) =>
+      "\"" + k + "\":" + String.format(java.util.Locale.ROOT, s"%.${dp}f",
+        Double.box(v))
+    }.mkString("{", ",", "}")
+
+  private def names(ns: Seq[String]): String = ns.map("\"" + _ + "\"").mkString("[", ",", "]")
+
+  private def renderLine(f: LineFields, rs: Seq[(String, Double)], dropped: Int,
+      failed: Seq[String], failedDropped: Int, dp: Int): String = {
+    val d = if (dropped == 0) "" else s""","dropped":$dropped"""
+    val fd = if (failedDropped == 0) "" else s""","failed_dropped":$failedDropped"""
+    val r = if (f.retries == 0) "" else s""","retries":${f.retries}"""
+    val st = f""","stalls":${f.stalls},"stall_sec":${f.stallSec}%.1f"""
+    val b16 = f""","baseline16":${f.baseline16}%.3f,"cal_sec":${f.calSec}%.3f"""
+    f"""{"metric":"headline_total","value":${f.total}%.3f,"unit":"sec","queries":${fmt(rs, dp)}$d,"failed":${names(failed)}$fd$r$st$b16,"sf":"${f.sf}"}"""
+  }
+
+  /** 2000-char tail minus sbt's "[success] Total time ..." trailer
+    * (~76 chars) with a small margin */
+  private[graft] val maxLine = 1890
+
+  /** The metric line, at most `max` chars: the largest timings stay
+    * (the ones that matter for regression reading) and the cheapest
+    * non-priority entries drop first, then priority ones; only when no
+    * timing is left do failed names fold into a `failed_dropped`
+    * count. Per-query values print at 2 decimals (round 12): the
+    * driver's stdout tail window is exactly 2000 chars and 3-decimal
+    * entries pushed 53 of 123 queries off the r11 line, which PERF then
+    * misread as "dropped_from_bench"; the 3-decimal record lives in
+    * BENCH_DETAIL.json. */
+  private[graft] def metricLine(f: LineFields, results: Seq[(String, Double)],
+      failed: Seq[String], max: Int): String = {
+    var kept = results
+    def line(fs: Seq[String]) =
+      renderLine(f, kept, results.size - kept.size, fs, failed.size - fs.size, 2)
+    while (line(failed).length > max && kept.nonEmpty) {
+      val (prio, rest) = kept.partition(r => linePriority(r._1))
+      kept =
+        if (rest.nonEmpty) prio ++ rest.sortBy(-_._2).dropRight(1)
+        else prio.sortBy(-_._2).dropRight(1)
+    }
+    val keptSet = kept.map(_._1).toSet
+    kept = results.filter(r => keptSet(r._1))
+    var shown = failed
+    while (line(shown).length > max && shown.nonEmpty) shown = shown.dropRight(1)
+    line(shown)
+  }
+
   def main(args: Array[String]): Unit = {
     val unknown = linePriority.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty,
@@ -289,7 +364,7 @@ object Bench {
     val calStart = Bench.calibrationKernel()
 
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val times = scala.collection.mutable.Map.empty[String, List[Double]]
+    val times = scala.collection.mutable.Map.empty[String, List[Option[Double]]]
     // Stall-aware retry (round 12): a suite pass that lost >5% of its
     // wall time to host vCPU-starvation stalls is re-run instead of
     // counted (bounded: 3 extra passes). Min-of-reps sheds short
@@ -309,14 +384,8 @@ object Bench {
     while (passesDone < reps) {
       val sc0 = stallCount.get(); val sn0 = stallNanos.get()
       val w0 = System.nanoTime()
-      val pass = selected.flatMap { name =>
-        SparkEntry.queries.get(name).map { fn =>
-          val t0 = System.nanoTime()
-          val ok = try { fn(spark, sfDir).count(); true }
-                   catch { case _: Throwable => false }
-          name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
-        }
-      }
+      val pass = Bench.pass(selected.filter(SparkEntry.queries.contains))(
+        name => SparkEntry.queries(name)(spark, sfDir).count())
       val wall = System.nanoTime() - w0
       val passStalls = stallNanos.get() - sn0
       if (passStalls > 0.05 * wall && retries < maxRetries) {
@@ -328,13 +397,8 @@ object Bench {
         passesDone += 1
       }
     }
-    val results = selected.flatMap { name =>
-      times.get(name).map { ts =>
-        val good = ts.filter(_ >= 0)
-        name -> (if (good.nonEmpty) good.min else -1.0)
-      }
-    }
-    val total = results.map(_._2).filter(_ >= 0).sum
+    val (results, failed) = summarize(selected, times.toMap)
+    val total = results.map(_._2).sum
 
     // FULL-EVALUATION secondary column (round 10): the count() action
     // under-prices pure projections — parquet count-star short-circuits
@@ -345,15 +409,10 @@ object Bench {
     // the count() column stays the primary for cross-round
     // comparability. Single pass, not min-of-3: a secondary diagnostic
     // column, kept cheap.
-    val fullTimes = selected.flatMap { name =>
-      SparkEntry.queries.get(name).map { fn =>
-        val t0 = System.nanoTime()
-        val ok = try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true
-        } catch { case _: Throwable => false }
-        name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
-      }
-    }
+    val (fullTimes, fullFailed) = summarize(selected, Bench.pass(
+      selected.filter(SparkEntry.queries.contains)) { name =>
+        SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
+      }.map { case (name, t) => name -> List(t) }.toMap)
 
     // FULL per-query record (all queries, 3 decimals) goes to
     // BENCH_DETAIL.json in the repo root — the metric LINE below must
@@ -371,48 +430,20 @@ object Bench {
       "q_cumsum", "q_pivot_wider", "q_dedup_exact", "q_dedup_minhash",
       "q_text_stats", "q_embed_knn", "q_range_join", "q_dedup_simhash",
       "q_pipeline_clean")
-    val baseline16 = results
-      .filter(r => baseline16Names(r._1) && r._2 >= 0).map(_._2).sum
+    val baseline16 = results.filter(r => baseline16Names(r._1)).map(_._2).sum
     val calSec = math.min(calStart, Bench.calibrationKernel())
 
-    // Per-query values print at 2 decimals on the metric LINE (round
-    // 12): the driver's stdout tail window is exactly 2000 chars and
-    // 3-decimal entries pushed 53 of 123 queries off the r11 line,
-    // which PERF then misread as "dropped_from_bench". 10 ms quantized
-    // per-query precision costs nothing for regression reading; the
-    // 3-decimal record lives in BENCH_DETAIL.json as before.
-    def fmt(rs: Seq[(String, Double)], dp: Int): String =
-      rs.map { case (k, v) =>
-        "\"" + k + "\":" + String.format(java.util.Locale.ROOT, s"%.${dp}f",
-          Double.box(v))
-      }.mkString("{", ",", "}")
-    def line(rs: Seq[(String, Double)], dropped: Int, dp: Int): String = {
-      val d = if (dropped == 0) "" else s""","dropped":$dropped"""
-      val r = if (retries == 0) "" else s""","retries":$retries"""
-      val st = f""","stalls":$countedStallCount,"stall_sec":${countedStallNanos / 1e9}%.1f"""
-      val b16 = f""","baseline16":$baseline16%.3f,"cal_sec":$calSec%.3f"""
-      f"""{"metric":"headline_total","value":$total%.3f,"unit":"sec","queries":${fmt(rs, dp)}$d$r$st$b16,"sf":"$sfDir"}"""
-    }
+    val fields = LineFields(total, retries, countedStallCount, countedStallNanos / 1e9,
+      baseline16, calSec, sfDir)
     try {
       val detail = new java.io.File("BENCH_DETAIL.json").getAbsoluteFile
       val w = new java.io.PrintWriter(detail, "UTF-8")
       val detailLine =
-        line(results, 0, 3).stripSuffix("}") +
-          s""","queries_full":${fmt(fullTimes, 3)}}"""
+        renderLine(fields, results, 0, failed, 0, 3).stripSuffix("}") +
+          s""","queries_full":${fmt(fullTimes, 3)},"failed_full":${names(fullFailed)}}"""
       try w.println(detailLine) finally w.close()
     } catch { case _: Throwable => () } // detail record is best-effort
-    // 2000-char tail minus sbt's "[success] Total time ..." trailer
-    // (~76 chars) with a small margin
-    val maxLine = 1890
-    var kept = results
-    while (line(kept, results.size - kept.size, 2).length > maxLine && kept.nonEmpty) {
-      val (prio, rest) = kept.partition(r => linePriority(r._1))
-      kept =
-        if (rest.nonEmpty) prio ++ rest.sortBy(-_._2).dropRight(1)
-        else prio.sortBy(-_._2).dropRight(1)
-    }
-    val keptSet = kept.map(_._1).toSet
-    val out = line(results.filter(r => keptSet(r._1)), results.size - kept.size, 2)
+    val out = metricLine(fields, results, failed, maxLine)
 
     // stop FIRST so no Spark shutdown chatter can land after the
     // metric line — the driver parses the headline JSON from the tail

@@ -39,7 +39,11 @@ import org.apache.hadoop.fs.{CreateFlag, FileContext, FileSystem, Options, Path}
   * both pass the check, and the later rename would silently replace
   * the earlier commit. Conditional renames therefore run one at a time
   * in the JVM, which makes them put-if-absent for writers sharing it —
-  * the same guarantee delta-spark's local log store gives. */
+  * the same guarantee delta-spark's local log store gives. That
+  * serialization is per JVM only: two PROCESSES committing to one table
+  * on the local filesystem are NOT safe (both can "win" one version).
+  * Only filesystems with an atomic rename-if-absent (HDFS, object
+  * stores behind a conditional put) make cross-process commits safe. */
 private[graft] object AtomicFiles {
 
   private val conditionalRename = new Object

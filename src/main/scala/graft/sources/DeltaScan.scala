@@ -3,9 +3,9 @@ package graft.sources
 import java.nio.charset.StandardCharsets
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import com.fasterxml.jackson.databind.JsonNode
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -30,79 +30,24 @@ import org.apache.spark.sql.types._
   * checkpoints (UUID-named top files, parquet or JSON, with file
   * actions in parquet sidecars) read natively.
   *
-  * 100 TB shape: log replay is DISTRIBUTED — commit JSONs and the
-  * checkpoint are read as DataFrames and the live-file set is one
-  * window over a shuffle on the file path (exactly how Delta's own
-  * Spark snapshot reconstruction works). Only the live PATH LIST is
-  * collected for planning (~100 B/file — the same driver-side file
-  * index any format keeps); data files are then scanned as parquet
-  * with the usual pushdown/pruning, and hive-layout partition values
-  * become real partition columns (partition pruning works). Deletion
-  * vectors decode in EXECUTORS (one task per DV file, memory bounded
-  * by the descriptor's declared cardinality) and the deleted-position
-  * set joins against `_metadata.(file_path, row_index)` — broadcast
-  * when the total declared cardinality is small, sort-merge otherwise.
+  * Snapshot: the last checkpoint plus the JSON commits after it, read
+  * on the DRIVER with no Spark job — the checkpoint through
+  * [[DeltaCheckpoint]] (parquet-hadoop), the tail with Jackson, one
+  * last-action-per-path replay over both ([[snapshot]]). The live-file
+  * list it yields (~100 B/file — the same driver-side file index any
+  * format keeps) is bounded by [[PlanningGuard]] as it accumulates;
+  * data files are then scanned as parquet with the usual
+  * pushdown/pruning, and hive-layout partition values become real
+  * partition columns (partition pruning works). Deletion vectors
+  * decode in EXECUTORS (one task per DV file, memory bounded by the
+  * descriptor's declared cardinality) and the deleted-position set
+  * joins against `_metadata.(file_path, row_index)` — broadcast when
+  * the total declared cardinality is small, sort-merge otherwise.
   */
 object DeltaScan {
 
-  /** Schema for the action columns we replay (a projection of the
-    * protocol's action union — unknown fields are ignored by the JSON
-    * reader, which is exactly the forward-compat story the protocol
-    * prescribes for readers). */
-  private val actionSchema = StructType(Seq(
-    StructField("add", StructType(Seq(
-      StructField("path", StringType),
-      StructField("partitionValues", MapType(StringType, StringType)),
-      StructField("size", LongType),
-      StructField("dataChange", BooleanType),
-      StructField("stats", StringType),
-      StructField("deletionVector", StructType(Seq(
-        StructField("storageType", StringType),
-        StructField("pathOrInlineDv", StringType),
-        StructField("offset", IntegerType),
-        StructField("sizeInBytes", IntegerType),
-        StructField("cardinality", LongType))))))),
-    StructField("remove", StructType(Seq(
-      StructField("path", StringType),
-      StructField("dataChange", BooleanType)))),
-    StructField("metaData", StructType(Seq(
-      StructField("id", StringType),
-      StructField("schemaString", StringType),
-      StructField("partitionColumns", ArrayType(StringType)),
-      StructField("configuration", MapType(StringType, StringType))))),
-    StructField("protocol", StructType(Seq(
-      StructField("minReaderVersion", IntegerType),
-      StructField("readerFeatures", ArrayType(StringType)))))))
-
   private val supportedReaderFeatures =
     Set("timestampNtz", "deletionVectors", "columnMapping", "v2Checkpoint")
-
-  /** Resolve the checkpoint top file(s) at `v`: classic single file,
-    * multi-part (`parts` from `_last_checkpoint`), or a V2 UUID-named
-    * top file (`<v>.checkpoint.<uniqueStr>.{parquet,json}`). Returns
-    * (paths, isJson, isV2Named) — V2 tops are the only ones that may
-    * carry `sidecar` actions. */
-  private[sources] def checkpointTopFiles(fs: FileSystem, logDir: Path,
-      v: Long, parts: Option[Int]): (Seq[String], Boolean, Boolean) = parts match {
-    case Some(n) if n > 1 =>
-      ((1 to n).map(i =>
-        new Path(logDir, f"$v%020d.checkpoint.$i%010d.$n%010d.parquet").toString),
-        false, false)
-    case _ =>
-      val classic = new Path(logDir, f"$v%020d.checkpoint.parquet")
-      if (fs.exists(classic)) (Seq(classic.toString), false, false)
-      else {
-        // v2 naming: one dot-free uniqueStr segment (multi-part names
-        // have two numeric segments, so they never match)
-        val names = fs.listStatus(logDir).toSeq.map(_.getPath.getName)
-        val pqc = names.filter(_.matches(f"$v%020d\\.checkpoint\\.[A-Za-z0-9-]+\\.parquet"))
-        val jsc = names.filter(_.matches(f"$v%020d\\.checkpoint\\.[A-Za-z0-9-]+\\.json"))
-        if (pqc.nonEmpty) (Seq(new Path(logDir, pqc.max).toString), false, true)
-        else if (jsc.nonEmpty) (Seq(new Path(logDir, jsc.max).toString), true, true)
-        else throw new IllegalStateException(
-          s"_last_checkpoint names version $v but no checkpoint file exists in $logDir")
-      }
-  }
 
   /** Broadcast the deleted-position set below this many total rows
     * (~16 B/row → ≤64 MB); above it, let sort-merge handle the anti
@@ -144,12 +89,13 @@ object DeltaScan {
   /** Latest committed version of the table (max JSON commit number,
     * or the checkpoint version when the JSON tail was fully
     * truncated). */
-  def latestVersion(spark: SparkSession, tablePath: String): Long = {
-    val (fs, versions) = listLog(spark, tablePath)
-    val cp = lastCheckpoint(spark, fs, new Path(tablePath, "_delta_log"))
-    require(versions.nonEmpty || cp.nonEmpty,
+  def latestVersion(spark: SparkSession, tablePath: String): Long =
+    latestVersion(tablePath, logFiles(spark, tablePath))
+
+  private def latestVersion(tablePath: String, log: LogFiles): Long = {
+    require(log.jsonVersions.nonEmpty || log.lastCheckpoint.nonEmpty,
       s"no Delta log found under $tablePath/_delta_log")
-    (versions ++ cp.map(_._1)).max
+    log.latestVersion
   }
 
   /** The table as a DataFrame, at `versionAsOf` if given else the
@@ -186,269 +132,165 @@ object DeltaScan {
       files: Seq[LiveFile])
 
   /** log replay up to `versionAsOf` (default: latest) — the shared
-    * front half of [[read]]: checkpoint + JSON tail, protocol gates,
-    * metaData resolution, last-action-per-path live-set reconstruction,
-    * planning-size guard. Metadata I/O only; no data file is opened. */
+    * front half of [[read]]: checkpoint + JSON tail ([[snapshotAt]]),
+    * protocol gates, metaData resolution, planning-size guard. Metadata
+    * I/O on the driver only; no data file is opened, no job runs. */
   private[graft] def liveState(spark: SparkSession, tablePath: String,
       versionAsOf: Option[Long] = None): LiveState = {
-    val (fs, versions) = listLog(spark, tablePath)
-    // a checkpoint with a fully-truncated JSON tail is a legal table
-    // state (everything up to the checkpoint version was vacuumed from
-    // the log) — the checkpoint IS the latest version then
-    val cpOnly = lastCheckpoint(spark, fs, new Path(tablePath, "_delta_log"))
-    require(versions.nonEmpty || cpOnly.nonEmpty,
-      s"no Delta log found under $tablePath/_delta_log")
-    val target = versionAsOf.getOrElse(
-      (versions ++ cpOnly.map(_._1)).max)
-    require(versions.contains(target) || cpOnly.exists(_._1 == target),
-      s"version $target not present in $tablePath/_delta_log" +
-        (if (versions.nonEmpty) s" (have ${versions.min}..${versions.max})" else " (checkpoint only)"))
-
-    val logDir = new Path(tablePath, "_delta_log")
-    // checkpoint usable only if it is at or before the target version
-    val checkpoint = lastCheckpoint(spark, fs, logDir).filter(_._1 <= target)
-    val cpVersion = checkpoint.map(_._1).getOrElse(-1L)
-    val jsonVersions = versions.filter(v => v > cpVersion && v <= target)
-    require(checkpoint.nonEmpty || jsonVersions.contains(0L),
-      s"Delta log at $tablePath is truncated before version 0 and no usable checkpoint exists")
-
-    // DRIVER-SIDE FAST REPLAY (guide §1.2 step 1 / §2.4 — remove jobs
-    // that do no data work): a JSON-only log is replayed with Jackson
-    // on the driver instead of a spark.read.json scan + a window
-    // shuffle + toLocalIterator — on small logs the distributed replay
-    // is 2-3 Spark jobs of pure scheduling overhead per read, and
-    // every Delta read pays it. Same last-action-wins semantics, same
-    // protocol/metaData gates, same PlanningGuard accounting (asserted
-    // equivalent by DeltaScanSpec's fast-vs-distributed check). The
-    // distributed path stays for checkpointed tables (the checkpoint
-    // is a data-sized parquet artifact that belongs in executors) and
-    // for JSON tails past `maxDriverReplayBytes` — a 100 TB table has
-    // a checkpoint (auto-checkpointing every 10 commits), so the
-    // driver never replays an unbounded log.
-    if (driverReplayEnabled && checkpoint.isEmpty && jsonVersions.nonEmpty &&
-        jsonVersions.map(v => fs.getFileStatus(
-          new Path(logDir, f"$v%020d.json")).getLen).sum <= maxDriverReplayBytes)
-      return liveStateDriver(fs, tablePath, logDir, jsonVersions)
-
-    val jsonActs =
-      if (jsonVersions.isEmpty) None
-      else Some(spark.read.schema(actionSchema)
-        .json(jsonVersions.map(v => new Path(logDir, f"$v%020d.json").toString): _*)
-        .withColumn("__v",
-          regexp_extract(input_file_name(), "(\\d+)\\.json", 1).cast("long")))
-    // reading the checkpoint with OUR action schema projects away the
-    // extra checkpoint fields (stats, txn, ...) and nulls out any field
-    // a given writer version didn't emit, so both sources union cleanly
-    val cpActs = checkpoint.map { case (v, parts) =>
-      val (cpFiles, isJson, isV2Named) = checkpointTopFiles(fs, logDir, v, parts)
-      def rd(paths: Seq[String], sch: StructType) =
-        if (isJson) spark.read.schema(sch).json(paths: _*)
-        else spark.read.schema(sch).parquet(paths: _*)
-      val top = rd(cpFiles, actionSchema).withColumn("__v", lit(v))
-      if (!isV2Named) top
-      else {
-        // V2 checkpoint: file actions may live in parquet SIDECARS
-        // under _delta_log/_sidecars (top file then carries only
-        // non-file actions + the sidecar pointers)
-        val sidecarSchema = StructType(Seq(StructField("sidecar",
-          StructType(Seq(StructField("path", StringType))))))
-        val scPaths = rd(cpFiles, sidecarSchema)
-          .select(col("sidecar.path").as("p")).filter(col("p").isNotNull)
-          .collect().map(_.getString(0)).toSeq.sorted // [lint:bounded] one row per sidecar FILE
-        if (scPaths.isEmpty) top
-        else top.unionByName(
-          spark.read.schema(actionSchema).parquet(scPaths.map { p =>
-            if (p.contains("://") || p.startsWith("/")) p
-            else new Path(logDir, s"_sidecars/$p").toString
-          }: _*).withColumn("__v", lit(v)))
-      }
-    }
-    val acts = (cpActs.toSeq ++ jsonActs.toSeq).reduce(_ unionByName _)
-
-    // ---- protocol / metadata gates --------------------------------------
-    val proto = acts.filter(col("protocol.minReaderVersion").isNotNull)
-      .orderBy(col("__v").desc).select("protocol.*").collect().headOption // [lint:bounded] one protocol row
-    proto.foreach { p =>
-      val minReader = p.getInt(0)
-      val feats = Option(p.getSeq[String](1)).getOrElse(Seq.empty)
-      // 1 = base, 2 = legacy column mapping, 3 = table features (must
-      // all be understood, else loud).
-      require(minReader <= 2 || (minReader == 3 && feats.forall(supportedReaderFeatures)),
-        s"Delta reader protocol $minReader with features $feats is not supported " +
-          "by the built-in reader (unsupported: " +
-          s"${feats.filterNot(supportedReaderFeatures).mkString(", ")})")
-    }
-    val meta = acts.filter(col("metaData.id").isNotNull)
-      .orderBy(col("__v").desc).select("metaData.*").collect().headOption // [lint:bounded] one metaData row
-      .getOrElse(throw new IllegalStateException(
-        s"Delta log at $tablePath has no metaData action"))
-    val conf = Option(meta.getMap[String, String](3)).map(_.toMap).getOrElse(Map.empty)
-    val cmMode = conf.getOrElse("delta.columnMapping.mode", "none")
-    require(Set("none", "name", "id")(cmMode),
-      s"Delta column mapping mode '$cmMode' is not in the protocol (none/name/id)")
-    val columnMapped = cmMode != "none"
-    val schema = DataType.fromJson(meta.getString(1)).asInstanceOf[StructType]
-    val partCols = Option(meta.getSeq[String](2)).getOrElse(Seq.empty)
-
-    // ---- live-file reconstruction: last action per path wins ------------
-    val addsDf = acts.filter(col("add.path").isNotNull)
-      .select(col("add.path").as("p"), col("__v"), lit(1).as("isAdd"),
-        col("add.partitionValues").as("pv"), col("add.deletionVector").as("dv"),
-        col("add.stats").as("st"))
-    val dvType = actionSchema("add").dataType.asInstanceOf[StructType]("deletionVector").dataType
-    val removesDf = acts.filter(col("remove.path").isNotNull)
-      .select(col("remove.path").as("p"), col("__v"), lit(0).as("isAdd"),
-        lit(null).cast(MapType(StringType, StringType)).as("pv"),
-        lit(null).cast(dvType).as("dv"),
-        lit(null).cast(StringType).as("st"))
-    val w = Window.partitionBy("p").orderBy(col("__v").desc, col("isAdd").desc)
-    val liveDf = addsDf.unionByName(removesDf)
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1 && col("isAdd") === 1)
-      .select("p", "pv", "dv", "st")
-    // planning-size guard: the live-file array is O(file count) DRIVER
-    // memory — refuse loudly past the bound ([[PlanningGuard]]) instead
-    // of OOMing mid-plan at 100 TB x small files. The guard must fire
-    // BEFORE the array exists, so accumulate through toLocalIterator
-    // (one partition resident at a time) and count AS rows arrive —
-    // an oversized table aborts with at most one partition + the
-    // so-far buffer on the driver, never the whole live set
-    val liveBuf = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
-    var planBytes = 0L
-    scala.jdk.CollectionConverters.IteratorHasAsScala(
-      liveDf.toLocalIterator()).asScala.foreach { r => // [lint:bounded] one action row per live data FILE (log metadata, not data); guarded incrementally
-      planBytes += 96L + r.getString(0).length +
-        (if (r.isNullAt(3)) 0L else r.getString(3).length.toLong)
-      PlanningGuard.check(tablePath, liveBuf.length + 1L, planBytes)
-      liveBuf += r
-    }
-    val live = liveBuf.toArray
-
-    val allFiles = live.map { r =>
-      val rel = percentDecode(r.getString(0))
-      val pv = if (r.isNullAt(1)) Map.empty[String, String]
-               else r.getMap[String, String](1).toMap
-      val dv = if (r.isNullAt(2) || r.getStruct(2).isNullAt(0)) None else {
-        val d = r.getStruct(2)
-        Some(DeletionVectors.Descriptor(
-          d.getString(0), d.getString(1),
-          if (d.isNullAt(2)) None else Some(d.getInt(2)),
-          d.getInt(3), d.getLong(4)))
-      }
-      val st = if (r.isNullAt(3)) None else Some(r.getString(3))
-      LiveFile(new Path(tablePath, rel).toString, pv, dv, st)
-    }
-    LiveState(schema, partCols, conf, columnMapped, allFiles.toSeq)
-  }
-
-  /** JSON-tail byte cap for the driver-side replay; past it (or with
-    * any checkpoint present) the distributed replay runs. Env override
-    * for ops; the default comfortably covers every no-checkpoint log
-    * (auto-checkpointing bounds tails to ~10 commits). */
-  private[sources] val maxDriverReplayBytes: Long =
-    sys.env.get("GRAFT_DELTA_DRIVER_REPLAY_MAX_BYTES").map(_.toLong)
-      .getOrElse(128L << 20)
-
-  /** test hook: DeltaScanSpec forces the distributed replay to assert
-    * the two replays reconstruct identical snapshots */
-  @volatile private[graft] var driverReplayEnabled = true
-
-  /** Driver twin of the distributed replay in [[liveState]] — Jackson
-    * over the JSON tail, zero Spark jobs. Semantics mirrored exactly:
-    * last action per path wins, an add beats a remove within one
-    * version (the window's `(__v DESC, isAdd DESC)` — DV re-add
-    * commits), protocol actions without `minReaderVersion` and
-    * metaData actions without `id` are ignored (the schema-projection
-    * filters), and the planning-size guard sees the same per-file
-    * byte estimate. */
-  private def liveStateDriver(fs: FileSystem, tablePath: String,
-      logDir: Path, jsonVersions: Seq[Long]): LiveState = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    import com.fasterxml.jackson.databind.JsonNode
-    def opt(n: JsonNode, f: String): Option[JsonNode] =
-      Option(n.get(f)).filterNot(_.isNull)
-    // (version, isAdd, add-node or null) per path
-    val latest = scala.collection.mutable.LinkedHashMap
-      .empty[String, (Long, Boolean, JsonNode)]
-    var proto: Option[JsonNode] = scala.None
-    var meta: Option[JsonNode] = scala.None
-    jsonVersions.sorted.foreach { v =>
-      val p = new Path(logDir, f"$v%020d.json")
-      val in = fs.open(p)
-      val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
-        .getLines().toList finally in.close()
-      lines.foreach { ln =>
-        if (ln.nonEmpty) {
-          val node = mapper.readTree(ln)
-          if (node.has("add")) {
-            val a = node.get("add")
-            opt(a, "path").map(_.asText()).foreach { path =>
-              if (latest.get(path).forall(_._1 <= v)) // add wins same-v ties
-                latest(path) = (v, true, a)
-            }
-          } else if (node.has("remove")) {
-            opt(node.get("remove"), "path").map(_.asText()).foreach { path =>
-              if (latest.get(path).forall(c => c._1 < v || (c._1 == v && !c._2)))
-                latest(path) = (v, false, null)
-            }
-          } else if (node.has("metaData")) {
-            if (opt(node.get("metaData"), "id").nonEmpty)
-              meta = Some(node.get("metaData"))
-          } else if (node.has("protocol")) {
-            if (opt(node.get("protocol"), "minReaderVersion").nonEmpty)
-              proto = Some(node.get("protocol"))
-          }
-        }
-      }
-    }
-
-    proto.foreach { p =>
+    val snap = snapshotAt(spark, tablePath, versionAsOf)
+    snap.protocol.foreach { p =>
       val minReader = p.get("minReaderVersion").asInt()
       val feats = opt(p, "readerFeatures")
         .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Seq.empty)
+      // 1 = base, 2 = legacy column mapping, 3 = table features (must
+      // all be understood, else loud)
       require(minReader <= 2 || (minReader == 3 && feats.forall(supportedReaderFeatures)),
         s"Delta reader protocol $minReader with features $feats is not supported " +
           "by the built-in reader (unsupported: " +
           s"${feats.filterNot(supportedReaderFeatures).mkString(", ")})")
     }
-    val md = meta.getOrElse(throw new IllegalStateException(
+    val md = snap.metaData.getOrElse(throw new IllegalStateException(
       s"Delta log at $tablePath has no metaData action"))
-    val conf = opt(md, "configuration").map(c =>
-      c.properties().asScala.map(e =>
-        e.getKey -> (if (e.getValue.isNull) null else e.getValue.asText())).toMap)
-      .getOrElse(Map.empty[String, String])
+    val conf = stringMap(md, "configuration")
     val cmMode = conf.getOrElse("delta.columnMapping.mode", "none")
     require(Set("none", "name", "id")(cmMode),
       s"Delta column mapping mode '$cmMode' is not in the protocol (none/name/id)")
-    val columnMapped = cmMode != "none"
     val schema = DataType.fromJson(md.get("schemaString").asText())
       .asInstanceOf[StructType]
     val partCols = opt(md, "partitionColumns")
       .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Seq.empty)
-
-    var planBytes = 0L
-    val files = scala.collection.mutable.ArrayBuffer.empty[LiveFile]
-    latest.foreach { case (rawPath, (_, isAdd, a)) =>
-      if (isAdd) {
-        val stats = opt(a, "stats").map(_.asText())
-        planBytes += 96L + rawPath.length + stats.fold(0L)(_.length.toLong)
-        PlanningGuard.check(tablePath, files.length + 1L, planBytes)
-        val pv = opt(a, "partitionValues").map(p =>
-          p.properties().asScala.map(e =>
-            e.getKey -> (if (e.getValue.isNull) null else e.getValue.asText())).toMap)
-          .getOrElse(Map.empty[String, String])
-        val dv = opt(a, "deletionVector").filter(d => opt(d, "storageType").nonEmpty)
-          .map { d =>
-            DeletionVectors.Descriptor(
-              d.get("storageType").asText(), d.get("pathOrInlineDv").asText(),
-              opt(d, "offset").map(_.asInt()),
-              d.get("sizeInBytes").asInt(), d.get("cardinality").asLong())
-          }
-        files += LiveFile(
-          new Path(tablePath, percentDecode(rawPath)).toString, pv, dv, stats)
-      }
+    val files = snap.adds.map { case (rawPath, a) =>
+      val dv = opt(a, "deletionVector").filter(d => opt(d, "storageType").nonEmpty)
+        .map { d =>
+          DeletionVectors.Descriptor(
+            d.get("storageType").asText(), d.get("pathOrInlineDv").asText(),
+            opt(d, "offset").map(_.asInt()),
+            d.get("sizeInBytes").asInt(), d.get("cardinality").asLong())
+        }
+      LiveFile(new Path(tablePath, percentDecode(rawPath)).toString,
+        stringMap(a, "partitionValues"), dv, opt(a, "stats").map(_.asText()))
     }
-    LiveState(schema, partCols, conf, columnMapped, files.toSeq)
+    LiveState(schema, partCols, conf, cmMode != "none", files.toSeq)
+  }
+
+  /** the scan's actions at `versionAsOf` (default: latest): the last
+    * usable checkpoint plus the JSON commits after it up to the target */
+  private[graft] def snapshotAt(spark: SparkSession, tablePath: String,
+      versionAsOf: Option[Long]): Snapshot = {
+    val log = logFiles(spark, tablePath)
+    val versions = log.jsonVersions
+    // a checkpoint with a fully-truncated JSON tail is a legal table
+    // state (everything up to the checkpoint version was vacuumed from
+    // the log) — the checkpoint IS the latest version then
+    val lastCp = log.lastCheckpoint
+    val target = versionAsOf.getOrElse(latestVersion(tablePath, log))
+    require(versions.contains(target) || lastCp.exists(_._1 == target),
+      s"version $target not present in $tablePath/_delta_log" +
+        (if (versions.nonEmpty) s" (have ${versions.min}..${versions.max})" else " (checkpoint only)"))
+    // checkpoint usable only if it is at or before the target version
+    val checkpoint = lastCp.filter(_._1 <= target)
+    val cpVersion = checkpoint.fold(-1L)(_._1)
+    val tail = versions.filter(v => v > cpVersion && v <= target)
+    require(checkpoint.nonEmpty || tail.contains(0L),
+      s"Delta log at $tablePath is truncated before version 0 and no usable checkpoint exists")
+    snapshot(tablePath, log, checkpoint, tail, log.readCommit, FileKeys)
+  }
+
+  private def opt(n: JsonNode, f: String): Option[JsonNode] =
+    Option(n.get(f)).filterNot(_.isNull)
+
+  /** a string-to-string map field (null values kept as null) */
+  private def stringMap(n: JsonNode, f: String): Map[String, String] =
+    opt(n, f).map(_.properties().asScala.map(e =>
+      e.getKey -> (if (e.getValue.isNull) null else e.getValue.asText())).toMap)
+      .getOrElse(Map.empty)
+
+  /** the actions a scan plans from, and the table-level rest */
+  private[sources] val FileKeys = Set("add", "remove", "metaData", "protocol")
+  private[sources] val TableKeys = Set("metaData", "protocol", "txn", "domainMetadata")
+
+  /** The table state one replay leaves: the newest protocol and
+    * metaData, per path its last add or remove (first-seen order), and
+    * the newest txn per app and domainMetadata per domain. */
+  private[graft] final class Snapshot {
+    var protocol: Option[JsonNode] = None
+    var metaData: Option[JsonNode] = None
+    /** raw path → (version, add node, or null for a remove) */
+    private[sources] val files =
+      scala.collection.mutable.LinkedHashMap.empty[String, (Long, JsonNode)]
+    val txns = scala.collection.mutable.LinkedHashMap.empty[String, JsonNode]
+    val domains = scala.collection.mutable.LinkedHashMap.empty[String, JsonNode]
+
+    /** the live add per raw path */
+    def adds: Iterable[(String, JsonNode)] =
+      files.view.collect { case (p, (_, a)) if a != null => p -> a }
+
+    /** domain → configuration of every domain not removed */
+    def domainConfig: Map[String, String] = domains.collect {
+      case (k, d) if !opt(d, "removed").exists(_.asBoolean(false)) =>
+        k -> opt(d, "configuration").map(_.asText()).getOrElse("")
+    }.toMap
+  }
+
+  /** THE log replay (PROTOCOL.md §Action Reconciliation), shared by the
+    * reader, the writer's table-level state and the checkpoint writer:
+    * checkpoint `cp`'s actions first, then each `tail` commit in
+    * order, keeping only the `keys` actions. Per path the last add or
+    * remove wins, except that an add beats a remove within one version
+    * (the DV re-add commit shape); protocol actions without
+    * `minReaderVersion` and metaData without `id` are skipped. Live adds
+    * count against [[PlanningGuard]] as they accumulate, so an oversized
+    * table refuses before its file list exists, never by a driver OOM. */
+  private[sources] def snapshot(tablePath: String, log: LogFiles,
+      cp: Option[(Long, Option[Int])], tail: Seq[Long],
+      commit: Long => Seq[JsonNode], keys: Set[String]): Snapshot = {
+    val s = new Snapshot
+    var live = 0L
+    var planBytes = 0L
+    def cost(path: String, add: JsonNode): Long =
+      96L + path.length + opt(add, "stats").fold(0L)(_.asText().length.toLong)
+    def path(a: JsonNode): Option[String] = opt(a, "path").map(_.asText())
+    def apply(v: Long, n: JsonNode): Unit =
+      if (n.has("add")) {
+        if (keys("add")) path(n.get("add")).foreach { p =>
+          val prev = s.files.get(p)
+          if (prev.forall(_._1 <= v)) {
+            prev.filter(_._2 != null) match {
+              case Some((_, old)) => planBytes -= cost(p, old)
+              case None => live += 1
+            }
+            planBytes += cost(p, n.get("add"))
+            PlanningGuard.check(tablePath, live, planBytes)
+            s.files(p) = (v, n.get("add"))
+          }
+        }
+      } else if (n.has("remove")) {
+        if (keys("remove")) path(n.get("remove")).foreach { p =>
+          val prev = s.files.get(p)
+          if (prev.forall(c => c._1 < v || (c._1 == v && c._2 == null))) {
+            prev.filter(_._2 != null).foreach { case (_, old) =>
+              live -= 1; planBytes -= cost(p, old)
+            }
+            s.files(p) = (v, null)
+          }
+        }
+      } else if (n.has("metaData")) {
+        if (keys("metaData") && opt(n.get("metaData"), "id").nonEmpty)
+          s.metaData = Some(n.get("metaData"))
+      } else if (n.has("protocol")) {
+        if (keys("protocol") && opt(n.get("protocol"), "minReaderVersion").nonEmpty)
+          s.protocol = Some(n.get("protocol"))
+      } else if (n.has("txn")) {
+        if (keys("txn")) opt(n.get("txn"), "appId").foreach(a => s.txns(a.asText()) = n.get("txn"))
+      } else if (n.has("domainMetadata")) {
+        if (keys("domainMetadata")) opt(n.get("domainMetadata"), "domain")
+          .foreach(d => s.domains(d.asText()) = n.get("domainMetadata"))
+      }
+    cp.foreach { case (v, parts) =>
+      DeltaCheckpoint.foreach(log.fs, log.logDir, log.checkpoint(v, parts), keys)(apply(v, _))
+    }
+    tail.foreach(v => commit(v).foreach(apply(v, _)))
+    s
   }
 
   /** the back half of [[read]]: plan the scan over a reconstructed
@@ -636,8 +478,8 @@ object DeltaScan {
       fromVersion: Long, toVersion: Long): DataFrame = {
     require(fromVersion >= 0 && toVersion >= fromVersion,
       s"bad version range [$fromVersion, $toVersion]")
-    val (fs, versions) = listLog(spark, tablePath)
-    val missing = (fromVersion to toVersion).filterNot(versions.contains)
+    val log = logFiles(spark, tablePath)
+    val missing = (fromVersion to toVersion).filterNot(log.jsonVersions.contains)
     require(missing.isEmpty,
       s"Delta log at $tablePath is missing JSON commits ${missing.mkString(", ")} — " +
         "cannot serve the change feed; recompute from snapshots")
@@ -647,8 +489,6 @@ object DeltaScan {
     val outSchema = StructType(st.schema.fields ++ Seq(
       StructField("_change_type", StringType),
       StructField("_commit_version", LongType)))
-    val logDir = new Path(tablePath, "_delta_log")
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val fieldType = st.schema.fields.map(f => f.name -> f.dataType).toMap
     val dataFields = StructType(
       st.schema.fields.filterNot(f => st.partCols.contains(f.name)))
@@ -678,9 +518,7 @@ object DeltaScan {
     }
 
     val perVersion: Seq[DataFrame] = (fromVersion to toVersion).flatMap { v =>
-      val in = fs.open(new Path(logDir, f"$v%020d.json"))
-      val nodes = (try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-        finally in.close()).map(mapper.readTree)
+      val nodes = log.readCommit(v)
       def pvOf(n: com.fasterxml.jackson.databind.JsonNode): Map[String, String] =
         Option(n.get("partitionValues")).map(_.properties().asScala.map(e =>
           e.getKey -> (if (e.getValue.isNull) null else e.getValue.asText())).toMap)
@@ -733,37 +571,29 @@ object DeltaScan {
     require(fromExclusive <= toInclusive,
       s"bad version range ($fromExclusive, $toInclusive]")
     if (fromExclusive == toInclusive) return Seq.empty
-    val (_, versions) = listLog(spark, tablePath)
+    val log = logFiles(spark, tablePath)
     val want = (fromExclusive + 1) to toInclusive
-    val missing = want.filterNot(versions.contains)
+    val missing = want.filterNot(log.jsonVersions.contains)
     require(missing.isEmpty,
       s"Delta log at $tablePath is missing JSON commits ${missing.mkString(", ")} — " +
         "cannot read the increment; recompute from the full snapshot")
-    val logDir = new Path(tablePath, "_delta_log")
-    val acts = spark.read.schema(actionSchema)
-      .json(want.map(v => new Path(logDir, f"$v%020d.json").toString): _*)
-    val badRemoves = acts
-      .filter(col("remove.path").isNotNull && col("remove.dataChange"))
-      .limit(1).count()
-    require(badRemoves == 0,
+    def dataChange(n: JsonNode, key: String): Option[JsonNode] =
+      Option(n.get(key)).filter(a => opt(a, "path").nonEmpty &&
+        opt(a, "dataChange").exists(_.asBoolean(false)))
+    val acts = want.flatMap(log.readCommit)
+    require(!acts.exists(dataChange(_, "remove").nonEmpty),
       s"Delta table $tablePath has data-changing removes in ($fromExclusive, " +
         s"$toInclusive] — not an append-only increment; recompute from the full snapshot")
-    val adds = acts
-      .filter(col("add.path").isNotNull && col("add.dataChange"))
-      .select(col("add.path"), col("add.deletionVector.storageType"),
-        col("add.partitionValues"))
-      .collect() // [lint:bounded] one row per incremental add action (log metadata)
-    adds.foreach { r =>
-      require(r.isNullAt(1),
-        s"Delta increment add ${r.getString(0)} carries a deletion vector — " +
+    acts.flatMap(dataChange(_, "add")).map { a =>
+      val path = a.get("path").asText()
+      require(opt(a, "deletionVector").forall(d => opt(d, "storageType").isEmpty),
+        s"Delta increment add $path carries a deletion vector — " +
           "not an append-only increment; recompute from the full snapshot")
-      val pv = if (r.isNullAt(2)) Map.empty[String, String] else r.getMap[String, String](2)
-      require(pv.isEmpty,
-        s"Delta increment add ${r.getString(0)} is partitioned — incremental " +
+      require(stringMap(a, "partitionValues").isEmpty,
+        s"Delta increment add $path is partitioned — incremental " +
           "consumers support unpartitioned tables only")
+      new Path(tablePath, percentDecode(path)).toString
     }
-    adds.map(r => new Path(tablePath,
-      percentDecode(r.getString(0))).toString).toSeq
   }
 
   /** INCREMENTAL READ — the rows appended in versions `(fromExclusive,
@@ -805,7 +635,8 @@ object DeltaScan {
     * restored log must not silently travel to the wrong version. Fails
     * loudly when `ts` precedes the first commit. */
   def readTimestampAsOf(spark: SparkSession, tablePath: String, tsMillis: Long): DataFrame = {
-    val (fs, versions) = listLog(spark, tablePath)
+    val log = logFiles(spark, tablePath)
+    val (fs, versions) = (log.fs, log.jsonVersions)
     require(versions.nonEmpty,
       s"no Delta log found under $tablePath/_delta_log (timestamp travel needs the JSON tail)")
     val logDir = new Path(tablePath, "_delta_log")
@@ -870,7 +701,8 @@ object DeltaScan {
     * after [[DeltaWrite.checkpoint]]-based log cleanup, so the row set
     * is the JSON tail, not all of history. */
   def history(spark: SparkSession, tablePath: String): DataFrame = {
-    val (fs, versions) = listLog(spark, tablePath)
+    val log = logFiles(spark, tablePath)
+    val (fs, versions) = (log.fs, log.jsonVersions)
     val logDir = new Path(tablePath, "_delta_log")
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val rows = versions.sorted.map { v =>
@@ -941,75 +773,84 @@ object DeltaScan {
     case other => other
   }
 
-  /** All commit versions present as JSON files, plus the FileSystem. */
-  private def listLog(spark: SparkSession, tablePath: String): (FileSystem, Seq[Long]) = {
+  /** `_delta_log` listed once — through the session's Hadoop conf */
+  private def logFiles(spark: SparkSession, tablePath: String): LogFiles = {
     val logDir = new Path(tablePath, "_delta_log")
-    val fs = logDir.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(logDir)) return (fs, Seq.empty)
-    val versions = fs.listStatus(logDir).toSeq
-      .map(_.getPath.getName)
+    new LogFiles(logDir.getFileSystem(spark.sessionState.newHadoopConf()), logDir)
+  }
+
+  /** `_delta_log` as ONE listing: the commit versions, `_last_checkpoint`
+    * (read once, on first use, when listed) and the checkpoint files of
+    * a version, all resolved from the same listing. */
+  private[sources] final class LogFiles(val fs: FileSystem, val logDir: Path) {
+    val exists: Boolean = fs.exists(logDir)
+    private val listed: Map[String, FileStatus] =
+      if (!exists) Map.empty
+      else fs.listStatus(logDir).iterator.map(st => st.getPath.getName -> st).toMap
+
+    /** JSON commit versions present, ascending */
+    val jsonVersions: Seq[Long] = listed.keys.iterator
       .collect { case n if n.matches("\\d{20}\\.json") => n.stripSuffix(".json").toLong }
-    (fs, versions.sorted)
+      .toSeq.sorted
+
+    /** `_last_checkpoint` → (version, parts) */
+    lazy val lastCheckpoint: Option[(Long, Option[Int])] =
+      listed.get("_last_checkpoint").map { st =>
+        val node = LakeSupport.mapper.readTree(LakeSupport.readUtf8(fs, st.getPath))
+        (node.get("version").asLong(), Option(node.get("parts")).map(_.asInt()))
+      }
+
+    /** the newest commit, or the checkpoint's version when the JSON tail
+      * was fully truncated (callers check that either exists) */
+    def latestVersion: Long = (jsonVersions ++ lastCheckpoint.map(_._1)).max
+
+    def commitPath(v: Long): Path = new Path(logDir, f"$v%020d.json")
+
+    /** commit `v`'s action lines */
+    def readCommit(v: Long): Seq[JsonNode] =
+      LakeSupport.readUtf8(fs, commitPath(v)).linesIterator
+        .filter(_.nonEmpty).map(LakeSupport.mapper.readTree).toSeq
+
+    /** The checkpoint files at `v`: multi-part (`parts` from
+      * `_last_checkpoint`), the classic single file, or a v2 UUID-named
+      * top file (`<v>.checkpoint.<uniqueStr>.{parquet,json}`). */
+    def checkpoint(v: Long, parts: Option[Int]): DeltaCheckpoint.Files = {
+      def file(name: String): FileStatus = listed.getOrElse(name,
+        throw new IllegalStateException(
+          s"_last_checkpoint names version $v but checkpoint part $name is missing from $logDir"))
+      parts match {
+        case Some(n) if n > 1 =>
+          DeltaCheckpoint.Files(v, (1 to n).map(i =>
+            file(f"$v%020d.checkpoint.$i%010d.$n%010d.parquet")), json = false, v2 = false)
+        case _ => listed.get(f"$v%020d.checkpoint.parquet") match {
+          case Some(st) => DeltaCheckpoint.Files(v, Seq(st), json = false, v2 = false)
+          case None =>
+            // v2 naming: one dot-free uniqueStr segment (multi-part names
+            // have two numeric segments, so they never match)
+            def named(ext: String) = listed.keys.filter(
+              _.matches(f"$v%020d\\.checkpoint\\.[A-Za-z0-9-]+\\.$ext")).toSeq
+            val (pq, js) = (named("parquet"), named("json"))
+            if (pq.nonEmpty) DeltaCheckpoint.Files(v, Seq(listed(pq.max)), json = false, v2 = true)
+            else if (js.nonEmpty) DeltaCheckpoint.Files(v, Seq(listed(js.max)), json = true, v2 = true)
+            else throw new IllegalStateException(
+              s"_last_checkpoint names version $v but no checkpoint file exists in $logDir")
+        }
+      }
+    }
   }
 
   /** Current DOMAIN METADATA state (PROTOCOL §Domain Metadata): domain
     * → configuration for every domain whose latest action is not a
     * `removed` tombstone — checkpoint state first, JSON tail overrides
-    * by domain. Driver-side walk of the tail only (domain actions are
-    * a handful of bytes per commit; the checkpoint reads through
-    * spark.read with a domain-only projection). The clustered-table
-    * surface ([[clusteringColumns]]) sits on top. */
+    * by domain ([[snapshot]] over the domain actions only). The
+    * clustered-table surface ([[clusteringColumns]]) sits on top. */
   def domainMetadata(spark: SparkSession, tablePath: String): Map[String, String] = {
     val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val logDir = new Path(fs.makeQualified(new Path(tablePath)), "_delta_log")
-    require(fs.exists(logDir), s"no Delta table at $tablePath")
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val cp = lastCheckpoint(spark, fs, logDir)
-    val from = cp.map(_._1 + 1).getOrElse(0L)
-    val tail = (from to latestVersion(spark, tablePath)).iterator
-      .map(v => new Path(logDir, f"$v%020d.json")).filter(fs.exists).map { p =>
-        val in = fs.open(p)
-        val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-          finally in.close()
-        lines.map(mapper.readTree)
-      }
-    domainState(spark, fs, logDir, cp, tail)
-  }
-
-  /** [[domainMetadata]] from the checkpoint `cp` and the action lines
-    * of each JSON commit after it, in version order */
-  private[sources] def domainState(spark: SparkSession, fs: FileSystem, logDir: Path,
-      cp: Option[(Long, Option[Int])],
-      tail: Iterator[Seq[com.fasterxml.jackson.databind.JsonNode]]): Map[String, String] = {
-    // (domain -> (configuration, removed)), oldest..newest application
-    var state = Map.empty[String, (String, Boolean)]
-    cp.foreach { case (v, parts) =>
-      val (cpFiles, isJson, _) = checkpointTopFiles(fs, logDir, v, parts)
-      val domainType = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("domain", org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("configuration", org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("removed", org.apache.spark.sql.types.BooleanType)))
-      val sch = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("domainMetadata", domainType)))
-      val df = if (isJson) spark.read.schema(sch).json(cpFiles: _*)
-               else spark.read.schema(sch).parquet(cpFiles: _*)
-      df.filter(org.apache.spark.sql.functions.col("domainMetadata.domain").isNotNull)
-        .select("domainMetadata.domain", "domainMetadata.configuration",
-          "domainMetadata.removed")
-        .collect() // [lint:bounded] one row per metadata DOMAIN
-        .foreach { r =>
-          state += r.getString(0) ->
-            (Option(r.getString(1)).getOrElse(""),
-              !r.isNullAt(2) && r.getBoolean(2))
-        }
-    }
-    tail.foreach(_.filter(_.has("domainMetadata")).foreach { n =>
-      val d = n.get("domainMetadata")
-      state += d.get("domain").asText() ->
-        (Option(d.get("configuration")).map(_.asText()).getOrElse(""),
-          Option(d.get("removed")).exists(_.asBoolean(false)))
-    })
-    state.collect { case (k, (cfg, false)) => k -> cfg }
+    val log = new LogFiles(fs, new Path(fs.makeQualified(new Path(tablePath)), "_delta_log"))
+    require(log.exists, s"no Delta table at $tablePath")
+    val cpV = log.lastCheckpoint.fold(-1L)(_._1)
+    snapshot(tablePath, log, log.lastCheckpoint, log.jsonVersions.filter(_ > cpV),
+      log.readCommit, Set("domainMetadata")).domainConfig
   }
 
   /** the table's clustering columns (PHYSICAL names, top-level) from
@@ -1030,18 +871,4 @@ object DeltaScan {
           }.toSeq)
       }
     }
-
-  /** `_last_checkpoint` → (version, parts), if present. */
-  private[sources] def lastCheckpoint(
-      spark: SparkSession, fs: FileSystem, logDir: Path): Option[(Long, Option[Int])] = {
-    val p = new Path(logDir, "_last_checkpoint")
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = mapper.readTree(txt)
-    val version = node.get("version").asLong()
-    val parts = Option(node.get("parts")).map(_.asInt())
-    Some((version, parts))
-  }
 }

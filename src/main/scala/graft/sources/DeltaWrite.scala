@@ -917,56 +917,15 @@ object DeltaWrite {
     commitData(view, ddf, parts, txn = Some((appId, txnVersion)))
   }
 
-  /** Highest `txn` version committed for `appId`, from the JSON tail
-    * plus (when the log was checkpoint-truncated) the latest
-    * checkpoint parquet — [[checkpoint]] carries the newest txn per
-    * appId forward exactly so this survives truncation. None if the
-    * table does not exist or has no txn for the app. */
+  /** Newest `txn` version committed for `appId`, from the latest
+    * checkpoint (when the log was checkpoint-truncated) plus the JSON
+    * tail after it — [[checkpoint]] carries the newest txn per appId
+    * forward exactly so this survives truncation. None if the table
+    * does not exist or has no txn for the app. */
   def lastTxnVersion(spark: SparkSession, tablePath: String, appId: String): Option[Long] = {
     val view = new LogView(spark, tablePath)
-    if (!view.exists) return scala.None
-    val (fs, logDir) = (view.fs, view.logDir)
-    var best: Option[Long] = scala.None
-    def consider(app: String, v: Long): Unit =
-      if (app == appId && best.forall(_ < v)) best = Some(v)
-    // checkpoint first (older state), then the JSON tail (newer wins on
-    // equal versions anyway — we keep the max)
-    val cpVersion: Long = view.lastCheckpoint match {
-      case scala.None => -1L
-      case Some((v, parts)) =>
-        // honor multi-part AND v2 UUID-named checkpoints (external
-        // writers): same resolution DeltaScan.read uses — missing a
-        // txn here would silently break the exactly-once handshake
-        // after truncation. V2 keeps non-file actions (txn included)
-        // in the TOP file, so sidecars never need reading here.
-        val resolved =
-          if (v < 0) scala.None
-          else scala.util.Try(
-            DeltaScan.checkpointTopFiles(fs, logDir, v, parts)).toOption
-        resolved match {
-          case Some((cpFiles, isJson, _)) if cpFiles.forall(p => fs.exists(new Path(p))) =>
-            val df = if (isJson) spark.read.json(cpFiles: _*)
-                     else spark.read.parquet(cpFiles: _*)
-            if (df.columns.contains("txn")) {
-              df.select("txn.appId", "txn.version")
-                .where(org.apache.spark.sql.functions.col("appId").isNotNull)
-                .collect() // [lint:bounded] one row per checkpointed txn app id
-                .foreach(r => consider(r.getString(0), r.getLong(1)))
-            }
-            v
-          case _ => -1L
-        }
-    }
-    // the JSON tail may be empty after checkpoint truncation — replay
-    // what is actually there instead of asking for a latest version
-    view.jsonVersions.filter(_ > cpVersion).foreach { v =>
-      view.commit(v).foreach { node =>
-        val t = node.get("txn")
-        if (t != null && t.get("appId") != null)
-          consider(t.get("appId").asText(), t.get("version").asLong())
-      }
-    }
-    best
+    if (!view.exists) scala.None
+    else view.tableState.txns.get(appId).map(_.get("version").asLong())
   }
 
   /** compare (names, types) and partition columns against the LATEST
@@ -997,15 +956,15 @@ object DeltaWrite {
     * spec reader) picks it up via `_last_checkpoint`.
     *
     * The snapshot is computed by the same latest-action-per-path replay
-    * the reader uses, from the FULL JSON history — this minimal writer
-    * never truncates its own log; checkpointing a log whose early
-    * commits are already gone fails loudly rather than guessing.
-    * Checkpoint rows carry the reader-required action fields (add with
+    * the reader uses, from the previous checkpoint and the JSON commits
+    * after it — this minimal writer never truncates its own log;
+    * checkpointing a log with a gap in that tail fails loudly rather
+    * than guessing. Checkpoint rows carry the reader-required action fields (add with
     * partitionValues/size/deletionVector, metaData, protocol); like the
     * commit step, this is driver-side METADATA work proportional to the
     * live-file count, not data size. */
   def checkpoint(spark: SparkSession, tablePath: String): Unit =
-    checkpointImpl(spark, tablePath, v2 = false)
+    checkpointImpl(new LogView(spark, tablePath), v2 = false)
 
   /** V2 CHECKPOINT: the protocol's UUID-named checkpoint layout — file
     * actions land in a parquet SIDECAR under `_delta_log/_sidecars/`,
@@ -1020,7 +979,7 @@ object DeltaWrite {
     * shard the file manifest so a 100M-file table's checkpoint is many
     * parallel-written (and parallel-read) parts instead of one row-blob. */
   def checkpointV2(spark: SparkSession, tablePath: String): Unit =
-    checkpointImpl(spark, tablePath, v2 = true)
+    checkpointImpl(new LogView(spark, tablePath), v2 = true)
 
   /** INCREMENTAL: a new checkpoint builds from the PREVIOUS checkpoint
     * plus the JSON tail after it — O(tail), not O(history) — so a
@@ -1028,227 +987,77 @@ object DeltaWrite {
     * checkpoints at constant cost and old JSON commits can be cleaned
     * up after each checkpoint without ever blocking the next one. The
     * tail must be gapless between the checkpoint and the head (loud
-    * otherwise). */
-  private def checkpointImpl(spark: SparkSession, tablePath: String, v2: Boolean): Unit = {
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val logDir = new Path(fs.makeQualified(new Path(tablePath)), "_delta_log")
-    val version = DeltaScan.latestVersion(spark, tablePath)
-    val prevCp = DeltaScan.lastCheckpoint(spark, fs, logDir).filter(_._1 <= version)
-    val cpV = prevCp.map(_._1).getOrElse(-1L)
-    val jsons = ((cpV + 1) to version).map(v => new Path(logDir, f"$v%020d.json"))
-    jsons.foreach(p => require(fs.exists(p),
-      s"cannot checkpoint $tablePath: commit $p is missing " +
+    * otherwise). The rows come from the reader's replay
+    * ([[DeltaScan.snapshot]], the view's parsed commits reused) and are
+    * written on the driver ([[DeltaCheckpoint]]): no Spark job. */
+  private def checkpointImpl(view: LogView, v2: Boolean): Unit = {
+    val version = view.version
+    val prevCp = view.lastCheckpoint.filter(_._1 <= version)
+    val tail = (prevCp.fold(-1L)(_._1) + 1) to version
+    tail.foreach(v => require(view.present(v),
+      s"cannot checkpoint ${view.tablePath}: commit ${view.log.commitPath(v)} is missing " +
         "(log truncated past the last checkpoint?)"))
-
-    import org.apache.spark.sql.types._
-    val dvType = StructType(Seq(
-      StructField("storageType", StringType), StructField("pathOrInlineDv", StringType),
-      StructField("offset", IntegerType), StructField("sizeInBytes", IntegerType),
-      StructField("cardinality", LongType)))
-    val addType = StructType(Seq(
-      StructField("path", StringType),
-      StructField("partitionValues", MapType(StringType, StringType)),
-      StructField("size", LongType),
-      StructField("modificationTime", LongType),
-      StructField("dataChange", BooleanType),
-      StructField("stats", StringType), // data-skipping survives checkpointing
-      StructField("deletionVector", dvType),
-      // row tracking: ids must survive log truncation or every row
-      // would silently re-identify at the next checkpoint cleanup
-      StructField("baseRowId", LongType),
-      StructField("defaultRowCommitVersion", LongType)))
-    val metaType = StructType(Seq(
-      StructField("id", StringType),
-      StructField("format", StructType(Seq(
-        StructField("provider", StringType),
-        StructField("options", MapType(StringType, StringType))))),
-      StructField("schemaString", StringType),
-      StructField("partitionColumns", ArrayType(StringType)),
-      StructField("configuration", MapType(StringType, StringType)),
-      StructField("createdTime", LongType)))
-    val protoType = StructType(Seq(
-      StructField("minReaderVersion", IntegerType),
-      StructField("minWriterVersion", IntegerType),
-      // feature-bearing protocols (deletionVectors) must survive
-      // checkpoint truncation or readers lose the capability gate
-      StructField("readerFeatures", ArrayType(StringType)),
-      StructField("writerFeatures", ArrayType(StringType))))
-    val txnType = StructType(Seq(
-      StructField("appId", StringType), StructField("version", LongType)))
-    val domainType = StructType(Seq(
-      StructField("domain", StringType),
-      StructField("configuration", StringType),
-      StructField("removed", BooleanType)))
-    val actionSchema = StructType(Seq(
-      StructField("add", addType),
-      StructField("remove", StructType(Seq(
-        StructField("path", StringType), StructField("dataChange", BooleanType)))),
-      StructField("metaData", metaType),
-      StructField("protocol", protoType),
-      StructField("txn", txnType),
-      // clustering columns etc. must survive log truncation
-      StructField("domainMetadata", domainType)))
-
-    import org.apache.spark.sql.functions._
-    // previous checkpoint read with THIS (writer) schema — richer than
-    // the reader's projection, so txn/size/writerFeatures survive;
-    // v2 tops expand their sidecars
-    val prevActs: Option[org.apache.spark.sql.DataFrame] = prevCp.map { case (v, parts) =>
-      val (cpFiles, isJson, isV2Named) = DeltaScan.checkpointTopFiles(fs, logDir, v, parts)
-      def rd(paths: Seq[String], sch: StructType) =
-        if (isJson) spark.read.schema(sch).json(paths: _*)
-        else spark.read.schema(sch).parquet(paths: _*)
-      val top = rd(cpFiles, actionSchema)
-      val full =
-        if (!isV2Named) top
-        else {
-          val scProbe = StructType(Seq(StructField("sidecar",
-            StructType(Seq(StructField("path", StringType))))))
-          val scPaths = rd(cpFiles, scProbe)
-            .select(col("sidecar.path").as("p")).filter(col("p").isNotNull)
-            .collect().map(_.getString(0)).toSeq.sorted // [lint:bounded] one row per sidecar FILE
-          if (scPaths.isEmpty) top
-          else top.unionByName(spark.read.schema(actionSchema).parquet(scPaths.map { p =>
-            if (p.contains("://") || p.startsWith("/")) p
-            else new Path(logDir, s"_sidecars/$p").toString
-          }: _*))
-        }
-      full.withColumn("__v", lit(v))
-    }
-    val tailActs: Option[org.apache.spark.sql.DataFrame] =
-      if (jsons.isEmpty) scala.None
-      else Some(spark.read.schema(actionSchema).json(jsons.map(_.toString): _*)
-        .withColumn("__v", regexp_extract(input_file_name(), "(\\d+)\\.json", 1).cast("long")))
-    val acts = (prevActs.toSeq ++ tailActs.toSeq).reduce(_ unionByName _)
-    // latest action per path wins; survivors are adds
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(coalesce(col("add.path"), col("remove.path")))
-      .orderBy(col("__v").desc)
-    val liveAdds = acts
-      .filter(col("add.path").isNotNull || col("remove.path").isNotNull)
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1 && col("add.path").isNotNull)
-      .select("add")
-    val latestMeta = acts.filter(col("metaData.id").isNotNull)
-      .orderBy(col("__v").desc).select("metaData").limit(1)
-    val latestProto = acts.filter(col("protocol.minReaderVersion").isNotNull)
-      .orderBy(col("__v").desc).select("protocol").limit(1)
+    val snap = DeltaScan.snapshot(view.tablePath, view.log, prevCp, tail, view.commit,
+      DeltaScan.FileKeys ++ DeltaScan.TableKeys)
 
     // v2 needs the v2Checkpoint table feature: upgrade once (existing
     // features preserved; legacy minReader 2 maps to columnMapping),
     // then re-enter so the upgrade commit itself is checkpointed
     if (v2) {
-      val p = latestProto.collect().headOption.map(_.getStruct(0)) // [lint:bounded] one protocol row
-      val readerFeats = p.flatMap(r => Option(r.getSeq[String](2))).getOrElse(Seq.empty)
+      def feats(key: String): Seq[String] = snap.protocol.flatMap(p => Option(p.get(key)))
+        .toSeq.flatMap(_.elements().asScala.map(_.asText()))
+      val readerFeats = feats("readerFeatures")
       if (!readerFeats.contains("v2Checkpoint")) {
-        val minReader = p.map(r => if (r.isNullAt(0)) 1 else r.getInt(0)).getOrElse(1)
-        val writerFeats = p.flatMap(r => Option(r.getSeq[String](3))).getOrElse(Seq.empty)
+        val minReader = snap.protocol.flatMap(p => Option(p.get("minReaderVersion")))
+          .fold(1)(_.asInt())
         val legacy = if (minReader == 2) Seq("columnMapping") else Seq.empty[String]
         val newReader = (readerFeats ++ legacy :+ "v2Checkpoint").distinct.sorted
-        val newWriter = (writerFeats ++ legacy :+ "v2Checkpoint").distinct.sorted
+        val newWriter = (feats("writerFeatures") ++ legacy :+ "v2Checkpoint").distinct.sorted
         def arr(xs: Seq[String]) = xs.map(jstr).mkString("[", ",", "]")
-        commitLog(new LogView(spark, tablePath), operation = scala.None,
+        commitLog(view, operation = scala.None,
           Seq(s"""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,""" +
             s""""readerFeatures":${arr(newReader)},"writerFeatures":${arr(newWriter)}}}"""),
           at = Some(version + 1))
-        return checkpointImpl(spark, tablePath, v2) // feature present now
+        return checkpointImpl(view.advance(), v2) // feature present now
       }
     }
 
+    def row(key: String)(action: JsonNode): JsonNode =
+      mapper.createObjectNode().set[JsonNode](key, action)
     // newest txn PER APP rides into the checkpoint (protocol behavior:
-    // exactly-once markers must survive log truncation)
-    val wTxn = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("txn.appId")).orderBy(col("__v").desc)
-    val latestTxn = acts.filter(col("txn.appId").isNotNull)
-      .withColumn("__rn", row_number().over(wTxn))
-      .filter(col("__rn") === 1)
-      .select("txn")
-
-    // latest state PER DOMAIN rides into the checkpoint; removed
-    // tombstones drop here (protocol: checkpoints carry current domain
-    // metadata only — a dropped domain needs no tombstone once no JSON
-    // commit re-creates it)
-    val wDom = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("domainMetadata.domain")).orderBy(col("__v").desc)
-    val latestDomains = acts.filter(col("domainMetadata.domain").isNotNull)
-      .withColumn("__rn", row_number().over(wDom))
-      .filter(col("__rn") === 1 &&
-        !coalesce(col("domainMetadata.removed"), lit(false)))
-      .select("domainMetadata")
-
-    val nulls = Map(
-      "add" -> lit(null).cast(addType), "remove" -> lit(null).cast(
-        StructType(Seq(StructField("path", StringType), StructField("dataChange", BooleanType)))),
-      "metaData" -> lit(null).cast(metaType), "protocol" -> lit(null).cast(protoType),
-      "txn" -> lit(null).cast(txnType),
-      "domainMetadata" -> lit(null).cast(domainType))
-    def widen(df: org.apache.spark.sql.DataFrame, keep: String) =
-      df.select(actionSchema.fieldNames.map(f =>
-        (if (f == keep) col(f) else nulls(f)).as(f)).toSeq: _*)
-    def writeOne(df: org.apache.spark.sql.DataFrame, dest: Path, tag: String): Long = {
-      val tmp = new Path(logDir, s".tmp-checkpoint-$tag")
-      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = fs.listStatus(tmp).map(_.getPath)
-        .find(_.getName.endsWith(".parquet"))
-        .getOrElse(throw new IllegalStateException("checkpoint write produced no parquet"))
-      require(fs.rename(part, dest) || fs.exists(dest),
-        s"could not move checkpoint file into place at $dest")
-      fs.delete(tmp, true)
-      fs.getFileStatus(dest).getLen
-    }
-
-    if (!v2) {
-      val checkpointDf =
-        widen(latestProto, "protocol")
-          .unionAll(widen(latestMeta, "metaData"))
-          .unionAll(widen(latestTxn, "txn"))
-          .unionAll(widen(latestDomains, "domainMetadata"))
-          .unionAll(widen(liveAdds, "add"))
-      val cpPath = new Path(logDir, f"$version%020d.checkpoint.parquet")
-      writeOne(checkpointDf, cpPath, version.toString)
-      val size = spark.read.parquet(cpPath.toString).count()
-      AtomicFiles.publishUtf8(fs, new Path(logDir, "_last_checkpoint"),
-        s"""{"version":$version,"size":$size}""", overwrite = true)
-    } else {
-      // ---- V2 layout: sidecar with the file actions ------------------
-      val uuid = java.util.UUID.randomUUID().toString
-      fs.mkdirs(new Path(logDir, "_sidecars"))
-      val sidecarRel = s"$uuid.parquet"
-      val sidecarPath = new Path(logDir, s"_sidecars/$sidecarRel")
-      val sidecarLen = writeOne(widen(liveAdds, "add"), sidecarPath, s"sc-$uuid")
-      val nAdds = spark.read.parquet(sidecarPath.toString).count()
-
-      // ---- top file: non-file actions + checkpointMetadata + pointer -
-      val sidecarType = StructType(Seq(
-        StructField("path", StringType), StructField("sizeInBytes", LongType),
-        StructField("modificationTime", LongType)))
-      val cpMetaType = StructType(Seq(StructField("version", LongType)))
-      def widenV2(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-        df.withColumn("sidecar", lit(null).cast(sidecarType))
-          .withColumn("checkpointMetadata", lit(null).cast(cpMetaType))
-      val one = spark.range(1)
-      val pointerRow = one.select(
-        (actionSchema.fieldNames.map(f => nulls(f).as(f)) :+
-          struct(lit(sidecarRel).as("path"), lit(sidecarLen).as("sizeInBytes"),
-            lit(fs.getFileStatus(sidecarPath).getModificationTime).as("modificationTime"))
-            .as("sidecar") :+
-          lit(null).cast(cpMetaType).as("checkpointMetadata")).toSeq: _*)
-      val cpMetaRow = one.select(
-        (actionSchema.fieldNames.map(f => nulls(f).as(f)) :+
-          lit(null).cast(sidecarType).as("sidecar") :+
-          struct(lit(version).as("version")).as("checkpointMetadata")).toSeq: _*)
-      val topDf = widenV2(widen(latestProto, "protocol"))
-        .unionAll(widenV2(widen(latestMeta, "metaData")))
-        .unionAll(widenV2(widen(latestTxn, "txn")))
-        .unionAll(widenV2(widen(latestDomains, "domainMetadata")))
-        .unionAll(pointerRow)
-        .unionAll(cpMetaRow)
-      val topPath = new Path(logDir, f"$version%020d.checkpoint.$uuid.parquet")
-      writeOne(topDf, topPath, s"top-$uuid")
-      val size = spark.read.parquet(topPath.toString).count() + nAdds
-      AtomicFiles.publishUtf8(fs, new Path(logDir, "_last_checkpoint"),
-        s"""{"version":$version,"size":$size}""", overwrite = true)
-    }
+    // exactly-once markers must survive log truncation), and so does
+    // the latest state PER DOMAIN; removed tombstones drop here
+    // (protocol: checkpoints carry current domain metadata only — a
+    // dropped domain needs no tombstone once no JSON commit re-creates it)
+    val tableRows = (snap.protocol.map(row("protocol")) ++
+      snap.metaData.map(row("metaData")) ++
+      snap.txns.values.map(row("txn")) ++
+      snap.domains.values.filterNot(d => Option(d.get("removed")).exists(_.asBoolean(false)))
+        .map(row("domainMetadata"))).toSeq
+    val addRows = snap.adds.map { case (_, a) => row("add")(a) }.toSeq
+    val (fs, logDir) = (view.fs, view.logDir)
+    val size =
+      if (!v2) {
+        DeltaCheckpoint.write(fs, new Path(logDir, f"$version%020d.checkpoint.parquet"),
+          DeltaCheckpoint.schema, tableRows ++ addRows)
+        tableRows.size + addRows.size
+      } else {
+        // V2 layout: the file actions in one sidecar; the top file holds
+        // the other actions, the sidecar pointer and checkpointMetadata
+        val uuid = java.util.UUID.randomUUID().toString
+        val sidecar = new Path(logDir, s"_sidecars/$uuid.parquet")
+        val sidecarLen = DeltaCheckpoint.write(fs, sidecar, DeltaCheckpoint.schema, addRows)
+        val top = tableRows ++ Seq(
+          mapper.readTree(s"""{"sidecar":{"path":${jstr(s"$uuid.parquet")},""" +
+            s""""sizeInBytes":$sidecarLen,""" +
+            s""""modificationTime":${fs.getFileStatus(sidecar).getModificationTime}}}"""),
+          mapper.readTree(s"""{"checkpointMetadata":{"version":$version}}"""))
+        DeltaCheckpoint.write(fs, new Path(logDir, f"$version%020d.checkpoint.$uuid.parquet"),
+          DeltaCheckpoint.v2TopSchema, top)
+        top.size + addRows.size
+      }
+    AtomicFiles.publishUtf8(fs, new Path(logDir, "_last_checkpoint"),
+      s"""{"version":$version,"size":$size}""", overwrite = true)
   }
 
 
@@ -1521,35 +1330,26 @@ object DeltaWrite {
       new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val root: Path = fs.makeQualified(new Path(tablePath))
     val logDir = new Path(root, "_delta_log")
-    val exists: Boolean = fs.exists(logDir)
+    val log = new DeltaScan.LogFiles(fs, logDir)
+    val exists: Boolean = log.exists
     /** JSON commit versions present, ascending */
-    val jsonVersions: Seq[Long] =
-      if (!exists) Seq.empty
-      else fs.listStatus(logDir).toSeq.map(_.getPath.getName)
-        .collect { case n if n.matches("\\d{20}\\.json") => n.stripSuffix(".json").toLong }
-        .sorted
-    private val present = jsonVersions.toSet
+    val jsonVersions: Seq[Long] = log.jsonVersions
+    val present: Set[Long] = jsonVersions.toSet
 
     /** this log re-listed: commits the view already parsed are reused
       * (a committed JSON is immutable), newer ones parse on first use */
     def advance(): LogView = new LogView(spark, tablePath, parsed)
 
     /** commit `v`'s action lines */
-    def commit(v: Long): Seq[JsonNode] = parsed.getOrElseUpdate(v, {
-      val in = fs.open(new Path(logDir, f"$v%020d.json"))
-      val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-        finally in.close()
-      lines.map(mapper.readTree)
-    })
+    def commit(v: Long): Seq[JsonNode] = parsed.getOrElseUpdate(v, log.readCommit(v))
 
-    lazy val lastCheckpoint: Option[(Long, Option[Int])] =
-      if (!exists) scala.None else DeltaScan.lastCheckpoint(spark, fs, logDir)
+    def lastCheckpoint: Option[(Long, Option[Int])] = log.lastCheckpoint
 
     /** latest committed version ([[DeltaScan.latestVersion]]'s rule) */
     lazy val version: Long = {
       require(jsonVersions.nonEmpty || lastCheckpoint.nonEmpty,
         s"no Delta log found under $tablePath/_delta_log")
-      (jsonVersions ++ lastCheckpoint.map(_._1)).max
+      log.latestVersion
     }
 
     /** newest `key` action among the JSON commits up to `upTo` */
@@ -1558,17 +1358,14 @@ object DeltaWrite {
         commit(v).filter(_.has(key)).map(_.get(key)).lastOption
       }.nextOption()
 
-    /** the checkpoint's `key` action (one bounded job) */
-    private def fromCheckpoint(key: String, idField: String): Option[JsonNode] =
-      lastCheckpoint.flatMap { case (v, parts) =>
-        val (cpFiles, isJson, _) = DeltaScan.checkpointTopFiles(fs, logDir, v, parts)
-        val df = if (isJson) spark.read.json(cpFiles: _*)
-                 else spark.read.parquet(cpFiles: _*)
-        if (!df.columns.contains(key)) scala.None
-        else df.filter(org.apache.spark.sql.functions.col(s"$key.$idField").isNotNull)
-          .select(key).toJSON.collect() // [lint:bounded] one action row
-          .headOption.map(j => mapper.readTree(j).get(key))
-      }
+    /** the table-level actions — newest metaData and protocol, txn per
+      * app, domain per domain — of the checkpoint and the JSON commits
+      * after it ([[DeltaScan.snapshot]] without the file actions) */
+    lazy val tableState: DeltaScan.Snapshot = {
+      val cpV = lastCheckpoint.fold(-1L)(_._1)
+      DeltaScan.snapshot(tablePath, log, lastCheckpoint, jsonVersions.filter(_ > cpV),
+        commit, DeltaScan.TableKeys)
+    }
 
     /** LATEST metaData in the JSON log (newest commit wins —
       * [[appendEvolve]] rewrites it, so commit 0 is only the initial
@@ -1583,22 +1380,19 @@ object DeltaWrite {
       * checkpoint-truncated COLUMN-MAPPED table would miss the mapping
       * and write logical names into files whose readers expect
       * physical names. */
-    lazy val meta: Option[Meta] =
-      jsonMeta.orElse(fromCheckpoint("metaData", "id").map(Meta))
+    lazy val meta: Option[Meta] = jsonMeta.orElse(tableState.metaData.map(Meta))
 
     /** latest protocol action — JSON tail newest-first, else the
       * checkpoint */
     lazy val protocol: Option[ObjectNode] =
-      newestInJson("protocol").orElse(fromCheckpoint("protocol", "minReaderVersion"))
+      newestInJson("protocol").orElse(tableState.protocol)
         .map(_.asInstanceOf[ObjectNode])
 
     /** live metadata domains → configuration (the checkpoint's, then
       * the JSON commits after it; [[DeltaScan.domainMetadata]]'s rule) */
     lazy val domains: Map[String, String] = {
       require(exists, s"no Delta table at $tablePath")
-      val cpV = lastCheckpoint.map(_._1).getOrElse(-1L)
-      DeltaScan.domainState(spark, fs, logDir, lastCheckpoint,
-        jsonVersions.iterator.filter(_ > cpV).map(commit))
+      tableState.domainConfig
     }
 
     /** the metaData in force at version `v` (JSON commits only) */
@@ -2901,7 +2695,7 @@ object DeltaWrite {
         Option(p.get("writerFeatures")).exists(_.elements().asScala
           .exists(_.asText() == "v2Checkpoint")))
       inCheckpoint.set(true)
-      try checkpointImpl(view.spark, view.tablePath, v2 = v2)
+      try checkpointImpl(view.advance(), v2 = v2)
       finally inCheckpoint.set(false)
     } catch {
       case scala.util.control.NonFatal(e) =>

@@ -4,8 +4,8 @@ package graft.sources
   *
   * Both formats materialize the live-file list on the driver to plan a
   * scan — [[IcebergScan]] walks the manifest tree, [[DeltaScan]]
-  * replays the log (distributed read, then one collected row per live
-  * file). That is the standard FileIndex-style cost every engine pays,
+  * replays the checkpoint and the log tail (one entry per live file,
+  * checked as the entries accumulate). That is the standard FileIndex-style cost every engine pays,
   * but it is O(live files) DRIVER memory, and at 100 TB × small files
   * it can grow past what one JVM holds with no warning. This guard
   * makes the failure mode LOUD and actionable instead of an opaque

@@ -54,10 +54,6 @@ object GateProfile {
     spark.sparkContext.setLogLevel("ERROR")
     graft.Bench.startStallProbe() // per-phase stolen-time evidence
     spark.sparkContext.addSparkListener(new CountListener)
-    // GRAFT_DRIVER_REPLAY=0 forces the distributed Delta log replay —
-    // the before/after lever for the fast-replay comparison
-    graft.sources.DeltaScan.driverReplayEnabled =
-      sys.env.getOrElse("GRAFT_DRIVER_REPLAY", "1") == "1"
     // warm codegen/JIT
     try graft.SparkEntry.queries("q1_agg")(spark, "/root/testdata/sf0.001").count()
     catch { case _: Throwable => () }

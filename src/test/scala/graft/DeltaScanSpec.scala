@@ -1927,44 +1927,122 @@ class DeltaScanSpec extends SparkSpec {
       Seq("id" -> org.apache.spark.sql.functions.lit(null).cast("long"))))
   }
 
-  test("driver-side fast replay reconstructs the identical snapshot as the distributed replay") {
+  test("every checkpoint layout replays to the JSON-only snapshot") {
     // a log exercising every replay wrinkle: partition values (with a
     // null), stats, a remove + same-version re-add (the DV re-add
     // shape, where add must win the tie), a percent-encoded path, a
-    // later metaData re-declaration, and a protocol upgrade
-    val dir = freshDir("graft_delta_fastreplay")
-    val s0 = writeDataFile(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), dir, "f0.parquet")
-    val s1 = writeDataFile(Seq((3L, "c")).toDF("id", "v"), dir, "f1.parquet")
-    val s2 = writeDataFile(Seq((4L, "d")).toDF("id", "v"), dir, "p=x%25y/f2.parquet")
+    // later metaData re-declaration, a protocol upgrade, and adds
+    // carrying a deletion vector and row-tracking fields
+    import graft.sources.DeltaWrite
+    val base = freshDir("graft_delta_cpequiv").resolve("base")
+    val s0 = writeDataFile(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), base, "f0.parquet")
+    val s1 = writeDataFile(Seq((3L, "c")).toDF("id", "v"), base, "f1.parquet")
+    val s2 = writeDataFile(Seq((4L, "d")).toDF("id", "v"), base, "p=x%25y/f2.parquet")
+    val s3 = writeDataFile(Seq((5L, "e")).toDF("id", "v"), base, "f3.parquet")
     val stats = """{\"numRecords\":2,\"minValues\":{\"id\":1},\"maxValues\":{\"id\":2},\"nullCount\":{\"id\":0}}"""
-    writeCommit(dir, 0, Seq(protoAction, metaAction(),
+    def dv(card: Int) = s""""deletionVector":{"storageType":"u","pathOrInlineDv":"ab^-aqEH.-t@S}K{vb[*k^","offset":1,"sizeInBytes":36,"cardinality":$card}"""
+    writeCommit(base, 0, Seq(protoAction, metaAction(),
       s"""{"add":{"path":"f0.parquet","partitionValues":{},"size":$s0,"modificationTime":1700000000000,"dataChange":true,"stats":"$stats"}}""",
       addAction("f1.parquet", s1)))
-    // same-version remove + re-add of f0 (the DV re-add commit shape)
-    writeCommit(dir, 1, Seq(removeAction("f0.parquet"),
-      addAction("f0.parquet", s0)))
-    writeCommit(dir, 2, Seq(removeAction("f1.parquet"),
+    writeCommit(base, 1, Seq(removeAction("f0.parquet"), addAction("f0.parquet", s0)))
+    writeCommit(base, 2, Seq(removeAction("f1.parquet"),
       addAction("p=x%2525y/f2.parquet", s2, pv = """{"p":"x%y","q":null}""")))
+    writeCommit(base, 3, Seq(
+      """{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":["deletionVectors","v2Checkpoint"],"writerFeatures":["deletionVectors","domainMetadata","rowTracking","v2Checkpoint"]}}""",
+      metaAction(conf = """{"delta.enableDeletionVectors":"true","delta.enableRowTracking":"true"}"""),
+      removeAction("f0.parquet"),
+      s"""{"add":{"path":"f0.parquet","partitionValues":{},"size":$s0,"modificationTime":1700000002000,"dataChange":true,"stats":"$stats",${dv(1)},"baseRowId":0,"defaultRowCommitVersion":0}}""",
+      s"""{"add":{"path":"f3.parquet","partitionValues":{},"size":$s3,"modificationTime":1700000002000,"dataChange":true,${dv(2)},"baseRowId":7,"defaultRowCommitVersion":3}}"""))
+    val cpV = 3L
 
-    def state() = DeltaScan.liveState(spark, dir.toString)
     def norm(st: DeltaScan.LiveState) =
       (st.schema, st.partCols, st.conf, st.columnMapped,
         st.files.map(f => (f.path, f.pv, f.dv, f.stats)).sortBy(_._1))
-    val fast = norm(state())
-    DeltaScan.driverReplayEnabled = false
-    val dist = try norm(state()) finally DeltaScan.driverReplayEnabled = true
-    assert(fast == dist)
-    // time travel goes through the same branch
-    def at(v: Long) = {
-      val a = DeltaScan.liveState(spark, dir.toString, Some(v))
-      DeltaScan.driverReplayEnabled = false
-      val b = try DeltaScan.liveState(spark, dir.toString, Some(v))
-        finally DeltaScan.driverReplayEnabled = true
-      assert(norm(a) == norm(b))
+    def plain(n: com.fasterxml.jackson.databind.JsonNode): Any =
+      if (n.isObject) n.properties().asScala.map(e => e.getKey -> plain(e.getValue)).toMap
+      else if (n.isArray) n.elements().asScala.map(plain).toSeq
+      else if (n.isNull) null
+      else if (n.isNumber) n.asLong()
+      else if (n.isBoolean) n.asBoolean()
+      else n.asText()
+    /** the live state and every live add action, field by field */
+    def state(d: Path, v: Option[Long]) =
+      (norm(DeltaScan.liveState(spark, d.toString, v)),
+        DeltaScan.snapshotAt(spark, d.toString, v).adds.map { case (p, a) => p -> plain(a) }.toMap)
+    /** the JSON-only replay of the same commits: `_last_checkpoint` hidden */
+    def oracle(d: Path, v: Long) = {
+      val lc = d.resolve("_delta_log/_last_checkpoint")
+      val hidden = d.resolve("last_checkpoint.hidden")
+      Files.move(lc, hidden)
+      try state(d, Some(v)) finally Files.move(hidden, lc)
     }
-    at(0L); at(1L)
-    // and the rows agree end-to-end
-    val rows = DeltaScan.read(spark, dir.toString)
+    def copyOfBase(): Path = {
+      val d = freshDir("graft_delta_cpequiv_layout").resolve("t")
+      Files.walk(base).iterator().asScala.toSeq.foreach { p =>
+        val t = d.resolve(base.relativize(p).toString)
+        if (Files.isDirectory(p)) Files.createDirectories(t) else Files.copy(p, t)
+      }
+      d
+    }
+    def logFiles(d: Path) = Files.list(d.resolve("_delta_log")).iterator().asScala.toSeq
+    /** the parquet file of a DataFrame written by Spark, moved to `dest` */
+    def sparkWrite(df: DataFrame, dest: Path): Unit = {
+      val tmp = Files.createTempDirectory("graft_delta_cpequiv_part").toString
+      df.coalesce(1).write.mode("overwrite").parquet(tmp)
+      Files.move(Files.list(Paths.get(tmp)).iterator().asScala
+        .find(_.getFileName.toString.endsWith(".parquet")).get, dest)
+    }
+    def v2Top(d: Path): Path = logFiles(d).find(_.getFileName.toString
+      .matches(f"$cpV%020d\\.checkpoint\\.[a-f0-9-]+\\.parquet")).get
+
+    val layouts: Seq[(String, Path => Unit)] = Seq(
+      "classic" -> (d => DeltaWrite.checkpoint(spark, d.toString)),
+      "multi-part" -> { d =>
+        // Spark-written parts: the table-level actions, then the adds
+        DeltaWrite.checkpoint(spark, d.toString)
+        val single = d.resolve(f"_delta_log/$cpV%020d.checkpoint.parquet")
+        val cp = spark.read.parquet(single.toString).collect().toSeq
+        val schema = spark.read.parquet(single.toString).schema
+        val (adds, rest) = cp.partition(r => !r.isNullAt(r.fieldIndex("add")))
+        Seq(rest, adds).zipWithIndex.foreach { case (rows, i) =>
+          sparkWrite(spark.createDataFrame(rows.asJava, schema),
+            d.resolve(f"_delta_log/$cpV%020d.checkpoint.${i + 1}%010d.${2}%010d.parquet"))
+        }
+        Files.delete(single)
+        Files.deleteIfExists(d.resolve("_delta_log/._last_checkpoint.crc"))
+        Files.write(d.resolve("_delta_log/_last_checkpoint"),
+          s"""{"version":$cpV,"size":${cp.size},"parts":2}""".getBytes(StandardCharsets.UTF_8))
+      },
+      "v2 with sidecars" -> (d => DeltaWrite.checkpointV2(spark, d.toString)),
+      "v2 with a JSON top" -> { d =>
+        DeltaWrite.checkpointV2(spark, d.toString)
+        val top = v2Top(d)
+        val lines = spark.read.parquet(top.toString).toJSON.collect()
+        Files.write(Paths.get(top.toString.stripSuffix(".parquet") + ".json"),
+          lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
+        Files.delete(top)
+      })
+
+    layouts.foreach { case (name, make) =>
+      val d = copyOfBase()
+      make(d)
+      assert(DeltaScan.latestVersion(spark, d.toString) == cpV, s"$name made a commit")
+      assert(logFiles(d).exists(_.getFileName.toString.startsWith(f"$cpV%020d.checkpoint.")),
+        s"$name wrote no checkpoint")
+      assert(state(d, None) == oracle(d, cpV), s"$name at the checkpoint version")
+      assert(state(d, Some(cpV - 1)) == oracle(d, cpV - 1), s"$name traveling before it")
+      // two commits after the checkpoint: a remove and a new add
+      writeCommit(d, 4, Seq(removeAction("f3.parquet")))
+      writeCommit(d, 5, Seq(addAction("f1.parquet", s1)))
+      val expected = oracle(d, 5L)
+      assert(state(d, None) == expected, s"$name two commits after the checkpoint")
+      assert(state(d, Some(cpV)) == oracle(d, cpV), s"$name traveling back to it")
+      // the checkpoint, not the JSON commits it covers, is what is read
+      (0L to cpV).foreach(v => Files.delete(d.resolve(f"_delta_log/$v%020d.json")))
+      assert(state(d, None) == expected, s"$name with the commits it covers deleted")
+    }
+    // and the rows agree end-to-end before the deletion vectors
+    val rows = DeltaScan.read(spark, base.toString, Some(2L))
       .orderBy("id").as[(Long, String)].collect().toSeq
     assert(rows == Seq((1L, "a"), (2L, "b"), (4L, "d")))
   }

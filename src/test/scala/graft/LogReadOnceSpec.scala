@@ -4,7 +4,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
 
-import graft.sources.DeltaWrite
+import graft.sources.{DeltaScan, DeltaWrite}
 
 /** A Delta operation runs on ONE read of the table's log. A DML plans
   * from it: each commit JSON is opened at most once between the
@@ -12,7 +12,9 @@ import graft.sources.DeltaWrite
   * `beforeDmlCommit` seam). Its commit reuses it: from start to return,
   * an append or a DML opens each commit JSON once and each data file it
   * stages once (the footer read that gives the file's row count and
-  * stats). */
+  * stats). A read of a checkpointed table opens `_last_checkpoint`,
+  * each checkpoint file and each later commit once, and an
+  * auto-checkpointing commit parses no commit twice. */
 class LogReadOnceSpec extends SparkSpec {
   import spark.implicits._
 
@@ -98,5 +100,64 @@ class LogReadOnceSpec extends SparkSpec {
           s"$name must open its staged file $p exactly once: ${opens.getOrElse(p, 0)}")
       }
     }
+  }
+
+  /** log path (relative to `_delta_log/`) → opens since the last clear */
+  private def logOpens(local: String): Map[String, Int] =
+    CountingFileSystem.opened.asScala.toList
+      .filter(_.startsWith(s"$local/_delta_log/"))
+      .map(_.stripPrefix(s"$local/_delta_log/"))
+      .groupBy(identity).map { case (p, ps) => p -> ps.size }
+
+  private def logNames(local: String): Seq[String] = {
+    val log = new java.io.File(s"$local/_delta_log")
+    log.list().toSeq ++ Option(new java.io.File(log, "_sidecars").list()).toSeq.flatten
+      .map(n => s"_sidecars/$n")
+  }
+
+  test("a read of a checkpointed table opens _last_checkpoint, each checkpoint " +
+      "file and each later commit once") {
+    Seq(false, true).foreach { v2 =>
+      val dir = CountingFileSystem.tempDir("graft_logonce_read") + "/t"
+      val local = dir.stripPrefix(s"${CountingFileSystem.Scheme}://")
+      DeltaWrite.create(spark, Seq((0L, "v0")).toDF("id", "v"), dir)
+      (1L to 3L).foreach(i => DeltaWrite.append(spark, Seq((i, s"v$i")).toDF("id", "v"), dir))
+      if (v2) DeltaWrite.checkpointV2(spark, dir) else DeltaWrite.checkpoint(spark, dir)
+      val cpV = DeltaScan.latestVersion(spark, dir)
+      (4L to 5L).foreach(i => DeltaWrite.append(spark, Seq((i, s"v$i")).toDF("id", "v"), dir))
+      CountingFileSystem.opened.clear()
+      assert(DeltaScan.read(spark, dir).count() == 6L)
+      val opens = logOpens(local)
+      val expected = logNames(local).filter { n =>
+        n == "_last_checkpoint" || n.startsWith("_sidecars/") ||
+          n.startsWith(f"$cpV%020d.checkpoint.") ||
+          (n.matches("\\d{20}\\.json") && n.stripSuffix(".json").toLong > cpV)
+      }.toSet
+      assert(expected.exists(_.contains(".checkpoint.")) && expected.size >= 4, expected)
+      assert(opens == expected.map(_ -> 1).toMap,
+        s"${if (v2) "v2" else "classic"}: the read must open exactly $expected once: $opens")
+    }
+  }
+
+  test("an auto-checkpointing commit parses no commit JSON twice") {
+    val dir = CountingFileSystem.tempDir("graft_logonce_autocp") + "/t"
+    val local = dir.stripPrefix(s"${CountingFileSystem.Scheme}://")
+    DeltaWrite.create(spark, Seq((0L, "v0")).toDF("id", "v"), dir)
+    DeltaWrite.setProperties(spark, dir, Map("delta.checkpointInterval" -> "4")) // v1
+    (2L to 8L).foreach { i =>
+      CountingFileSystem.opened.clear()
+      DeltaWrite.append(spark, Seq((i, s"v$i")).toDF("id", "v"), dir)
+      // `_last_checkpoint` is read once per listing, before and after
+      // the commit; commits and checkpoint files are immutable
+      val opens = logOpens(local) - "_last_checkpoint"
+      assert(opens.values.forall(_ == 1), s"commit $i opened a log file twice: $opens")
+      if (i % 4 == 0) {
+        assert(new java.io.File(f"$local/_delta_log/$i%020d.checkpoint.parquet").exists(),
+          s"commit $i auto-checkpoints")
+        assert(opens.contains(f"$i%020d.json"), s"commit $i is in its checkpoint: $opens")
+      }
+    }
+    // the second checkpoint built incrementally from the first
+    assert(DeltaScan.read(spark, dir).count() == 8L)
   }
 }
