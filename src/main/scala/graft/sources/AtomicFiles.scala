@@ -2,6 +2,7 @@ package graft.sources
 
 import java.util.EnumSet
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{CreateFlag, FileContext, FileSystem, Options, Path}
 
 /** CONTENT-ATOMIC publication of small control files (Delta commit
@@ -29,9 +30,11 @@ import org.apache.hadoop.fs.{CreateFlag, FileContext, FileSystem, Options, Path}
   * atomic swap, so pointer readers can no longer catch the truncate
   * window of an in-place rewrite.
   *
-  * Files go through the RAW `FileContext` (no client-side checksum
-  * layer), so no `.crc` sidecar is produced; a STALE sidecar from a
-  * pre-fix in-place write of the same path is deleted first, else a
+  * Files go through a RAW `FileContext` (no client-side checksum
+  * layer): on `file:` paths `FileContext` would bind the checksummed
+  * `LocalFs`, so the local scheme is bound to `RawLocalFs` instead and
+  * no `.crc` sidecar is produced. A STALE sidecar from an earlier
+  * checksummed write of the same path is deleted first, else a
   * checksummed reader would verify the new bytes against the old sum.
   *
   * On a filesystem without an atomic rename-if-absent (the local one)
@@ -54,7 +57,7 @@ private[graft] object AtomicFiles {
     fs.mkdirs(dir)
     val tmp = new Path(dir,
       s".${file.getName}.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-    val fc = FileContext.getFileContext(file.toUri, fs.getConf)
+    val fc = FileContext.getFileContext(file.toUri, rawConf(fs.getConf, file))
     val out = fc.create(tmp, EnumSet.of(CreateFlag.CREATE, CreateFlag.OVERWRITE),
       Options.CreateOpts.createParent())
     try out.write(bytes) finally out.close()
@@ -73,6 +76,16 @@ private[graft] object AtomicFiles {
         throw e
     }
   }
+
+  /** `conf`, with the local scheme bound to the raw (checksum-free)
+    * `FileContext` filesystem when `file` is a local path */
+  private def rawConf(conf: Configuration, file: Path): Configuration =
+    if (!Option(file.toUri.getScheme).contains("file")) conf
+    else {
+      val raw = new Configuration(conf)
+      raw.set("fs.AbstractFileSystem.file.impl", "org.apache.hadoop.fs.local.RawLocalFs")
+      raw
+    }
 
   def publishUtf8(fs: FileSystem, file: Path, content: String,
       overwrite: Boolean): Unit =

@@ -39,7 +39,7 @@ import org.apache.spark.sql.types._
   *    the hint would be silently ignored — we don't pretend.
   *
   * Both sides read through the full delete-applied reader (the same
-  * machinery as [[IcebergScan.readFiltered]]) — position/equality
+  * machinery as [[IcebergScan.readPlanned]]) — position/equality
   * deletes and MOR images on either table are honored — but each
   * table's manifests are walked ONCE ([[IcebergScan.planTable]]) and
   * every per-bucket subset read reuses that planning state; planning

@@ -93,8 +93,7 @@ object DeltaScan {
     latestVersion(tablePath, logFiles(spark, tablePath))
 
   private def latestVersion(tablePath: String, log: LogFiles): Long = {
-    require(log.jsonVersions.nonEmpty || log.lastCheckpoint.nonEmpty,
-      s"no Delta log found under $tablePath/_delta_log")
+    require(log.nonEmpty, s"no Delta log found under $tablePath/_delta_log")
     log.latestVersion
   }
 
@@ -182,8 +181,10 @@ object DeltaScan {
     // a checkpoint with a fully-truncated JSON tail is a legal table
     // state (everything up to the checkpoint version was vacuumed from
     // the log) — the checkpoint IS the latest version then
-    val lastCp = log.lastCheckpoint
     val target = versionAsOf.getOrElse(latestVersion(tablePath, log))
+    // `_last_checkpoint` is read only when a checkpoint could serve
+    val lastCp =
+      if (log.checkpointVersions.exists(_ <= target)) log.lastCheckpoint else None
     require(versions.contains(target) || lastCp.exists(_._1 == target),
       s"version $target not present in $tablePath/_delta_log" +
         (if (versions.nonEmpty) s" (have ${versions.min}..${versions.max})" else " (checkpoint only)"))
@@ -773,15 +774,20 @@ object DeltaScan {
     case other => other
   }
 
+  /** a checkpoint file name: `<v>.checkpoint.parquet`,
+    * `<v>.checkpoint.<i>.<n>.parquet` or `<v>.checkpoint.<uuid>.{parquet,json}` */
+  private val CheckpointName = "(\\d{20})\\.checkpoint\\..+".r
+
   /** `_delta_log` listed once — through the session's Hadoop conf */
   private def logFiles(spark: SparkSession, tablePath: String): LogFiles = {
     val logDir = new Path(tablePath, "_delta_log")
     new LogFiles(logDir.getFileSystem(spark.sessionState.newHadoopConf()), logDir)
   }
 
-  /** `_delta_log` as ONE listing: the commit versions, `_last_checkpoint`
-    * (read once, on first use, when listed) and the checkpoint files of
-    * a version, all resolved from the same listing. */
+  /** `_delta_log` as ONE listing: the commit versions, the checkpoint
+    * versions, `_last_checkpoint` (read once, on first use, and only
+    * when a checkpoint file is listed) and the checkpoint files of a
+    * version, all resolved from the same listing. */
   private[sources] final class LogFiles(val fs: FileSystem, val logDir: Path) {
     val exists: Boolean = fs.exists(logDir)
     private val listed: Map[String, FileStatus] =
@@ -793,16 +799,26 @@ object DeltaScan {
       .collect { case n if n.matches("\\d{20}\\.json") => n.stripSuffix(".json").toLong }
       .toSeq.sorted
 
-    /** `_last_checkpoint` → (version, parts) */
+    /** versions with a checkpoint file (classic, multi-part or v2) */
+    val checkpointVersions: Seq[Long] = listed.keys.iterator
+      .collect { case CheckpointName(v) => v.toLong }.toSeq.distinct.sorted
+
+    /** `_last_checkpoint` → (version, parts); not read when no
+      * checkpoint file is listed */
     lazy val lastCheckpoint: Option[(Long, Option[Int])] =
-      listed.get("_last_checkpoint").map { st =>
+      if (checkpointVersions.isEmpty) None
+      else listed.get("_last_checkpoint").map { st =>
         val node = LakeSupport.mapper.readTree(LakeSupport.readUtf8(fs, st.getPath))
         (node.get("version").asLong(), Option(node.get("parts")).map(_.asInt()))
       }
 
-    /** the newest commit, or the checkpoint's version when the JSON tail
-      * was fully truncated (callers check that either exists) */
-    def latestVersion: Long = (jsonVersions ++ lastCheckpoint.map(_._1)).max
+    /** whether the log holds any commit or checkpoint */
+    def nonEmpty: Boolean = jsonVersions.nonEmpty || checkpointVersions.nonEmpty
+
+    /** the newest commit, or the newest checkpoint's version when the
+      * JSON tail was fully truncated (callers check [[nonEmpty]]) —
+      * decided from the listing alone */
+    def latestVersion: Long = (jsonVersions ++ checkpointVersions).max
 
     def commitPath(v: Long): Path = new Path(logDir, f"$v%020d.json")
 

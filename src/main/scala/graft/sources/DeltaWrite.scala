@@ -692,36 +692,17 @@ object DeltaWrite {
     ladder.filter(_._1 <= minWriter).flatMap(_._2)
   }
 
-  /** every `delta.constraints.*` in `config` must hold on every row of
-    * `df` (LOGICAL column names) — loud with the first violating
-    * constraint; one narrow limit-1 job per constraint */
-  private def enforceConstraints(df: DataFrame, config: Map[String, String]): Unit =
-    config.toSeq.sortBy(_._1).foreach { case (k, sqlExpr) =>
-      if (k.startsWith("delta.constraints.")) {
-        val bad = df.filter(org.apache.spark.sql.functions.not(
-          org.apache.spark.sql.functions.expr(sqlExpr))).limit(1).count()
-        require(bad == 0L,
-          s"write violates CHECK constraint ${k.stripPrefix("delta.constraints.")} " +
-            s"($sqlExpr) — nothing committed")
-      }
-    }
-
-  /** declared non-nullable columns must hold no NULL — checked only
-    * for columns the INCOMING frame declares nullable (when its schema
-    * already proves non-nullability, no job runs at all); one combined
-    * limit-1 pass otherwise */
-  private def enforceRequired(df: DataFrame, declared: StructType): Unit = {
-    import org.apache.spark.sql.functions.col
-    val dfNullable = df.schema.fields.filter(_.nullable).map(_.name).toSet
-    val risky = declared.fields
-      .filter(f => !f.nullable && dfNullable.contains(f.name)).map(_.name)
-    if (risky.nonEmpty) {
-      val anyNull = risky.map(col(_).isNull).reduce(_ || _)
-      require(df.filter(anyNull).limit(1).count() == 0L,
-        s"write carries NULL in non-nullable column(s) ${risky.mkString(", ")} — " +
-          "nothing committed")
-    }
-  }
+  /** the rows `df` writes (LOGICAL column names) must satisfy every
+    * `delta.constraints.*` CHECK in `config`, in key order, then hold
+    * no NULL in a `declared` non-nullable column */
+  private def rowChecks(df: DataFrame, config: Map[String, String],
+      declared: StructType): Seq[LakeSupport.RowCheck] =
+    config.toSeq.sortBy(_._1).collect { case (k, sqlExpr) if k.startsWith("delta.constraints.") =>
+      LakeSupport.RowCheck(
+        s"write violates CHECK constraint ${k.stripPrefix("delta.constraints.")} " +
+          s"($sqlExpr) — nothing committed",
+        org.apache.spark.sql.functions.not(org.apache.spark.sql.functions.expr(sqlExpr)))
+    } ++ LakeSupport.requiredCheck(df, declared, "non-nullable")
 
   /** absolute add path (leading '/' or a URI scheme — note qualified
     * local URIs are `file:/x`, a SINGLE slash) */
@@ -809,8 +790,8 @@ object DeltaWrite {
       }), declared.length.toLong)
     val next = xform(mappedSchema, partCols)
     // a CHECK constraint referencing a renamed/dropped column would make
-    // EVERY later write fail analysis on the stale name (enforceConstraints
-    // resolves the stored expr against the new schema) — refuse up front,
+    // EVERY later write fail analysis on the stale name (the CHECK row
+    // checks resolve the stored expr against the new schema) — refuse up front,
     // matching Delta's ALTER TABLE behavior; drop the constraint first
     val gone = declared.fieldNames.map(_.toLowerCase).toSet --
       next.fieldNames.map(_.toLowerCase).toSet
@@ -1083,11 +1064,11 @@ object DeltaWrite {
       tablePath: String, version: Long): Unit =
     commitData(new LogView(spark, tablePath), df, Nil, at = Some(version))
 
-  /** the create/append family's commit: CHECK constraints and declared
-    * NOT NULL gate the frame BEFORE any file is staged (one limit-1
-    * early-exit pass per constraint; the null check is FREE when the
-    * frame's own schema already proves non-nullability), then one
-    * table-layout write and one commit of its files. The governing
+  /** the create/append family's commit: one table-layout write and
+    * one commit of its files. CHECK constraints and declared NOT NULL
+    * ride that write as observed metrics (the null check is FREE when
+    * the frame's own schema already proves non-nullability); a
+    * violation deletes the staged files and refuses. The governing
     * metaData is the one this commit re-declares (appendEvolve, an
     * identity water mark), else the table's latest; a create (version
     * 0) has none. The version is fixed before the write, over the
@@ -1098,11 +1079,10 @@ object DeltaWrite {
     val version = at.getOrElse(view.version + 1)
     val governing =
       if (version == 0L) scala.None else actionMeta(actions).orElse(view.meta)
-    governing.foreach { md =>
-      enforceConstraints(df, md.config)
-      enforceRequired(df, md.schema)
-    }
-    val added = writeTable(view, df, governing, partitionBy)
+    val checked = new LakeSupport.ObservedChecks(
+      governing.fold(Seq.empty[LakeSupport.RowCheck])(md => rowChecks(df, md.config, md.schema)))
+    val added = writeTable(view, df, governing, partitionBy, observe = checked.observe)
+    LakeSupport.verifyStaged(view.fs, stagedPaths(view, added))(checked.verify())
     require(added.nonEmpty, "write produced no data files (empty input?)")
     commitLog(view, Some(if (version == 0L) "CREATE TABLE AS SELECT" else "WRITE"),
       actions, added.map(Staged.tupled), txn = txn, at = Some(version))
@@ -1115,17 +1095,22 @@ object DeltaWrite {
     * partition columns first — one hash shuffle puts each partition
     * tuple in exactly one task, so files = touched partitions instead
     * of tasks x partitions (the small-file explosion measured at sf1 on
-    * the generated layout) — and hive-partitioned under `destPrefix` */
+    * the generated layout) — and hive-partitioned under `destPrefix`.
+    * `observe` attaches what rides the write (counts, row checks; see
+    * [[LakeSupport.ObservedChecks]]) to the logical rows above the
+    * clustering shuffle, in the write's final stage. */
   private def writeTable(view: LogView, df: DataFrame, md: Option[Meta],
-      partCols: Seq[String], destPrefix: String = ""): Seq[(String, Long)] = {
+      partCols: Seq[String], destPrefix: String = "",
+      observe: DataFrame => DataFrame = identity): Seq[(String, Long)] = {
+    val clustered = observe(WriteLayout.clusterByPartitions(view.spark, df, partCols))
     val (wdf, wparts) = md match {
-      case scala.None => (df, partCols)
+      case scala.None => (clustered, partCols)
       case Some(m) =>
-        (df.select(toPhysical(m.schema, m.mapped, m.schema.fieldNames.toSeq): _*),
+        (clustered.select(toPhysical(m.schema, m.mapped, m.schema.fieldNames.toSeq): _*),
           partCols.map(p => if (m.mapped) DeltaScan.physicalName(m.schema(p)) else p))
     }
     writeStaged(view.fs, view.root, destPrefix) { staging =>
-      val w = WriteLayout.clusterByPartitions(view.spark, wdf, wparts).write.mode("append")
+      val w = wdf.write.mode("append")
       (if (wparts.nonEmpty) w.partitionBy(wparts: _*) else w).parquet(staging)
     }
   }
@@ -1347,8 +1332,7 @@ object DeltaWrite {
 
     /** latest committed version ([[DeltaScan.latestVersion]]'s rule) */
     lazy val version: Long = {
-      require(jsonVersions.nonEmpty || lastCheckpoint.nonEmpty,
-        s"no Delta log found under $tablePath/_delta_log")
+      require(log.nonEmpty, s"no Delta log found under $tablePath/_delta_log")
       log.latestVersion
     }
 
@@ -1463,11 +1447,11 @@ object DeltaWrite {
   }
 
 
-  /** Live table rows plus a `__rel` column naming each row's data file
-    * (table-relative path — the victim locator deleteWhere/merge
-    * aggregate on). Hive-partitioned tables read with basePath so
-    * partition columns come back typed; `__rel` strips the qualified
-    * root from `_metadata.file_path` after scheme normalization. */
+  /** Live table rows plus a `__uri` column naming each row's data file
+    * (its `_metadata.file_path`, scheme-stripped — [[relsByUri]] maps it
+    * back to the table-relative path on the driver) and `__pos`, the
+    * row's ordinal in that file. Hive-partitioned tables read with
+    * basePath so partition columns come back typed. */
   private def liveScan(spark: SparkSession, root: Path, schema: StructType,
       partCols: Seq[String], live: Seq[String],
       mapped: Boolean = false,
@@ -1494,35 +1478,46 @@ object DeltaWrite {
       if (partCols.isEmpty) spark.read.schema(dataSchema).parquet(abs: _*)
       else spark.read.option("basePath", root.toString).schema(readSchema)
         .parquet(abs: _*)
-    // `_metadata.file_path` is the file's URI form — hive-escaped dir
-    // names re-encode ('%' → '%25'), so a string-munged rel would sit
-    // in a DIFFERENT namespace than the log's on-disk rels and the DML
-    // ops would remove/rewrite the wrong paths. Instead map URI → rel
-    // through a broadcast lookup built from the SAME live list the
-    // scan reads (Path.toUri produces the same encoding), keyed
-    // scheme-stripped. Lookup size = live file count, always tiny.
-    val stripScheme = "^[A-Za-z][A-Za-z0-9+.\\-]*:/+"
-    def norm(s: String): String = s.replaceFirst(stripScheme, "/")
-    val uriToRel = live.map { r =>
-      (norm(new Path(root, r).toUri.toString), r)
-    }
-    require(uriToRel.map(_._1).distinct.size == live.size,
-      "live file URIs are not distinct — cannot key the rel lookup")
-    val lookup = broadcast(
-      spark.createDataFrame(uriToRel).toDF("__uri", "__rel"))
     // resolve `_metadata` directly on the scan relation (a projection
-    // in between could hide the metadata pseudo-column), THEN join
+    // in between could hide the metadata pseudo-column)
     base
-      .withColumn("__uri",
-        regexp_replace(col("_metadata.file_path"), stripScheme, "/"))
+      .withColumn("__uri", DeltaScan.normalizePathCol(col("_metadata.file_path")))
       .withColumn("__pos", col("_metadata.row_index"))
-      .join(lookup, Seq("__uri"))
       .select(schema.fields.map(f =>
         if (!mapped) col(f.name)
         else col(DeltaScan.physicalName(f)).cast(f.dataType).as(f.name)).toSeq ++
         extraLongCols.map(col) ++
-        Seq(col("__rel"), col("__pos")): _*)
+        Seq(col("__uri"), col("__pos")): _*)
   }
+
+  /** table-relative path of each of `rels` by its [[liveScan]] `__uri`.
+    * `_metadata.file_path` is the file's URI form — hive-escaped dir
+    * names re-encode ('%' → '%25') — so a string-munged rel would sit
+    * in a DIFFERENT namespace than the log's on-disk rels and the DML
+    * ops would remove or rewrite the wrong paths. `Path.toUri` gives
+    * the same encoding the scan reports, so the map is built on the
+    * driver from the same live list the scan reads. */
+  private def relsByUri(root: Path, rels: Seq[String]): Map[String, String] = {
+    val byUri = rels.map(r => DeltaScan.normalizePath(new Path(root, r).toUri.toString) -> r)
+    require(byUri.map(_._1).distinct.size == rels.size,
+      "live file URIs are not distinct — cannot key the rel lookup")
+    byUri.toMap
+  }
+
+  /** Pass 1 of a copy-on-write DML over `rows` (a [[liveScan]] of
+    * `live`, filtered to the rows the DML changes): the victim files,
+    * sorted, and the number of rows ([[LakeSupport.tallyByFile]]) */
+  private def victimPass(root: Path, live: Seq[String], rows: DataFrame): (Seq[String], Long) = {
+    val tally = LakeSupport.tallyByFile(rows, org.apache.spark.sql.functions.col("__uri"))
+    val rel = relsByUri(root, live)
+    (tally.keys.map(u => rel.getOrElse(u, throw new IllegalStateException(
+      s"scanned file $u is not a live file of the table — path namespace mismatch " +
+        "between the scan and the log"))).toSeq.sorted, tally.values.sum)
+  }
+
+  /** the absolute paths of files [[writeTable]] staged */
+  private def stagedPaths(view: LogView, staged: Seq[(String, Long)]): Seq[Path] =
+    staged.map { case (rel, _) => new Path(view.root, rel) }
 
   /** logical column list -> the physical write projection (identity
     * when unmapped); nested logical names re-label via a positional
@@ -1546,12 +1541,13 @@ object DeltaWrite {
     * zero rows commits nothing. SQL DELETE semantics: rows where
     * `cond` is NULL are kept.
     *
-    * Scale shape: victim location is ONE distributed aggregate
-    * (count + collect_set of file path — driver state bounded by FILE
-    * COUNT, never rows); the rewrite reads only victim files. Time
-    * travel to pre-delete versions keeps working until [[vacuum]].
-    * Scope: tables this writer maintains (no deletion vectors —
-    * guarded loudly — and no column mapping). */
+    * Scale shape: two data passes, one Spark job each. Pass 1 scans
+    * the live files for matching rows and tallies them per file in
+    * its tasks (driver state bounded by FILE COUNT, never rows; the
+    * tally is the returned count); pass 2 rewrites only the victim
+    * files. Time travel to pre-delete versions keeps working until
+    * [[vacuum]]. Scope: tables this writer maintains (no deletion
+    * vectors — guarded loudly — and no column mapping). */
   def deleteWhere(spark: SparkSession, tablePath: String,
       cond: org.apache.spark.sql.Column): Long = {
     import org.apache.spark.sql.functions._
@@ -1565,12 +1561,9 @@ object DeltaWrite {
     val readV = view.version
     val live = view.replay(readV).live
     if (live.isEmpty) return 0L
-    val hit = liveScan(spark, root, schema, partCols, live, mapped).filter(cond)
-      .agg(count(lit(1)).as("n"), collect_set(col("__rel")).as("files"))
-      .head() // [lint:bounded] one row: a count and a file-count-bounded set
-    val nDeleted = hit.getLong(0)
+    val (victims, nDeleted) = victimPass(root, live,
+      liveScan(spark, root, schema, partCols, live, mapped).filter(cond))
     if (nDeleted == 0L) return 0L
-    val victims = hit.getSeq[String](1).sorted
 
     val keep = !coalesce(cond, lit(false))
     // change data feed: the deleted rows, typed 'delete', land as
@@ -1587,7 +1580,8 @@ object DeltaWrite {
     // Spark job per touched directory — a delete spanning D dirs paying
     // D sequential job latencies
     val added = writeTable(view,
-      liveScan(spark, root, schema, partCols, victims, mapped).filter(keep),
+      liveScan(spark, root, schema, partCols, victims, mapped).filter(keep)
+        .select(schema.fieldNames.map(col).toSeq: _*),
       Some(md), partCols)
     commitLog(view, Some("DELETE"),
       files = added.map(Staged.tupled) ++ victims.map(Removed), cdc = cdcLines,
@@ -1604,7 +1598,7 @@ object DeltaWrite {
     * (that moves rows across files — use [[merge]]); the assignment
     * must preserve the column's type (checked against the table
     * schema, loud otherwise). Returns the number of rows updated.
-    * Same victim-location shape and scope guards as [[deleteWhere]]. */
+    * Same two-pass shape and scope guards as [[deleteWhere]]. */
   def updateWhere(spark: SparkSession, tablePath: String,
       cond: org.apache.spark.sql.Column,
       assignments: Seq[(String, org.apache.spark.sql.Column)]): Long = {
@@ -1630,12 +1624,9 @@ object DeltaWrite {
     val readV = view.version
     val live = view.replay(readV).live
     if (live.isEmpty) return 0L
-    val hit = liveScan(spark, root, schema, partCols, live, mapped).filter(cond)
-      .agg(count(lit(1)).as("n"), collect_set(col("__rel")).as("files"))
-      .head() // [lint:bounded] one row: a count and a file-count-bounded set
-    val nUpdated = hit.getLong(0)
+    val (victims, nUpdated) = victimPass(root, live,
+      liveScan(spark, root, schema, partCols, live, mapped).filter(cond))
     if (nUpdated == 0L) return 0L
-    val victims = hit.getSeq[String](1).sorted
 
     val fire = coalesce(cond, lit(false))
     val dataCols = schema.fieldNames.filterNot(partCols.contains)
@@ -1656,13 +1647,16 @@ object DeltaWrite {
       s"UPDATE changes the schema to ${probe.simpleString} — " +
         s"assignments must preserve the table's ${declared.simpleString}")
 
-    // CHECK constraints + NOT NULL gate the post-update rows (logical names)
-    view.meta.foreach { md =>
-      val updatedRows = liveScan(spark, root, schema, partCols, victims, mapped)
-        .select(projected.toSeq: _*)
-      enforceConstraints(updatedRows, md.config)
-      enforceRequired(updatedRows, schema)
-    }
+    // ONE table-layout write for every victim dir, as in deleteWhere;
+    // CHECK constraints + NOT NULL gate the post-update rows (logical
+    // names), riding that write
+    val rewritten = liveScan(spark, root, schema, partCols, victims, mapped)
+      .select((projected ++ partCols.map(col)).toSeq: _*)
+    val checked = new LakeSupport.ObservedChecks(view.meta.fold(
+      Seq.empty[LakeSupport.RowCheck])(md =>
+        rowChecks(rewritten.select(dataCols.map(col).toSeq: _*), md.config, schema)))
+    val added = writeTable(view, rewritten, Some(md), partCols, observe = checked.observe)
+    LakeSupport.verifyStaged(view.fs, stagedPaths(view, added))(checked.verify())
 
     // change data feed: pre/post images of exactly the fired rows
     val cdcLines =
@@ -1677,11 +1671,6 @@ object DeltaWrite {
           .withColumn("_change_type", lit("update_postimage"))
         stageCdcFiles(view, schema, partCols, pre.unionByName(post))
       }
-    // ONE table-layout write for every victim dir, as in deleteWhere
-    val added = writeTable(view,
-      liveScan(spark, root, schema, partCols, victims, mapped)
-        .select((projected ++ partCols.map(col)).toSeq: _*),
-      Some(md), partCols)
     commitLog(view, Some("UPDATE"),
       files = added.map(Staged.tupled) ++ victims.map(Removed), cdc = cdcLines,
       dropEmpty = true, scope = Some(CommitScope("UPDATE", readV, victims.toSet,
@@ -1725,8 +1714,8 @@ object DeltaWrite {
     val (oldDescByRel, oldPosDf) = dvState(spark, root.toString, latestAdds)
     val victims = liveScan(spark, root, schema, partCols, live, mapped)
       .filter(cond)
-      .select(col("__rel"), col("__pos"))
-      .join(oldPosDf, Seq("__rel", "__pos"), "left_anti")
+      .select(col("__uri"), col("__pos"))
+      .join(oldPosDf, Seq("__uri", "__pos"), "left_anti")
 
     val (dvAdds, nDeleted, victimFiles) =
       stageDvReAdds(spark, root.toString, latestAdds, oldDescByRel, victims)
@@ -1738,8 +1727,9 @@ object DeltaWrite {
   }
 
   /** existing DV descriptors per live file + their dead positions as a
-    * (__rel, __pos) frame — built executor-side from the descriptors
-    * (bounded per task by one file's cardinality) */
+    * (__uri, __pos) frame — built executor-side from the descriptors
+    * (bounded per task by one file's cardinality), keyed like
+    * [[liveScan]] */
   private def dvState(spark: SparkSession, rootStr: String,
       latestAdds: Map[String, com.fasterxml.jackson.databind.node.ObjectNode])
       : (Map[String, DeletionVectors.Descriptor], DataFrame) = {
@@ -1754,16 +1744,18 @@ object DeltaWrite {
       }
     val holder = new DeletionVectors.ConfHolder(spark.sparkContext.hadoopConfiguration)
     import spark.implicits._
+    val uriOf = relsByUri(new Path(rootStr), latestAdds.keys.toSeq).map(_.swap)
     val oldPosDf =
-      spark.sparkContext.parallelize(oldDescByRel.toSeq, math.max(1, oldDescByRel.size))
-        .flatMap { case (rel, d) =>
-          DeletionVectors.readPositions(holder.value, rootStr, d).map(p => (rel, p))
-        }.toDF("__rel", "__pos")
+      spark.sparkContext.parallelize(oldDescByRel.toSeq.map { case (rel, d) => (uriOf(rel), d) },
+          math.max(1, oldDescByRel.size))
+        .flatMap { case (uri, d) =>
+          DeletionVectors.readPositions(holder.value, rootStr, d).map(p => (uri, p))
+        }.toDF("__uri", "__pos")
     (oldDescByRel, oldPosDf)
   }
 
   /** per-victim-file DV union + EXECUTOR-side bin writes for a
-    * (__rel, __pos) victim frame (already excluding rows dead under
+    * (__uri, __pos) victim frame (already excluding rows dead under
     * existing DVs): returns (re-adds carrying the new descriptors,
     * newly-dead row count, victim file set). Shared by the three DV
     * DMLs. */
@@ -1775,23 +1767,26 @@ object DeltaWrite {
     val holder = new DeletionVectors.ConfHolder(spark.sparkContext.hadoopConfiguration)
     // one pass: per victim file, the sorted new ordinals; DV files are
     // written INSIDE the tasks, the driver collects only descriptors
-    val perFile = victims.groupBy("__rel")
+    val perFile = victims.groupBy("__uri")
       .agg(sort_array(collect_list(col("__pos"))).as("__ps"))
-    val oldB = spark.sparkContext.broadcast(oldDescByRel)
+    val relOf = relsByUri(new Path(rootStr), latestAdds.keys.toSeq)
+    val oldB = spark.sparkContext.broadcast(relOf.flatMap { case (uri, rel) =>
+      oldDescByRel.get(rel).map(uri -> _) })
     import spark.implicits._
     val written: Seq[(String, String, Int, Int, Long, Long)] = perFile
       .as[(String, Seq[Long])]
       .mapPartitions { rows =>
-        rows.map { case (rel, newPos) =>
-          val old = oldB.value.get(rel)
+        rows.map { case (uri, newPos) =>
+          val old = oldB.value.get(uri)
             .map(d => DeletionVectors.readPositions(holder.value, rootStr, d))
             .getOrElse(Array.empty[Long])
           val union = (old ++ newPos).distinct.sorted
           val d = DeletionVectors.writeDvFile(holder.value, rootStr, union)
-          (rel, d.pathOrInlineDv, d.offset.getOrElse(1), d.sizeInBytes,
+          (uri, d.pathOrInlineDv, d.offset.getOrElse(1), d.sizeInBytes,
             d.cardinality, newPos.length.toLong)
         }
       }.collect().toSeq // [lint:bounded] one row per VICTIM FILE, never per row
+      .map(w => w.copy(_1 = relOf(w._1)))
     val adds = written.sortBy(_._1).map { case (rel, ref, off, size, card, _) =>
       val node = latestAdds(rel).deepCopy()
       node.set[com.fasterxml.jackson.databind.node.ObjectNode]("deletionVector",
@@ -1856,10 +1851,10 @@ object DeltaWrite {
 
     val matched = liveScan(spark, root, schema, partCols, live, mapped)
       .filter(cond)
-      .join(oldPosDf, Seq("__rel", "__pos"), "left_anti")
+      .join(oldPosDf, Seq("__uri", "__pos"), "left_anti")
 
     val (dvAdds, nUpdated, victimFiles) = stageDvReAdds(spark, root.toString,
-      latestAdds, oldDescByRel, matched.select(col("__rel"), col("__pos")))
+      latestAdds, oldDescByRel, matched.select(col("__uri"), col("__pos")))
     if (nUpdated == 0L) return 0L
 
     val fire = coalesce(cond, lit(false))
@@ -1878,27 +1873,28 @@ object DeltaWrite {
         declared.fields.map(f => (f.name, f.dataType)).toSeq,
       s"UPDATE changes the schema to ${probe.simpleString} — " +
         s"assignments must preserve the table's ${declared.simpleString}")
-    // CHECK constraints + NOT NULL gate the post-update images
-    view.meta.foreach { md =>
-      val images = matched.select(projected.toSeq: _*)
-      enforceConstraints(images, md.config)
-      enforceRequired(images, schema)
+    // CHECK constraints + NOT NULL gate the post-update images, riding
+    // each directory's write
+    val checks = view.meta.fold(Seq.empty[LakeSupport.RowCheck]) { md =>
+      rowChecks(matched.select(projected.toSeq: _*), md.config, schema)
     }
-
     // images land beside their source files (partition columns are not
     // assignable, so each victim partition dir keeps its own rows)
-    val added = victimFiles.toSeq.sorted
+    val written = victimFiles.toSeq.sorted
       .groupBy(r => r.split('/').dropRight(1).mkString("/"))
-      .toSeq.sortBy(_._1).flatMap { case (partDir, rels) =>
-        writeStaged(fs, root, destPrefix = partDir) { staging =>
-          liveScan(spark, root, schema, partCols, rels, mapped)
+      .toSeq.sortBy(_._1).map { case (partDir, rels) =>
+        val checked = new LakeSupport.ObservedChecks(checks)
+        checked -> writeStaged(fs, root, destPrefix = partDir) { staging =>
+          checked.observe(liveScan(spark, root, schema, partCols, rels, mapped)
             .filter(cond)
-            .join(oldPosDf, Seq("__rel", "__pos"), "left_anti")
-            .select(projected.toSeq: _*)
+            .join(oldPosDf, Seq("__uri", "__pos"), "left_anti")
+            .select(projected.toSeq: _*))
             .select(toPhysical(schema, mapped, dataCols.toSeq): _*)
             .write.mode("append").parquet(staging)
         }
       }
+    val added = written.flatMap(_._2)
+    LakeSupport.verifyStaged(fs, stagedPaths(view, added))(written.foreach(_._1.verify()))
     commitLog(view, Some("UPDATE (DV)"), dvProtocolAction(proto),
       dvAdds ++ added.map(Staged.tupled), dropEmpty = true,
       scope = Some(CommitScope("UPDATE (DV)", readV, victimFiles,
@@ -1952,11 +1948,11 @@ object DeltaWrite {
       val matched =
         if (live.isEmpty) scala.None
         else Some(liveScan(spark, root, schema, partCols, live, mapped)
-          .join(oldPosDf, Seq("__rel", "__pos"), "left_anti")
+          .join(oldPosDf, Seq("__uri", "__pos"), "left_anti")
           .join(srcK, keys, "left_semi"))
       val (dvAdds, updated, victimFiles) = matched match {
         case Some(m) => stageDvReAdds(spark, root.toString, latestAdds,
-          oldDescByRel, m.select(col("__rel"), col("__pos")))
+          oldDescByRel, m.select(col("__uri"), col("__pos")))
         case scala.None => (Seq.empty[Carried], 0L, Set.empty[String])
       }
       // matched rows live only in victim files by construction
@@ -1964,16 +1960,16 @@ object DeltaWrite {
         if (victimFiles.isEmpty) 0L
         else srcK.join(
           liveScan(spark, root, schema, partCols, victimFiles.toSeq.sorted, mapped)
-            .join(oldPosDf, Seq("__rel", "__pos"), "left_anti")
+            .join(oldPosDf, Seq("__uri", "__pos"), "left_anti")
             .select(keys.map(col): _*), keys, "left_semi").count()
       val inserted = srcRows - matchedSrc
 
+      // CHECK constraints + NOT NULL gate the source rows, riding the write
       val newLogical = src.select(schema.fieldNames.map(col).toSeq: _*)
-      view.meta.foreach { md =>
-        enforceConstraints(newLogical, md.config)
-        enforceRequired(newLogical, schema)
-      }
-      val added = writeTable(view, newLogical, Some(md), partCols)
+      val checked = new LakeSupport.ObservedChecks(view.meta.fold(
+        Seq.empty[LakeSupport.RowCheck])(md => rowChecks(newLogical, md.config, schema)))
+      val added = writeTable(view, newLogical, Some(md), partCols, observe = checked.observe)
+      LakeSupport.verifyStaged(view.fs, stagedPaths(view, added))(checked.verify())
       // merge read the WHOLE table — every concurrent data append conflicts
       commitLog(view, Some("MERGE (DV)"), dvProtocolAction(proto),
         dvAdds ++ added.map(Staged.tupled), txn = txn, dropEmpty = true,
@@ -2017,7 +2013,7 @@ object DeltaWrite {
       .toSeq.sortBy(_._1).flatMap { case (partDir, rels) =>
         writeStaged(fs, root, destPrefix = partDir) { staging =>
           liveScan(spark, root, schema, partCols, rels, mapped)
-            .join(oldPosDf, Seq("__rel", "__pos"), "left_anti")
+            .join(oldPosDf, Seq("__uri", "__pos"), "left_anti")
             .select(toPhysical(schema, mapped, dataCols.toSeq): _*)
             .write.mode("append").parquet(staging)
         }
@@ -2041,11 +2037,14 @@ object DeltaWrite {
     * source schema must match the table's; NULL keys never match
     * (standard equi-join semantics — such source rows insert).
     *
-    * Scale shape: victim location and the matched-key count run ONLY
-    * against victim-file rows after one semi-join aggregate (driver
-    * state bounded by file count); survivors + source are written with
-    * the table's own partitioning. Same scope guards as
-    * [[deleteWhere]]. */
+    * Scale shape: two data passes. Pass 1 semi-joins the live rows
+    * with the source keys and tallies the matching rows per file in
+    * its tasks (driver state bounded by file count). Pass 2 writes the
+    * victim files' survivors (an anti-join against the source keys)
+    * plus the source with the table's own partitioning; only keys
+    * meet in a shuffle ([[LakeSupport.MergeRows]]). The counts and the
+    * duplicate-key guard ride that write, and a refused merge deletes
+    * what it staged. Same scope guards as [[deleteWhere]]. */
   def merge(spark: SparkSession, tablePath: String, source: DataFrame,
       keys: Seq[String], txn: Option[(String, Long)] = None): (Long, Long) = {
     val (u, i, _) = mergeInternal(spark, tablePath, source, keys, txn, scala.None)
@@ -2106,108 +2105,47 @@ object DeltaWrite {
         s"the table's ${schema.simpleString}")
     keys.foreach(k => require(schema.fieldNames.contains(k),
       s"merge key column '$k' is not in the table schema"))
-    val src = srcData0
-    val tombKeys = tombK0
     try {
-      val dataK = src.select(keys.map(col): _*)
-      // ONE job for source/tombstone row counts AND the duplicate-key
-      // guard (was three actions): per-key multiplicities aggregate to
-      // the totals and the max multiplicity in a single pass
-      val tagged = tombKeys.fold(dataK.withColumn("__t", lit(0)))(t =>
-        dataK.withColumn("__t", lit(0)).unionByName(t.withColumn("__t", lit(1))))
-      val srcStats = tagged.groupBy(keys.map(col): _*)
-        .agg(count(lit(1)).as("__n"), sum(col("__t")).as("__nt"))
-        .agg(coalesce(sum(col("__n") - col("__nt")), lit(0L)).as("src"),
-          coalesce(sum(col("__nt")), lit(0L)).as("tomb"),
-          coalesce(max(col("__n")), lit(0L)).as("maxMult"))
-        .head() // [lint:bounded] one metrics row
-      val srcRows = srcStats.getLong(0)
-      val tombRows = srcStats.getLong(1)
-      if (srcRows == 0L && tombRows == 0L) return (0L, 0L, 0L)
-      require(srcStats.getLong(2) <= 1L,
-        "merge source has duplicate key tuples (or a key both upserted " +
-          "and tombstoned) — ambiguous apply")
-      val allK = tombKeys.fold(dataK)(t => dataK.unionByName(t))
-
+      val allK = tombK0.fold(srcData0.select(keys.map(col): _*))(t =>
+        srcData0.select(keys.map(col): _*).unionByName(t))
       val readV = view.version
       val live = view.replay(readV).live
-      // ONE job for the victim-file sweep AND the three merge metrics
-      // (was two: a semi-join collect_set over all live files, then a
-      // victim-only metrics aggregate that re-scanned the victims):
-      // every live row joins its key's flag row (duplicate-free by the
-      // guard above — a key is upserted XOR tombstoned), one global
-      // aggregate yields the matched files, the matched target rows
-      // per kind, and the count of distinct matched source keys
-      // (= matched source ROWS, keys being unique).
-      val (victims, updated, deleted, matchedSrc) =
-        if (live.isEmpty) (Seq.empty[String], 0L, 0L, 0L)
-        else {
-          val srcK = dataK.distinct()
-            .withColumn("__s", lit(1)).withColumn("__d", lit(0))
-          val keyFlags = tombKeys.fold(srcK)(t => srcK.unionByName(
-            t.distinct().withColumn("__s", lit(0)).withColumn("__d", lit(1))))
-          // two-level agg, no DISTINCT aggregate (which would plan an
-          // Expand + sort-agg fallback next to collect_set): per-key
-          // row counts + per-key file sets, then one global fold —
-          // each matched key owns exactly one flag row, so the key
-          // count IS the matched-source-key count
-          val m = liveScan(spark, root, schema, partCols, live, mapped)
-            .join(keyFlags, keys, "inner")
-            .groupBy((keys.map(col) :+ col("__s") :+ col("__d")): _*)
-            .agg(count(lit(1)).as("__nt"), collect_set(col("__rel")).as("__fk"))
-            .agg(
-              array_distinct(flatten(collect_list(col("__fk")))).as("files"),
-              coalesce(sum(when(col("__s") === 1, col("__nt"))), lit(0L)),
-              coalesce(sum(when(col("__d") === 1, col("__nt"))), lit(0L)),
-              coalesce(sum(col("__s").cast("long")), lit(0L)))
-            .head() // [lint:bounded] one metrics row + file-count-bounded set
-          (m.getSeq[String](0).sorted, m.getLong(1), m.getLong(2), m.getLong(3))
-        }
-      // matched rows live only in victim files by construction
-      def vScan = liveScan(spark, root, schema, partCols, victims, mapped)
-      val inserted = srcRows - matchedSrc
-
-      if (victims.isEmpty && srcRows == 0L) return (0L, 0L, 0L)
-
-      val survivorSeq =
-        if (victims.isEmpty) Seq.empty // pure insert (unmatched tombstones no-op)
-        else Seq(vScan.join(allK, keys, "left_anti")
-          .select(schema.fieldNames.map(col).toSeq: _*))
-      val newLogical = (survivorSeq :+
-        src.select(schema.fieldNames.map(col).toSeq: _*)).reduce(_ unionByName _)
-      // CHECK constraints + NOT NULL gate the merged rows (logical names)
-      view.meta.foreach { md =>
-        enforceConstraints(newLogical, md.config)
-        enforceRequired(newLogical, schema)
+      // pass 1: the files holding a row some source key (upsert or
+      // tombstone) names — matched rows live only in them
+      val (victims, matched) =
+        if (live.isEmpty) (Seq.empty[String], 0L)
+        else victimPass(root, live, liveScan(spark, root, schema, partCols, live, mapped)
+          .join(allK, keys, "left_semi"))
+      // pass 2: survivors + source, written with the counts and the
+      // duplicate-key guard observed on the way
+      val rows = new LakeSupport.MergeRows(
+        Option.when(victims.nonEmpty)(liveScan(spark, root, schema, partCols, victims, mapped)),
+        srcData0.select(schema.fieldNames.map(col).toSeq: _*), tombK0, keys, matched)
+      // CHECK constraints + NOT NULL gate the merged rows (logical
+      // names), riding the same write
+      val checked = new LakeSupport.ObservedChecks(view.meta.fold(
+        Seq.empty[LakeSupport.RowCheck])(md => rowChecks(rows.rows, md.config, schema)))
+      val added = writeTable(view, rows.rows, Some(md), partCols,
+        observe = df => checked.observe(rows.observe(df)))
+      val m = LakeSupport.verifyStaged(view.fs, stagedPaths(view, added)) {
+        val m = rows.metrics()
+        require(m.maxPerKey <= 1L,
+          "merge source has duplicate key tuples (or a key both upserted " +
+            "and tombstoned) — ambiguous apply")
+        checked.verify()
+        m
+      }
+      // nothing to apply: an empty source, or only unmatched tombstones
+      if (victims.isEmpty && m.sourceRows == 0L) {
+        LakeSupport.discardStaged(view.fs, stagedPaths(view, added))
+        return (0L, 0L, 0L)
       }
       // change data feed: matched target rows (pre), their source
       // replacements (post), unmatched source rows (insert), and
       // tombstoned matches (delete)
       val cdcLines =
         if (!view.meta.exists(_.cdf)) Seq.empty
-        else if (victims.isEmpty) // pure insert: every source row inserts
-          stageCdcFiles(view, schema, partCols,
-            src.select(schema.fieldNames.map(col).toSeq: _*)
-              .withColumn("_change_type", lit("insert")))
-        else {
-          val matchedPre = vScan.join(dataK, keys, "left_semi")
-            .select(schema.fieldNames.map(col).toSeq: _*)
-            .withColumn("_change_type", lit("update_preimage"))
-          val vKeys = vScan.select(keys.map(col): _*)
-          val matchedPost = src.join(vKeys, keys, "left_semi")
-            .select(schema.fieldNames.map(col).toSeq: _*)
-            .withColumn("_change_type", lit("update_postimage"))
-          val ins = src.join(vKeys, keys, "left_anti")
-            .select(schema.fieldNames.map(col).toSeq: _*)
-            .withColumn("_change_type", lit("insert"))
-          val dels = tombKeys.map(t => vScan.join(t, keys, "left_semi")
-            .select(schema.fieldNames.map(col).toSeq: _*)
-            .withColumn("_change_type", lit("delete")))
-          stageCdcFiles(view, schema, partCols,
-            dels.foldLeft(matchedPre.unionByName(matchedPost).unionByName(ins))(
-              _ unionByName _))
-        }
-      val added = writeTable(view, newLogical, Some(md), partCols)
+        else stageCdcFiles(view, schema, partCols, rows.changes)
       // merge read the WHOLE table (any concurrently appended row could
       // collide with a source key and flip a not-matched INSERT into a
       // duplicate) — every concurrent data append is a conflict
@@ -2216,7 +2154,7 @@ object DeltaWrite {
         txn = txn, dropEmpty = true,
         scope = Some(CommitScope("MERGE", readV, victims.toSet,
           readsWholeTable = true, pred = scala.None)))
-      (updated, inserted, deleted)
+      (m.updated, m.inserted, m.deleted)
     } finally sourceP.unpersist()
   }
 
@@ -2938,7 +2876,7 @@ object DeltaWrite {
     *
     * Scale shape: the id computation is the parquet source's own
     * `_metadata.row_index` plus one BROADCAST join against the
-    * file-count-bounded (rel → baseRowId) map — no shuffle, no row
+    * file-count-bounded (file → baseRowId) map — no shuffle, no row
     * state. */
   def readWithRowIds(spark: SparkSession, tablePath: String): DataFrame = {
     import org.apache.spark.sql.functions._
@@ -2971,12 +2909,14 @@ object DeltaWrite {
     val live = latestAdds.keys.toSeq.sorted
     val scan = liveScan(spark, root, schema, partCols, live, mapped,
       extraLongCols = Seq(matId, matCv))
-    val baseDf = broadcast(spark.createDataFrame(base)
-      .toDF("__rel", "__base", "__dcv"))
+    val uriOf = relsByUri(root, live).map(_.swap)
+    val baseDf = broadcast(spark.createDataFrame(base.map { case (rel, b, cv) =>
+        (uriOf(rel), b, cv) })
+      .toDF("__uri", "__base", "__dcv"))
     val (_, dvPosDf) = dvState(spark, root.toString, latestAdds)
     scan
-      .join(baseDf, Seq("__rel"))
-      .join(dvPosDf, Seq("__rel", "__pos"), "left_anti")
+      .join(baseDf, Seq("__uri"))
+      .join(dvPosDf, Seq("__uri", "__pos"), "left_anti")
       .withColumn("_row_id", coalesce(col(matId), col("__base") + col("__pos")))
       .withColumn("_row_commit_version", coalesce(col(matCv), col("__dcv")))
       .select(outFields.map(col): _*)

@@ -42,8 +42,9 @@ import LakeSupport.{mapper, readUtf8}
   * the data scan is a normal distributed parquet read with pushdown and
   * column pruning against the spec-derived schema. Delete application
   * is pure joins: the positional-delete set reads distributed, is
-  * pre-filtered by sequence number against the (broadcast) per-file
-  * sequence map, and broadcasts below a row threshold; equality deletes
+  * pre-filtered by sequence number with one IN-set of the data files
+  * each delete group applies to (decided on the driver from the planned
+  * entries — no job), and broadcasts below a row threshold; equality deletes
   * group the data files by their applicable-delete set (distinct
   * sequence numbers are few) so each file is scanned exactly once.
   */
@@ -202,24 +203,17 @@ object IcebergScan {
       StructField("referenced_data_file", StringType, nullable = true))))
   }
 
-  /** [[read]] restricted to a subset of data-file paths (all applicable
-    * deletes still applied) — [[IcebergWrite.compact]]'s rewrite input:
-    * the compacted output must hold the SURVIVING rows of exactly the
-    * files being replaced. */
-  /** [[readFiltered]] additionally carrying each surviving row's
+  /** [[readPlanned]] additionally carrying each surviving row's
     * physical lineage — `__raw_file` (the data file's
     * `_metadata.file_path` URI, the form position-delete files must
     * name) and `__pos` (row ordinal) — with ALL deletes applied:
-    * [[IcebergWrite.deleteWhere]] plans its victims on this view so a
-    * row already dead under an earlier delete is never re-counted. */
-  private[sources] def readWithLineage(spark: SparkSession, tablePath: String,
+    * [[IcebergWrite]]'s DMLs plan their victims on this view so a row
+    * already dead under an earlier delete is never re-counted.
+    * `pruneBy` skips files the manifests prove hold no matching row. */
+  private[sources] def readWithLineage(spark: SparkSession, planned: PlannedTable,
       pruneBy: Option[org.apache.spark.sql.Column] = None): DataFrame =
-    readInternal(spark, tablePath, None, None, keepLineage = true,
-      skippingFilter = pruneBy)
-
-  private[sources] def readFiltered(spark: SparkSession, tablePath: String,
-      snapshotAsOf: Option[Long], onlyDataFiles: Option[Set[String]]): DataFrame =
-    readInternal(spark, tablePath, snapshotAsOf, onlyDataFiles, keepLineage = false)
+    readEntries(spark, planned.tablePath, planned.meta, planned.entries,
+      onlyDataFiles = None, keepLineage = true, skippingFilter = pruneBy)
 
   /** Read the snapshot pinned by an EXPLICIT metadata file — the REST
     * catalog contract: the catalog's `metadata-location` is the source
@@ -339,31 +333,39 @@ object IcebergScan {
     }
   }
 
-  /** one-walk planning state for callers issuing MANY subset reads of
-    * the same current snapshot ([[BucketJoin]]: one read per bucket
-    * ordinal) — N [[readFiltered]] calls would mean N full manifest
-    * walks; plan once, then [[readPlanned]] each subset */
+  /** one-walk planning state of the current snapshot, for callers
+    * issuing MANY reads of it ([[BucketJoin]]: one read per bucket
+    * ordinal; a DML: its victim scan and its rewrite) — plan once,
+    * then [[readPlanned]] each subset. `manifestList` holds the rows of
+    * the snapshot's manifest list, so a commit built on this snapshot
+    * carries its manifests without reading the list again. */
   private[sources] final case class PlannedTable(
       tablePath: String, meta: JsonNode, schema: StructType,
-      entries: Seq[FileEntry])
+      entries: Seq[FileEntry], manifestList: Seq[GenericRecord])
 
   private[sources] def planTable(spark: SparkSession,
       tablePath: String): PlannedTable = {
-    val conf = spark.sessionState.newHadoopConf()
     val metaDir = new Path(tablePath, "metadata")
-    val fs = metaDir.getFileSystem(conf)
-    val meta = parseMetadata(fs, metaDir)
+    val fs = metaDir.getFileSystem(spark.sessionState.newHadoopConf())
+    planAt(spark, tablePath, parseMetadata(fs, metaDir))
+  }
+
+  /** [[planTable]] over metadata the caller already parsed */
+  private[sources] def planAt(spark: SparkSession, tablePath: String,
+      meta: JsonNode): PlannedTable = {
+    val conf = spark.sessionState.newHadoopConf()
+    val fs = new Path(tablePath).getFileSystem(conf)
     val schema = sparkSchema(currentSchema(meta))
     val snapshots = Option(meta.get("snapshots")).map(_.elements().asScala.toSeq).getOrElse(Seq.empty)
     val wantedId = Option(meta.get("current-snapshot-id")).map(_.asLong()).filter(_ != -1L)
     val snapshot = wantedId.flatMap(id => snapshots.find(_.get("snapshot-id").asLong() == id))
-    val entries = snapshot.map(s =>
-      snapshotEntries(fs, conf, tablePath, s)).getOrElse(Seq.empty)
-    PlannedTable(tablePath, meta, schema, entries)
+    val (list, entries) = snapshot.map(s => snapshotWalk(fs, conf, tablePath, s))
+      .getOrElse((Seq.empty, Seq.empty))
+    PlannedTable(tablePath, meta, schema, entries, list)
   }
 
-  /** [[readFiltered]] over pre-walked planning state (deletes still
-    * applied; delete files come from the SAME snapshot's entries) */
+  /** a subset of the planned data files read through every applicable
+    * delete (delete files come from the SAME snapshot's entries) */
   private[sources] def readPlanned(spark: SparkSession, planned: PlannedTable,
       onlyDataFiles: Option[Set[String]]): DataFrame =
     readEntries(spark, planned.tablePath, planned.meta, planned.entries,
@@ -508,49 +510,50 @@ object IcebergScan {
     // in the SAME (file, pos, seq) namespace: a DV is just the spec's
     // bitmap encoding of the identical key set, so both union here and
     // the sequence-number rule (delete.seq >= data.seq) applies once.
-    val posSet: Option[DataFrame] = if (posAll.isEmpty) None else {
-      val parquetRaw: Seq[DataFrame] = if (posFiles.isEmpty) Nil else
-        posFiles.groupBy(_.seq).toSeq.map { case (s, fs) =>
-          spark.read.schema(StructType(Seq(
-            StructField("file_path", StringType), StructField("pos", LongType))))
+    // The sequence-number rule (delete.seq >= data.seq: a stale delete,
+    // e.g. one older than a compacted rewrite, never applies) is decided
+    // on the driver from the planned data files: each parquet group
+    // keeps the deletes naming a data file at or below its sequence
+    // number (one IN-set predicate), each deletion vector is kept or
+    // dropped outright.
+    val dataSeq: Map[String, Long] = dataFiles.map(f => normalizePath(f.path) -> f.seq).toMap
+    val posSet: Option[DataFrame] = {
+      val parquetRaw: Seq[DataFrame] =
+        posFiles.groupBy(_.seq).toSeq.sortBy(_._1).flatMap { case (s, fs) =>
+          val applies = dataSeq.collect { case (f, fseq) if fseq <= s => f }
+          Option.when(applies.nonEmpty)(spark.read.schema(StructType(Seq(
+              StructField("file_path", StringType), StructField("pos", LongType))))
             .parquet(fs.map(_.path): _*)
-            .withColumn("__dseq", lit(s))
-            .select(normalizePathCol(col("file_path")).as("__file"),
-              col("pos").as("__pos"), col("__dseq"))
+            .select(normalizePathCol(col("file_path")).as("__file"), col("pos").as("__pos"))
+            .filter(col("__file").isInCollection(applies)))
         }
       // DV blobs decode in EXECUTOR tasks (one task per bounded slice of
       // the O(files) descriptor list — never a driver-side decode of
       // O(deleted-rows) state), mirroring DeltaScan's DV path
-      val dvRaw: Seq[DataFrame] = if (dvFiles.isEmpty) Nil else {
+      val work = dvFiles.collect {
+        case e if dataSeq.get(normalizePath(e.refDataFile.get)).exists(_ <= e.seq) =>
+          (normalizePath(e.refDataFile.get), e.path,
+            e.contentOffset.get, e.contentSize.get, e.rows)
+      }
+      val dvRaw: Seq[DataFrame] = if (work.isEmpty) Nil else {
         import spark.implicits._
         val bcConf = spark.sparkContext.broadcast(
           new DeletionVectors.ConfHolder(spark.sessionState.newHadoopConf()))
-        val work = dvFiles.map { e =>
-          (normalizePath(e.refDataFile.get), e.path,
-            e.contentOffset.get, e.contentSize.get, e.seq, e.rows)
-        }
         Seq(spark.createDataset(work)
           .repartition(math.min(work.size, 64))
-          .flatMap { case (ref, puffin, off, len, s, card) =>
+          .flatMap { case (ref, puffin, off, len, card) =>
             val pos = Puffin.readDvPositions(bcConf.value.value,
               new Path(puffin), off, len)
             require(pos.length.toLong == card,
               s"deletion vector $puffin decoded ${pos.length} rows but its " +
                 s"manifest entry declares $card")
-            pos.map(p => (ref, p, s))
-          }.toDF("__file", "__pos", "__dseq"))
+            pos.map(p => (ref, p))
+          }.toDF("__file", "__pos"))
       }
-      val raw = (parquetRaw ++ dvRaw).reduce(_ unionByName _)
-      // pre-filter by the data files' sequence numbers so stale deletes
-      // (delete.seq < data.seq, e.g. a compacted rewrite) never apply;
-      // the per-file seq map is planning metadata, always broadcast-size
-      val dataSeq = spark.createDataFrame(
-        dataFiles.map(f => (normalizePath(f.path), f.seq))).toDF("__file", "__fseq")
-      val eff = raw
-        .join(broadcast(dataSeq), Seq("__file"))
-        .filter(col("__dseq") >= col("__fseq"))
-        .select("__file", "__pos")
-      Some(if (posAll.map(_.rows).sum <= deleteBroadcastRows) broadcast(eff) else eff)
+      Option.when(parquetRaw.nonEmpty || dvRaw.nonEmpty) {
+        val eff = (parquetRaw ++ dvRaw).reduce(_ unionByName _)
+        if (posAll.map(_.rows).sum <= deleteBroadcastRows) broadcast(eff) else eff
+      }
     }
 
     // ---- equality deletes: field ids → top-level columns ----------------
@@ -640,7 +643,15 @@ object IcebergScan {
   private def snapshotEntries(
       fs: FileSystem, conf: org.apache.hadoop.conf.Configuration,
       tablePath: String, snapshot: JsonNode,
-      manifestPruner: Option[(Int, Seq[FieldSummary]) => Boolean] = scala.None): Seq[FileEntry] = {
+      manifestPruner: Option[(Int, Seq[FieldSummary]) => Boolean] = scala.None): Seq[FileEntry] =
+    snapshotWalk(fs, conf, tablePath, snapshot, manifestPruner)._2
+
+  /** [[snapshotEntries]] plus the manifest list's rows, as read */
+  private def snapshotWalk(
+      fs: FileSystem, conf: org.apache.hadoop.conf.Configuration,
+      tablePath: String, snapshot: JsonNode,
+      manifestPruner: Option[(Int, Seq[FieldSummary]) => Boolean] = scala.None)
+      : (Seq[GenericRecord], Seq[FileEntry]) = {
     val manifestListPath = snapshot.get("manifest-list").asText()
     def summaryBytes(v: AnyRef): Array[Byte] = v match {
       case b: java.nio.ByteBuffer =>
@@ -648,7 +659,8 @@ object IcebergScan {
       case a: Array[Byte] => a
       case other => other.toString.getBytes("UTF-8")
     }
-    val manifests = readAvro(fs, conf, resolvePath(fs, tablePath, manifestListPath)).map { r =>
+    val listRows = readAvro(fs, conf, resolvePath(fs, tablePath, manifestListPath))
+    val manifests = listRows.map { r =>
       val seq = opt(r, "sequence_number").map(_.toString.toLong).getOrElse(0L)
       val specId = opt(r, "partition_spec_id").map(_.toString.toInt).getOrElse(0)
       val content = opt(r, "content").map(_.toString.toInt).getOrElse(0)
@@ -674,7 +686,7 @@ object IcebergScan {
     // not as an OOM after materializing everything
     var planFiles = 0L
     var planBytes = 0L
-    manifests.flatMap { case (mp, mSeq, mSpecId) =>
+    listRows -> manifests.flatMap { case (mp, mSeq, mSpecId) =>
       readAvro(fs, conf, resolvePath(fs, tablePath, mp)).flatMap { entry =>
         val status = entry.get("status").toString.toInt
         if (status == 2) None // DELETED

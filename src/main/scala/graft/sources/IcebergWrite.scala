@@ -172,8 +172,7 @@ object IcebergWrite {
   /** highest batch id committed for `appId`, from the current metadata
     * JSON's table properties; None if this app never committed */
   def lastTxnVersion(spark: SparkSession, tablePath: String, appId: String): Option[Long] =
-    currentOpt(spark, tablePath).flatMap(cur => Option(cur.node.get("properties")))
-      .flatMap(p => Option(p.get(s"graft.txn.$appId")).map(_.asText().toLong))
+    currentOpt(spark, tablePath).flatMap(_.property(s"graft.txn.$appId")).map(_.toLong)
 
   /** APPEND WITH SCHEMA EVOLUTION: columns of `df` the table lacks are
     * ADDED to the table schema with FRESH field ids continuing from
@@ -473,6 +472,9 @@ object IcebergWrite {
     def formatVersion: Int =
       Option(node.get("format-version")).map(_.asInt()).getOrElse(1)
     def next: Int = version + 1
+    /** a table property */
+    def property(key: String): Option[String] =
+      Option(node.get("properties")).flatMap(p => Option(p.get(key))).map(_.asText())
     /** the v3 row-id counter (0 before the first v3 commit — see
       * [[upgradeFormatVersion]]) */
     def nextRowId: Long =
@@ -484,6 +486,37 @@ object IcebergWrite {
       publishVersion(fs, metaDir, next, node.toString)
     }
   }
+
+  /** One operation's plan: the table's [[Current]] state (one metadata
+    * parse) and its current snapshot walked once — every live entry
+    * and the manifest list's rows. A DML's victim scan, its rewrite and
+    * its commit's first attempt all read from it. */
+  private final case class Plan(cur: Current, table: IcebergScan.PlannedTable) {
+    /** live entries, one per file (data and delete files) */
+    lazy val live: Seq[IcebergScan.FileEntry] = IcebergScan.dedupeEntries(table.entries)
+    def dataFiles: Seq[IcebergScan.FileEntry] = live.filter(_.content == 0)
+    def schema: StructType = table.schema
+  }
+
+  private def plan(spark: SparkSession, tablePath: String): Plan = {
+    val cur = current(spark, tablePath)
+    Plan(cur, IcebergScan.planAt(spark, tablePath, cur.node))
+  }
+
+  /** the absolute paths of staged files */
+  private def stagedPaths(root: Path, staged: Seq[IcebergScan.FileEntry]): Seq[Path] =
+    staged.map(e => new Path(root, e.path))
+
+  /** the live rows of `victims` (planned data files), read through
+    * every delete that applies to them — the input of a rewrite */
+  private def victimRows(spark: SparkSession, p: Plan,
+      victims: Seq[IcebergScan.FileEntry]): DataFrame =
+    IcebergScan.readPlanned(spark, p.table, Some(victims.map(_.path).toSet))
+
+  /** the NOT NULL check of Iceberg's `required` fields on `df` */
+  private def requiredCheck(df: DataFrame, carry: SchemaCarry): Seq[LakeSupport.RowCheck] =
+    LakeSupport.requiredCheck(df, IcebergScan.sparkSchema(mapper.readTree(carry.schemaJson)),
+      "required").toSeq
 
   /** the table's [[Current]] state, None when no table exists there */
   private[sources] def currentOpt(spark: SparkSession, tablePath: String): Option[Current] = {
@@ -566,22 +599,6 @@ object IcebergWrite {
         Option(node.get("default-sort-order-id")).map(_.asInt()).getOrElse(0))
   }
 
-  /** spec `required` (non-nullable) fields must hold no NULL in every
-    * written batch — checked only for columns the incoming frame
-    * declares nullable (no job otherwise), one combined limit-1 pass */
-  private def enforceRequired(df: DataFrame, declared: StructType): Unit = {
-    import org.apache.spark.sql.functions.col
-    val dfNullable = df.schema.fields.filter(_.nullable).map(_.name).toSet
-    val risky = declared.fields
-      .filter(f => !f.nullable && dfNullable.contains(f.name)).map(_.name)
-    if (risky.nonEmpty) {
-      val anyNull = risky.map(col(_).isNull).reduce(_ || _)
-      require(df.filter(anyNull).limit(1).count() == 0L,
-        s"write carries NULL in required column(s) ${risky.mkString(", ")} — " +
-          "nothing committed")
-    }
-  }
-
   private def txnProps(txn: Option[(String, Long)]): Map[String, String] =
     txn.map { case (appId, batchId) => s"graft.txn.$appId" -> batchId.toString }.toMap
 
@@ -618,7 +635,12 @@ object IcebergWrite {
       tablePath: String, prev: Option[Current],
       carryOverride: Option[SchemaCarry] = None,
       txn: Option[(String, Long)] = None,
-      branch: Option[String] = scala.None): Unit = {
+      branch: Option[String] = scala.None,
+      // what else rides the write (see writeDataFiles), and its check:
+      // true commits, false drops the staged files and commits
+      // nothing, a refusal throws
+      observe: DataFrame => DataFrame = identity,
+      verify: () => Boolean = () => true): Unit = {
     val root = fs.makeQualified(new Path(tablePath))
     val metaDir = new Path(root, "metadata")
     val version = prev.fold(1)(_.next)
@@ -631,9 +653,9 @@ object IcebergWrite {
         s"'${pf.source.name}' is not a column of the input"))
 
     // spec `required` fields must hold no NULL — free when the
-    // incoming frame's schema already proves non-nullability
-    enforceRequired(df, IcebergScan.sparkSchema(
-      mapper.readTree(carry.schemaJson)))
+    // incoming frame's schema already proves non-nullability, and
+    // otherwise riding the write
+    val required = new LakeSupport.ObservedChecks(requiredCheck(df, carry))
 
     // CLUSTER the append by the partition columns: without it every
     // task writes every partition dir it sees — files = tasks x
@@ -648,7 +670,12 @@ object IcebergWrite {
     // are never reused, so it stays resolvable in the winner's
     // metadata). An empty input keeps its one empty file.
     val added = writeDataFiles(spark, fs, root, df, carry,
-      carry.defaultSortFields, cluster = true, keepEmpty = true)
+      carry.defaultSortFields, cluster = true, keepEmpty = true,
+      observe = observe.andThen(required.observe))
+    if (!LakeSupport.verifyStaged(fs, stagedPaths(root, added)) { required.verify(); verify() }) {
+      LakeSupport.discardStaged(fs, stagedPaths(root, added))
+      return
+    }
     require(added.nonEmpty, "write produced no data files (empty input?)")
     fs.mkdirs(metaDir)
 
@@ -738,12 +765,17 @@ object IcebergWrite {
       operation: String, race: RacePolicy, fmtVersion: Option[Current] => Int,
       plannedLive: Set[String] = Set.empty,
       props: Map[String, String] = Map.empty,
-      branch: Option[String] = scala.None)(
+      branch: Option[String] = scala.None,
+      // the planned snapshot's manifest list rows (IcebergScan.planAt),
+      // carried by the attempt that builds on it instead of a re-read
+      plannedList: Option[Seq[GenericRecord]] = scala.None)(
       attempt: Attempt => SnapshotDelta): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
     beforeCommit()
     var prev = planned
     var c = carry
+    // the planned list rows describe `planned` only: a retry re-reads
+    var list = plannedList.filter(_ => branch.isEmpty)
     LakeSupport.retryOnConflict(race.retries, { e =>
       val now = current(spark, tablePath)
       if (now.carry.schemaJson != c.schemaJson ||
@@ -758,6 +790,7 @@ object IcebergWrite {
             s"removed/rewrote data files this ${race.op} references — " +
             s"re-run the ${race.op} on the current table state", e)
       prev = Some(now)
+      list = scala.None
       c = now.carry
     }) {
       val at = Attempt(fs, root, prev, c, fmtVersion(prev))
@@ -766,7 +799,7 @@ object IcebergWrite {
       val branchHead = for {
         b <- branch; n <- prevNode; refs <- Option(n.get("refs")); ref <- Option(refs.get(b))
       } yield ref.get("snapshot-id").asLong()
-      val carried = readPrevManifests(fs, conf, root, prevNode, branchHead)
+      val carried = readPrevManifests(fs, conf, root, prevNode, branchHead, list)
         .filter(delta.carryPrev)
       val listRel = s"metadata/snap-${at.version}-${pathNonce()}.avro"
       writeAvro(fs, new Path(root, listRel), manifestListSchema,
@@ -865,16 +898,24 @@ object IcebergWrite {
     * while the SOURCE column stays — the spec's layout; identity
     * fields keep the column-dropped hive layout), optionally clusters
     * by the partition columns, sorts each file by `sortFields`, and
-    * writes hive-partitioned parquet under `data/`. Returns the new
-    * files as ADDED entries (see [[stagedFiles]]); a sorted write
-    * stamps the table's default sort order id. */
+    * writes hive-partitioned parquet under `data/`. The write goes to
+    * a writer-private hidden staging directory and each file it made
+    * then moves into place, so the returned list is exactly this
+    * write's files: writers sharing the table never share Spark's
+    * `_temporary` directory, and none claims another's in-flight files.
+    * Returns the new files as ADDED entries (see [[stagedFiles]]); a
+    * sorted write stamps the table's default sort order id. `observe`
+    * attaches what rides the write (counts, row checks; see
+    * [[LakeSupport.ObservedChecks]]) above the clustering shuffle, in
+    * the write's final stage. */
   private def writeDataFiles(spark: SparkSession, fs: FileSystem, root: Path,
       df: DataFrame, carry: SchemaCarry,
       sortFields: Seq[(String, Boolean, Boolean)] = Seq.empty,
-      cluster: Boolean = false, keepEmpty: Boolean = false): Seq[IcebergScan.FileEntry] = {
+      cluster: Boolean = false, keepEmpty: Boolean = false,
+      observe: DataFrame => DataFrame = identity): Seq[IcebergScan.FileEntry] = {
     val partCols = carry.partFields.map(_.specName) // void slots write no column
     val dataDir = new Path(root, "data")
-    val pre = listParquet(fs, dataDir).map(_._1).toSet
+    val staging = new Path(dataDir, s".staging-${pathNonce()}")
     withFieldIdWrites(spark) {
       val derived = carry.partFields.filterNot(_.isIdentity).foldLeft(
         stampFieldIds(df, carry.schemaJson)) { (d, pf) =>
@@ -889,13 +930,22 @@ object IcebergWrite {
         else clustered.sortWithinPartitions(
           (partCols.map(org.apache.spark.sql.functions.col) ++
             sortOrderExprs(sortFields)): _*)
-      val writer = sorted.write.mode("append")
+      val writer = observe(sorted).write.mode("append")
       (if (partCols.nonEmpty) writer.partitionBy(partCols: _*) else writer)
-        .parquet(dataDir.toString)
+        .parquet(staging.toString)
     }
+    val prefix = staging.getName + "/"
+    val moved = listParquet(fs, staging).map { case (rel, len) =>
+      val dest = new Path(dataDir, rel.stripPrefix(prefix))
+      fs.mkdirs(dest.getParent)
+      require(fs.rename(new Path(dataDir, rel), dest),
+        s"could not move staged data file $rel into $dest")
+      ("data/" + rel.stripPrefix(prefix), len)
+    }
+    fs.delete(staging, true)
     val sortId = if (sortFields.isEmpty) scala.None else Some(carry.defaultSortOrderId)
-    stagedFiles(fs, root, listParquet(fs, dataDir).filterNot(f => pre(f._1)),
-      content = 0, carry, keepEmpty).map(_.copy(sortOrderId = sortId))
+    stagedFiles(fs, root, moved, content = 0, carry, keepEmpty)
+      .map(_.copy(sortOrderId = sortId))
   }
 
   /** Freshly written parquet files (table-relative path, listed length)
@@ -1312,16 +1362,16 @@ object IcebergWrite {
     // across the target files (distributed sort, no single-task funnel)
     // so the output is globally clustered, per-file sorted, and stamped
     // with the order's id. Unsorted tables keep the plain repartition.
+    require(targetFiles >= 1, s"targetFiles must be >= 1, got $targetFiles")
     val (_, sortFields) = defaultSortOrder(spark, tablePath)
-    val shape: (DataFrame, Int) => DataFrame =
-      if (sortFields.isEmpty) (df, t) => df.repartition(t)
-      else (df, t) => df.repartitionByRange(t, sortOrderExprs(sortFields): _*)
-    rewriteSnapshot(spark, tablePath,
-      pick = { live =>
-        val small = live.filter(_.bytes < smallFileBytes)
-        if (small.size < 2) Seq.empty else small // fewer than 2: nothing to gain
-      },
-      targetFiles, shape, operation = "replace", honorSortOrder = true)
+    val p = plan(spark, tablePath)
+    val small = p.dataFiles.filter(_.bytes < smallFileBytes)
+    if (small.size < 2) return (0, 0) // fewer than 2: nothing to gain
+    val rows = victimRows(spark, p, small)
+    rewriteSnapshot(spark, tablePath, p, small,
+      if (sortFields.isEmpty) rows.repartition(targetFiles)
+      else rows.repartitionByRange(targetFiles, sortOrderExprs(sortFields): _*),
+      operation = "replace", honorSortOrder = true)
   }
 
   /** Z-ORDER the table (a `replace` snapshot like [[compact]], over
@@ -1338,9 +1388,12 @@ object IcebergWrite {
     require(dims.nonEmpty, "need at least one z-order dimension")
     require(bitsPerCol >= 1 && bitsPerCol * dims.size <= 63,
       s"bitsPerCol * nDims must fit a signed long, got $bitsPerCol * ${dims.size}")
+    require(targetFiles >= 1, s"targetFiles must be >= 1, got $targetFiles")
     import org.apache.spark.sql.functions._
-    rewriteSnapshot(spark, tablePath, pick = identity,
-      targetFiles, { (df, t) =>
+    val p = plan(spark, tablePath)
+    if (p.dataFiles.isEmpty) return (0, 0)
+    val df = victimRows(spark, p, p.dataFiles)
+    rewriteSnapshot(spark, tablePath, p, p.dataFiles, {
         dims.foreach { d =>
           val f = df.schema.fields.find(_.name == d).getOrElse(
             throw new IllegalArgumentException(
@@ -1365,55 +1418,50 @@ object IcebergWrite {
         }
         val z = graft.operators.ScaleOps.zorderValue(buckets, bitsPerCol)
         df.withColumn("__graft_z", z)
-          .repartitionByRange(t, col("__graft_z"))
+          .repartitionByRange(targetFiles, col("__graft_z"))
           .sortWithinPartitions("__graft_z")
           .drop("__graft_z")
       }, operation = "replace")
   }
 
-  /** Shared OVERWRITE/REPLACE snapshot core: `pick` selects the victim
-    * data files from the live entries (empty ⇒ no-op, no commit),
-    * `shape` maps the victims-through-the-reader view (all applicable
-    * deletes applied) to the replacement rows. The commit's data
-    * manifest holds ADDED entries for the outputs (sequence = this
-    * commit) + EXISTING entries for untouched files, carried as their
-    * manifests record them (original sequence numbers, sizes and
-    * stats — no filesystem read); delete manifests carry forward
-    * verbatim. A lost race is not retried (see [[retryOnConflict]]). */
+  /** Shared OVERWRITE/REPLACE snapshot core: `shaped` — rows the
+    * caller built from [[victimRows]] of `victims` (planned live data
+    * files) — replaces those files. The commit's data manifest holds
+    * ADDED entries for the outputs (sequence = this commit) + EXISTING
+    * entries for untouched files, carried as their manifests record
+    * them (original sequence numbers, sizes and stats — no filesystem
+    * read); delete manifests carry forward verbatim. `verify` checks
+    * what rode the write before the commit (a refusal deletes the
+    * outputs). A lost race is not retried (see [[retryOnConflict]]). */
   private def rewriteSnapshot(spark: SparkSession, tablePath: String,
-      pick: Seq[IcebergScan.FileEntry] => Seq[IcebergScan.FileEntry],
-      targetFiles: Int,
-      shape: (DataFrame, Int) => DataFrame, operation: String,
-      txn: Option[(String, Long)] = None,
+      p: Plan, victims: Seq[IcebergScan.FileEntry], shaped: DataFrame,
+      operation: String, txn: Option[(String, Long)] = None,
       // true (compact): rewritten files sorted by the table's default
       // sort order + stamped with its id; false (zorder/DML): the shape
       // owns the physical ordering — a table-order sort on top would
       // destroy the z-clustering, and stamping an order the rows don't
       // follow would be a false claim
-      honorSortOrder: Boolean = false): (Int, Int) = {
-    require(targetFiles >= 1, s"targetFiles must be >= 1, got $targetFiles")
-    val cur = current(spark, tablePath)
+      honorSortOrder: Boolean = false,
+      observe: DataFrame => DataFrame = identity,
+      verify: () => Unit = () => ()): (Int, Int) = {
+    val cur = p.cur
     requireVersionFree(cur.fs, cur.metaDir, cur.next)
-
-    val (_, entries) = IcebergScan.currentEntries(spark, tablePath)
-    val dataEntries = entries.filter(_.content == 0)
-    val victims = pick(dataEntries)
-    if (victims.isEmpty) return (0, 0)
     val victimPaths = victims.map(_.path).toSet
-    val kept = dataEntries.filterNot(e => victimPaths.contains(e.path))
+    val kept = p.dataFiles.filterNot(e => victimPaths.contains(e.path))
 
     val carry = cur.carry
-    // rewrite through the READER so every applicable delete lands in
-    // the output — compacting raw parquet would resurrect deleted rows
-    val shaped = shape(IcebergScan.readFiltered(spark, tablePath, scala.None,
-      Some(victimPaths)), targetFiles)
-    enforceRequired(shaped, IcebergScan.sparkSchema(mapper.readTree(carry.schemaJson)))
+    // the rewrite reads through the READER (victimRows) so every
+    // applicable delete lands in the output — compacting raw parquet
+    // would resurrect deleted rows. `required` fields ride the write.
+    val required = new LakeSupport.ObservedChecks(requiredCheck(shaped, carry))
     // partitioned tables keep their layout: rewritten rows land back in
     // their (possibly NEW, for an UPDATE that moves a partition value)
     // hive directories; transform fields re-derive from the updated
     // source columns. Empty outputs drop (every victim row may have died)
     val added = writeDataFiles(spark, cur.fs, cur.root, shaped, carry,
-      sortFields = if (honorSortOrder) carry.defaultSortFields else Seq.empty)
+      sortFields = if (honorSortOrder) carry.defaultSortFields else Seq.empty,
+      observe = observe.andThen(required.observe))
+    LakeSupport.verifyStaged(cur.fs, stagedPaths(cur.root, added)) { required.verify(); verify() }
 
     // v3 row lineage: the rewrite OUTPUTS are new files and receive
     // fresh sequential ids from the table counter (kept files carry
@@ -1442,7 +1490,7 @@ object IcebergWrite {
     val minKeptDataSeq = if (kept.isEmpty) Long.MaxValue else kept.map(_.seq).min
     commitSnapshot(spark, tablePath, cur.fs, cur.root, Some(cur), carry,
       operation, NoRetry, fmtVersion = _ => cur.formatVersion,
-      props = txnProps(txn)) { at =>
+      props = txnProps(txn), plannedList = Some(p.table.manifestList)) { at =>
       val default = writeManifest(at, carry.defaultSpecId,
         at.withRowIds(added).map(Added) ++
           keptBySpec.getOrElse(carry.defaultSpecId, Seq.empty).map(Kept))
@@ -1470,15 +1518,21 @@ object IcebergWrite {
     * numbers; time travel to pre-update snapshots keeps working.
     * Returns the number of rows updated.
     *
-    * Scale shape: victim location is ONE count+collect_set aggregate
-    * (driver state bounded by file count); the rewrite reads only the
-    * victim files. Mirrors [[DeltaWrite.updateWhere]]. */
+    * Scale shape: two data passes over one plan (one metadata parse,
+    * one manifest walk). Pass 1 scans the lineage view for matching
+    * rows and tallies them per file in its tasks (driver state bounded
+    * by file count; the tally is the returned count); pass 2 rewrites
+    * only the victim files. The update commits on the plan's snapshot:
+    * a commit that lands while it runs makes it fail with
+    * ConcurrentModificationException (re-run it on the new state).
+    * Mirrors [[DeltaWrite.updateWhere]]. */
   def updateWhere(spark: SparkSession, tablePath: String,
       cond: org.apache.spark.sql.Column,
       assignments: Seq[(String, org.apache.spark.sql.Column)]): Long = {
     import org.apache.spark.sql.functions._
     require(assignments.nonEmpty, "updateWhere needs at least one SET assignment")
-    val (schema, _) = IcebergScan.currentDataFiles(spark, tablePath)
+    val p = plan(spark, tablePath)
+    val schema = p.schema
     val setByName = assignments.toMap
     require(setByName.size == assignments.size, "duplicate SET column")
     assignments.foreach { case (n, _) =>
@@ -1487,23 +1541,17 @@ object IcebergWrite {
 
     // table property write.update.mode=merge-on-read → delta commit
     // (position deletes + new images) instead of a victim-file rewrite
-    if (tableProperty(spark, tablePath, "write.update.mode")
-        .contains("merge-on-read"))
-      return updateWhereMor(spark, tablePath, cond, setByName, schema)
+    if (p.cur.property("write.update.mode").contains("merge-on-read"))
+      return updateWhereMor(spark, p, cond, setByName, schema)
 
-    // victims from the DELETE-APPLIED lineage view: a row already dead
-    // under an earlier position/equality delete never fires the update.
-    // `cond` doubles as the manifest pruner (partition values + column
-    // bounds), so victim location never scans files the metadata can
-    // prove clean — on a partitioned table an UPDATE touching one
-    // partition plans one partition
-    val hit = IcebergScan.readWithLineage(spark, tablePath, Some(cond)).filter(cond)
-      .agg(count(lit(1)).as("n"),
-        collect_set(IcebergScan.normalizePathCol(col("__raw_file"))).as("files"))
-      .head() // [lint:bounded] one row: a count and a file-count-bounded set
-    val nUpdated = hit.getLong(0)
+    // pass 1: victims from the DELETE-APPLIED lineage view (a row
+    // already dead under an earlier position/equality delete never
+    // fires the update); `cond` doubles as the file pruner (partition
+    // values + column bounds), so victim location never scans files
+    // the metadata can prove clean
+    val (victims, nUpdated) = victimPass(p, IcebergScan.readWithLineage(spark, p.table,
+      Some(cond)).filter(cond))
     if (nUpdated == 0L) return 0L
-    val victims = hit.getSeq[String](1).toSet
 
     val fire = coalesce(cond, lit(false))
     // one projection so every RHS reads pre-update values
@@ -1511,31 +1559,36 @@ object IcebergWrite {
       setByName.get(n).map(e => when(fire, e).otherwise(col(n)).as(n))
         .getOrElse(col(n))
     }.toSeq
-    val (picked, written) = rewriteSnapshot(spark, tablePath,
-      pick = { live =>
-        val hits = live.filter(e => victims.contains(IcebergScan.normalizePath(e.path)))
-        // a victim the live entries can't name means the path namespaces
-        // diverged (the silent-no-op bug class) — corrupt loudly, never quietly
-        require(hits.size == victims.size,
-          s"victim files ${victims.size} != matched live entries ${hits.size} — " +
-            "path namespace mismatch between the lineage view and the manifest")
-        hits
-      },
-      targetFiles = 1,
-      shape = { (df, _) =>
-        // type-preservation guard BEFORE any file is written (plan-only):
-        // a widening coercion in a SET expression would drift the table type
-        val probe = df.select(projected: _*).schema
-        require(
-          probe.fields.map(f => (f.name, f.dataType)).toSeq ==
-            schema.fields.map(f => (f.name, f.dataType)).toSeq,
-          s"UPDATE changes the schema to ${probe.simpleString} — " +
-            s"assignments must preserve the table's ${schema.simpleString}")
-        df.select(projected: _*)
-      }, operation = "overwrite")
+    val shaped = victimRows(spark, p, victims).select(projected: _*)
+    // type-preservation guard BEFORE any file is written (plan-only):
+    // a widening coercion in a SET expression would drift the table type
+    require(
+      shaped.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
+        schema.fields.map(f => (f.name, f.dataType)).toSeq,
+      s"UPDATE changes the schema to ${shaped.schema.simpleString} — " +
+        s"assignments must preserve the table's ${schema.simpleString}")
+    // pass 2
+    val (picked, written) = rewriteSnapshot(spark, tablePath, p, victims, shaped,
+      operation = "overwrite")
     require(picked > 0 && written > 0,
       s"update rewrite wrote no files (picked=$picked written=$written)")
     nUpdated
+  }
+
+  /** Pass 1 of a copy-on-write DML over `rows` (a lineage view of the
+    * plan, filtered to the rows the DML changes): the victim files as
+    * planned entries, and the number of rows
+    * ([[LakeSupport.tallyByFile]]) */
+  private def victimPass(p: Plan, rows: DataFrame): (Seq[IcebergScan.FileEntry], Long) = {
+    val tally = LakeSupport.tallyByFile(rows,
+      IcebergScan.normalizePathCol(org.apache.spark.sql.functions.col("__raw_file")))
+    val hits = p.dataFiles.filter(e => tally.contains(IcebergScan.normalizePath(e.path)))
+    // a victim the live entries can't name means the path namespaces
+    // diverged (the silent-no-op bug class) — corrupt loudly, never quietly
+    require(hits.size == tally.size,
+      s"victim files ${tally.size} != matched live entries ${hits.size} — " +
+        "path namespace mismatch between the lineage view and the manifest")
+    (hits, tally.values.sum)
   }
 
   /** MERGE (upsert) by key, copy-on-write (the spec's `overwrite`
@@ -1548,12 +1601,23 @@ object IcebergWrite {
     * semantics — such source rows insert). Same lineage-view victim
     * planning and sequence-number rules as [[updateWhere]]; with no
     * matched rows the merge degrades to a plain append.
+    *
+    * Scale shape: two data passes over one plan. Pass 1 semi-joins the
+    * lineage view with the source keys and tallies the matching rows
+    * per file; pass 2 writes the victims' survivors (an anti-join
+    * against the source keys) plus the source, and only keys meet in a
+    * shuffle ([[LakeSupport.MergeRows]]). The counts and the
+    * duplicate-key guard ride that write — a refused merge deletes
+    * what it staged. The merge commits on the plan's snapshot: a
+    * commit that lands while it runs makes it fail with
+    * ConcurrentModificationException (re-run it on the new state).
     * Mirrors [[DeltaWrite.merge]]. */
   def merge(spark: SparkSession, tablePath: String, source: DataFrame,
       keys: Seq[String], txn: Option[(String, Long)] = None): (Long, Long) = {
     import org.apache.spark.sql.functions._
     require(keys.nonEmpty, "merge needs at least one key column")
-    val (schema, _) = IcebergScan.currentDataFiles(spark, tablePath)
+    val p = plan(spark, tablePath)
+    val schema = p.schema
     require(
       schema.fields.map(f => (f.name, f.dataType)).toSeq ==
         source.schema.fields.map(f => (f.name, f.dataType)).toSeq,
@@ -1564,55 +1628,34 @@ object IcebergWrite {
 
     val src = source.persist()
     try {
-      val srcRows = src.count()
-      if (srcRows == 0L) return (0L, 0L)
-      require(src.groupBy(keys.map(col): _*).count()
-        .filter(col("count") > 1).limit(1).count() == 0L,
-        "merge source has duplicate key tuples — ambiguous upsert")
-
       // table property write.merge.mode=merge-on-read → equality-delete
       // upsert (delete files + appended source), no table rewrite
-      if (tableProperty(spark, tablePath, "write.merge.mode")
-          .contains("merge-on-read"))
-        return mergeMor(spark, tablePath, src, keys, txn, schema, srcRows)
+      if (p.cur.property("write.merge.mode").contains("merge-on-read"))
+        return mergeMor(spark, p, src, keys, txn, schema)
 
-      val srcK = src.select(keys.map(col): _*)
-
-      val lineage = IcebergScan.readWithLineage(spark, tablePath)
-      val hit = lineage.join(srcK, keys, "left_semi")
-        .agg(count(lit(1)).as("n"),
-          collect_set(IcebergScan.normalizePathCol(col("__raw_file"))).as("files"))
-        .head() // [lint:bounded] one row: a count and a file-count-bounded set
-      val updated = hit.getLong(0)
-      val victims = hit.getSeq[String](1).toSet
-      if (victims.isEmpty) { // pure insert: a plain append commit
-        appendTxn(spark, src, tablePath, txn)
-        return (0L, srcRows)
+      // pass 1: the files holding a row some source key names
+      val (victims, matched) =
+        if (p.dataFiles.isEmpty) (Seq.empty[IcebergScan.FileEntry], 0L)
+        else victimPass(p, IcebergScan.readWithLineage(spark, p.table)
+          .join(src.select(keys.map(col): _*), keys, "left_semi"))
+      // pass 2: survivors + source, the counts and the duplicate-key
+      // guard riding the write
+      val rows = new LakeSupport.MergeRows(
+        Option.when(victims.nonEmpty)(victimRows(spark, p, victims)),
+        src.select(schema.fieldNames.map(col).toSeq: _*), scala.None, keys, matched)
+      lazy val counts = rows.metrics() // once the write has run
+      val guard = () =>
+        require(counts.maxPerKey <= 1L, "merge source has duplicate key tuples — ambiguous upsert")
+      if (victims.isEmpty) { // pure insert (or an empty source): a plain append commit
+        commit(spark, p.cur.fs, rows.rows, tablePath, Some(p.cur), txn = txn,
+          observe = rows.observe, verify = () => { guard(); counts.sourceRows > 0L })
+        return (0L, counts.inserted)
       }
-      // matched rows live only in victim files by construction, so the
-      // matched-source-key count scans just those
-      val matchedSrc = srcK.join(
-        lineage.filter(IcebergScan.normalizePathCol(col("__raw_file"))
-            .isInCollection(victims))
-          .select(keys.map(col).toSeq: _*), keys, "left_semi").count()
-      val inserted = srcRows - matchedSrc
-
-      val cols = schema.fieldNames.map(col).toSeq
-      val (picked, written) = rewriteSnapshot(spark, tablePath,
-        pick = { live =>
-          val hits = live.filter(e => victims.contains(IcebergScan.normalizePath(e.path)))
-          require(hits.size == victims.size,
-            s"victim files ${victims.size} != matched live entries ${hits.size} — " +
-              "path namespace mismatch between the lineage view and the manifest")
-          hits
-        },
-        targetFiles = 1,
-        shape = (df, _) => df.join(srcK, keys, "left_anti").select(cols: _*)
-          .unionByName(src.select(cols: _*)),
-        operation = "overwrite", txn = txn)
+      val (picked, written) = rewriteSnapshot(spark, tablePath, p, victims, rows.rows,
+        operation = "overwrite", txn = txn, observe = rows.observe, verify = guard)
       require(picked > 0 && written > 0,
         s"merge rewrite wrote no files (picked=$picked written=$written)")
-      (updated, inserted)
+      (counts.updated, counts.inserted)
     } finally src.unpersist()
   }
 
@@ -1638,8 +1681,7 @@ object IcebergWrite {
   /** current value of a table property, if set */
   def tableProperty(spark: SparkSession, tablePath: String,
       key: String): Option[String] =
-    currentOpt(spark, tablePath).flatMap(cur => Option(cur.node.get("properties")))
-      .flatMap(p => Option(p.get(key))).map(_.asText())
+    currentOpt(spark, tablePath).flatMap(_.property(key))
 
   // ---- merge-on-read DML -----------------------------------------------
 
@@ -1653,19 +1695,20 @@ object IcebergWrite {
     * Reads apply the deltas; [[compact]] folds them away. Same
     * lineage-view planning, projection semantics, and type guard as
     * the copy-on-write path. */
-  private def updateWhereMor(spark: SparkSession, tablePath: String,
+  private def updateWhereMor(spark: SparkSession, p: Plan,
       cond: org.apache.spark.sql.Column,
       setByName: Map[String, org.apache.spark.sql.Column],
       tableSchema: StructType): Long = {
     import org.apache.spark.sql.functions._
-    val cur = current(spark, tablePath)
+    val cur = p.cur
+    val tablePath = p.table.tablePath
     val (fs, root, version) = (cur.fs, cur.root, cur.next)
     val carry = cur.carry
-    val (_, plannedLive) = IcebergScan.currentDataFiles(spark, tablePath)
+    val plannedLive = p.dataFiles.map(_.path)
 
     // ONE persisted matched-row set feeds both halves of the commit —
     // the delete positions and the new images must name the same rows
-    val matched = IcebergScan.readWithLineage(spark, tablePath, Some(cond))
+    val matched = IcebergScan.readWithLineage(spark, p.table, Some(cond))
       .filter(cond).persist()
     try {
       // v3: the kill side is a deletion vector per victim file; v2:
@@ -1674,14 +1717,13 @@ object IcebergWrite {
       val dvStaged: Option[(Seq[DvStaged], Map[String, (String, Long, Long)])] =
         if (fmtV < 3) scala.None
         else {
-          val (_, entries) = IcebergScan.currentEntries(spark, tablePath)
-          val existingDv = dvByRefFile(entries)
+          val existingDv = dvByRefFile(p.live)
           Some((stageDeletionVectors(spark, fs, root,
             matched.select(col("__raw_file"), col("__pos")), existingDv,
             version), existingDv))
         }
       val posDeletes = if (dvStaged.isDefined) Seq.empty
-        else stagePositionDeletes(spark, fs, root, tablePath,
+        else stagePositionDeletes(spark, fs, root, p.dataFiles,
           matched.select(col("__raw_file"), col("__pos")), version, carry)
       val nUpdated = dvStaged.map(_._1.map(_.newRows).sum)
         .getOrElse(posDeletes.map(_.rows).sum)
@@ -1698,10 +1740,13 @@ object IcebergWrite {
           tableSchema.fields.map(f => (f.name, f.dataType)).toSeq,
         s"UPDATE changes the schema to ${shaped.schema.simpleString} — " +
           s"assignments must preserve the table's ${tableSchema.simpleString}")
-      enforceRequired(shaped, tableSchema)
       // cluster by partition columns: files = touched partitions,
-      // not tasks x partitions (see the append path)
-      val added = writeDataFiles(spark, fs, root, shaped, carry, cluster = true)
+      // not tasks x partitions (see the append path); `required`
+      // fields ride the write
+      val required = new LakeSupport.ObservedChecks(requiredCheck(shaped, carry))
+      val added = writeDataFiles(spark, fs, root, shaped, carry, cluster = true,
+        observe = required.observe)
+      LakeSupport.verifyStaged(fs, stagedPaths(root, added))(required.verify())
       require(added.map(_.rows).sum == nUpdated,
         s"MOR update wrote ${added.map(_.rows).sum} new rows for " +
           s"$nUpdated deleted positions — aborting before commit")
@@ -1735,18 +1780,24 @@ object IcebergWrite {
     * snapshot. NULL-key source rows insert without deleting (NULL
     * keys never match, but an equality delete is null-safe — they must
     * stay out of the key set). */
-  private def mergeMor(spark: SparkSession, tablePath: String,
+  private def mergeMor(spark: SparkSession, p: Plan,
       src: DataFrame, keys: Seq[String], txn: Option[(String, Long)],
-      tableSchema: StructType, srcRows: Long): (Long, Long) = {
+      tableSchema: StructType): (Long, Long) = {
     import org.apache.spark.sql.functions._
-    val cur = current(spark, tablePath)
+    val cur = p.cur
+    val tablePath = p.table.tablePath
     val (fs, root, version) = (cur.fs, cur.root, cur.next)
     val carry = cur.carry
+    val srcRows = src.count()
+    if (srcRows == 0L) return (0L, 0L)
+    require(src.groupBy(keys.map(col): _*).count()
+      .filter(col("count") > 1).limit(1).count() == 0L,
+      "merge source has duplicate key tuples — ambiguous upsert")
 
     // counts against the planned snapshot (one pass over the pruned
     // lineage view): updated = live rows a source key hits
     val srcK = src.select(keys.map(col): _*)
-    val lineage = IcebergScan.readWithLineage(spark, tablePath)
+    val lineage = IcebergScan.readWithLineage(spark, p.table)
     val updated = lineage.select(keys.map(col).toSeq: _*)
       .join(srcK, keys, "left_semi").count()
     val matchedSrc = srcK.join(lineage.select(keys.map(col).toSeq: _*),
@@ -1758,11 +1809,14 @@ object IcebergWrite {
     val eqDeletes = stageEqualityDeletes(spark, fs, root,
       src.filter(nonNull).select(keys.map(col): _*), version, carry, tablePath)
 
-    enforceRequired(src, tableSchema)
     // cluster by partition columns: files = touched partitions,
-    // not tasks x partitions (see the append path)
+    // not tasks x partitions (see the append path); `required` fields
+    // ride the write
+    val required = new LakeSupport.ObservedChecks(requiredCheck(src, carry))
     val added = writeDataFiles(spark, fs, root,
-      src.select(tableSchema.fieldNames.map(col).toSeq: _*), carry, cluster = true)
+      src.select(tableSchema.fieldNames.map(col).toSeq: _*), carry, cluster = true,
+      observe = required.observe)
+    LakeSupport.verifyStaged(fs, stagedPaths(root, added))(required.verify())
     require(added.map(_.rows).sum == srcRows,
       s"MOR merge wrote ${added.map(_.rows).sum} rows for a " +
         s"$srcRows-row source — aborting before commit")
@@ -2205,7 +2259,8 @@ object IcebergWrite {
   private def readPrevManifests(fs: FileSystem,
       conf: org.apache.hadoop.conf.Configuration, root: Path,
       prev: Option[com.fasterxml.jackson.databind.JsonNode],
-      fromSnapshot: Option[Long]): Seq[ManifestRef] = {
+      fromSnapshot: Option[Long],
+      listRows: Option[Seq[GenericRecord]] = scala.None): Seq[ManifestRef] = {
     val node = prev.getOrElse(return Seq.empty)
     val currentId = fromSnapshot.orElse(
       Option(node.get("current-snapshot-id")).map(_.asLong()).filter(_ != -1L))
@@ -2216,7 +2271,7 @@ object IcebergWrite {
       .getOrElse(return Seq.empty)
     val abs = if (listPath.contains("://") || listPath.startsWith("/"))
       new Path(listPath) else new Path(root, listPath)
-    readAvro(fs, conf, abs)
+    listRows.getOrElse(readAvro(fs, conf, abs))
       .map { r =>
         def opt(name: String): Option[AnyRef] =
           if (r.getSchema.getField(name) == null) None else Option(r.get(name))
@@ -2431,14 +2486,15 @@ object IcebergWrite {
     * it didn't name. */
   def deleteWhere(spark: SparkSession, tablePath: String,
       cond: org.apache.spark.sql.Column): Long = {
-    val cur = current(spark, tablePath)
+    val p = plan(spark, tablePath)
+    val cur = p.cur
     val (fs, root, metaDir, version) = (cur.fs, cur.root, cur.metaDir, cur.next)
     requireVersionFree(fs, metaDir, version)
     // format-version 3 forbids parquet position-delete files: route to
     // the deletion-vector path
-    if (cur.formatVersion >= 3) return deleteWhereDv(spark, tablePath, cond, cur)
+    if (cur.formatVersion >= 3) return deleteWhereDv(spark, p, cond)
 
-    val (_, dataFiles) = IcebergScan.currentDataFiles(spark, tablePath)
+    val dataFiles = p.dataFiles.map(_.path)
     if (dataFiles.isEmpty) return 0L
     import org.apache.spark.sql.functions.col
     // schema state carried verbatim from the table's own metadata (the
@@ -2451,9 +2507,9 @@ object IcebergWrite {
     // victims come from the DELETE-APPLIED lineage view, so a row
     // already dead under an earlier position/equality delete is never
     // re-listed or re-counted; `cond` rides in as the manifest pruner
-    val victims = IcebergScan.readWithLineage(spark, tablePath, Some(cond))
+    val victims = IcebergScan.readWithLineage(spark, p.table, Some(cond))
       .filter(cond).select(col("__raw_file"), col("__pos"))
-    val deletes = stagePositionDeletes(spark, fs, root, tablePath,
+    val deletes = stagePositionDeletes(spark, fs, root, p.dataFiles,
       victims, version, carry)
     val nDeleted = deletes.map(_.rows).sum
     if (nDeleted == 0L) return 0L // helper already cleaned its staging dir
@@ -2468,7 +2524,8 @@ object IcebergWrite {
     // applies it to pre-existing files only, and the staged positions
     // name exactly the files this plan saw.
     commitSnapshot(spark, tablePath, fs, root, Some(cur), carry, "delete",
-      DeleteRace, fmtVersion = _ => 2, plannedLive = dataFiles.toSet) { at =>
+      DeleteRace, fmtVersion = _ => 2, plannedLive = dataFiles.toSet,
+      plannedList = Some(p.table.manifestList)) { at =>
       SnapshotDelta(Seq(writeManifest(at, at.carry.defaultSpecId,
         deletes.map(Added))))
     }
@@ -2481,7 +2538,7 @@ object IcebergWrite {
     * non-empty delete file. Shared by [[deleteWhere]] and the
     * merge-on-read [[updateWhere]] path. */
   private def stagePositionDeletes(spark: SparkSession, fs: FileSystem,
-      root: Path, tablePath: String, victims0: DataFrame, version: Int,
+      root: Path, dataFiles: Seq[IcebergScan.FileEntry], victims0: DataFrame, version: Int,
       carry: SchemaCarry): Seq[IcebergScan.FileEntry] = {
     val recordFields = carry.partFields.map(_.recordField)
     val partCols = recordFields.map(_.name)
@@ -2524,9 +2581,8 @@ object IcebergWrite {
           .distinct().collect().map(_.getString(0)) // [lint:bounded] live-data-file-count rows
           .toSet
         if (victimFiles.isEmpty) { fs.delete(delDir, true); return Seq.empty }
-        val (_, entries) = IcebergScan.currentEntries(spark, tablePath)
-        val hitEntries = entries.filter(e =>
-          e.content == 0 && victimFiles.contains(IcebergScan.normalizePath(e.path)))
+        val hitEntries = dataFiles.filter(e =>
+          victimFiles.contains(IcebergScan.normalizePath(e.path)))
         require(hitEntries.size == victimFiles.size,
           s"victim files ${victimFiles.size} != matched live entries " +
             s"${hitEntries.size} — path namespace mismatch between the " +
@@ -2738,10 +2794,10 @@ object IcebergWrite {
     * file's existing DV — the spec allows at most ONE DV per file, and
     * a replacement must preserve previously deleted positions), then
     * fold-commit. Returns newly deleted rows. */
-  private def deleteWhereDv(spark: SparkSession, tablePath: String,
-      cond: org.apache.spark.sql.Column, cur: Current): Long = {
+  private def deleteWhereDv(spark: SparkSession, p: Plan,
+      cond: org.apache.spark.sql.Column): Long = {
+    val (cur, tablePath, entries) = (p.cur, p.table.tablePath, p.live)
     val (fs, root, version) = (cur.fs, cur.root, cur.next)
-    val (_, entries) = IcebergScan.currentEntries(spark, tablePath)
     val dataEntries = entries.filter(_.content == 0)
     if (dataEntries.isEmpty) return 0L
     require(!entries.exists(e => e.content == 1 && e.fileFormat != "PUFFIN"),
@@ -2749,7 +2805,7 @@ object IcebergWrite {
         "position-delete files — upgradeFormatVersion converts them")
     val existingDv = dvByRefFile(entries)
     import org.apache.spark.sql.functions.col
-    val victims = IcebergScan.readWithLineage(spark, tablePath, Some(cond))
+    val victims = IcebergScan.readWithLineage(spark, p.table, Some(cond))
       .filter(cond).select(col("__raw_file"), col("__pos"))
     val staged = stageDeletionVectors(spark, fs, root, victims, existingDv, version)
     if (staged.isEmpty) return 0L

@@ -4,13 +4,14 @@ import java.util.concurrent.{BrokenBarrierException, CyclicBarrier, Executors, T
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.AtomicFiles
 
 /** A conditional publish is put-if-absent: of writers racing to one
-  * path, exactly one wins. */
+  * path, exactly one wins. A publish on the local filesystem leaves no
+  * checksum sidecar. */
 class AtomicFilesSpec extends AnyFunSuite {
 
   test("two writers racing a conditional publish to one path: exactly one wins") {
@@ -45,5 +46,20 @@ class AtomicFilesSpec extends AnyFunSuite {
       CountingFileSystem.beforeRename = () => ()
       pool.shutdown()
     }
+  }
+
+  test("a publish on the local filesystem leaves no .crc sidecar behind") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_atomic_crc")
+    // the checksummed local filesystem, as `file:` paths resolve
+    val fs = FileSystem.getLocal(new Configuration())
+    val file = new Path(dir.toUri.toString, "_last_checkpoint")
+    AtomicFiles.publishUtf8(fs, file, "first", overwrite = false)
+    AtomicFiles.publishUtf8(fs, file, "second", overwrite = true)
+    assert(dir.toFile.list().toSet == Set("_last_checkpoint"),
+      s"a publish left more than its file: ${dir.toFile.list().mkString(", ")}")
+    // a tool rewriting the file in place leaves it readable
+    java.nio.file.Files.write(dir.resolve("_last_checkpoint"), "third".getBytes("UTF-8"))
+    val in = fs.open(file)
+    try assert(new String(in.readAllBytes(), "UTF-8") == "third") finally in.close()
   }
 }

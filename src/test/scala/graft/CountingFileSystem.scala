@@ -20,8 +20,10 @@ import org.apache.hadoop.util.Progressable
   * through `FileContext` (which `AtomicFiles.publish` uses) — lands in
   * [[CountingFileSystem.opened]]. It also counts every create and
   * rename of a path under a `metadata/` (Iceberg) or `_delta_log/`
-  * (Delta) directory and, when armed with [[CountingFileSystem.failAt]],
-  * throws IOException on the k-th one. */
+  * (Delta) directory, and every delete there or of staged data (a
+  * `.staging-*` or `data/` directory, a parquet file), and, when armed
+  * with [[CountingFileSystem.failAt]], throws IOException on the k-th
+  * one. Both Hadoop client APIs delete through [[delete]]. */
 class CountingFileSystem extends RawLocalFileSystem {
   override def getUri: URI = CountingFileSystem.Uri
   override def getScheme: String = CountingFileSystem.Scheme
@@ -39,6 +41,11 @@ class CountingFileSystem extends RawLocalFileSystem {
       progress: Progressable): FSDataOutputStream = {
     CountingFileSystem.mutate(f)
     super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
+  }
+  override def delete(f: Path, recursive: Boolean): Boolean = {
+    if (CountingFileSystem.staged(f)) CountingFileSystem.count(f)
+    else CountingFileSystem.mutate(f)
+    super.delete(f, recursive)
   }
   override def rename(src: Path, dst: Path): Boolean = {
     CountingFileSystem.beforeRename()
@@ -68,7 +75,7 @@ object CountingFileSystem {
   /** local paths of every open, in order, across all instances */
   val opened = new ConcurrentLinkedQueue[String]()
 
-  /** creates and renames of table-log paths since the last [[failAt]] */
+  /** creates, renames and deletes counted since the last [[failAt]] */
   val mutations = new AtomicInteger(0)
   @volatile private var failing = 0
 
@@ -76,14 +83,24 @@ object CountingFileSystem {
     * rename has already checked that the target is absent */
   @volatile var beforeRename: () => Unit = () => ()
 
-  /** count metadata mutations from zero; the `k`-th throws (0: never) */
+  /** count mutations from zero; the `k`-th throws (0: never) */
   def failAt(k: Int): Unit = { mutations.set(0); failing = k }
 
   private def mutate(p: Path): Unit =
-    if (p.toUri.getPath.contains("/metadata/") || p.toUri.getPath.contains("/_delta_log/")) {
-      val n = mutations.incrementAndGet()
-      if (n == failing) throw new IOException(s"injected fault at metadata mutation $n: $p")
-    }
+    if (p.toUri.getPath.contains("/metadata/") || p.toUri.getPath.contains("/_delta_log/"))
+      count(p)
+
+  /** staged data: a writer's staging directory or data directory, or a
+    * data file */
+  private def staged(p: Path): Boolean = {
+    val s = p.toUri.getPath
+    s.contains("/.staging-") || s.contains("/data/") || s.endsWith(".parquet")
+  }
+
+  private def count(p: Path): Unit = {
+    val n = mutations.incrementAndGet()
+    if (n == failing) throw new IOException(s"injected fault at mutation $n: $p")
+  }
 
   /** map the scheme to this filesystem for both Hadoop client APIs */
   def register(conf: Configuration): Unit = {

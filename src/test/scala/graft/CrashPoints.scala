@@ -3,12 +3,13 @@ package graft
 import scala.util.control.NonFatal
 
 /** The crash-point fault loop both lakehouse formats run. An operation
-  * is crashed at each create and rename of its table log (the k-th,
-  * for every k up to a fault-free run's count; [[CountingFileSystem]])
-  * on a fresh copy of a base table. After each crash the table must
-  * read as the state before or after the operation, never a mix; an
-  * operation the crash undid must re-run to the after state; and a
-  * following one-row append must land. */
+  * is crashed at each create and rename of its table log and at each
+  * delete of log files or staged data (the k-th, for every k up to a
+  * fault-free run's count; [[CountingFileSystem]]) on a fresh copy of
+  * a base table. After each crash the table must read as the state
+  * before or after the operation, never a mix; an operation the crash
+  * undid must re-run to the after state; and a following one-row
+  * append must land. */
 trait CrashPoints { this: SparkSpec =>
 
   /** runs the loop for `op`, which takes `before` to `after`; `copyOfBase`
@@ -23,7 +24,7 @@ trait CrashPoints { this: SparkSpec =>
     op(clean)
     val n = CountingFileSystem.mutations.get()
     assert(state(clean) == after, s"$name without a fault")
-    assert(n >= minMutations, s"$name made $n metadata mutations")
+    assert(n >= minMutations, s"$name made $n mutations")
     (1 to n).foreach { k =>
       val d = copyOfBase()
       CountingFileSystem.failAt(k)
@@ -31,7 +32,7 @@ trait CrashPoints { this: SparkSpec =>
       finally CountingFileSystem.failAt(0)
       val got = state(d)
       assert(got == before || got == after,
-        s"$name with a fault at metadata mutation $k of $n reads a torn state: $got")
+        s"$name with a fault at mutation $k of $n reads a torn state: $got")
       if (got == before) {
         op(d)
         assert(state(d) == after, s"$name re-run after a fault at mutation $k of $n")

@@ -2,15 +2,18 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.sources.{DeltaScan, DeltaWrite}
 
 /** Delta commits are atomic under a crash at any `_delta_log` create or
-  * rename: the commit JSON's conditional publish, and the checkpoint
+  * rename — the commit JSON's conditional publish, and the checkpoint
   * parquet and `_last_checkpoint` writes of an auto-checkpoint, which
-  * run after the commit is durable. */
+  * run after the commit is durable — and at any delete of a log file
+  * or of staged data, including the clean-up of a refused merge. */
 class DeltaCrashPointSpec extends SparkSpec with CrashPoints {
   import spark.implicits._
 
@@ -18,6 +21,14 @@ class DeltaCrashPointSpec extends SparkSpec with CrashPoints {
 
   private def rows(ids: Seq[Long], v: String): DataFrame =
     ids.map(i => (i, v)).toDF("id", "v").coalesce(1)
+
+  /** the parquet files under a table, relative to it (the appended
+    * row of the crash loop aside, a refused operation adds none) */
+  private def dataFiles(dir: String): Set[String] = {
+    val root = Paths.get(dir.stripPrefix(s"${CountingFileSystem.Scheme}://"))
+    Files.walk(root).iterator().asScala.map(root.relativize(_).toString)
+      .filter(_.endsWith(".parquet")).filterNot(_.startsWith("_delta_log")).toSet
+  }
 
   private def state(dir: String): Map[Long, String] =
     DeltaScan.read(spark, dir).as[(Long, String)].collect().toMap
@@ -47,10 +58,18 @@ class DeltaCrashPointSpec extends SparkSpec with CrashPoints {
       ("merge", d => DeltaWrite.merge(spark, d,
         Seq((30L, "m"), (200L, "m")).toDF("id", "v"), Seq("id")),
         before + (30L -> "m") + (200L -> "m")),
-      ("compact", d => DeltaWrite.compact(spark, d, smallFileBytes = 1L << 30), before))
+      ("compact", d => DeltaWrite.compact(spark, d, smallFileBytes = 1L << 30), before),
+      // refused after its rewrite is staged: the staged files go, nothing commits
+      ("merge refused for duplicate keys", d => {
+        val e = intercept[IllegalArgumentException](DeltaWrite.merge(spark, d,
+          Seq((30L, "m"), (30L, "n"), (200L, "m")).toDF("id", "v"), Seq("id")))
+        assert(e.getMessage.contains("duplicate key tuples"), e.getMessage)
+      }, before))
     ops.foreach { case (name, op, after) =>
-      crashAtEveryMutation(name, copyOfBase, state, before, after, op, appendRow,
-        minMutations = 2)
+      val clean = crashAtEveryMutation(name, copyOfBase, state, before, after, op,
+        appendRow, minMutations = 2)
+      if (name.startsWith("merge refused")) assert(dataFiles(clean) == dataFiles(base + "/base"),
+        s"$name left staged files behind")
     }
   }
 

@@ -1,9 +1,6 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.ListenerBusAccess
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 import graft.sources.{DeltaScan, DeltaWrite}
 
@@ -14,17 +11,7 @@ import graft.sources.{DeltaScan, DeltaWrite}
 class DeltaJobCountSpec extends SparkSpec {
   import spark.implicits._
 
-  /** Spark jobs started while `body` runs */
-  private def jobsOf(body: => Unit): Int = {
-    val jobs = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    ListenerBusAccess.drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(l)
-    try { body; ListenerBusAccess.drain(spark.sparkContext); jobs.get }
-    finally spark.sparkContext.removeSparkListener(l)
-  }
+  private def jobsOf(body: => Unit): Int = ListenerBusAccess.jobsOf(spark.sparkContext)(body)
 
   private def tempTable(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString + "/t"

@@ -2009,7 +2009,6 @@ class DeltaScanSpec extends SparkSpec {
             d.resolve(f"_delta_log/$cpV%020d.checkpoint.${i + 1}%010d.${2}%010d.parquet"))
         }
         Files.delete(single)
-        Files.deleteIfExists(d.resolve("_delta_log/._last_checkpoint.crc"))
         Files.write(d.resolve("_delta_log/_last_checkpoint"),
           s"""{"version":$cpV,"size":${cp.size},"parts":2}""".getBytes(StandardCharsets.UTF_8))
       },

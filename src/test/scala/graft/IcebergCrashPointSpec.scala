@@ -3,12 +3,16 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.sources.{IcebergScan, IcebergWrite}
 
-/** Iceberg commits are atomic under a crash at any metadata I/O step.
+/** Iceberg commits are atomic under a crash at any metadata I/O step
+  * and at any delete of staged data, including the clean-up of a
+  * refused merge.
   * The version hint is a lower bound: a commit whose hint rewrite never
   * happened is still the table's current version, for readers and for
   * the next writer alike. */
@@ -20,6 +24,14 @@ class IcebergCrashPointSpec extends SparkSpec with CrashPoints {
   private def rows(ids: Seq[Long], v: String): DataFrame =
     ids.map(i => (i, v)).toDF("id", "v").coalesce(1)
 
+  /** the parquet files under a table, relative to it (the appended
+    * row of the crash loop aside, a refused operation adds none) */
+  private def dataFiles(dir: String): Set[String] = {
+    val root = Paths.get(dir.stripPrefix(s"${CountingFileSystem.Scheme}://"))
+    Files.walk(root).iterator().asScala.map(root.relativize(_).toString)
+      .filter(_.endsWith(".parquet")).filterNot(_.startsWith("_delta_log")).toSet
+  }
+
   private def state(dir: String): Map[Long, String] =
     IcebergScan.read(spark, dir).as[(Long, String)].collect().toMap
 
@@ -30,7 +42,6 @@ class IcebergCrashPointSpec extends SparkSpec with CrashPoints {
     // a crash between v2's conditional create and its hint rewrite
     val hint = Paths.get(dir, "metadata", "version-hint.text")
     Files.write(hint, "1".getBytes(StandardCharsets.UTF_8))
-    Files.deleteIfExists(Paths.get(dir, "metadata", ".version-hint.text.crc"))
     assert(IcebergScan.read(spark, dir).count() == 6L, "the read must see version 2")
     IcebergWrite.append(spark, rows(7L to 9L, "c"), dir)
     assert(state(dir).keySet == (1L to 9L).toSet)
@@ -60,11 +71,19 @@ class IcebergCrashPointSpec extends SparkSpec with CrashPoints {
       ("merge", d => IcebergWrite.merge(spark, d,
         Seq((30L, "m"), (200L, "m")).toDF("id", "v"), Seq("id")),
         before + (30L -> "m") + (200L -> "m")),
-      ("compact", d => IcebergWrite.compact(spark, d, smallFileBytes = 1L << 30), before))
+      ("compact", d => IcebergWrite.compact(spark, d, smallFileBytes = 1L << 30), before),
+      // refused after its rewrite is staged: the staged files go, nothing commits
+      ("merge refused for duplicate keys", d => {
+        val e = intercept[IllegalArgumentException](IcebergWrite.merge(spark, d,
+          Seq((30L, "m"), (30L, "n"), (200L, "m")).toDF("id", "v"), Seq("id")))
+        assert(e.getMessage.contains("duplicate key tuples"), e.getMessage)
+      }, before))
 
     ops.foreach { case (name, op, after) =>
-      crashAtEveryMutation(name, copyOfBase, state, before, after, op,
+      val clean = crashAtEveryMutation(name, copyOfBase, state, before, after, op,
         d => IcebergWrite.append(spark, rows(Seq(999L), "z"), d), minMutations = 4)
+      if (name.startsWith("merge refused")) assert(dataFiles(clean) == dataFiles(baseDir),
+        s"$name left staged files behind")
     }
   }
 }

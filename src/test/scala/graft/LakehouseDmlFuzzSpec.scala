@@ -1216,4 +1216,114 @@ class LakehouseDmlFuzzSpec extends SparkSpec {
           s"table ${got.size} rows diverged from model ${model.size}")
     }
   }
+
+  // ---- two interleaved writers ---------------------------------------
+
+  /** one format's DML surface for [[twoWriters]] */
+  private final case class Writer(name: String,
+      create: (org.apache.spark.sql.DataFrame, String) => Unit,
+      append: (org.apache.spark.sql.DataFrame, String) => Unit,
+      delete: (String, org.apache.spark.sql.Column) => Long,
+      update: (String, org.apache.spark.sql.Column) => Long,
+      merge: (String, org.apache.spark.sql.DataFrame) => (Long, Long),
+      read: String => Map[Long, (String, Long)],
+      /** commits in the table's history */
+      commits: String => Long)
+
+  /** Two writers on one table, each a thread running `steps` random
+    * DMLs through the shared session on its own id range. Their rows
+    * never share a file (no compaction runs), so a committed op's
+    * effect depends on its own writer's rows alone: the table must end
+    * as each writer's model after exactly the ops it committed, in the
+    * order it committed them, and the table's history must hold exactly
+    * one commit per committed op. An op that loses a race must surface
+    * the existing refusal, ConcurrentModificationException, and change
+    * nothing. */
+  private def twoWriters(w: Writer, seed: Long, steps: Int): Unit = {
+    val dir = java.nio.file.Files.createTempDirectory(s"graft_two_writers_${w.name}")
+      .toString + "/t"
+    def rowsOf(m: Seq[(Long, (String, Long))]) =
+      m.map { case (id, (t, sc)) => (id, t, sc) }.toDF("id", "tag", "score").coalesce(1)
+    val models = Array.tabulate(2)(k =>
+      (1L to 6L).map(i => (k * 1000000L + i) -> (s"t${i % 3}", i * 10L)).toMap)
+    w.create(rowsOf(models(0).toSeq), dir)
+    w.append(rowsOf(models(1).toSeq), dir)
+    val committed = new java.util.concurrent.atomic.AtomicInteger(2)
+    val refused = new java.util.concurrent.atomic.AtomicInteger(0)
+
+    def writer(k: Int): Unit = {
+      val rnd = new scala.util.Random(seed + k)
+      val lo = k * 1000000L
+      val inRange = col("id") >= lo && col("id") < lo + 1000000L
+      var next = lo + 100L
+      (1 to steps).foreach { step =>
+        val m = models(k)
+        val what = s"writer $k step $step"
+        // the op, and the model after it with whether it commits
+        val (op, after, commits): (() => Unit, Map[Long, (String, Long)], Boolean) =
+          rnd.nextInt(4) match {
+            case 0 =>
+              val rows = (1 to 1 + rnd.nextInt(3)).map { _ =>
+                next += 1; next -> (s"t${rnd.nextInt(3)}", rnd.nextInt(100).toLong) }
+              (() => w.append(rowsOf(rows), dir), m ++ rows, true)
+            case 1 =>
+              val tag = s"t${rnd.nextInt(3)}"
+              val gone = m.filter(_._2._1 == tag)
+              (() => assert(w.delete(dir, inRange && col("tag") === tag) == gone.size,
+                s"$what delete count"), m -- gone.keys, gone.nonEmpty)
+            case 2 =>
+              val k2 = 20L + rnd.nextInt(60)
+              val hits = m.filter(_._2._2 < k2)
+              (() => assert(w.update(dir, inRange && col("score") < k2) == hits.size,
+                s"$what update count"),
+                m ++ hits.map { case (id, (t, sc)) => id -> (t, sc + 1000L) }, hits.nonEmpty)
+            case 3 =>
+              val upd = m.keys.toSeq.sorted.filter(_ => rnd.nextBoolean()).take(2)
+                .map(id => id -> ("m", rnd.nextInt(100).toLong))
+              val ins = (1 to 1 + rnd.nextInt(2)).map { _ =>
+                next += 1; next -> ("m", rnd.nextInt(100).toLong) }
+              (() => assert(w.merge(dir, rowsOf(upd ++ ins)) == ((upd.size.toLong, ins.size.toLong)),
+                s"$what merge counts"), m ++ upd ++ ins, true)
+          }
+        try {
+          op()
+          models(k) = after
+          if (commits) committed.incrementAndGet()
+        } catch { case _: java.util.ConcurrentModificationException => refused.incrementAndGet() }
+      }
+    }
+
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      val done = (0 until 2).map(k => pool.submit(new Runnable { def run(): Unit = writer(k) }))
+      done.foreach(_.get(10, java.util.concurrent.TimeUnit.MINUTES))
+    } finally pool.shutdown()
+    val got = w.read(dir)
+    assert(got == models(0) ++ models(1),
+      s"${w.name}: the table diverged from the writers' models " +
+        s"(${committed.get} commits, ${refused.get} refused)")
+    assert(w.commits(dir) == committed.get,
+      s"${w.name}: ${w.commits(dir)} commits for ${committed.get} committed ops")
+  }
+
+  test("Delta: two interleaved writers each track their own model, every commit exactly once") {
+    twoWriters(Writer("delta",
+      (df, d) => DeltaWrite.create(spark, df, d), (df, d) => DeltaWrite.append(spark, df, d),
+      (d, c) => DeltaWrite.deleteWhere(spark, d, c),
+      (d, c) => DeltaWrite.updateWhere(spark, d, c, Seq("score" -> (col("score") + 1000L))),
+      (d, src) => DeltaWrite.merge(spark, d, src, Seq("id")),
+      readDeltaModel, d => DeltaScan.latestVersion(spark, d) + 1L), seed = 55201L, steps = 8)
+  }
+
+  test("Iceberg copy-on-write: two interleaved writers each track their own model, " +
+      "every commit exactly once") {
+    twoWriters(Writer("iceberg",
+      (df, d) => IcebergWrite.create(spark, df, d), (df, d) => IcebergWrite.append(spark, df, d),
+      (d, c) => IcebergWrite.deleteWhere(spark, d, c),
+      (d, c) => IcebergWrite.updateWhere(spark, d, c, Seq("score" -> (col("score") + 1000L))),
+      (d, src) => IcebergWrite.merge(spark, d, src, Seq("id")),
+      d => IcebergScan.read(spark, d).collect()
+        .map(r => r.getLong(0) -> (r.getString(1), r.getLong(2))).toMap,
+      d => IcebergScan.latestMetadataVersion(spark, d).toLong), seed = 55301L, steps = 8)
+  }
 }
