@@ -255,9 +255,10 @@ object Bench {
     (good.map { case (n, ts) => n -> ts.flatten.min }, bad.map(_._1))
   }
 
-  /** the metric line's scalar fields */
+  /** the metric line's scalar fields; `cpus` is the local[N] core
+    * count the run had */
   private[graft] final case class LineFields(total: Double, retries: Int, stalls: Long,
-      stallSec: Double, baseline16: Double, calSec: Double, sf: String)
+      stallSec: Double, baseline16: Double, calSec: Double, cpus: Int, sf: String)
 
   private def fmt(rs: Seq[(String, Double)], dp: Int): String =
     rs.map { case (k, v) =>
@@ -273,7 +274,7 @@ object Bench {
     val fd = if (failedDropped == 0) "" else s""","failed_dropped":$failedDropped"""
     val r = if (f.retries == 0) "" else s""","retries":${f.retries}"""
     val st = f""","stalls":${f.stalls},"stall_sec":${f.stallSec}%.1f"""
-    val b16 = f""","baseline16":${f.baseline16}%.3f,"cal_sec":${f.calSec}%.3f"""
+    val b16 = f""","baseline16":${f.baseline16}%.3f,"cal_sec":${f.calSec}%.3f,"cpus":${f.cpus}"""
     f"""{"metric":"headline_total","value":${f.total}%.3f,"unit":"sec","queries":${fmt(rs, dp)}$d,"failed":${names(failed)}$fd$r$st$b16,"sf":"${f.sf}"}"""
   }
 
@@ -434,7 +435,7 @@ object Bench {
     val calSec = math.min(calStart, Bench.calibrationKernel())
 
     val fields = LineFields(total, retries, countedStallCount, countedStallNanos / 1e9,
-      baseline16, calSec, sfDir)
+      baseline16, calSec, cpus.toInt, sfDir)
     try {
       val detail = new java.io.File("BENCH_DETAIL.json").getAbsoluteFile
       val w = new java.io.PrintWriter(detail, "UTF-8")

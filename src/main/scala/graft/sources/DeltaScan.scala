@@ -148,16 +148,9 @@ object DeltaScan {
           "by the built-in reader (unsupported: " +
           s"${feats.filterNot(supportedReaderFeatures).mkString(", ")})")
     }
-    val md = snap.metaData.getOrElse(throw new IllegalStateException(
-      s"Delta log at $tablePath has no metaData action"))
-    val conf = stringMap(md, "configuration")
-    val cmMode = conf.getOrElse("delta.columnMapping.mode", "none")
-    require(Set("none", "name", "id")(cmMode),
-      s"Delta column mapping mode '$cmMode' is not in the protocol (none/name/id)")
-    val schema = DataType.fromJson(md.get("schemaString").asText())
-      .asInstanceOf[StructType]
-    val partCols = opt(md, "partitionColumns")
-      .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Seq.empty)
+    val md = metaOf(tablePath, snap)
+    require(Set("none", "name", "id")(md.columnMapping),
+      s"Delta column mapping mode '${md.columnMapping}' is not in the protocol (none/name/id)")
     val files = snap.adds.map { case (rawPath, a) =>
       val dv = opt(a, "deletionVector").filter(d => opt(d, "storageType").nonEmpty)
         .map { d =>
@@ -169,14 +162,33 @@ object DeltaScan {
       LiveFile(new Path(tablePath, percentDecode(rawPath)).toString,
         stringMap(a, "partitionValues"), dv, opt(a, "stats").map(_.asText()))
     }
-    LiveState(schema, partCols, conf, cmMode != "none", files.toSeq)
+    LiveState(md.schema, md.partCols, md.config, md.mapped, files.toSeq)
   }
+
+  /** the latest schema, from the table-level actions of the snapshot */
+  private[graft] def tableSchema(spark: SparkSession, tablePath: String): StructType =
+    metaOf(tablePath, tableActions(spark, tablePath, TableKeys)).schema
+
+  /** the latest snapshot's `keys` actions, of an existing table */
+  private def tableActions(spark: SparkSession, tablePath: String,
+      keys: Set[String]): Snapshot = {
+    val log = logFiles(spark, tablePath)
+    require(log.exists, s"no Delta table at $tablePath")
+    snapshotAt(tablePath, log, None, keys)
+  }
+
+  private def metaOf(tablePath: String, snap: Snapshot): Meta =
+    snap.metaData.map(Meta).getOrElse(throw new IllegalStateException(
+      s"Delta log at $tablePath has no metaData action"))
 
   /** the scan's actions at `versionAsOf` (default: latest): the last
     * usable checkpoint plus the JSON commits after it up to the target */
   private[graft] def snapshotAt(spark: SparkSession, tablePath: String,
-      versionAsOf: Option[Long]): Snapshot = {
-    val log = logFiles(spark, tablePath)
+      versionAsOf: Option[Long]): Snapshot =
+    snapshotAt(tablePath, logFiles(spark, tablePath), versionAsOf, FileKeys)
+
+  private def snapshotAt(tablePath: String, log: LogFiles, versionAsOf: Option[Long],
+      keys: Set[String]): Snapshot = {
     val versions = log.jsonVersions
     // a checkpoint with a fully-truncated JSON tail is a legal table
     // state (everything up to the checkpoint version was vacuumed from
@@ -194,14 +206,14 @@ object DeltaScan {
     val tail = versions.filter(v => v > cpVersion && v <= target)
     require(checkpoint.nonEmpty || tail.contains(0L),
       s"Delta log at $tablePath is truncated before version 0 and no usable checkpoint exists")
-    snapshot(tablePath, log, checkpoint, tail, log.readCommit, FileKeys)
+    snapshot(tablePath, log, checkpoint, tail, log.readCommit, keys)
   }
 
   private def opt(n: JsonNode, f: String): Option[JsonNode] =
     Option(n.get(f)).filterNot(_.isNull)
 
   /** a string-to-string map field (null values kept as null) */
-  private def stringMap(n: JsonNode, f: String): Map[String, String] =
+  private[graft] def stringMap(n: JsonNode, f: String): Map[String, String] =
     opt(n, f).map(_.properties().asScala.map(e =>
       e.getKey -> (if (e.getValue.isNull) null else e.getValue.asText())).toMap)
       .getOrElse(Map.empty)
@@ -210,88 +222,128 @@ object DeltaScan {
   private[sources] val FileKeys = Set("add", "remove", "metaData", "protocol")
   private[sources] val TableKeys = Set("metaData", "protocol", "txn", "domainMetadata")
 
+  /** A metaData action, decoded once: the schema, the partition
+    * columns and the configuration (null values kept as null). */
+  private[sources] final case class Meta(node: JsonNode) {
+    lazy val schema: StructType =
+      DataType.fromJson(node.get("schemaString").asText()).asInstanceOf[StructType]
+    lazy val partCols: Seq[String] = opt(node, "partitionColumns")
+      .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Seq.empty)
+    lazy val config: Map[String, String] = stringMap(node, "configuration")
+    def columnMapping: String = config.getOrElse("delta.columnMapping.mode", "none")
+    def mapped: Boolean = columnMapping != "none"
+    def cdf: Boolean = config.get(DeltaWrite.CdfKey).contains("true")
+    def rowTracking: Boolean = config.get(DeltaWrite.EnableRowTrackingKey).contains("true")
+  }
+
+  /** A path's last file action: its version, whether it is an add, and
+    * the action itself (a remove keeps its `deletionTimestamp`). */
+  private[sources] final case class FileState(version: Long, live: Boolean, action: JsonNode)
+
   /** The table state one replay leaves: the newest protocol and
-    * metaData, per path its last add or remove (first-seen order), and
-    * the newest txn per app and domainMetadata per domain. */
-  private[graft] final class Snapshot {
+    * metaData, per raw path its last add or remove (first-seen order),
+    * and the newest txn per app and domainMetadata per domain. Built by
+    * [[snapshot]], which applies each action in log order. Live adds
+    * count against [[PlanningGuard]] as they accumulate, so an oversized
+    * table refuses before its file list exists, never by a driver OOM. */
+  private[graft] final class Snapshot private[sources] (tablePath: String, keys: Set[String]) {
     var protocol: Option[JsonNode] = None
     var metaData: Option[JsonNode] = None
-    /** raw path → (version, add node, or null for a remove) */
     private[sources] val files =
-      scala.collection.mutable.LinkedHashMap.empty[String, (Long, JsonNode)]
+      scala.collection.mutable.LinkedHashMap.empty[String, FileState]
     val txns = scala.collection.mutable.LinkedHashMap.empty[String, JsonNode]
     val domains = scala.collection.mutable.LinkedHashMap.empty[String, JsonNode]
+    private var live = 0L
+    private var planBytes = 0L
 
     /** the live add per raw path */
     def adds: Iterable[(String, JsonNode)] =
-      files.view.collect { case (p, (_, a)) if a != null => p -> a }
+      files.view.collect { case (p, f) if f.live => p -> f.action }
 
     /** domain → configuration of every domain not removed */
     def domainConfig: Map[String, String] = domains.collect {
       case (k, d) if !opt(d, "removed").exists(_.asBoolean(false)) =>
         k -> opt(d, "configuration").map(_.asText()).getOrElse("")
     }.toMap
-  }
 
-  /** THE log replay (PROTOCOL.md §Action Reconciliation), shared by the
-    * reader, the writer's table-level state and the checkpoint writer:
-    * checkpoint `cp`'s actions first, then each `tail` commit in
-    * order, keeping only the `keys` actions. Per path the last add or
-    * remove wins, except that an add beats a remove within one version
-    * (the DV re-add commit shape); protocol actions without
-    * `minReaderVersion` and metaData without `id` are skipped. Live adds
-    * count against [[PlanningGuard]] as they accumulate, so an oversized
-    * table refuses before its file list exists, never by a driver OOM. */
-  private[sources] def snapshot(tablePath: String, log: LogFiles,
-      cp: Option[(Long, Option[Int])], tail: Seq[Long],
-      commit: Long => Seq[JsonNode], keys: Set[String]): Snapshot = {
-    val s = new Snapshot
-    var live = 0L
-    var planBytes = 0L
-    def cost(path: String, add: JsonNode): Long =
+    /** a copy of this state with the `tail` commits applied after it */
+    private[sources] def extended(tail: Seq[Long], commit: Long => Seq[JsonNode]): Snapshot = {
+      val s = new Snapshot(tablePath, keys)
+      s.protocol = protocol
+      s.metaData = metaData
+      s.files ++= files
+      s.txns ++= txns
+      s.domains ++= domains
+      s.live = live
+      s.planBytes = planBytes
+      s.applyCommits(tail, commit)
+    }
+
+    private[sources] def applyCommits(tail: Seq[Long], commit: Long => Seq[JsonNode]): Snapshot = {
+      tail.foreach(v => commit(v).foreach(apply(v, _)))
+      this
+    }
+
+    private def cost(path: String, add: JsonNode): Long =
       96L + path.length + opt(add, "stats").fold(0L)(_.asText().length.toLong)
-    def path(a: JsonNode): Option[String] = opt(a, "path").map(_.asText())
-    def apply(v: Long, n: JsonNode): Unit =
+
+    private def path(a: JsonNode): Option[String] = opt(a, "path").map(_.asText())
+
+    /** Action `n` of version `v` (PROTOCOL.md §Action Reconciliation),
+      * kept only when its key is one of `keys`: per path the last add
+      * or remove wins, except that an add beats a remove within one
+      * version (the DV re-add commit shape); protocol actions without
+      * `minReaderVersion` and metaData without `id` are skipped. */
+    private[sources] def apply(v: Long, n: JsonNode): Unit =
       if (n.has("add")) {
         if (keys("add")) path(n.get("add")).foreach { p =>
-          val prev = s.files.get(p)
-          if (prev.forall(_._1 <= v)) {
-            prev.filter(_._2 != null) match {
-              case Some((_, old)) => planBytes -= cost(p, old)
+          val prev = files.get(p)
+          if (prev.forall(_.version <= v)) {
+            prev.filter(_.live) match {
+              case Some(old) => planBytes -= cost(p, old.action)
               case None => live += 1
             }
             planBytes += cost(p, n.get("add"))
             PlanningGuard.check(tablePath, live, planBytes)
-            s.files(p) = (v, n.get("add"))
+            files(p) = FileState(v, live = true, n.get("add"))
           }
         }
       } else if (n.has("remove")) {
         if (keys("remove")) path(n.get("remove")).foreach { p =>
-          val prev = s.files.get(p)
-          if (prev.forall(c => c._1 < v || (c._1 == v && c._2 == null))) {
-            prev.filter(_._2 != null).foreach { case (_, old) =>
-              live -= 1; planBytes -= cost(p, old)
+          val prev = files.get(p)
+          if (prev.forall(c => c.version < v || (c.version == v && !c.live))) {
+            prev.filter(_.live).foreach { old =>
+              live -= 1; planBytes -= cost(p, old.action)
             }
-            s.files(p) = (v, null)
+            files(p) = FileState(v, live = false, n.get("remove"))
           }
         }
       } else if (n.has("metaData")) {
         if (keys("metaData") && opt(n.get("metaData"), "id").nonEmpty)
-          s.metaData = Some(n.get("metaData"))
+          metaData = Some(n.get("metaData"))
       } else if (n.has("protocol")) {
         if (keys("protocol") && opt(n.get("protocol"), "minReaderVersion").nonEmpty)
-          s.protocol = Some(n.get("protocol"))
+          protocol = Some(n.get("protocol"))
       } else if (n.has("txn")) {
-        if (keys("txn")) opt(n.get("txn"), "appId").foreach(a => s.txns(a.asText()) = n.get("txn"))
+        if (keys("txn")) opt(n.get("txn"), "appId").foreach(a => txns(a.asText()) = n.get("txn"))
       } else if (n.has("domainMetadata")) {
         if (keys("domainMetadata")) opt(n.get("domainMetadata"), "domain")
-          .foreach(d => s.domains(d.asText()) = n.get("domainMetadata"))
+          .foreach(d => domains(d.asText()) = n.get("domainMetadata"))
       }
+  }
+
+  /** THE log replay, shared by the reader, the writer and the stream
+    * source: checkpoint `cp`'s actions first, then each `tail` commit in
+    * order, keeping only the `keys` actions ([[Snapshot]] gives the
+    * reconciliation rule). */
+  private[sources] def snapshot(tablePath: String, log: LogFiles,
+      cp: Option[(Long, Option[Int])], tail: Seq[Long],
+      commit: Long => Seq[JsonNode], keys: Set[String]): Snapshot = {
+    val s = new Snapshot(tablePath, keys)
     cp.foreach { case (v, parts) =>
-      DeltaCheckpoint.foreach(log.fs, log.logDir, log.checkpoint(v, parts), keys)(apply(v, _))
+      DeltaCheckpoint.foreach(log.fs, log.logDir, log.checkpoint(v, parts), keys)(s.apply(v, _))
     }
-    tail.foreach(v => commit(v).foreach(apply(v, _)))
-    s
+    s.applyCommits(tail, commit)
   }
 
   /** the back half of [[read]]: plan the scan over a reconstructed
@@ -520,10 +572,7 @@ object DeltaScan {
 
     val perVersion: Seq[DataFrame] = (fromVersion to toVersion).flatMap { v =>
       val nodes = log.readCommit(v)
-      def pvOf(n: com.fasterxml.jackson.databind.JsonNode): Map[String, String] =
-        Option(n.get("partitionValues")).map(_.properties().asScala.map(e =>
-          e.getKey -> (if (e.getValue.isNull) null else e.getValue.asText())).toMap)
-          .getOrElse(Map.empty)
+      def pvOf(n: JsonNode): Map[String, String] = stringMap(n, "partitionValues")
       val cdcs = nodes.filter(_.has("cdc")).map(_.get("cdc"))
         .map(c => (percentDecode(c.get("path").asText()), pvOf(c)))
       if (cdcs.nonEmpty) Some(readGroup(cdcs, withChangeType = true, v))
@@ -778,29 +827,31 @@ object DeltaScan {
     * `<v>.checkpoint.<i>.<n>.parquet` or `<v>.checkpoint.<uuid>.{parquet,json}` */
   private val CheckpointName = "(\\d{20})\\.checkpoint\\..+".r
 
-  /** `_delta_log` listed once — through the session's Hadoop conf */
-  private def logFiles(spark: SparkSession, tablePath: String): LogFiles = {
+  /** `_delta_log` (listed once, on first use) — through the session's
+    * Hadoop conf */
+  private[graft] def logFiles(spark: SparkSession, tablePath: String): LogFiles = {
     val logDir = new Path(tablePath, "_delta_log")
     new LogFiles(logDir.getFileSystem(spark.sessionState.newHadoopConf()), logDir)
   }
 
-  /** `_delta_log` as ONE listing: the commit versions, the checkpoint
-    * versions, `_last_checkpoint` (read once, on first use, and only
-    * when a checkpoint file is listed) and the checkpoint files of a
-    * version, all resolved from the same listing. */
-  private[sources] final class LogFiles(val fs: FileSystem, val logDir: Path) {
-    val exists: Boolean = fs.exists(logDir)
-    private val listed: Map[String, FileStatus] =
+  /** `_delta_log` as ONE listing, taken on first use: the commit
+    * versions, the checkpoint versions, `_last_checkpoint` (read once,
+    * on first use, and only when a checkpoint file is listed) and the
+    * checkpoint files of a version, all resolved from the same listing.
+    * Reading a commit by version needs no listing. */
+  private[graft] final class LogFiles(val fs: FileSystem, val logDir: Path) {
+    lazy val exists: Boolean = fs.exists(logDir)
+    private lazy val listed: Map[String, FileStatus] =
       if (!exists) Map.empty
       else fs.listStatus(logDir).iterator.map(st => st.getPath.getName -> st).toMap
 
     /** JSON commit versions present, ascending */
-    val jsonVersions: Seq[Long] = listed.keys.iterator
+    lazy val jsonVersions: Seq[Long] = listed.keys.iterator
       .collect { case n if n.matches("\\d{20}\\.json") => n.stripSuffix(".json").toLong }
       .toSeq.sorted
 
     /** versions with a checkpoint file (classic, multi-part or v2) */
-    val checkpointVersions: Seq[Long] = listed.keys.iterator
+    lazy val checkpointVersions: Seq[Long] = listed.keys.iterator
       .collect { case CheckpointName(v) => v.toLong }.toSeq.distinct.sorted
 
     /** `_last_checkpoint` → (version, parts); not read when no
@@ -830,7 +881,7 @@ object DeltaScan {
     /** The checkpoint files at `v`: multi-part (`parts` from
       * `_last_checkpoint`), the classic single file, or a v2 UUID-named
       * top file (`<v>.checkpoint.<uniqueStr>.{parquet,json}`). */
-    def checkpoint(v: Long, parts: Option[Int]): DeltaCheckpoint.Files = {
+    private[sources] def checkpoint(v: Long, parts: Option[Int]): DeltaCheckpoint.Files = {
       def file(name: String): FileStatus = listed.getOrElse(name,
         throw new IllegalStateException(
           s"_last_checkpoint names version $v but checkpoint part $name is missing from $logDir"))
@@ -860,14 +911,8 @@ object DeltaScan {
     * `removed` tombstone — checkpoint state first, JSON tail overrides
     * by domain ([[snapshot]] over the domain actions only). The
     * clustered-table surface ([[clusteringColumns]]) sits on top. */
-  def domainMetadata(spark: SparkSession, tablePath: String): Map[String, String] = {
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val log = new LogFiles(fs, new Path(fs.makeQualified(new Path(tablePath)), "_delta_log"))
-    require(log.exists, s"no Delta table at $tablePath")
-    val cpV = log.lastCheckpoint.fold(-1L)(_._1)
-    snapshot(tablePath, log, log.lastCheckpoint, log.jsonVersions.filter(_ > cpV),
-      log.readCommit, Set("domainMetadata")).domainConfig
-  }
+  def domainMetadata(spark: SparkSession, tablePath: String): Map[String, String] =
+    tableActions(spark, tablePath, Set("domainMetadata")).domainConfig
 
   /** the table's clustering columns (PHYSICAL names, top-level) from
     * the `delta.clustering` domain — empty when not a clustered table */

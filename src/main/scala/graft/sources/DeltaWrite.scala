@@ -2,14 +2,16 @@ package graft.sources
 
 import java.nio.charset.StandardCharsets
 
+import scala.collection.immutable.VectorMap
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
+import DeltaScan.Meta
 import LakeSupport.{footerRows, jstr, mapper, parMap, readFooter, MaxCommitRetries}
 
 /** Minimal dependency-free Delta Lake WRITER — the sink half of the
@@ -145,7 +147,7 @@ object DeltaWrite {
   }
 
   /** Append `df` as a new commit. Schema and partitioning are
-    * validated against the table's commit-0 `metaData` — a mismatched
+    * validated against the table's latest `metaData` — a mismatched
     * append would silently corrupt the table otherwise. Generated
     * partition columns are re-derived, never trusted. */
   def append(spark: SparkSession, df: DataFrame, tablePath: String,
@@ -289,7 +291,7 @@ object DeltaWrite {
     import org.apache.spark.sql.functions.{col, lit}
     val view = new LogView(spark, tablePath)
     require(view.exists, s"no Delta table at $tablePath — use create")
-    val md = view.jsonMetaOr(EvolveTruncated)
+    val md = view.metaOr("")
     val (df1, partitionBy1) = deriveGenerated(Some(md), df, partitionBy)
     require(md.partCols == partitionBy1,
       s"append partitioning $partitionBy1 does not match the table's ${md.partCols}")
@@ -320,8 +322,6 @@ object DeltaWrite {
       else Seq(metaDataJson(md.node, merged, partitionBy1, newConfig))
     commitData(view, aligned, partitionBy1, metaAction)
   }
-
-  private val EvolveTruncated = " — cannot evolve a checkpoint-truncated table"
 
   /** columns being ADDED take, on a COLUMN-MAPPED table, fresh ids and
     * fresh SYNTHETIC physical names — a reused human name could collide
@@ -356,7 +356,7 @@ object DeltaWrite {
     defaults.keys.foreach(k => require(cols.exists(_.name == k),
       s"default for '$k' names no added column"))
     val view = new LogView(spark, tablePath)
-    val md = view.jsonMetaOr(EvolveTruncated)
+    val md = view.metaOr("")
     val declared = md.schema
     cols.foreach(f => require(!declared.fieldNames.contains(f.name),
       s"column '${f.name}' already exists"))
@@ -429,7 +429,7 @@ object DeltaWrite {
       keys: Seq[String], txn: Option[(String, Long)] = None): (Long, Long) = {
     import org.apache.spark.sql.functions.col
     require(keys.nonEmpty, "merge needs at least one key column")
-    val declared = new LogView(spark, tablePath).jsonMetaOr(EvolveTruncated).schema
+    val declared = new LogView(spark, tablePath).metaOr("").schema
     keys.foreach { k =>
       require(source.columns.contains(k), s"merge key column '$k' is not in the source")
       require(declared.fieldNames.contains(k), s"merge key column '$k' is not in the table schema")
@@ -480,16 +480,16 @@ object DeltaWrite {
     val target = new LogView(spark, targetPath)
     require(!target.exists, s"Delta log already exists at $targetPath")
     val sourceRoot = view.root
-    val latestAdds = view.latestAdds
-    require(latestAdds.nonEmpty, s"no live files to clone at $sourcePath")
-    val md = view.jsonMetaOr(" — cannot clone").node
+    val liveAdds = view.liveAdds
+    require(liveAdds.nonEmpty, s"no live files to clone at $sourcePath")
+    val md = view.metaOr(" — cannot clone").node
     val proto = view.protocol
     val mdClone = md.deepCopy().asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
     mdClone.put("id", java.util.UUID.randomUUID().toString)
     mdClone.put("createdTime", System.currentTimeMillis())
     val protoLine = proto.map(p => s"""{"protocol":${p.toString}}""").getOrElse(
       """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""")
-    val adds = latestAdds.toSeq.sortBy(_._1).map { case (rel, add) =>
+    val adds = liveAdds.toSeq.sortBy(_._1).map { case (rel, add) =>
       require(add.get("deletionVector") == null || add.get("deletionVector").isNull,
         s"source file $rel carries a deletion vector — DV descriptors are " +
           "source-root-relative; compact the source first, then clone")
@@ -714,7 +714,7 @@ object DeltaWrite {
     * shallow clone's pointer into the source table) would stage into
     * the SOURCE tree. Refuse loudly. */
   private def requireNoAbsoluteAdds(view: LogView, op: String): Unit = {
-    val abs = view.replay().live.filter(isAbsolutePath)
+    val abs = view.live.filter(isAbsolutePath)
     require(abs.isEmpty,
       s"$op does not support tables with absolute-path adds (a shallow " +
         s"clone?): ${abs.take(3).mkString(", ")} — operate on the source " +
@@ -775,7 +775,7 @@ object DeltaWrite {
   private def alterMapped(spark: SparkSession, tablePath: String, op: String)(
       xform: (StructType, Seq[String]) => StructType): Unit = {
     val view = new LogView(spark, tablePath)
-    val md = view.jsonMetaOr(s" — cannot $op")
+    val md = view.metaOr(s" — cannot $op")
     val (declared, partCols, config) = (md.schema, md.partCols, md.config)
     val alreadyMapped = md.mapped
     val (mappedSchema, maxId) =
@@ -818,7 +818,6 @@ object DeltaWrite {
     val protoLine: Option[String] =
       if (alreadyMapped) scala.None
       else {
-        view.requireFullHistory()
         val proto = view.protocol
         val minReader = proto.flatMap(p => Option(p.get("minReaderVersion")))
           .map(_.asInt()).getOrElse(1)
@@ -844,7 +843,7 @@ object DeltaWrite {
       schema: StructType, partCols: Seq[String],
       config: Map[String, String]): String = {
     val cfg = config.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString(",")
+      .map { case (k, v) => s"${jstr(k)}:${Option(v).fold("null")(jstr)}" }.mkString(",")
     s"""{"metaData":{"id":${jstr(Option(prev.get("id")).map(_.asText())
         .getOrElse(java.util.UUID.randomUUID().toString))},""" +
       s""""format":{"provider":"parquet","options":{}},""" +
@@ -906,15 +905,14 @@ object DeltaWrite {
   def lastTxnVersion(spark: SparkSession, tablePath: String, appId: String): Option[Long] = {
     val view = new LogView(spark, tablePath)
     if (!view.exists) scala.None
-    else view.tableState.txns.get(appId).map(_.get("version").asLong())
+    else view.snapshot.txns.get(appId).map(_.get("version").asLong())
   }
 
   /** compare (names, types) and partition columns against the LATEST
     * metaData (an [[appendEvolve]]d table validates against the
-    * evolved schema, not commit 0's); skipped (documented) when the
-    * JSON tail carries no metaData — e.g. appending to a
-    * checkpoint-truncated table another writer created, where metaData
-    * lives only in the checkpoint parquet */
+    * evolved schema, not commit 0's), from the checkpoint when the
+    * JSON commits that declared it were cleaned up; skipped when the
+    * table has no metaData */
   private def validateAgainstMeta(meta: Option[Meta],
       df: DataFrame, partitionBy: Seq[String]): Unit = {
     meta.foreach { md =>
@@ -938,9 +936,10 @@ object DeltaWrite {
     *
     * The snapshot is computed by the same latest-action-per-path replay
     * the reader uses, from the previous checkpoint and the JSON commits
-    * after it — this minimal writer never truncates its own log;
-    * checkpointing a log with a gap in that tail fails loudly rather
-    * than guessing. Checkpoint rows carry the reader-required action fields (add with
+    * after it, so the JSON commits at or below a checkpoint may be
+    * deleted: every later operation but [[vacuum]] plans from the
+    * checkpoint. Checkpointing a log with a gap in that tail fails
+    * loudly rather than guessing. Checkpoint rows carry the reader-required action fields (add with
     * partitionValues/size/deletionVector, metaData, protocol); like the
     * commit step, this is driver-side METADATA work proportional to the
     * live-file count, not data size. */
@@ -968,18 +967,14 @@ object DeltaWrite {
     * checkpoints at constant cost and old JSON commits can be cleaned
     * up after each checkpoint without ever blocking the next one. The
     * tail must be gapless between the checkpoint and the head (loud
-    * otherwise). The rows come from the reader's replay
-    * ([[DeltaScan.snapshot]], the view's parsed commits reused) and are
-    * written on the driver ([[DeltaCheckpoint]]): no Spark job. */
+    * otherwise). The rows come from the view's snapshot
+    * ([[LogView.snapshotAt]]: the reader's replay, the view's parsed
+    * commits and snapshots reused) and are written on the driver
+    * ([[DeltaCheckpoint]]): no Spark job. */
   private def checkpointImpl(view: LogView, v2: Boolean): Unit = {
     val version = view.version
-    val prevCp = view.lastCheckpoint.filter(_._1 <= version)
-    val tail = (prevCp.fold(-1L)(_._1) + 1) to version
-    tail.foreach(v => require(view.present(v),
-      s"cannot checkpoint ${view.tablePath}: commit ${view.log.commitPath(v)} is missing " +
-        "(log truncated past the last checkpoint?)"))
-    val snap = DeltaScan.snapshot(view.tablePath, view.log, prevCp, tail, view.commit,
-      DeltaScan.FileKeys ++ DeltaScan.TableKeys)
+    val snap = view.snapshotAt(version,
+      refusal = ("checkpoint", "log truncated past the last checkpoint?"))
 
     // v2 needs the v2Checkpoint table feature: upgrade once (existing
     // features preserved; legacy minReader 2 maps to columnMapping),
@@ -1122,7 +1117,9 @@ object DeltaWrite {
     * versions stay time-travelable until [[vacuum]]), and the
     * re-added files must still exist on disk (loud if vacuum already
     * reclaimed them — a restore across a vacuum horizon is
-    * unrecoverable in Delta proper too). Returns
+    * unrecoverable in Delta proper too). Both states come from the
+    * snapshot at their version, so `toVersion` needs the checkpoint at
+    * or before it, or every JSON commit up to it. Returns
     * (filesReAdded, filesRemoved). */
   def restore(spark: SparkSession, tablePath: String, toVersion: Long): (Int, Int) = {
     val view = new LogView(spark, tablePath)
@@ -1134,8 +1131,9 @@ object DeltaWrite {
     require(toVersion >= 0 && toVersion <= cur,
       s"version $toVersion out of range 0..$cur for $tablePath")
     // each file live at toVersion, carried as its add there records it
-    val target = view.replay(toVersion).latest.collect { case (rel, Some(add), _, _) => rel -> add }.toMap
-    val now = view.replay(cur).live.toSet
+    val atTarget = view.snapshotAt(toVersion)
+    val target = liveAddsOf(atTarget)
+    val now = view.liveAdds.keySet
     val toAdd = (target.keySet -- now).toSeq.sorted
     val toRemove = (now -- target.keySet).toSeq.sorted
     if (toAdd.isEmpty && toRemove.isEmpty) return (0, 0)
@@ -1147,9 +1145,10 @@ object DeltaWrite {
     // RESTORE also restores the SCHEMA (delta-spark semantics): when
     // the metaData in force at toVersion differs from the current one
     // (appendEvolve in between), the restore commit re-declares it
-    val metaAction = (view.metaAt(toVersion).map(_.toString),
-        view.jsonMeta.map(_.node.toString)) match {
-      case (Some(old), Some(curMeta)) if old != curMeta => Seq(s"""{"metaData":$old}""")
+    def declared(m: Meta) = (m.schema, m.partCols, m.config)
+    val metaAction = (atTarget.metaData.map(Meta), view.meta) match {
+      case (Some(old), Some(curMeta)) if declared(old) != declared(curMeta) =>
+        Seq(s"""{"metaData":${old.node}}""")
       case _ => Seq.empty
     }
     commitLog(view, Some("RESTORE"), metaAction,
@@ -1183,9 +1182,7 @@ object DeltaWrite {
     requireNoDeletionVectors(view)
     requireNoAbsoluteAdds(view, "compact")
     val readV = view.version
-    val replayed = view.replay(readV)
-    val live = replayed.live
-    val small = live.filter { rel =>
+    val small = view.live.filter { rel =>
       fs.getFileStatus(new Path(root, rel)).getLen < smallFileBytes
     }
     // a group = one partition directory ("" for unpartitioned)
@@ -1210,14 +1207,14 @@ object DeltaWrite {
     // baseRowIds from the commit stamp, as the protocol requires —
     // the materialized values win on read.
     val rtConf = view.meta.map(_.config).getOrElse(Map.empty)
-    val rtOn = rowTrackingEnabledConf(rtConf)
+    val rtOn = view.meta.exists(_.rowTracking)
     // latest add's (baseRowId, defaultRowCommitVersion) per live file
     val rtState: Map[String, (Long, Long)] =
       if (!rtOn) Map.empty
-      else replayed.latest.collect {
-        case (rel, Some(add), v, _) if Option(add.get("baseRowId")).exists(!_.isNull) =>
-          rel -> ((add.get("baseRowId").asLong(),
-            Option(add.get("defaultRowCommitVersion")).map(_.asLong()).getOrElse(v)))
+      else view.snapshot.files.collect {
+        case (raw, f) if f.live && Option(f.action.get("baseRowId")).exists(!_.isNull) =>
+          DeltaScan.percentDecode(raw) -> ((f.action.get("baseRowId").asLong(),
+            Option(f.action.get("defaultRowCommitVersion")).map(_.asLong()).getOrElse(f.version)))
       }.toMap
     def materializeIds(src: DataFrame): DataFrame = {
       import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit}
@@ -1274,43 +1271,20 @@ object DeltaWrite {
 
   // ---- row-level DELETE / MERGE (copy-on-write) -----------------------
 
-  /** a metaData action, decoded once */
-  private final case class Meta(node: JsonNode) {
-    lazy val schema: StructType =
-      DataType.fromJson(node.get("schemaString").asText()).asInstanceOf[StructType]
-    lazy val partCols: Seq[String] = Option(node.get("partitionColumns"))
-      .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Seq.empty)
-    lazy val config: Map[String, String] = Option(node.get("configuration"))
-      .map(_.properties().asScala.map(e => e.getKey -> e.getValue.asText()).toMap)
-      .getOrElse(Map.empty)
-    def mapped: Boolean = config.getOrElse("delta.columnMapping.mode", "none") != "none"
-    def cdf: Boolean = config.get(CdfKey).contains("true")
-    def rowTracking: Boolean = rowTrackingEnabledConf(config)
-  }
-
-  /** full-history replay result: per decoded path its latest add
-    * (Some(node)) or remove (None) and that action's version, in
-    * first-seen order, plus every RAW path ever logged — vacuum's
-    * last-resort exclusion namespace: whatever an external writer's
-    * encoding convention was, the raw bytes it logged are in here */
-  private final case class Replay(
-      latest: Seq[(String, Option[ObjectNode], Long, Long)], raw: Set[String]) {
-    /** per path: (latest action is add?, version, remove deletionTimestamp) */
-    def actions: Seq[(String, Boolean, Long, Long)] =
-      latest.map { case (p, add, v, ts) => (p, add.isDefined, v, ts) }
-    def live: Seq[String] = latest.collect { case (p, Some(_), _, _) => p }
-  }
-
   /** One operation's view of a Delta table's log: `_delta_log` is
     * listed once and each commit JSON parsed at most once, on first
-    * use. It answers what an operation plans from — the latest
-    * metaData and protocol (JSON tail newest-first, then the
-    * checkpoint), the metadata domains and the full-history per-path
-    * replay. A view is built per operation and never kept across
-    * operations; a retrying commit [[advance]]s it. */
+    * use. It answers what an operation plans from — the table at a
+    * version ([[snapshotAt]]: the last checkpoint at or before it, then
+    * the JSON commits after it, through [[DeltaScan.snapshot]]), and
+    * from that the metaData, protocol, metadata domains and live files.
+    * A view is built per operation and never kept across operations; a
+    * retrying commit [[advance]]s it, and the advanced view reuses the
+    * parsed commits and the snapshots already built. */
   private final class LogView(val spark: SparkSession, val tablePath: String,
       parsed: scala.collection.mutable.Map[Long, Seq[JsonNode]] =
-        scala.collection.mutable.Map.empty[Long, Seq[JsonNode]]) {
+        scala.collection.mutable.Map.empty[Long, Seq[JsonNode]],
+      snaps: scala.collection.mutable.Map[Long, DeltaScan.Snapshot] =
+        scala.collection.mutable.Map.empty[Long, DeltaScan.Snapshot]) {
     val fs: FileSystem =
       new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val root: Path = fs.makeQualified(new Path(tablePath))
@@ -1323,12 +1297,10 @@ object DeltaWrite {
 
     /** this log re-listed: commits the view already parsed are reused
       * (a committed JSON is immutable), newer ones parse on first use */
-    def advance(): LogView = new LogView(spark, tablePath, parsed)
+    def advance(): LogView = new LogView(spark, tablePath, parsed, snaps)
 
     /** commit `v`'s action lines */
     def commit(v: Long): Seq[JsonNode] = parsed.getOrElseUpdate(v, log.readCommit(v))
-
-    def lastCheckpoint: Option[(Long, Option[Int])] = log.lastCheckpoint
 
     /** latest committed version ([[DeltaScan.latestVersion]]'s rule) */
     lazy val version: Long = {
@@ -1336,116 +1308,74 @@ object DeltaWrite {
       log.latestVersion
     }
 
-    /** newest `key` action among the JSON commits up to `upTo` */
-    private def newestInJson(key: String, upTo: Long = Long.MaxValue): Option[JsonNode] =
-      jsonVersions.reverseIterator.filter(_ <= upTo).flatMap { v =>
-        commit(v).filter(_.has(key)).map(_.get(key)).lastOption
-      }.nextOption()
-
-    /** the table-level actions — newest metaData and protocol, txn per
-      * app, domain per domain — of the checkpoint and the JSON commits
-      * after it ([[DeltaScan.snapshot]] without the file actions) */
-    lazy val tableState: DeltaScan.Snapshot = {
-      val cpV = lastCheckpoint.fold(-1L)(_._1)
-      DeltaScan.snapshot(tablePath, log, lastCheckpoint, jsonVersions.filter(_ > cpV),
-        commit, DeltaScan.TableKeys)
+    /** `vs`, each required present as a JSON commit; a missing one
+      * refuses as "cannot <op> …: commit … is missing (<why>)" */
+    private def gapless(vs: Seq[Long],
+        refusal: (String, String) = ("replay", "log truncated?")): Seq[Long] = {
+      vs.foreach(v => require(present(v), s"cannot ${refusal._1} $tablePath: commit " +
+        s"${log.commitPath(v)} is missing (${refusal._2})"))
+      vs
     }
 
-    /** LATEST metaData in the JSON log (newest commit wins —
-      * [[appendEvolve]] rewrites it, so commit 0 is only the initial
-      * value). None when the JSON tail carries none (a fully
-      * checkpoint-truncated log). */
-    lazy val jsonMeta: Option[Meta] = newestInJson("metaData").map(Meta)
+    /** The table at version `v`, with its file and table-level actions:
+      * a snapshot this view (or the one it advanced from) already built
+      * at an earlier version, extended by the commits after it, else the
+      * last checkpoint at or before `v` plus the JSON commits after it.
+      * Either way a gap in the commits it needs refuses loudly
+      * ([[gapless]]). */
+    def snapshotAt(v: Long, refusal: (String, String) = ("replay", "log truncated?"))
+        : DeltaScan.Snapshot = snaps.getOrElseUpdate(v,
+      snaps.keys.filter(_ < v).maxOption
+        .filter(u => (u + 1 to v).forall(present)) match {
+        case Some(u) => snaps(u).extended(u + 1 to v, commit)
+        case scala.None =>
+          val cp =
+            if (log.checkpointVersions.exists(_ <= v)) log.lastCheckpoint.filter(_._1 <= v)
+            else scala.None
+          DeltaScan.snapshot(tablePath, log, cp, gapless(cp.fold(0L)(_._1 + 1) to v, refusal),
+            commit, DeltaScan.FileKeys ++ DeltaScan.TableKeys)
+      })
 
-    /** [[jsonMeta]] with a CHECKPOINT fallback: when the JSON tail has
-      * been cleaned past the last metaData-carrying commit (a
-      * long-lived streaming sink after [[checkpoint]]-based cleanup),
-      * the metaData lives in the checkpoint. Without this, appends to a
-      * checkpoint-truncated COLUMN-MAPPED table would miss the mapping
-      * and write logical names into files whose readers expect
-      * physical names. */
-    lazy val meta: Option[Meta] = jsonMeta.orElse(tableState.metaData.map(Meta))
+    /** the table at the view's version */
+    lazy val snapshot: DeltaScan.Snapshot = snapshotAt(version)
 
-    /** latest protocol action — JSON tail newest-first, else the
-      * checkpoint */
-    lazy val protocol: Option[ObjectNode] =
-      newestInJson("protocol").orElse(tableState.protocol)
-        .map(_.asInstanceOf[ObjectNode])
+    /** Every commit 0..[[version]] replayed with no checkpoint: each
+      * path's last action, removes included — what [[vacuum]] needs,
+      * because checkpoints carry no remove tombstones. */
+    def history(): DeltaScan.Snapshot = DeltaScan.snapshot(tablePath, log, scala.None,
+      gapless(0L to version), commit, DeltaScan.FileKeys)
 
-    /** live metadata domains → configuration (the checkpoint's, then
-      * the JSON commits after it; [[DeltaScan.domainMetadata]]'s rule) */
-    lazy val domains: Map[String, String] = {
-      require(exists, s"no Delta table at $tablePath")
-      tableState.domainConfig
-    }
-
-    /** the metaData in force at version `v` (JSON commits only) */
-    def metaAt(v: Long): Option[JsonNode] = newestInJson("metaData", v)
-
-    def jsonMetaOr(why: String): Meta = jsonMeta.getOrElse(throw new IllegalStateException(
-      s"the JSON log of $tablePath carries no metaData$why"))
+    /** the latest metaData */
+    lazy val meta: Option[Meta] = snapshot.metaData.map(Meta)
 
     def metaOr(why: String): Meta = meta.getOrElse(throw new IllegalStateException(
       s"no metaData at $tablePath$why"))
 
-    /** the declared table (schema, partitioning, mapping) DML plans on */
-    def tableMeta: Meta = {
+    /** the latest protocol */
+    lazy val protocol: Option[ObjectNode] =
+      snapshot.protocol.map(_.asInstanceOf[ObjectNode])
+
+    /** live metadata domains → configuration */
+    lazy val domains: Map[String, String] = {
       require(exists, s"no Delta table at $tablePath")
-      jsonMetaOr("")
+      snapshot.domainConfig
     }
 
-    /** full-history replay through `upTo` (default: the latest
-      * version) — driver-side metadata work over this writer's own
-      * JSON log, which it never truncates (checkpoint() enforces) */
-    def replay(upTo: Long = version): Replay = {
-      val latest = scala.collection.mutable.LinkedHashMap
-        .empty[String, (Option[ObjectNode], Long, Long)]
-      val raw = Set.newBuilder[String]
-      (0L to upTo).foreach { v =>
-        require(present(v), s"cannot replay $tablePath: commit " +
-          s"${new Path(logDir, f"$v%020d.json")} is missing (log truncated?)")
-        commit(v).foreach { node =>
-          // spec-compliant external writers percent-encode action paths;
-          // decode to ON-DISK names (mirroring DeltaScan.read) so
-          // vacuum's tracked-set, compact's live-set, and existence
-          // checks all compare in the same namespace — an encoded live
-          // file must never look untracked (that deleted data)
-          if (node.has("add")) {
-            val add = node.get("add").asInstanceOf[ObjectNode]
-            val rp = add.get("path").asText()
-            raw += rp
-            latest(DeltaScan.percentDecode(rp)) = (Some(add), v, 0L)
-          } else if (node.has("remove")) {
-            val r = node.get("remove")
-            val rp = r.get("path").asText()
-            raw += rp
-            val ts = Option(r.get("deletionTimestamp")).map(_.asLong()).getOrElse(0L)
-            latest(DeltaScan.percentDecode(rp)) = (scala.None, v, ts)
-          }
-        }
-      }
-      Replay(latest.toSeq.map { case (p, (a, v, ts)) => (p, a, v, ts) }, raw.result())
-    }
+    /** the live files at the view's version: on-disk path → its add */
+    lazy val liveAdds: VectorMap[String, ObjectNode] = liveAddsOf(snapshot)
 
-    /** a checkpoint-truncated tail would yield a silently PARTIAL add
-      * view — deleting/DV-ing against it corrupts; fail loudly instead */
-    def requireFullHistory(): Unit =
-      require(jsonVersions.headOption.contains(0L) &&
-          jsonVersions == (0L to jsonVersions.lastOption.getOrElse(-1L)),
-        s"the JSON log of $tablePath is truncated (have ${jsonVersions.size} of " +
-          s"${jsonVersions.lastOption.map(_ + 1).getOrElse(0L)} commits) — " +
-          "row-level ops need the full JSON history")
-
-    /** LATEST add action (a mutable Jackson node) per live file, over
-      * the complete JSON history — the raw-JSON view the DV ops clone
-      * so re-adds keep stats/partitionValues/size byte-identical */
-    lazy val latestAdds: Map[String, ObjectNode] = {
-      requireFullHistory()
-      replay(jsonVersions.last).latest
-        .collect { case (p, Some(add), _, _) => p -> add }.toMap
-    }
+    /** the live files' on-disk paths, in log order */
+    def live: Seq[String] = liveAdds.keys.toSeq
   }
 
+  /** `s`'s live files by ON-DISK (percent-decoded, as [[DeltaScan.read]]
+    * decodes) path → its add action, in log order: spec-compliant
+    * writers percent-encode action paths, and the live set, existence
+    * checks and vacuum's tracked set must all compare in one namespace
+    * — an encoded live file must never look untracked */
+  private def liveAddsOf(s: DeltaScan.Snapshot): VectorMap[String, ObjectNode] =
+    VectorMap.from(s.adds.map { case (raw, add) =>
+      DeltaScan.percentDecode(raw) -> add.asInstanceOf[ObjectNode] })
 
   /** Live table rows plus a `__uri` column naming each row's data file
     * (its `_metadata.file_path`, scheme-stripped — [[relsByUri]] maps it
@@ -1545,9 +1475,12 @@ object DeltaWrite {
     * the live files for matching rows and tallies them per file in
     * its tasks (driver state bounded by FILE COUNT, never rows; the
     * tally is the returned count); pass 2 rewrites only the victim
-    * files. Time travel to pre-delete versions keeps working until
-    * [[vacuum]]. Scope: tables this writer maintains (no deletion
-    * vectors — guarded loudly — and no column mapping). */
+    * files. The live files come from the table's snapshot (the last
+    * checkpoint plus the JSON commits after it), so a log cleaned up to
+    * a checkpoint plans like a full one. Time travel to pre-delete
+    * versions keeps working until [[vacuum]]. Scope: tables this
+    * writer maintains (no deletion vectors — guarded loudly — and no
+    * column mapping). */
   def deleteWhere(spark: SparkSession, tablePath: String,
       cond: org.apache.spark.sql.Column): Long = {
     import org.apache.spark.sql.functions._
@@ -1556,10 +1489,10 @@ object DeltaWrite {
     requireNoDeletionVectors(view)
     requireNoAbsoluteAdds(view, "deleteWhere")
     requireNoRowTracking(view, "deleteWhere")
-    val md = view.tableMeta
+    val md = view.metaOr("")
     val (schema, partCols, mapped) = (md.schema, md.partCols, md.mapped)
     val readV = view.version
-    val live = view.replay(readV).live
+    val live = view.live
     if (live.isEmpty) return 0L
     val (victims, nDeleted) = victimPass(root, live,
       liveScan(spark, root, schema, partCols, live, mapped).filter(cond))
@@ -1609,7 +1542,7 @@ object DeltaWrite {
     requireNoDeletionVectors(view)
     requireNoAbsoluteAdds(view, "updateWhere")
     requireNoRowTracking(view, "updateWhere")
-    val md = view.tableMeta
+    val md = view.metaOr("")
     val (schema, partCols, mapped) = (md.schema, md.partCols, md.mapped)
     val setByName = assignments.toMap
     require(setByName.size == assignments.size, "duplicate SET column")
@@ -1622,7 +1555,7 @@ object DeltaWrite {
     refuseGeneratedAssignments(schema, setByName.keys, "updateWhere")
     refuseIdentity(schema, "updateWhere", setByName.keys)
     val readV = view.version
-    val live = view.replay(readV).live
+    val live = view.live
     if (live.isEmpty) return 0L
     val (victims, nUpdated) = victimPass(root, live,
       liveScan(spark, root, schema, partCols, live, mapped).filter(cond))
@@ -1704,21 +1637,21 @@ object DeltaWrite {
     val view = new LogView(spark, tablePath)
     val root = view.root
     refuseOnCdf(view, "deleteWhereDV")
-    val md = view.tableMeta
+    val md = view.metaOr("")
     val (schema, partCols, mapped) = (md.schema, md.partCols, md.mapped)
     val readV = view.version
-    val (latestAdds, proto) = (view.latestAdds, view.protocol)
-    if (latestAdds.isEmpty) return 0L
-    val live = latestAdds.keys.toSeq.sorted
+    val (liveAdds, proto) = (view.liveAdds, view.protocol)
+    if (liveAdds.isEmpty) return 0L
+    val live = liveAdds.keys.toSeq.sorted
 
-    val (oldDescByRel, oldPosDf) = dvState(spark, root.toString, latestAdds)
+    val (oldDescByRel, oldPosDf) = dvState(spark, root.toString, liveAdds)
     val victims = liveScan(spark, root, schema, partCols, live, mapped)
       .filter(cond)
       .select(col("__uri"), col("__pos"))
       .join(oldPosDf, Seq("__uri", "__pos"), "left_anti")
 
     val (dvAdds, nDeleted, victimFiles) =
-      stageDvReAdds(spark, root.toString, latestAdds, oldDescByRel, victims)
+      stageDvReAdds(spark, root.toString, liveAdds, oldDescByRel, victims)
     if (nDeleted == 0L) return 0L
     commitLog(view, Some("DELETE (DV)"), dvProtocolAction(proto), dvAdds,
       scope = Some(CommitScope("DELETE (DV)", readV, victimFiles,
@@ -1731,10 +1664,10 @@ object DeltaWrite {
     * (bounded per task by one file's cardinality), keyed like
     * [[liveScan]] */
   private def dvState(spark: SparkSession, rootStr: String,
-      latestAdds: Map[String, com.fasterxml.jackson.databind.node.ObjectNode])
+      liveAdds: Map[String, com.fasterxml.jackson.databind.node.ObjectNode])
       : (Map[String, DeletionVectors.Descriptor], DataFrame) = {
     val oldDescByRel: Map[String, DeletionVectors.Descriptor] =
-      latestAdds.flatMap { case (rel, add) =>
+      liveAdds.flatMap { case (rel, add) =>
         val dv = add.get("deletionVector")
         if (dv == null || dv.isNull) scala.None
         else Some(rel -> DeletionVectors.Descriptor(
@@ -1744,7 +1677,7 @@ object DeltaWrite {
       }
     val holder = new DeletionVectors.ConfHolder(spark.sparkContext.hadoopConfiguration)
     import spark.implicits._
-    val uriOf = relsByUri(new Path(rootStr), latestAdds.keys.toSeq).map(_.swap)
+    val uriOf = relsByUri(new Path(rootStr), liveAdds.keys.toSeq).map(_.swap)
     val oldPosDf =
       spark.sparkContext.parallelize(oldDescByRel.toSeq.map { case (rel, d) => (uriOf(rel), d) },
           math.max(1, oldDescByRel.size))
@@ -1760,7 +1693,7 @@ object DeltaWrite {
     * newly-dead row count, victim file set). Shared by the three DV
     * DMLs. */
   private def stageDvReAdds(spark: SparkSession, rootStr: String,
-      latestAdds: Map[String, com.fasterxml.jackson.databind.node.ObjectNode],
+      liveAdds: Map[String, com.fasterxml.jackson.databind.node.ObjectNode],
       oldDescByRel: Map[String, DeletionVectors.Descriptor],
       victims: DataFrame): (Seq[Carried], Long, Set[String]) = {
     import org.apache.spark.sql.functions._
@@ -1769,7 +1702,7 @@ object DeltaWrite {
     // written INSIDE the tasks, the driver collects only descriptors
     val perFile = victims.groupBy("__uri")
       .agg(sort_array(collect_list(col("__pos"))).as("__ps"))
-    val relOf = relsByUri(new Path(rootStr), latestAdds.keys.toSeq)
+    val relOf = relsByUri(new Path(rootStr), liveAdds.keys.toSeq)
     val oldB = spark.sparkContext.broadcast(relOf.flatMap { case (uri, rel) =>
       oldDescByRel.get(rel).map(uri -> _) })
     import spark.implicits._
@@ -1788,7 +1721,7 @@ object DeltaWrite {
       }.collect().toSeq // [lint:bounded] one row per VICTIM FILE, never per row
       .map(w => w.copy(_1 = relOf(w._1)))
     val adds = written.sortBy(_._1).map { case (rel, ref, off, size, card, _) =>
-      val node = latestAdds(rel).deepCopy()
+      val node = liveAdds(rel).deepCopy()
       node.set[com.fasterxml.jackson.databind.node.ObjectNode]("deletionVector",
         mapper.readTree(
           s"""{"storageType":"u","pathOrInlineDv":${jstr(ref)},"offset":$off,""" +
@@ -1831,7 +1764,7 @@ object DeltaWrite {
     val view = new LogView(spark, tablePath)
     val (fs, root) = (view.fs, view.root)
     refuseOnCdf(view, "updateWhereDV")
-    val md = view.tableMeta
+    val md = view.metaOr("")
     val (schema, partCols, mapped) = (md.schema, md.partCols, md.mapped)
     val setByName = assignments.toMap
     require(setByName.size == assignments.size, "duplicate SET column")
@@ -1844,17 +1777,17 @@ object DeltaWrite {
     refuseGeneratedAssignments(schema, setByName.keys, "updateWhereDV")
     refuseIdentity(schema, "updateWhereDV", setByName.keys)
     val readV = view.version
-    val (latestAdds, proto) = (view.latestAdds, view.protocol)
-    if (latestAdds.isEmpty) return 0L
-    val live = latestAdds.keys.toSeq.sorted
-    val (oldDescByRel, oldPosDf) = dvState(spark, root.toString, latestAdds)
+    val (liveAdds, proto) = (view.liveAdds, view.protocol)
+    if (liveAdds.isEmpty) return 0L
+    val live = liveAdds.keys.toSeq.sorted
+    val (oldDescByRel, oldPosDf) = dvState(spark, root.toString, liveAdds)
 
     val matched = liveScan(spark, root, schema, partCols, live, mapped)
       .filter(cond)
       .join(oldPosDf, Seq("__uri", "__pos"), "left_anti")
 
     val (dvAdds, nUpdated, victimFiles) = stageDvReAdds(spark, root.toString,
-      latestAdds, oldDescByRel, matched.select(col("__uri"), col("__pos")))
+      liveAdds, oldDescByRel, matched.select(col("__uri"), col("__pos")))
     if (nUpdated == 0L) return 0L
 
     val fire = coalesce(cond, lit(false))
@@ -1915,7 +1848,7 @@ object DeltaWrite {
     val view = new LogView(spark, tablePath)
     val root = view.root
     refuseOnCdf(view, "mergeDV")
-    val md = view.tableMeta
+    val md = view.metaOr("")
     val (schema, partCols, mapped) = (md.schema, md.partCols, md.mapped)
     refuseIdentity(schema, "mergeDV")
     // generated partition columns are derived ON the source (hidden-
@@ -1941,9 +1874,9 @@ object DeltaWrite {
       val srcK = src.select(keys.map(col): _*)
 
       val readV = view.version
-      val (latestAdds, proto) = (view.latestAdds, view.protocol)
-      val live = latestAdds.keys.toSeq.sorted
-      val (oldDescByRel, oldPosDf) = dvState(spark, root.toString, latestAdds)
+      val (liveAdds, proto) = (view.liveAdds, view.protocol)
+      val live = liveAdds.keys.toSeq.sorted
+      val (oldDescByRel, oldPosDf) = dvState(spark, root.toString, liveAdds)
 
       val matched =
         if (live.isEmpty) scala.None
@@ -1951,7 +1884,7 @@ object DeltaWrite {
           .join(oldPosDf, Seq("__uri", "__pos"), "left_anti")
           .join(srcK, keys, "left_semi"))
       val (dvAdds, updated, victimFiles) = matched match {
-        case Some(m) => stageDvReAdds(spark, root.toString, latestAdds,
+        case Some(m) => stageDvReAdds(spark, root.toString, liveAdds,
           oldDescByRel, m.select(col("__uri"), col("__pos")))
         case scala.None => (Seq.empty[Carried], 0L, Set.empty[String])
       }
@@ -1996,18 +1929,18 @@ object DeltaWrite {
     val (fs, root) = (view.fs, view.root)
     requireNoAbsoluteAdds(view, "purge")
     requireNoRowTracking(view, "purge")
-    val md = view.tableMeta
+    val md = view.metaOr("")
     val (schema, partCols, mapped) = (md.schema, md.partCols, md.mapped)
     val readV = view.version
-    val latestAdds = view.latestAdds
-    val dvAdds = latestAdds.filter { case (_, add) =>
+    val liveAdds = view.liveAdds
+    val dvAdds = liveAdds.filter { case (_, add) =>
       add.get("deletionVector") != null && !add.get("deletionVector").isNull }
     if (dvAdds.isEmpty) return (0, 0L)
     val victims = dvAdds.keys.toSeq.sorted
     val dropped = dvAdds.values
       .map(_.get("deletionVector").get("cardinality").asLong()).sum
 
-    val (_, oldPosDf) = dvState(spark, root.toString, latestAdds)
+    val (_, oldPosDf) = dvState(spark, root.toString, liveAdds)
     val dataCols = schema.fieldNames.filterNot(partCols.contains)
     val added = victims.groupBy(r => r.split('/').dropRight(1).mkString("/"))
       .toSeq.sortBy(_._1).flatMap { case (partDir, rels) =>
@@ -2072,7 +2005,7 @@ object DeltaWrite {
     requireNoDeletionVectors(view)
     requireNoAbsoluteAdds(view, "merge")
     requireNoRowTracking(view, "merge")
-    val md = view.tableMeta
+    val md = view.metaOr("")
     val (schema, partCols, mapped) = (md.schema, md.partCols, md.mapped)
     refuseIdentity(schema, "merge")
     // generated partition columns are derived ON the source (hidden-
@@ -2109,7 +2042,7 @@ object DeltaWrite {
       val allK = tombK0.fold(srcData0.select(keys.map(col): _*))(t =>
         srcData0.select(keys.map(col): _*).unionByName(t))
       val readV = view.version
-      val live = view.replay(readV).live
+      val live = view.live
       // pass 1: the files holding a row some source key (upsert or
       // tombstone) names — matched rows live only in them
       val (victims, matched) =
@@ -2227,15 +2160,15 @@ object DeltaWrite {
     requireNoAbsoluteAdds(view, "zorder")
     requireNoRowTracking(view, "zorder")
     val readV = view.version
-    val live = view.replay(readV).live
+    val live = view.live
     require(live.nonEmpty, s"no live data files to z-order at $tablePath")
     val groups = live.groupBy(rel => rel.split('/').dropRight(1).mkString("/"))
 
     import org.apache.spark.sql.functions._
     // the raw read below sees PHYSICAL column names — translate the
     // caller's logical dims on a mapped table
-    val physDims = if (!view.jsonMeta.exists(_.mapped)) dims else {
-      val sch = view.tableMeta.schema
+    val physDims = if (!view.meta.exists(_.mapped)) dims else {
+      val sch = view.metaOr("").schema
       dims.map { d =>
         sch.fields.find(_.name == d).map(DeltaScan.physicalName)
           .getOrElse(d) // unknown dims keep their name for the loud check below
@@ -2292,7 +2225,7 @@ object DeltaWrite {
     * Superseded/historic DV adds are harmless — which is what lets
     * [[purge]] re-enable the copy-on-write ops on a DV table. */
   private def requireNoDeletionVectors(view: LogView): Unit = {
-    val dvFiles = view.latestAdds.collect { case (rel, add)
+    val dvFiles = view.liveAdds.collect { case (rel, add)
         if add.get("deletionVector") != null && !add.get("deletionVector").isNull => rel }
     require(dvFiles.isEmpty,
       s"table ${view.tablePath} carries LIVE deletion vectors on ${dvFiles.size} " +
@@ -2313,7 +2246,10 @@ object DeltaWrite {
     * convention protecting in-flight readers and recent time travel).
     * Files still referenced by the CURRENT snapshot are never
     * touched; time travel to versions that referenced the deleted
-    * files stops working, exactly as in Delta proper. Returns the
+    * files stops working, exactly as in Delta proper. It replays every
+    * JSON commit from version 0 ([[LogView.history]]): checkpoints carry
+    * no remove tombstones, so a log cleaned up to a checkpoint refuses
+    * loudly rather than miss a removed file. Returns the
     * relative paths deleted (or that WOULD be deleted with
     * `dryRun=true`). */
   def vacuum(spark: SparkSession, tablePath: String,
@@ -2322,10 +2258,15 @@ object DeltaWrite {
     val view = new LogView(spark, tablePath)
     val (fs, root) = (view.fs, view.root)
     val cutoff = System.currentTimeMillis() - retainMs
-    val replayed = view.replay()
-    val (acts, rawLogged) = (replayed.actions, replayed.raw)
-    val removed = acts
-      .collect { case (p, false, _, ts) if ts <= cutoff => p }
+    // every path ever logged (raw) → its last action, and the live
+    // adds, by on-disk path
+    val history = view.history()
+    val rawLogged = history.files.keySet
+    val liveAdds = liveAddsOf(history)
+    val removed = history.files.toSeq
+      .collect { case (raw, f) if !f.live &&
+          Option(f.action.get("deletionTimestamp")).fold(0L)(_.asLong()) <= cutoff =>
+        DeltaScan.percentDecode(raw) }
       .filter(rel => fs.exists(new Path(root, rel)))
     // UNTRACKED files (no log action references them at all) are
     // protocol vacuum targets too — that is where a lost
@@ -2339,7 +2280,7 @@ object DeltaWrite {
     // leaves '+' raw; pre-fix graft logged raw hive escapes), and an
     // encoding mismatch must degrade to unreclaimed space, never to
     // deleting a live data file.
-    val trackedSet = acts.map(_._1).toSet
+    val trackedSet = rawLogged.map(DeltaScan.percentDecode)
     val orphans = listDataFiles(fs, root).collect {
       case (rel, _)
           if !trackedSet.contains(rel) && !rawLogged.contains(rel) &&
@@ -2350,7 +2291,7 @@ object DeltaWrite {
     // belt-and-suspenders: whatever classified a path as doomed, a name
     // the CURRENT snapshot references is never deleted — a residual
     // encoding mismatch must degrade to unreclaimed space, not data loss
-    val liveSet = acts.collect { case (p, true, _, _) => p }.toSet
+    val liveSet = liveAdds.keySet
     // a path OUTSIDE the table root (absolute adds — a shallow clone's
     // pointers into its source) is never deleted: dropping or vacuuming
     // a clone must not damage the source table
@@ -2377,7 +2318,7 @@ object DeltaWrite {
     val dvDoomed: Seq[String] =
       if (!fs.exists(root)) Seq.empty
       else {
-        val liveDv: Set[String] = view.latestAdds.values.flatMap { add =>
+        val liveDv: Set[String] = liveAdds.values.flatMap { add =>
             val dv = add.get("deletionVector")
             if (dv == null || dv.isNull) scala.None
             else if (dv.get("storageType").asText() != "u") scala.None
@@ -2777,9 +2718,6 @@ object DeltaWrite {
   private[sources] val MatRowCommitKey =
     "delta.rowTracking.materializedRowCommitVersionColumnName"
 
-  private def rowTrackingEnabledConf(conf: Map[String, String]): Boolean =
-    conf.get(EnableRowTrackingKey).contains("true")
-
   private def requireNoRowTracking(view: LogView, op: String): Unit =
     require(!view.meta.exists(_.rowTracking),
       s"$op would silently re-identify rows of the row-tracked table " +
@@ -2823,8 +2761,7 @@ object DeltaWrite {
     // backfill: re-add every live file as the log records it; the
     // commit's stamp (its own metaData declares the property) assigns
     // each a baseRowId and appends the high-watermark
-    val backfill = view.replay().latest
-      .collect { case (rel, Some(add), _, _) => (rel, Carried(add)) }.sortBy(_._1).map(_._2)
+    val backfill = view.liveAdds.toSeq.sortBy(_._1).map(a => Carried(a._2))
     commitLog(view, Some("ENABLE ROW TRACKING"), protoActions :+ metaAction, backfill,
       dataChange = false)
   }
@@ -2882,19 +2819,18 @@ object DeltaWrite {
     import org.apache.spark.sql.functions._
     val view = new LogView(spark, tablePath)
     val root = view.root
-    val conf = view.metaOr("").config
-    require(rowTrackingEnabledConf(conf),
+    val md = view.metaOr("")
+    require(md.rowTracking,
       s"row tracking is not enabled on $tablePath — enableRowTracking first")
-    val md = view.tableMeta
-    val (schema, partCols, mapped) = (md.schema, md.partCols, md.mapped)
-    val latestAdds = view.latestAdds
+    val (conf, schema, partCols, mapped) = (md.config, md.schema, md.partCols, md.mapped)
+    val liveAdds = view.liveAdds
     val outFields = schema.fieldNames.toSeq ++ Seq("_row_id", "_row_commit_version")
-    if (latestAdds.isEmpty)
+    if (liveAdds.isEmpty)
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         StructType(schema.fields.toSeq ++ Seq(
           StructField("_row_id", LongType), StructField("_row_commit_version", LongType))))
-    val base = latestAdds.toSeq.map { case (rel, add) =>
+    val base = liveAdds.toSeq.map { case (rel, add) =>
       val b = Option(add.get("baseRowId")).filterNot(_.isNull).map(_.asLong())
         .getOrElse(throw new IllegalStateException(
           s"live file $rel of $tablePath carries no baseRowId — a foreign " +
@@ -2906,14 +2842,14 @@ object DeltaWrite {
     }
     val matId = conf(MatRowIdKey)
     val matCv = conf(MatRowCommitKey)
-    val live = latestAdds.keys.toSeq.sorted
+    val live = liveAdds.keys.toSeq.sorted
     val scan = liveScan(spark, root, schema, partCols, live, mapped,
       extraLongCols = Seq(matId, matCv))
     val uriOf = relsByUri(root, live).map(_.swap)
     val baseDf = broadcast(spark.createDataFrame(base.map { case (rel, b, cv) =>
         (uriOf(rel), b, cv) })
       .toDF("__uri", "__base", "__dcv"))
-    val (_, dvPosDf) = dvState(spark, root.toString, latestAdds)
+    val (_, dvPosDf) = dvState(spark, root.toString, liveAdds)
     scan
       .join(baseDf, Seq("__uri"))
       .join(dvPosDf, Seq("__uri", "__pos"), "left_anti")

@@ -2,8 +2,6 @@ package graft.streaming
 
 import java.util.{Map => JMap}
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetReader
 import org.apache.parquet.hadoop.example.GroupReadSupport
@@ -64,7 +62,7 @@ import graft.sources.{DeletionVectors, DeltaScan}
   * pinned at query start and drained in capped batches. */
 class DeltaStreamProvider extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val base = DeltaStreamSource.tableSchema(DeltaStreamSource.pathOf(options))._1
+    val base = DeltaScan.tableSchema(SparkSession.active, DeltaStreamSource.pathOf(options))
     if (DeltaStreamSource.cdfOf(options)) DeltaStreamSource.cdfSchema(base)
     else base
   }
@@ -133,28 +131,21 @@ private[streaming] class DeltaMicroBatchStream(
           e: JMap.Entry[Long, IndexedSeq[DeltaAddFile]]): Boolean = size() > 64
     }
 
+  /** the table's log, read by version only (never listed here) */
+  private lazy val log = DeltaScan.logFiles(spark, path)
+
   private def addsOf(v: Long): IndexedSeq[DeltaAddFile] = addsMemo.synchronized {
     val hit = addsMemo.get(v)
     if (hit != null) return hit
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(path).getFileSystem(conf)
-    val root = fs.makeQualified(new Path(path))
-    val p = new Path(root, f"_delta_log/$v%020d.json")
-    require(fs.exists(p),
-      s"streaming source lost commit $v of $path (log truncated?)")
-    val in = fs.open(p)
-    val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-      finally in.close()
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val nodes = lines.map(mapper.readTree)
-    def pvOf(n: com.fasterxml.jackson.databind.JsonNode): Map[String, String] =
-      Option(n.get("partitionValues")).map(_.fields().asScala.map(e =>
-        e.getKey -> (if (e.getValue.isNull) null else e.getValue.asText())).toMap)
-        .getOrElse(Map.empty)
+    val root = log.fs.makeQualified(new Path(path))
+    val read =
+      try Some(log.readCommit(v)) catch { case _: java.io.FileNotFoundException => None }
+    require(read.nonEmpty, s"streaming source lost commit $v of $path (log truncated?)")
+    val nodes = read.get
     def fileOf(n: com.fasterxml.jackson.databind.JsonNode,
         isCdc: Boolean): DeltaAddFile = {
-      val decoded = graft.sources.DeltaScan.percentDecode(n.get("path").asText())
-      DeltaAddFile(new Path(root, decoded).toString, pvOf(n),
+      val decoded = DeltaScan.percentDecode(n.get("path").asText())
+      DeltaAddFile(new Path(root, decoded).toString, DeltaScan.stringMap(n, "partitionValues"),
         Option(n.get("size")).map(_.asLong()).getOrElse(0L), isCdc)
     }
     // CDF MODE (readChangeFeed): same per-version file rule as the
@@ -384,31 +375,6 @@ private[streaming] object DeltaStreamSource {
     StructType(base.fields ++ Seq(
       StructField("_change_type", StringType),
       StructField("_commit_version", LongType)))
-
-  /** (schema, partition columns) from the latest metaData in the log */
-  def tableSchema(path: String): (StructType, Seq[String]) = {
-    val spark = SparkSession.active
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val logDir = new Path(path, "_delta_log")
-    require(fs.exists(logDir), s"no Delta table at $path")
-    val versions = fs.listStatus(logDir).toSeq.map(_.getPath.getName)
-      .collect { case n if n.matches("\\d{20}\\.json") => n.stripSuffix(".json").toLong }
-      .sorted.reverse
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val md = versions.iterator.flatMap { v =>
-      val in = fs.open(new Path(logDir, f"$v%020d.json"))
-      val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toSeq
-        finally in.close()
-      lines.map(mapper.readTree).filter(_.has("metaData")).map(_.get("metaData"))
-        .lastOption
-    }.nextOption().getOrElse(throw new IllegalStateException(
-      s"the JSON log of $path carries no metaData"))
-    val schema = DataType.fromJson(md.get("schemaString").asText())
-      .asInstanceOf[StructType]
-    val partCols = Option(md.get("partitionColumns"))
-      .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Seq.empty)
-    (schema, partCols)
-  }
 
   /** one parquet-mr Group + the hive partition values → InternalRow in
     * schema order; executors only, no Spark scan machinery.

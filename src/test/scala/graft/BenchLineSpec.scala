@@ -6,11 +6,12 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** `graft.Bench`'s metric line reports a query that throws in an
   * explicit `failed` list: it has no time, adds nothing to the total,
-  * and the line still fits the stdout tail. */
+  * and the line, which names the core count the run had, still fits
+  * the stdout tail. */
 class BenchLineSpec extends AnyFunSuite {
 
   private val fields = Bench.LineFields(total = 0.0, retries = 0, stalls = 0L,
-    stallSec = 0.0, baseline16 = 0.0, calSec = 1.0, sf = "/data/sf0.1")
+    stallSec = 0.0, baseline16 = 0.0, calSec = 1.0, cpus = 32, sf = "/data/sf0.1")
 
   private def parse(line: String) =
     new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
@@ -45,6 +46,7 @@ class BenchLineSpec extends AnyFunSuite {
     val full = Bench.metricLine(fields, results, failed, Bench.maxLine)
     assert(full.length <= Bench.maxLine)
     val json = parse(full)
+    assert(json.get("cpus").asInt() == 32, full)
     assert(json.get("dropped").asInt() + json.get("queries").size == 300)
     assert(json.get("failed").size + json.get("failed_dropped").asInt() == 100)
     // timings drop before any failed name does

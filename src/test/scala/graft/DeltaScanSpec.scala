@@ -1395,6 +1395,16 @@ class DeltaScanSpec extends SparkSpec {
     assert(all() == Set((1L, "10:00"), (20L, "90%"), (3L, "moved"), (6L, "10:00")))
   }
 
+  test("a null configuration value stays null when the writer re-declares the metaData") {
+    import graft.sources.DeltaWrite
+    val dir = freshDir("graft_delta_nullconf")
+    val s0 = writeDataFile(Seq((1L, "a")).toDF("id", "v"), dir, "f0.parquet")
+    writeCommit(dir, 0, Seq(protoAction, metaAction(conf = """{"x":null}"""),
+      addAction("f0.parquet", s0)))
+    DeltaWrite.setProperties(spark, dir.toString, Map("y" -> "1"))
+    assert(DeltaScan.liveState(spark, dir.toString).conf == Map("x" -> null, "y" -> "1"))
+  }
+
   test("vacuum never deletes a live file whose log path is percent-encoded") {
     import graft.sources.{DeltaScan, DeltaWrite}
     // spec-compliant EXTERNAL writer: on-disk name has a space, the

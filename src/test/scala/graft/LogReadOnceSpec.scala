@@ -15,7 +15,8 @@ import graft.sources.{DeltaScan, DeltaWrite}
   * stats). A read of a checkpointed table opens `_last_checkpoint`,
   * each checkpoint file and each later commit once, and an
   * auto-checkpointing commit opens no log file, `_last_checkpoint`
-  * included, twice. */
+  * included, twice. On a checkpointed table a DML plans from the
+  * checkpoint: it opens no commit JSON the checkpoint covers. */
 class LogReadOnceSpec extends SparkSpec {
   import spark.implicits._
 
@@ -137,6 +138,43 @@ class LogReadOnceSpec extends SparkSpec {
       assert(expected.exists(_.contains(".checkpoint.")) && expected.size >= 4, expected)
       assert(opens == expected.map(_ -> 1).toMap,
         s"${if (v2) "v2" else "classic"}: the read must open exactly $expected once: $opens")
+    }
+  }
+
+  test("deleteWhere and merge on a checkpointed table open no commit JSON at or below " +
+      "the checkpoint and each log file at most once") {
+    Seq(false, true).foreach { v2 =>
+      val base = CountingFileSystem.tempDir("graft_logonce_cpdml")
+      val baseDir = base + "/base"
+      DeltaWrite.create(spark, (0L until 10L).map(i => (i, s"v$i")).toDF("id", "v"), baseDir)
+      (1L to 3L).foreach { b =>
+        DeltaWrite.append(spark,
+          (0L until 10L).map(i => (b * 10L + i, s"v$b")).toDF("id", "v"), baseDir)
+      }
+      if (v2) DeltaWrite.checkpointV2(spark, baseDir) else DeltaWrite.checkpoint(spark, baseDir)
+      val cpV = DeltaScan.latestVersion(spark, baseDir)
+      (4L to 5L).foreach { b =>
+        DeltaWrite.append(spark, Seq((b * 10L, s"v$b")).toDF("id", "v"), baseDir)
+      }
+      val copyOfBase = CountingFileSystem.copies(base)
+      val ops: Seq[(String, String => Long)] = Seq(
+        "deleteWhere" -> (d => DeltaWrite.deleteWhere(spark, d, col("id") < 3)),
+        "merge" -> (d => DeltaWrite.merge(spark, d,
+          Seq((11L, "m"), (200L, "m")).toDF("id", "v"), Seq("id"))._1))
+      ops.foreach { case (name, op) =>
+        val d = copyOfBase()
+        val local = d.stripPrefix(s"${CountingFileSystem.Scheme}://")
+        CountingFileSystem.opened.clear()
+        assert(op(d) > 0L)
+        val opens = logOpens(local)
+        val layout = if (v2) "v2" else "classic"
+        val early = opens.keys.filter(n =>
+          n.matches("\\d{20}\\.json") && n.stripSuffix(".json").toLong <= cpV)
+        assert(early.isEmpty, s"$layout $name read commits the checkpoint covers: $early")
+        assert(opens.exists(_._1.startsWith(f"$cpV%020d.checkpoint.")),
+          s"$layout $name planned from the checkpoint: $opens")
+        assert(opens.values.forall(_ == 1), s"$layout $name opened a log file twice: $opens")
+      }
     }
   }
 

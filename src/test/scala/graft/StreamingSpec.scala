@@ -1704,6 +1704,40 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("DeltaStreamProvider starts on a table whose JSON log was cleaned up to a checkpoint") {
+    import graft.sources.{DeltaScan, DeltaWrite}
+    val dir = java.nio.file.Files.createTempDirectory("graft_dstream_trunc").toString + "/t"
+    val ck = java.nio.file.Files.createTempDirectory("graft_dstream_trunc_ck").toString
+    DeltaWrite.create(spark, Seq((1L, "a"), (2L, "b")).toDF("id", "v"), dir)
+    DeltaWrite.append(spark, Seq((3L, "c")).toDF("id", "v"), dir)
+    DeltaWrite.checkpoint(spark, dir)
+    // clean the whole JSON tail: the schema lives only in the checkpoint
+    val cpV = DeltaScan.latestVersion(spark, dir)
+    (0L to cpV).foreach { v =>
+      assert(new java.io.File(s"$dir/_delta_log", f"$v%020d.json").delete())
+    }
+    val delivered = scala.collection.mutable.ListBuffer[(Long, String)]()
+    val q = spark.readStream
+      .format(classOf[graft.streaming.DeltaStreamProvider].getName)
+      .option("startingVersion", (cpV + 1).toString)
+      .load(dir)
+      .writeStream.option("checkpointLocation", ck)
+      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+        val got = b.collect().map(r => (r.getLong(0), r.getString(1)))
+        delivered.synchronized { delivered ++= got }
+        ()
+      }.start()
+    try {
+      q.processAllAvailable()
+      assert(delivered.synchronized(delivered.isEmpty))
+      DeltaWrite.append(spark, Seq((4L, "d")).toDF("id", "v"), dir)
+      DeltaWrite.append(spark, Seq((5L, "e"), (6L, "f")).toDF("id", "v"), dir)
+      q.processAllAvailable()
+      assert(delivered.synchronized(delivered.sorted.toSeq) ==
+        Seq((4L, "d"), (5L, "e"), (6L, "f")))
+    } finally q.stop()
+  }
+
   test("DeltaStreamProvider streams a GENERATED-COLUMN table; derived partition values decode (DateType included)") {
     import graft.sources.DeltaWrite
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
